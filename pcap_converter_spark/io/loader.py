@@ -17,10 +17,16 @@ not UTC.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pcap_converter_spark.session import apply_runtime_confs
+from pcap_converter_spark.session import (
+    apply_runtime_confs,
+    path_mtime,
+    session_memo,
+)
 
 TABLES = (
     "region",
@@ -53,89 +59,59 @@ def _normalize_events(df: DataFrame) -> DataFrame:
     return df
 
 
-# Reader-frame cache per (applicationId, table path, mtime): building a
-# parquet reader frame does eager footer reads + file listing on the
-# DRIVER (~75-100 ms per call here; minutes for a heavily partitioned
-# 100-TB table). Every declared-query construction used to re-pay it —
-# ~30 calls per bench run inside timed windows. The frame is a query
-# plan, not data (the scan still reads parquet at execution), so caching
-# it is the established register_views/_read_parquet_cached move; the
-# mtime key invalidates a rewritten file, and applicationId (not
-# id(spark)) survives CPython id reuse across sessions. Two layers: RAW
-# (the reader frame as stored on disk — streaming callers need its
-# schema pre-normalization) and normalized (what every batch query sees).
-_RAW_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-_TABLE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
-def _table_key(
-    spark: SparkSession, sf_dir: str, name: str
-) -> tuple[tuple[str, str, int], str]:
-    import os
-
-    path = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = -1
-    return (spark.sparkContext.applicationId, path, mtime), path
+# Reader frames are memoized per (session, table path), versioned by the
+# file mtime: building a parquet reader frame does eager footer reads +
+# file listing on the DRIVER (~75-100 ms per call here; minutes for a
+# heavily partitioned 100-TB table), and every declared-query
+# construction used to re-pay it. The frame is a query plan, not data
+# (the scan still reads parquet at execution); a rewritten file bumps the
+# mtime and is re-read. Two layers: RAW (the reader frame as stored on
+# disk — streaming callers need its schema pre-normalization) and
+# normalized (what every batch query sees).
+def _table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
 
 
 def load_table_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The table exactly as stored (no ts normalization) — the schema
     source for streaming readers, which must declare the ON-DISK schema."""
     apply_runtime_confs(spark)
-    key, path = _table_key(spark, sf_dir, name)
-    df = _RAW_CACHE.get(key)
-    if df is None:
-        # evict superseded generations of the same (session, path) so a
-        # rewritten table does not leak one dead frame per rewrite
-        for stale in [k for k in _RAW_CACHE if k[0] == key[0] and k[1] == path]:
-            del _RAW_CACHE[stale]
-        df = spark.read.parquet(path)
-        _RAW_CACHE[key] = df
-    return df
+    path = _table_path(sf_dir, name)
+    return session_memo(
+        spark, ("raw_table", path), lambda: spark.read.parquet(path),
+        version=path_mtime(path),
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key, path = _table_key(spark, sf_dir, name)
-    df = _TABLE_CACHE.get(key)
-    if df is None:
-        for stale in [
-            k for k in _TABLE_CACHE if k[0] == key[0] and k[1] == path
-        ]:
-            del _TABLE_CACHE[stale]
+    def build() -> DataFrame:
         df = load_table_raw(spark, sf_dir, name)
-        if name == "events":
-            df = _normalize_events(df)
-        _TABLE_CACHE[key] = df
-    return df
+        return _normalize_events(df) if name == "events" else df
+
+    path = _table_path(sf_dir, name)
+    return session_memo(
+        spark, ("table", path), build, version=path_mtime(path)
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-# Last-registered (sf_dir, views) per live session: re-registering the same
-# directory re-reads every parquet footer (~0.1-0.3 s), which pads every
-# bench/correctness query timing for nothing (VERDICT r2 #8).
-_VIEW_CACHE: dict[int, tuple[str, dict[str, DataFrame]]] = {}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register every testdata table as a temp view (the Spark analogue of
     the reference's `create view pcap as select * from '<file>'`,
     main.rs:272). Idempotent per (session, sf_dir): repeat calls reuse the
-    registered views; switching sf_dir re-registers."""
-    import os
+    registered views — re-registering re-reads every parquet footer
+    (~0.1-0.3 s), which padded every query timing for nothing (VERDICT
+    r2 #8); switching sf_dir re-registers."""
 
-    key = id(spark)
-    path = os.path.abspath(sf_dir)
-    cached = _VIEW_CACHE.get(key)
-    if cached is not None and cached[0] == path:
-        return cached[1]
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    _VIEW_CACHE[key] = (path, dfs)
-    return dfs
+    def build() -> dict[str, DataFrame]:
+        dfs = load_tables(spark, sf_dir)
+        for name, df in dfs.items():
+            df.createOrReplaceTempView(name)
+        return dfs
+
+    return session_memo(
+        spark, "views", build, version=os.path.abspath(sf_dir)
+    )

@@ -17,7 +17,7 @@ from __future__ import annotations
 import shutil
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from pcap_converter_spark.operators.defrag import defrag, fragmentation_pct
 from pcap_converter_spark.sources.pcap import DEFAULT_CHUNK_BYTES, read_pcap
@@ -97,14 +97,3 @@ def _move_dir(src: str, dst: str) -> None:
         # fs::copy choice (main.rs:261-266)
         shutil.copytree(src, dst)
         shutil.rmtree(src, ignore_errors=True)
-
-
-def convert_df(packets: DataFrame, nodefrag: bool = False,
-               defrag_threshold_pct: float = 1.0) -> DataFrame:
-    """In-plan variant: packets DataFrame → (conditionally) defragged
-    DataFrame, no temp materialization. For callers composing further."""
-    if nodefrag:
-        return packets
-    if fragmentation_pct(packets) < defrag_threshold_pct:
-        return packets
-    return defrag(packets)

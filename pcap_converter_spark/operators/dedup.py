@@ -720,29 +720,6 @@ def _minhash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature(base_hashes: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature from a column of base shingle hashes (long array).
-
-    Per seed i, min over shingles of (a_i·h + b_i) mod (2³¹−1) — the
-    standard universal-hash family over ONE xxhash64 pass. Structure
-    matters: higher-order functions are interpreted and re-evaluate their
-    input expression per reference, so the caller must materialize the base
-    hash array as a real projected column (see minhash_lsh_pairs); this
-    function then only does cheap long arithmetic per (shingle, seed).
-    Values stay < 2⁶² — safe under ANSI overflow checking.
-    """
-    def seeded_min(a: int, b: int) -> Column:
-        # single-arg lambda: 2-arg pyspark lambdas mean (element, index)
-        return F.array_min(
-            F.transform(
-                base_hashes,
-                lambda h: (h.bitwiseAND(F.lit(_MERSENNE31)) * a + b) % _MERSENNE31,
-            )
-        )
-
-    return F.array(*[seeded_min(a, b) for a, b in _minhash_params(num_hashes)])
-
-
 def minhash_band_table(
     df: DataFrame,
     text_col: str,

@@ -53,6 +53,7 @@ from pcap_converter_spark.operators.dedup import (
     _minhash_params,
     _ws_tokens,
 )
+from pcap_converter_spark.session import session_memo
 
 INDEX_VERSION = 1
 
@@ -424,20 +425,6 @@ def resolve_index_root(spark: SparkSession, path: str) -> str:
     return f"{path}/{m['root']}"
 
 
-# meta rows cached per (session, resolved root, meta-dir mtime): the
-# parameters are IMMUTABLE for an index generation's life (that is the
-# whole point of storing them with the data), so re-collecting the
-# one-row parquet on every probe/append — a full Spark job each — is
-# pure overhead; a streaming ingest hook pays it once per micro-batch
-# otherwise. The mtime in the key makes the cache safe against rewrites
-# this process cannot see (another driver re-running write_corpus_index
-# with different parameters, or the same path spelled 'file:///...'):
-# an overwrite replaces the meta directory's children, bumping its
-# modification time, so the stale entry simply misses. One
-# getFileStatus per call — a namenode round trip, not a Spark job.
-_META_CACHE: dict[tuple[str, str, int], dict] = {}
-
-
 def corpus_index_exists(spark: SparkSession, path: str) -> bool:
     """True when ``path`` holds a corpus index this build can open: a
     committed manifest generation, or the legacy flat layout's
@@ -470,21 +457,30 @@ def read_index_meta(spark: SparkSession, path: str) -> dict:
     (a one-row Parquet: portable to any Hadoop filesystem, unlike a
     driver-local JSON side file)."""
     root = resolve_index_root(spark, path)
-    key = (
-        spark.sparkContext.applicationId, root, _meta_mtime(spark, root)
-    )
-    cached = _META_CACHE.get(key)
-    if cached is not None:
-        return dict(cached)
-    row = spark.read.parquet(f"{root}/meta").collect()[0]
-    meta = row.asDict()
-    if meta["version"] != INDEX_VERSION:
-        raise ValueError(
-            f"corpus index at {path} has version {meta['version']}; "
-            f"this build reads version {INDEX_VERSION}"
-        )
-    _META_CACHE[key] = dict(meta)
-    return meta
+
+    def build() -> dict:
+        meta = spark.read.parquet(f"{root}/meta").collect()[0].asDict()
+        if meta["version"] != INDEX_VERSION:
+            raise ValueError(
+                f"corpus index at {path} has version {meta['version']}; "
+                f"this build reads version {INDEX_VERSION}"
+            )
+        return meta
+
+    # memoized per (session, resolved root), versioned by the meta-dir
+    # mtime: the parameters are IMMUTABLE for an index generation's life,
+    # so re-collecting the one-row parquet on every probe/append — a full
+    # Spark job each — is pure overhead (a streaming ingest hook would pay
+    # it once per micro-batch). The mtime version keeps the memo safe
+    # against rewrites this process cannot see (another driver re-running
+    # write_corpus_index, or the same path spelled 'file:///...'): an
+    # overwrite replaces the meta directory's children, bumping its
+    # modification time, so the entry is rebuilt. One getFileStatus per
+    # call — a namenode round trip, not a Spark job.
+    return dict(session_memo(
+        spark, ("index_meta", root), build,
+        version=_meta_mtime(spark, root),
+    ))
 
 
 def write_corpus_index(

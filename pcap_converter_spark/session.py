@@ -67,6 +67,35 @@ RUNTIME_CONFS = {
 }
 
 
+def session_memo(spark: SparkSession, key, build, version=None):
+    """``build()`` once per (session, key); later calls return the stored
+    value. The memo is a dict kept ON the SparkSession object — the
+    ``register_packets_view`` pattern — so it dies with the session: a
+    sibling ``spark.newSession()`` (same applicationId, isolated catalog)
+    gets its own entries, and nothing outlives the session in a module
+    dict. When ``version`` (e.g. a file mtime) differs from the stored
+    one, the entry is rebuilt and replaced, so one generation is kept.
+    No lock: concurrent first calls for one key may both build and the
+    last store wins, so ``build`` must be safe to run twice (every caller
+    builds a plan, a checkpoint or a fresh temp dir)."""
+    memo = vars(spark).setdefault("_pcs_memo", {})
+    hit = memo.get(key)
+    if hit is not None and hit[0] == version:
+        return hit[1]
+    value = build()
+    memo[key] = (version, value)
+    return value
+
+
+def path_mtime(path: str) -> int:
+    """A local path's mtime in ns (-1 when absent) — the ``version`` of a
+    memoized reader frame, so a rewrite within a session re-reads."""
+    try:
+        return os.stat(path).st_mtime_ns
+    except OSError:
+        return -1
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session (driver's or ours)."""
     for k, v in RUNTIME_CONFS.items():

@@ -9,9 +9,9 @@ markers, so it is not arbitrarily splittable. The design is a two-phase scan:
    worker needs to decode its byte range independently: file offset, length,
    endianness, timestamp resolution, and (pcapng) the interface table in
    effect at the chunk start. For a many-file corpus the index pass itself is
-   parallelized per file via ``spark.createDataFrame(files).flatMap``-style
-   fan-out (`index_many`). This phase reads headers sequentially but decodes
-   nothing — it is I/O-bound and cheap relative to decode.
+   parallelized per file (``chunk_frame``: one index task per file). This
+   phase reads headers sequentially but decodes nothing — it is I/O-bound
+   and cheap relative to decode.
 
 2. **Decode pass** — a DataFrame of chunk descriptors goes through
    ``mapInPandas``; each task opens its byte range, slices records, and calls
@@ -53,7 +53,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pcap_converter_spark.decode.parser import decode_packets_to_pandas
 from pcap_converter_spark.schema import PACKETS_SCHEMA
 
 # Magic numbers for legacy pcap.
@@ -552,25 +551,6 @@ def _index_or_split(path: str, target_chunk_bytes: int,
         _INDEX_CACHE.clear()
     _INDEX_CACHE[key] = chunks
     return chunks
-
-
-def index_many(spark: SparkSession, paths: list[str], target_chunk_bytes: int,
-               speculative: bool | str = "auto") -> list[Chunk]:
-    """Index a corpus ON THE DRIVER: small lists only. Multi-file corpora
-    should use ``chunk_frame`` (read_pcap does), which keeps descriptors
-    executor-side end to end; this helper remains for callers that need
-    the materialized list (tests, interactive inspection) and for the
-    few-files fast path."""
-    if len(paths) <= _DRIVER_INDEX_MAX_FILES:
-        out: list[Chunk] = []
-        for p in paths:
-            out.extend(_index_or_split(p, target_chunk_bytes, speculative))
-        return out
-    rdd = spark.sparkContext.parallelize(paths, len(paths))
-    chunk_lists = rdd.map(
-        lambda p: [c.__dict__ for c in _index_or_split(p, target_chunk_bytes, speculative)]
-    ).collect()
-    return [Chunk(**d) for lst in chunk_lists for d in lst]
 
 
 # few-files threshold: at or below this the driver walks headers itself

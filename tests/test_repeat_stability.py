@@ -17,10 +17,10 @@ import __spark_entry__ as entrymod
 
 SF = "/root/testdata/sf0.001"
 
-# the entries whose runners consult a per-session cache or at-rest
-# artifact (registry: _CURATE_CACHE, _INCR_*, _IVF/_PQ_REST, _QVEC,
-# _prelude_corpus, _WARC_STREAM_CACHE, _PCAP_STREAM_CACHE, the tf/hemb
-# materializations)
+# the entries whose runners consult a per-session memo or at-rest
+# artifact (registry: _curate_flags, _incr_*_path, _ivf/_pq_rest_path,
+# _query_vector, _prelude_corpus, the warc/pcap stream drains, the
+# tf/hemb materializations)
 CACHED_ENTRIES = [
     "ex_curate",
     "ex_dedup_exact",
