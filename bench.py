@@ -444,11 +444,9 @@ def _stall_guarded(spark, label: str, fn, budget_s: float = 300.0):
     by construction: even if the watchdog's py4j call lands after the
     entry finished and the next entry started, it names the finished
     entry's group — cancelAllJobs here could have killed the next
-    entry's jobs on the shared context. Out of reach by design: jobs
-    submitted from an entry's own helper threads (they don't inherit
-    the driver thread-local group) and driver-side hangs outside any
-    Spark job (a stuck System.gc, a py4j wedge) — those still need the
-    outer timeout."""
+    entry's jobs on the shared context. Out of reach by design:
+    driver-side hangs outside any Spark job (a stuck System.gc, a py4j
+    wedge) — those still need the outer timeout."""
     import threading
 
     done = threading.Event()
@@ -638,6 +636,7 @@ def main() -> int:
         CODEGEN_CACHE_MAX_ENTRIES,
         apply_runtime_confs,
         driver_java_opts,
+        phase_times,
     )
 
     spark = (
@@ -796,6 +795,17 @@ def main() -> int:
             last = cur
         return time.perf_counter() - t0
 
+    def _print_phases(name: str) -> None:
+        """One 'phases' line per entry run (cold, warm and timed alike)
+        from the phase times the run recorded."""
+        phases = phase_times(spark)
+        if phases:
+            print(
+                f"bench: {name} phases "
+                + " ".join(f"{k}={v:.2f}s" for k, v in phases.items()),
+                file=sys.stderr,
+            )
+
     for name, fn in runners.items():
         # Untimed PRE-RUN (r14, VERDICT r13 #1): the timed number is the
         # entry's steady-state cost, not its first-execution codegen+JIT
@@ -820,6 +830,7 @@ def main() -> int:
             cold_s[name] = round(time.perf_counter() - t0, 3)
         except Exception:
             pass  # the timed attempt below reports the failure
+        _print_phases(name)
         settled = _jit_settle()
         jc1 = _jvm_jit_ms()
         # Adaptive EXTRA untimed pre-runs for compile-heavy entries
@@ -856,6 +867,8 @@ def main() -> int:
                 )
             except Exception:
                 break
+            finally:
+                _print_phases(name)
             wall = round(time.perf_counter() - t0, 3)
             settled = _jit_settle() + settled
             jc2 = _jvm_jit_ms()
@@ -908,6 +921,7 @@ def main() -> int:
         except Exception as exc:  # a broken query must not hide the others
             print(f"bench: {name} failed: {exc}", file=sys.stderr)
             timings[name] = -1.0
+        _print_phases(name)
         # Untimed inter-query cleanup (same rationale as the GC before the
         # decode timing below): the eager entries leave localCheckpoint
         # blocks that are only freed by the ContextCleaner after the Python

@@ -15,7 +15,6 @@ restarts without re-running stage 1.
 from __future__ import annotations
 
 import shutil
-import sys
 
 from pyspark.sql import SparkSession
 
@@ -34,9 +33,10 @@ def convert(
 ) -> dict:
     """pcap/pcapng path(s) → Parquet directory at ``out``.
 
-    Returns {"packets": N, "errors": M, "fragment_pct": p, "defragged": bool}.
-    Progress mirrors the reference writer's "Packets: N Errors: M" display
-    (statswriter.rs:61-68). ``single_file`` coalesces the final write to one
+    Returns {"packets": N, "errors": M, "fragment_pct": p, "defragged": bool}
+    and prints nothing: the CLI reports the counts of the reference
+    writer's "Packets: N Errors: M" display (statswriter.rs:61-68) from
+    this dict. ``single_file`` coalesces the final write to one
     part-file (D5 parity — the reference's single-writer thread); leave it
     off at scale: N part-files write in parallel and read identically.
     """
@@ -50,7 +50,6 @@ def convert(
     stage1 = spark.read.parquet(tmp)
     n_packets = int(stats.get["packets"])
     n_errors = int(stats.get["errors"])
-    print(f"Packets: {n_packets} Errors: {n_errors}", file=sys.stderr)
 
     defragged = False
     pct = 0.0

@@ -13,9 +13,7 @@ from __future__ import annotations
 
 import functools
 import os
-import sys as _sys
 import threading as _threading
-import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,7 +21,9 @@ from pyspark.sql import functions as F
 from pcap_converter_spark.functions import text as TX
 from pcap_converter_spark.io.loader import _table_path, load_table
 from pcap_converter_spark.operators import dedup, multimodal, similarity
-from pcap_converter_spark.session import path_mtime, session_memo
+from pcap_converter_spark.session import (
+    overlapped, path_mtime, phase, session_memo,
+)
 
 # ---------------------------------------------------------------------------
 # shared DuckDB SQL fragments (dialect twins of functions/text.py)
@@ -219,30 +219,6 @@ def _tf_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pcap_converter_spark.operators.tfidf import term_frequencies
 
     return term_frequencies(_docs(spark, sf_dir)).localCheckpoint(eager=True)
-
-
-def _present_sorted(df: DataFrame, *cols) -> DataFrame:
-    """Presentation-only final ordering of an entry's result.
-
-    The driver's correctness gate hashes an ORDER-INSENSITIVE
-    canonicalization (it sorts collected rows with pandas — see
-    tools/check_correctness.py, which mirrors it), so a global
-    ``orderBy`` on the returned frame changes no checked bit. What it
-    DOES cost is a full second execution of the input subtree: a global
-    sort is Exchange(rangepartitioning), and the range partitioner runs
-    a separate boundary-SAMPLING job over the child before the sort
-    stage re-runs it for real (guide §2.4 — an ``orderBy`` used only to
-    make output deterministic is an accidental exchange; here it is an
-    accidental second pass of the entry's most expensive projection —
-    measured 2× the Python-UDF stage wall on ex_text_all). Entries
-    therefore return the unsorted frame by default; set
-    ``SPARK_GRAFT_ORDERED_OUTPUT=1`` to re-apply the sort when a human
-    wants readable CLI output. Result SET is identical either way (the
-    sf0.01 oracle run in OPTIMIZATION_r16.md re-proved all touched
-    entries hash-green after the change)."""
-    if os.environ.get("SPARK_GRAFT_ORDERED_OUTPUT"):
-        return df.orderBy(*cols)
-    return df
 
 
 # Plan-evidence hook (r17, VERDICT r16 #8): a checkpointed entry's
@@ -531,22 +507,6 @@ def _moji_src_sql(pairs) -> str:
 
 
 def run_text_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entry wrapper: joins any overlap thread the implementation
-    started if the main thread raises mid-construction — an orphaned
-    worker would keep running jobs against the session after the caller
-    has moved on (see _text_all_impl for the entry's actual contract)."""
-    threads: list = []
-    try:
-        return _text_all_impl(spark, sf_dir, threads)
-    except BaseException:
-        for th in threads:
-            th.join()
-        raise
-
-
-def _text_all_impl(
-    spark: SparkSession, sf_dir: str, _threads: list
-) -> DataFrame:
     """The full text-analysis surface in ONE hash-checked result:
     token/BPE counts, punctuation+stopword ratios, quality score, language
     ID, normalization fingerprint, the winnowing rolling fingerprint
@@ -559,6 +519,76 @@ def _text_all_impl(
     actually vary — the raw corpus contains no PII, which would let a
     broken regex pass). One driver row proves all of functions/text.py +
     the tfidf + quality operators."""
+    from pyspark.sql.window import Window
+
+    from pcap_converter_spark.operators.profile import profile, profile_diff
+
+    docs = _docs(spark, sf_dir)
+    did = F.col("doc_id")
+    # profile_diff's grouped aggregation (both doc_id%2 slices, one
+    # pass) runs on an overlap thread — it only needs ``docs`` and
+    # otherwise sits idle while this entry's dominant driver-side cost,
+    # the ~10k py4j round trips building the wide union plan
+    # (_text_all_rows), runs on this thread.
+    with overlapped(spark) as submit:
+        prof = submit("profile", lambda: profile(
+            docs.select(
+                (did % 2).cast("int").alias("_slice"),
+                "doc_id", "lang", "text",
+            ),
+            include_approx=False,
+            by="_slice",
+            # unsorted: this checkpoint would otherwise materialize the
+            # SORTED frame — sampling pass + sort pass = the grouped
+            # aggregation (a full docs scan) twice. The two consumers
+            # (profile_diff join, row_number window) are
+            # order-insensitive / re-sorting.
+            sort=False,
+        ).localCheckpoint(eager=True))
+        out = _text_all_rows(spark, sf_dir, docs)
+        both_prof = prof.result()
+    # 'profile_diff' rows (doc_id = -2000 - rank, VERDICT r9 stretch #7):
+    # profile() both doc_id%2 slices (exact stats only — the HLL++ rows
+    # are engine-specific by construction) and diff them; each
+    # (column, stat) row rides typed carrier columns (see
+    # _profile_diff_union_sql) so the driver hashes the drift QA artifact
+    # itself — floats stay floats, no cross-engine string formatting.
+    # BOTH slices go through ONE grouped aggregation (r12: profile's `by`
+    # — the per-source one-pass shape) instead of two scans; the ~70-row
+    # grouped frame is checkpointed so the two diff sides read it rather
+    # than re-running the aggregation per branch.
+    pdiff = profile_diff(
+        both_prof.filter(F.col("_slice") == 0).drop("_slice"),
+        both_prof.filter(F.col("_slice") == 1).drop("_slice"),
+        sort=False,  # the row_number window below re-sorts on the same keys
+    )
+    rn = F.row_number().over(Window.orderBy("column", "stat"))
+    pdf = pdiff.select(
+        (F.lit(-2000) - rn).cast("bigint").alias("doc_id"),
+        F.lit("profile_diff").alias("split"),
+        F.col("column").alias("fp"),
+        F.col("stat").alias("rfp"),
+        F.col("old_value").alias("punct_r"),
+        F.col("new_value").alias("stop_r"),
+        F.col("delta").alias("quality"),
+        F.col("rel_change").alias("mean_wlen"),
+        F.col("old_str").alias("bpe_seg"),
+        F.col("new_str").alias("top_term"),
+        F.col("drifted").alias("gopher_keep"),
+    )
+    out = out.unionByName(pdf, allowMissingColumns=True)
+    # no handle for the tf table: it is the SESSION-cached
+    # materialization (_tf_table), alive for other entries — not this
+    # entry's persist
+    with phase(spark, "final"):
+        return _eager(spark, out, [])
+
+
+def _text_all_rows(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> DataFrame:
+    """ex_text_all's per-doc rows and its 'bpe_train' rows — everything
+    but the overlapped 'profile_diff' rows."""
     from pcap_converter_spark.operators.packing import pack_documents
     from pcap_converter_spark.operators.quality import (
         gopher_keep, repetition_stats,
@@ -569,46 +599,7 @@ def _text_all_impl(
 
     t = F.col("text")
     rfp = TX.rolling_fingerprint_udf()
-    docs = _docs(spark, sf_dir)
     did = F.col("doc_id")
-
-    # profile_diff's grouped aggregation (both doc_id%2 slices, one
-    # pass) STARTS here on its own driver thread — it only needs
-    # ``docs`` and otherwise sits idle while this entry's dominant
-    # driver-side cost, the ~10k py4j round trips building the wide
-    # union plan below, runs on the main thread (the run_curate overlap
-    # pattern); joined where its frame feeds profile_diff.
-    from pcap_converter_spark.operators.profile import profile
-
-    _prof_out: dict[str, object] = {}
-    _prof_errs: list[BaseException] = []
-
-    def _run_profile() -> None:
-        try:
-            t0 = _time.perf_counter()
-            _prof_out["frame"] = profile(
-                docs.select(
-                    (did % 2).cast("int").alias("_slice"),
-                    "doc_id", "lang", "text",
-                ),
-                include_approx=False,
-                by="_slice",
-                # unsorted: this checkpoint would otherwise materialize
-                # the SORTED frame — sampling pass + sort pass = the
-                # grouped aggregation (a full docs scan) twice. The two
-                # consumers (profile_diff join, row_number window) are
-                # order-insensitive / re-sorting.
-                sort=False,
-            ).localCheckpoint(eager=True)
-            _prof_out["t"] = _time.perf_counter() - t0
-        except BaseException as e:
-            _prof_errs.append(e)
-
-    _prof_thread = _threading.Thread(
-        target=_run_profile, name="textall-profile"
-    )
-    _prof_thread.start()
-    _threads.append(_prof_thread)  # joined by the wrapper on error
 
     # ONE token explosion feeds every corpus-level consumer (vocab counts,
     # tf-idf here; the bm25 tier of ex_sim_topk too) via the per-session
@@ -617,9 +608,8 @@ def _text_all_impl(
     tf_tab = _tf_table(spark, sf_dir)
     # bounded driver-side artifact (like IVF centroids): 16-entry vocab,
     # deliberately smaller than the corpus term set so OOV→0 is exercised
-    _t0 = _time.perf_counter()
-    vocab = build_vocab(docs, size=16, tf=tf_tab)
-    _t_vocab = _time.perf_counter() - _t0
+    with phase(spark, "vocab"):
+        vocab = build_vocab(docs, size=16, tf=tf_tab)
     # deterministic PII decoration: the synthetic corpus carries no PII, so
     # the detector is exercised against injected tokens whose presence
     # varies by doc_id (a regex that matches nothing would hash-check
@@ -906,11 +896,6 @@ def _text_all_impl(
         )
         .drop("_stop_hits", "_praw", "_snip_i")
     )
-    # presentation sort dropped (see _present_sorted): the range
-    # sampling pass was a FULL second execution of this entry's widest
-    # projection — both Python-UDF stages ran twice (stage profile:
-    # 30.5 s + 22.3 s task-time twins over the same 854 KB input)
-    out = _present_sorted(out, "doc_id")
     # 'bpe_train' rows (doc_id = -rank, VERDICT r7 #5): re-learn the
     # 32-merge list from THIS corpus' top-2000 word table (the same
     # budget the baked _BPE_MERGES were trained under) and emit each
@@ -925,80 +910,21 @@ def _text_all_impl(
         train_bpe_detailed, word_frequencies,
     )
 
-    _t0 = _time.perf_counter()
-    wc = word_frequencies(docs, max_words=_BPE_TRAIN_WORDS, tf=tf_tab)
-    trows = []
-    for i, (a, b, pc) in enumerate(
-        train_bpe_detailed(wc, n_merges=len(_BPE_MERGES))
-    ):
-        baked = i < len(_BPE_MERGES) and (a, b) == _BPE_MERGES[i]
-        trows.append(
-            (-(i + 1), "baked" if baked else "retrained",
-             a + _BPE_SEP + b, int(pc))
-        )
+    with phase(spark, "bpe_train"):
+        wc = word_frequencies(docs, max_words=_BPE_TRAIN_WORDS, tf=tf_tab)
+        trows = []
+        for i, (a, b, pc) in enumerate(
+            train_bpe_detailed(wc, n_merges=len(_BPE_MERGES))
+        ):
+            baked = i < len(_BPE_MERGES) and (a, b) == _BPE_MERGES[i]
+            trows.append(
+                (-(i + 1), "baked" if baked else "retrained",
+                 a + _BPE_SEP + b, int(pc))
+            )
     tdf = spark.createDataFrame(
         trows, "doc_id bigint, split string, bpe_seg string, n_bpe_pieces int"
     )
-    _t_bpe = _time.perf_counter() - _t0
-    out = out.unionByName(tdf, allowMissingColumns=True)
-    # 'profile_diff' rows (doc_id = -2000 - rank, VERDICT r9 stretch #7):
-    # profile() both doc_id%2 slices (exact stats only — the HLL++ rows
-    # are engine-specific by construction) and diff them; each
-    # (column, stat) row rides typed carrier columns (see
-    # _profile_diff_union_sql) so the driver hashes the drift QA artifact
-    # itself — floats stay floats, no cross-engine string formatting.
-    from pyspark.sql.window import Window
-
-    from pcap_converter_spark.operators.profile import profile_diff
-
-    # BOTH slices through ONE grouped aggregation (r12: profile's `by`
-    # — the per-source one-pass shape) instead of two scans; the ~70-row
-    # grouped frame is checkpointed so the two diff sides read it rather
-    # than re-running the aggregation per branch.
-    # JOINED here, STARTED at the top of the entry (the run_curate
-    # overlap pattern): the grouped-profile job only needs ``docs``, so
-    # it executes while the main thread spends its py4j round trips
-    # building the wide union plan above.
-    _prof_thread.join()
-    if _prof_errs:
-        raise _prof_errs[0]
-    both_prof = _prof_out["frame"]
-    _t_prof = _prof_out["t"]
-    pdiff = profile_diff(
-        both_prof.filter(F.col("_slice") == 0).drop("_slice"),
-        both_prof.filter(F.col("_slice") == 1).drop("_slice"),
-        sort=False,  # the row_number window below re-sorts on the same keys
-    )
-    rn = F.row_number().over(Window.orderBy("column", "stat"))
-    pdf = pdiff.select(
-        (F.lit(-2000) - rn).cast("bigint").alias("doc_id"),
-        F.lit("profile_diff").alias("split"),
-        F.col("column").alias("fp"),
-        F.col("stat").alias("rfp"),
-        F.col("old_value").alias("punct_r"),
-        F.col("new_value").alias("stop_r"),
-        F.col("delta").alias("quality"),
-        F.col("rel_change").alias("mean_wlen"),
-        F.col("old_str").alias("bpe_seg"),
-        F.col("new_str").alias("top_term"),
-        F.col("drifted").alias("gopher_keep"),
-    )
-    out = out.unionByName(pdf, allowMissingColumns=True)
-    # no handle for tf_tab: it is the SESSION-cached materialization
-    # (_tf_table), alive for other entries — not this entry's persist
-    _t0 = _time.perf_counter()
-    res = _eager(spark, out, [])
-    # phase timers to stderr (the ex_dedup_exact pattern): vocab/bpe are
-    # the entry's sequential driver-side collect jobs, final is the one
-    # materializing job for the whole union
-    print(
-        f"bench: ex_text_all phases vocab={round(_t_vocab, 2)}s "
-        f"bpe_train={round(_t_bpe, 2)}s "
-        f"profile={round(_t_prof, 2)}s "
-        f"final={round(_time.perf_counter() - _t0, 2)}s",
-        file=_sys.stderr,
-    )
-    return res
+    return out.unionByName(tdf, allowMissingColumns=True)
 
 
 # language pieces GENERATED from TX.LANG_STOPWORDS so both engines extend
@@ -1435,22 +1361,6 @@ def _incr_prep_index_path(spark: SparkSession, sf_dir: str) -> str:
 
 
 def run_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entry wrapper: joins the overlap thread if the main thread raises
-    mid-construction (an orphaned prep thread would keep appending
-    persisted frames to a handles list nobody unpersists — the VERDICT
-    r2 leaked-persist class; see _dedup_exact_impl for the contract)."""
-    threads: list = []
-    try:
-        return _dedup_exact_impl(spark, sf_dir, threads)
-    except BaseException:
-        for th in threads:
-            th.join()
-        raise
-
-
-def _dedup_exact_impl(
-    spark: SparkSession, sf_dir: str, _threads: list
-) -> DataFrame:
     """Exact dedup at BOTH granularities plus benchmark decontamination
     plus the CROSS-SNAPSHOT incremental probe, one tagged result:
     whole-document sha256 groups (tier 'doc'), fixed-window passage groups
@@ -1487,8 +1397,6 @@ def _dedup_exact_impl(
     filter), where r5 exploded the corpus twice; the frame is
     materialized eagerly so the union's branches read cached digests
     instead of racing to recompute the lineage inside one job."""
-    from pcap_converter_spark.operators import incremental
-
     handles: list = []
     # docs persisted lazily: the pas_dig count below materializes BOTH
     # caches in one job, and the doc/decon tiers then read the cached
@@ -1512,8 +1420,8 @@ def _dedup_exact_impl(
     # OVERLAPPED (r12, the run_curate pattern): the curate call's
     # call-time eager work (~1 s of boundary persists) is independent of
     # the digest count and the other tiers' plan construction happening
-    # on the main thread, so it STARTS here on its own driver thread and
-    # joins right before its flags feed the union. The shared
+    # on the main thread, so it runs on an overlap thread whose result
+    # is awaited right before its flags feed the union. The shared
     # shuffle-partition scope is ref-counted; concurrent materialization
     # of the lazily persisted ``docs`` cache is block-level-locked by
     # Spark.
@@ -1530,18 +1438,15 @@ def _dedup_exact_impl(
             )
         )
     )
-    _prep_out: dict[str, object] = {}
-    _prep_errs: list[BaseException] = []
 
-    def _run_prep() -> None:
-        try:
-            t0 = _time.perf_counter()
-            with _scoped_shuffle_partitions(spark, _CURATE_PARTS):
-                # near_dedup=False: the CCNet/C4-class exact-only funnel
-                # — the tier's claim is the prep-reconciled INDEX path
-                # (signature → prepared probe → novel gate composition);
-                # the MinHash stage is already hash-proven by ex_curate
-                # and would only add its fixed Arrow/shuffle overhead
+    def _run_prep() -> DataFrame:
+        with _scoped_shuffle_partitions(spark, _CURATE_PARTS):
+            # near_dedup=False: the CCNet/C4-class exact-only funnel —
+            # the tier's claim is the prep-reconciled INDEX path
+            # (signature → prepared probe → novel gate composition); the
+            # MinHash stage is already hash-proven by ex_curate and would
+            # only add its fixed Arrow/shuffle overhead
+            with phase(spark, "prep_call"):
                 flags = _curate(
                     snap2.repartition(_CURATE_PARTS),
                     fix_encoding=True,
@@ -1549,24 +1454,55 @@ def _dedup_exact_impl(
                     near_dedup=False,
                     handles=handles,
                 )
-                _prep_out["t_call"] = _time.perf_counter() - t0
-                # r13 (VERDICT r12 #2): materialize the flags HERE, on
-                # this thread, inside the 8-partition scope — the funnel
-                # job runs CONCURRENTLY with the main thread's five-tier
-                # union job instead of serially inside it (the r12 form
-                # left the flags lazy, so the whole curate funnel
-                # executed inside the fanout job's wall). Same pattern
-                # as ex_curate's funnel ∥ prelude threads.
-                t0 = _time.perf_counter()
-                _prep_out["flags"] = flags.localCheckpoint(eager=True)
-                _prep_out["t_flags"] = _time.perf_counter() - t0
-        except BaseException as e:
-            _prep_errs.append(e)
+            # r13 (VERDICT r12 #2): materialize the flags HERE, on this
+            # thread, inside the 8-partition scope — the funnel job runs
+            # CONCURRENTLY with the main thread's five-tier union job
+            # instead of serially inside it (the r12 form left the flags
+            # lazy, so the whole curate funnel executed inside the fanout
+            # job's wall). Same pattern as ex_curate's funnel ∥ prelude.
+            with phase(spark, "prep_flags"):
+                return flags.localCheckpoint(eager=True)
 
-    _prep_thread = _threading.Thread(target=_run_prep, name="dedup-prep")
-    _prep_thread.start()
-    _threads.append(_prep_thread)  # joined by the wrapper on error
+    with overlapped(spark) as submit:
+        prep = submit("incr_prep", _run_prep)
+        five = _dedup_tiers5(spark, sf_dir, docs, handles)
+        prep_flags = prep.result()
+    prep_tier = prep_flags.select(
+        F.lit("incr_prep").alias("tier"),
+        F.lit(None).cast("string").alias("content_hash"),
+        F.lit(None).cast("bigint").alias("dup_count"),
+        F.array(F.col("doc_id")).alias("doc_ids"),
+        F.col("keep_novel").alias("dup_near"),
+        F.lit(None).cast("double").alias("near_est"),
+    )
+    merged = five.unionByName(prep_tier, allowMissingColumns=True)
+    # doc_ids serialized to a CSV string (already sorted by the operators):
+    # the driver canonicalizer sorts with pandas and cannot hash list cells
+    # (r3 red row); the array form stays on the operator API
+    out = merged.select(
+        "tier",
+        "content_hash",
+        "dup_count",
+        F.array_join(F.col("doc_ids").cast("array<string>"), ",").alias(
+            "doc_ids"
+        ),
+        "dup_near",
+        "near_est",
+    )
+    with phase(spark, "assemble"):
+        return _eager(spark, out, handles)
 
+
+def _dedup_tiers5(
+    spark: SparkSession, sf_dir: str, docs: DataFrame, handles: list
+) -> DataFrame:
+    """ex_dedup_exact's five corpus tiers (doc, passage, decon, incr,
+    incr_near), checkpointed as ONE job. The passage explosion + sha256
+    runs once: the persisted (content_hash, doc_id) digest frame feeds
+    both the 'passage' group-by and the 'incr' probe's snapshot side."""
+    from pcap_converter_spark.operators import incremental
+
+    did = F.col("doc_id")
     pas_dig = (
         dedup.passage_table(docs, passage_words=4)
         .select(
@@ -1578,9 +1514,8 @@ def _dedup_exact_impl(
         .persist()
     )
     handles.append(pas_dig)
-    _t0 = _time.perf_counter()
-    pas_dig.count()  # materialize before the branches fan out
-    _t_digest = _time.perf_counter() - _t0
+    with phase(spark, "digest"):
+        pas_dig.count()  # materialize before the branches fan out
     doc_tier = dedup.exact_duplicates(docs).withColumn("tier", F.lit("doc"))
     pas_tier = (
         pas_dig.groupBy("content_hash")
@@ -1637,8 +1572,8 @@ def _dedup_exact_impl(
     # the five corpus tiers materialize as ONE job on THIS thread while
     # the prep thread's funnel job runs (r13): two concurrent driver
     # jobs, wall ≈ max(five-tier, prep) instead of one fanout job that
-    # serially contains the funnel. The final assemble below then reads
-    # two checkpointed frames and sorts — no recompute.
+    # serially contains the funnel. The final assemble then reads two
+    # checkpointed frames — no recompute.
     five = (
         doc_tier.unionByName(pas_tier)
         .select("tier", "content_hash", "dup_count", "doc_ids")
@@ -1646,71 +1581,8 @@ def _dedup_exact_impl(
         .unionByName(inc_tier)
         .unionByName(near_tier, allowMissingColumns=True)
     )
-    _t0 = _time.perf_counter()
-    five = five.localCheckpoint(eager=True)
-    _t_five = _time.perf_counter() - _t0
-    # tier 'incr_prep': the curate call was started on its own driver
-    # thread up top (see the OVERLAPPED block) — join it here, where its
-    # flags feed the union.
-    _prep_thread.join()
-    if _prep_errs:
-        raise _prep_errs[0]
-    prep_flags = _prep_out["flags"]
-    prep_tier = prep_flags.select(
-        F.lit("incr_prep").alias("tier"),
-        F.lit(None).cast("string").alias("content_hash"),
-        F.lit(None).cast("bigint").alias("dup_count"),
-        F.array(F.col("doc_id")).alias("doc_ids"),
-        F.col("keep_novel").alias("dup_near"),
-        F.lit(None).cast("double").alias("near_est"),
-    )
-    merged = five.unionByName(prep_tier, allowMissingColumns=True)
-    # doc_ids serialized to a CSV string (already sorted by the operators):
-    # the driver canonicalizer sorts with pandas and cannot hash list cells
-    # (r3 red row); the array form stays on the operator API
-    out = merged.select(
-        "tier",
-        "content_hash",
-        "dup_count",
-        F.array_join(F.col("doc_ids").cast("array<string>"), ",").alias(
-            "doc_ids"
-        ),
-        "dup_near",
-        "near_est",
-    )
-    out = _present_sorted(out, "tier", "content_hash", "doc_ids")
-    # phase timers to stderr (VERDICT r6 #2: the driver recorded ~1-2 s
-    # more than isolated runs; these lines land in the driver's bench
-    # tail so the residual is attributable). PCS_TIER_TIMERS=1 adds a
-    # per-tier count() pass against the cached digests — diagnostic
-    # only, off by default because the extra actions aren't free.
-    import os as _os
-
-    if _os.environ.get("PCS_TIER_TIMERS") == "1":
-        for label, frame in (
-            ("doc", doc_tier), ("passage", pas_tier), ("decon", dec_tier),
-            ("incr", inc_tier), ("incr_near", near_tier),
-        ):
-            _t0 = _time.perf_counter()
-            frame.count()
-            print(
-                f"bench: ex_dedup_exact tier {label} "
-                f"{round(_time.perf_counter() - _t0, 2)}s",
-                file=_sys.stderr,
-            )
-    _t0 = _time.perf_counter()
-    res = _eager(spark, out, handles)
-    print(
-        f"bench: ex_dedup_exact phases digest={round(_t_digest, 2)}s "
-        # incr_prep's eager curate call, then its funnel job — both on
-        # the prep thread, overlapped with tiers5 on the main thread
-        f"prep_call={round(_prep_out['t_call'], 2)}s "
-        f"prep_flags={round(_prep_out['t_flags'], 2)}s "
-        f"tiers5={round(_t_five, 2)}s "
-        f"assemble={round(_time.perf_counter() - _t0, 2)}s (overlapped)",
-        file=_sys.stderr,
-    )
-    return res
+    with phase(spark, "tiers5"):
+        return five.localCheckpoint(eager=True)
 
 
 # the near tier's SQL twin re-derives every stored MinHash signature
@@ -1933,11 +1805,10 @@ def run_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("root").alias("doc_b"),
         F.lit(None).cast("double").alias("jaccard"),
     )
-    out = _present_sorted(
+    out = (
         exact.unionByName(mh)
         .unionByName(groups)
-        .select("tier", "doc_a", "doc_b", "jaccard"),
-        "tier", "doc_a", "doc_b",
+        .select("tier", "doc_a", "doc_b", "jaccard")
     )
     return _eager(spark, out, handles)
 
@@ -1995,10 +1866,9 @@ def run_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh = dedup.embedding_neardup_lsh(
         embs, threshold=0.9, n_planes=64, bands=16, handles=handles
     ).withColumn("tier", F.lit("lsh"))
-    out = _present_sorted(
+    out = (
         exact.unionByName(lsh)
-        .select("tier", "vec_id", "keep_id", "is_dup"),
-        "tier", "vec_id",
+        .select("tier", "vec_id", "keep_id", "is_dup")
     )
     return _eager(spark, out, handles)
 
@@ -2029,10 +1899,9 @@ def run_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = dedup.signature_hamming_pairs(
         sigs, max_hamming=3, handles=handles
     ).withColumn("op", F.lit("media"))
-    out = _present_sorted(
+    out = (
         text.unionByName(media)
-        .select("op", "doc_a", "doc_b", "hamming"),
-        "op", "doc_a", "doc_b",
+        .select("op", "doc_a", "doc_b", "hamming")
     )
     return _eager(spark, out, handles)
 
@@ -2516,44 +2385,24 @@ def run_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-level reader caches are serial work anyway); only the
     # localCheckpoint materializations overlap. Result identity:
     # checkpointing each union branch then unioning the checkpoints is
-    # row-identical to checkpointing the union (per-group phase walls
-    # ride stderr to prove the overlap).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # row-identical to checkpointing the union (each group is its own
+    # phase, so the overlap shows in the phase times).
     groups = {"vec": vec, "bat": bat, "bm": bm}
-    walls: dict[str, float] = {}
-
-    def _mat(name: str) -> DataFrame:
-        t0 = _time.perf_counter()
-        res = _eager(spark, groups[name], [])
-        walls[name] = round(_time.perf_counter() - t0, 2)
-        return res
-
-    t_all = _time.perf_counter()
-    with ThreadPoolExecutor(max_workers=len(groups)) as pool:
-        futs = {n: pool.submit(_mat, n) for n in groups}
+    with phase(spark, "wall"), overlapped(spark) as submit:
+        futs = {
+            n: submit(n, functools.partial(_eager, spark, g, []))
+            for n, g in groups.items()
+        }
         done = {n: f.result() for n, f in futs.items()}
     for h in handles:
         h.unpersist()
-    print(
-        "bench: ex_sim_topk phases "
-        + " ".join(f"{n}={walls.get(n)}s" for n in groups)
-        + f" wall={round(_time.perf_counter() - t_all, 2)}s (overlapped)",
-        file=_sys.stderr,
-    )
-    return _present_sorted(
-        done["vec"].unionByName(done["bat"]).unionByName(done["bm"]),
-        "tier", F.col("score").desc(), "hit_id",
-    )
+    return done["vec"].unionByName(done["bat"]).unionByName(done["bm"])
 
 
 def run_sim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _present_sorted(
-        similarity.cosine_pairs(
-            _embs(spark, sf_dir), threshold=0.4,
-            n_blocks=_embs_blocks(spark, sf_dir),
-        ),
-        "id_a", "id_b",
+    return similarity.cosine_pairs(
+        _embs(spark, sf_dir), threshold=0.4,
+        n_blocks=_embs_blocks(spark, sf_dir),
     )
 
 
@@ -2592,7 +2441,7 @@ def run_mm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = multimodal.byte_histogram_features(df).select(
         "doc_id", F.round("entropy", 4).alias("entropy"), "top_byte"
     )
-    return _present_sorted(meta.join(feats, "doc_id"), "doc_id")
+    return meta.join(feats, "doc_id")
 
 
 _MM_META_ORACLE = """
@@ -2626,10 +2475,9 @@ def run_mm_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     at evenly spaced offsets over the binary payload. The oracle recomputes
     each frame's byte length arithmetically."""
     df = multimodal.attach_payload(_docs(spark, sf_dir))
-    return _present_sorted(
+    return (
         multimodal.sample_frames(df)
-        .select("doc_id", "frame_idx", F.octet_length("frame_bytes").alias("frame_len")),
-        "doc_id", "frame_idx",
+        .select("doc_id", "frame_idx", F.octet_length("frame_bytes").alias("frame_len"))
     )
 
 
@@ -2671,9 +2519,7 @@ def run_mm_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("double").alias("entropy"),
         F.lit(None).cast("int").alias("top_byte"),
     )
-    return _present_sorted(
-        meta.unionByName(frames), "src", "doc_id", "frame_idx"
-    )
+    return meta.unionByName(frames)
 
 
 _MM_ALL_ORACLE = f"""
@@ -2729,7 +2575,7 @@ def run_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bal",
         )
     )
-    return _present_sorted(topk.unionByName(per_nation), "src", "key")
+    return topk.unionByName(per_nation)
 
 
 _SKEW_SALTED_ORACLE = """
@@ -2760,10 +2606,9 @@ def run_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pcap_converter_spark.io.loader import register_views
 
     register_views(spark, sf_dir)
-    # no final ORDER BY on the Spark side (presentation only — see
-    # _present_sorted): the sort's range-sampling job re-ran the whole
-    # parse+aggregate subtree a second time. The DuckDB twin keeps its
-    # ORDER BY (costless there; the gate compares order-insensitively).
+    # no final ORDER BY on the Spark side: a global sort's range-sampling
+    # job re-runs the whole parse+aggregate subtree. The DuckDB twin
+    # keeps its ORDER BY (costless there; the gate is order-insensitive).
     out = spark.sql(
         "WITH e AS (SELECT props, concat("
         "  'https://', event_type, '.ex', CAST(user_id % 3 AS STRING),"
@@ -2779,7 +2624,7 @@ def run_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "count(*) AS n FROM e "
         "GROUP BY k, k_typed, miss, host, pth, uid_bucket"
     )
-    return _present_sorted(out, "k", "host", "pth", "uid_bucket")
+    return out
 
 
 _JSON_ORACLE = """
@@ -2864,11 +2709,10 @@ def _olap_sql(med_expr: str, strtype: str) -> str:
         f"SELECT 'ntile' AS src, {cube_null}, "
         "c_custkey, quartile, pr, cd, dr, fv, nv3 "
         f"FROM ({_NTILE_BODY}) nt"
-        # no outer ORDER BY: on the Spark side run_olap's final
-        # _present_sorted owns presentation (the interior sort was a
-        # redundant rangepartitioning Exchange under the union); on the
-        # DuckDB side this string is consumed as a subquery, where an
-        # ORDER BY is semantically void anyway.
+        # no outer ORDER BY: on the Spark side it was a redundant
+        # rangepartitioning Exchange under the union; on the DuckDB side
+        # this string is consumed as a subquery, where an ORDER BY is
+        # semantically void anyway.
     )
 
 
@@ -2909,7 +2753,7 @@ def run_olap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     prof = _profile(
         load_table(spark, sf_dir, "part"), include_approx=False,
-        sort=False,  # rides the union; final _present_sorted owns order
+        sort=False,  # rides the union
     )
     prof_p = prof.select(
         F.lit("profile").alias("src"),
@@ -2933,11 +2777,7 @@ def run_olap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         "value_str",
     )
-    return _present_sorted(
-        olap_p.unionByName(prof_p),
-        "src", "o_orderpriority", "o_orderstatus", "gp", "gs", "c_custkey",
-        "pcol", "stat",
-    )
+    return olap_p.unionByName(prof_p)
 
 
 # the profiler arm's DuckDB twin: the same per-column stats re-derived
@@ -3321,65 +3161,29 @@ def run_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
       ORDER, not just the parts."""
     from pcap_converter_spark.operators.pipeline import curation_report
 
-    # phase timers to stderr (the ex_dedup_exact pattern): the entry's
-    # cost splits into the funnel execution and the artifact write+read
-    # — both per-session caches, so the split is visible on the FIRST
-    # (i.e. the bench-timed) call and ~0 afterwards, making a driver
-    # recording attributable without extra jobs.
+    # phases: the entry's cost splits into the funnel execution and the
+    # artifact write+read — both per-session caches, so the split is
+    # visible on the FIRST call (bench's cold run) and ~0 afterwards,
+    # making a driver recording attributable without extra jobs.
     # OVERLAPPED (r12): the funnel→artifact chain and the prelude funnel
     # are independent job chains, each a dozen SEQUENTIAL ~8-task
     # shuffles on a 32-slot session — run separately they leave most of
-    # the cluster idle between stages. Two driver threads submit both
-    # chains at once (the standard concurrent-jobs-in-one-SparkContext
-    # pattern; FIFO scheduling still interleaves them because neither
-    # chain fills the slots), so the entry's wall time approaches
-    # max(chain) instead of sum(chain). The shared shuffle-partition
-    # scope is ref-counted (see _scoped_conf) and every session_memo
-    # entry the threads touch is keyed differently, so this is
-    # runner-level concurrency, not operator-semantics change.
-    _t_wall = _time.perf_counter()
-    _phase: dict[str, float] = {}
-    _errs: list[BaseException] = []
-
-    def _run_funnel() -> None:
-        try:
-            t0 = _time.perf_counter()
-            _curate_flags(spark, sf_dir)
-            _phase["funnel"] = _time.perf_counter() - t0
-            t0 = _time.perf_counter()
-            _write_kept_path(spark, sf_dir)
-            _phase["artifact"] = _time.perf_counter() - t0
-        except BaseException as e:  # re-raised on the caller thread
-            _errs.append(e)
-
-    def _run_prelude() -> None:
-        try:
-            t0 = _time.perf_counter()
-            _prelude_flags(spark, sf_dir)
-            _phase["prelude"] = _time.perf_counter() - t0
-        except BaseException as e:
-            _errs.append(e)
-
-    threads = [
-        _threading.Thread(target=_run_funnel, name="curate-funnel"),
-        _threading.Thread(target=_run_prelude, name="curate-prelude"),
-    ]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    if _errs:
-        raise _errs[0]
-    flags_frame = _curate_flags(spark, sf_dir)      # cache hits from here
-    _kept_path = _write_kept_path(spark, sf_dir)
-    prelude_frame = _prelude_flags(spark, sf_dir)
-    print(
-        f"bench: ex_curate phases funnel={round(_phase['funnel'], 2)}s "
-        f"artifact={round(_phase['artifact'], 2)}s "
-        f"prelude={round(_phase['prelude'], 2)}s "
-        f"(overlapped; wall={round(_time.perf_counter() - _t_wall, 2)}s)",
-        file=_sys.stderr,
-    )
+    # the cluster idle between stages. The prelude runs on an overlap
+    # thread while this thread runs the funnel chain (the standard
+    # concurrent-jobs-in-one-SparkContext pattern; FIFO scheduling still
+    # interleaves them because neither chain fills the slots), so the
+    # entry's wall time approaches max(chain) instead of sum(chain). The
+    # shared shuffle-partition scope is ref-counted (see _scoped_conf)
+    # and every session_memo entry the chains touch is keyed
+    # differently, so this is runner-level concurrency, not
+    # operator-semantics change.
+    with phase(spark, "wall"), overlapped(spark) as submit:
+        prelude = submit("prelude", lambda: _prelude_flags(spark, sf_dir))
+        with phase(spark, "funnel"):
+            flags_frame = _curate_flags(spark, sf_dir)
+        with phase(spark, "artifact"):
+            _kept_path = _write_kept_path(spark, sf_dir)
+        prelude_frame = prelude.result()
 
     nl = F.lit(None).cast("bigint")
     nb = F.lit(None).cast("boolean")
@@ -3461,13 +3265,12 @@ def run_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "keep_neardup", "keep_decon", "kept", "pack_shard", "pack_bin",
         "pack_offset", "stage", "n_entered", "n_kept", "n_dropped",
     )
-    return _present_sorted(
+    return (
         flags.unionByName(rest)
         .unionByName(pflags)
         .select(*cols)
         .unionByName(report)
-        .unionByName(preport),
-        "src", "doc_id", "stage",
+        .unionByName(preport)
     )
 
 
@@ -3929,9 +3732,7 @@ def run_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = graph.pagerank(
         edges, iters=_PR_ITERS, damping=_PR_DAMP, handles=handles
     )
-    out = _present_sorted(
-        ranks.select("node", F.round("rank", 6).alias("rank")), "node"
-    )
+    out = ranks.select("node", F.round("rank", 6).alias("rank"))
     return _eager(spark, out, handles)
 
 
@@ -4259,15 +4060,14 @@ def run_warc_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("keep_domain_cap"), F.lit("keep"))
         .otherwise(F.lit("drop")).alias("text"),
     )
-    return _present_sorted(
+    return (
         docs_branch.unionByName(main_branch)
         .unionByName(stream_branch)
         .unionByName(urls_branch)
         .unionByName(wet_branch)
         .unionByName(jsonl_branch)
         .unionByName(urldedup_branch)
-        .unionByName(domcap_branch),
-        "op", "url",
+        .unionByName(domcap_branch)
     )
 
 
@@ -4417,19 +4217,12 @@ def run_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count never changes a grouped result). Production sizes shuffle
     # partitions to its own state volume; operator code takes whatever
     # the session gives it.
-    t0 = _time.perf_counter()
-    with _scoped_shuffle_partitions(spark, _CURATE_PARTS), _scoped_conf(
-        spark, *_DRAIN_NO_EMPTY_BATCH
-    ):
-        out = W.run_available_now(
+    with phase(spark, "drain"), _scoped_shuffle_partitions(
+        spark, _CURATE_PARTS
+    ), _scoped_conf(spark, *_DRAIN_NO_EMPTY_BATCH):
+        return W.run_available_now(
             W.session_counts(stream), "ex_stream_sessions"
         )
-    print(
-        f"bench: ex_stream_sessions phases "
-        f"drain={round(_time.perf_counter() - t0, 2)}s",
-        file=_sys.stderr,
-    )
-    return _present_sorted(out, "user_id", "session_start")
 
 
 _STREAM_SESSIONS_ORACLE = """
@@ -4488,10 +4281,9 @@ def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 32-way is pure scheduling + state-store-file overhead (measured:
     # warm entry 5.19 s at 32 → 3.03 s at 8; rows identical). Production
     # sizes shuffle partitions to its own batch volume.
-    t0 = _time.perf_counter()
-    with _scoped_shuffle_partitions(spark, _CURATE_PARTS), _scoped_conf(
-        spark, *_DRAIN_NO_EMPTY_BATCH
-    ):
+    with phase(spark, "drains"), _scoped_shuffle_partitions(
+        spark, _CURATE_PARTS
+    ), _scoped_conf(spark, *_DRAIN_NO_EMPTY_BATCH):
         # the two branches are INDEPENDENT streaming queries — start the
         # stateful drain non-blocking and run the whole ingest cycle
         # while it works, so the entry pays one stream-startup latency,
@@ -4500,18 +4292,12 @@ def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             streaming_dedup(stream), "ex_stream_dedup", "append"
         )
         try:
-            t_ing = _time.perf_counter()
-            ingest = _run_ingest_branch(spark, sf_dir)
-            t_ing = _time.perf_counter() - t_ing
+            with phase(spark, "ingest"):
+                ingest = _run_ingest_branch(spark, sf_dir)
         except BaseException:
             q.stop()
             raise
         out = finish_available_now(spark, q, name)
-    print(
-        f"bench: ex_stream_dedup phases ingest={round(t_ing, 2)}s "
-        f"drains={round(_time.perf_counter() - t0, 2)}s (overlapped)",
-        file=_sys.stderr,
-    )
     # one input file → one batch → "first occurrence" is the scan order;
     # canonicalize to min doc_id per content so the answer is deterministic
     state = (
@@ -4519,9 +4305,7 @@ def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("doc_id"))
         .select(F.lit("state").alias("src"), "content_hash", "doc_id")
     )
-    return _present_sorted(
-        state.unionByName(ingest), "src", "content_hash", "doc_id"
-    )
+    return state.unionByName(ingest)
 
 
 # untimed fixture for the 'ingest' branch, per (session, sf_dir): the
@@ -4686,9 +4470,7 @@ def run_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     embs = _embs(spark, sf_dir)
     cents = semdedup.kmeans_fit(embs, init=_SEM_INIT, n_iters=_SEM_ITERS)
-    return _present_sorted(
-        semdedup.semantic_neardup(embs, cents, threshold=_SEM_TAU), "vec_id"
-    )
+    return semdedup.semantic_neardup(embs, cents, threshold=_SEM_TAU)
 
 
 def _semdedup_oracle(init, n_iters: int, threshold: float) -> str:
@@ -4851,38 +4633,27 @@ def run_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy rebuild materializes at _eager below, where span's full-docs
     # plan wants the session default) — fixture-scale shuffle trim for
     # the counted gate's explode+agg job, same rationale as _curate_flags
-    _t0 = _time.perf_counter()
-    with _scoped_shuffle_partitions(spark, _CURATE_PARTS):
+    # phases: 'gate' is line_dedup's eager boiler count (includes the
+    # _prelude_corpus fabrication checkpoint when this entry runs before
+    # ex_curate), 'union' the one materializing job for all three tiers
+    with phase(spark, "gate"), _scoped_shuffle_partitions(
+        spark, _CURATE_PARTS
+    ):
         line = dedup.line_dedup(
             _prelude_corpus(spark, sf_dir), min_docs=3, handles=handles
         ).select(
             F.lit("line").alias("src"), "doc_id", "clean_text",
             F.col("n_removed"),
         )
-    _t_gate = _time.perf_counter() - _t0
     from pcap_converter_spark.operators.quality import c4_line_clean
 
     c4 = c4_line_clean(_c4_corpus(spark, sf_dir)).select(
         F.lit("c4").alias("src"), "doc_id", "clean_text", "n_removed"
     )
-    _t0 = _time.perf_counter()
-    res = _eager(
-        spark,
-        _present_sorted(
-            span.unionByName(line).unionByName(c4), "src", "doc_id"
-        ),
-        handles,
-    )
-    # phase timers to stderr (the ex_dedup_exact pattern): 'gate' is
-    # line_dedup's eager boiler count (includes the _prelude_corpus
-    # fabrication checkpoint when this entry runs before ex_curate),
-    # 'union' the one materializing job for all three tiers
-    print(
-        f"bench: ex_substring_dedup phases gate={round(_t_gate, 2)}s "
-        f"union={round(_time.perf_counter() - _t0, 2)}s",
-        file=_sys.stderr,
-    )
-    return res
+    with phase(spark, "union"):
+        return _eager(
+            spark, span.unionByName(line).unionByName(c4), handles
+        )
 
 
 
@@ -5226,11 +4997,10 @@ def run_lm_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         src, (fid + 20).alias("doc_id"), ntn.alias("n_tokens"),
         F.round("sg", 6).alias("log_ppl"), nkeep.alias("kept"),
     )
-    return _present_sorted(
+    return (
         uni.unionByName(bi).unionByName(bucket).unionByName(clf)
         .unionByName(wrows).unionByName(brow).unionByName(mrows)
-        .unionByName(srows),
-        "src", "doc_id",
+        .unionByName(srows)
     )
 
 

@@ -26,6 +26,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pcap_converter_spark.session import phase
+
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 PACKETS_PARQUET = os.path.join(_REPO_ROOT, "fixtures", "data", "packets.parquet")
 PACKETS_PCAP = os.path.join(_REPO_ROOT, "fixtures", "data", "packets_fixture.pcap")
@@ -541,21 +543,13 @@ def _run_dq22(spark: SparkSession, sf_dir: str) -> DataFrame:
         _scoped_shuffle_partitions,
     )
 
-    import sys as _sys
-    import time as _time
-
-    _t0 = _time.perf_counter()
-    with _scoped_shuffle_partitions(spark, _CURATE_PARTS), _scoped_conf(
-        spark, *_DRAIN_NO_EMPTY_BATCH
-    ):
+    with phase(spark, "drain"), _scoped_shuffle_partitions(
+        spark, _CURATE_PARTS
+    ), _scoped_conf(spark, *_DRAIN_NO_EMPTY_BATCH):
         stream = W.run_available_now(
             W.tumbling_counts(W.read_events_stream(spark, sf_dir)),
             "dq22_stream",
         )
-    print(
-        f"bench: dq22 phases drain={round(_time.perf_counter() - _t0, 2)}s",
-        file=_sys.stderr,
-    )
     # streaming path runs on TimestampType (watermark requirement; session TZ
     # pinned UTC) — relabel back to NTZ so the union is type-identical
     stream = stream.select(
@@ -569,12 +563,9 @@ def _run_dq22(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("src", F.lit("slide"))
     )
     batch = batch.unionByName(slide)
-    from pcap_converter_spark.operators.registry import _present_sorted
-
-    return _present_sorted(
+    return (
         batch.unionByName(stream)
-        .select("src", "h", "event_type", "n", "v"),
-        "src", "h", "event_type",
+        .select("src", "h", "event_type", "n", "v")
     )
 
 
@@ -619,12 +610,9 @@ def _run_dq23(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", F.col("ts_asof").alias("prev_ts"))
         .withColumn("src", F.lit("asof"))
     )
-    from pcap_converter_spark.operators.registry import _present_sorted
-
-    return _present_sorted(
+    return (
         batch.unionByName(alt)
-        .select("src", "event_id", "prev_ts"),
-        "src", "event_id",
+        .select("src", "event_id", "prev_ts")
     )
 
 
@@ -668,12 +656,9 @@ def _run_pq4(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("src", F.lit("stream"))
     )
-    from pcap_converter_spark.operators.registry import _present_sorted
-
-    return _present_sorted(
+    return (
         batch.unionByName(streamed)
-        .select("src", "col_protocol", "n", "avg_len"),
-        "src", "col_protocol",
+        .select("src", "col_protocol", "n", "avg_len")
     )
 
 

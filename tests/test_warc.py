@@ -542,9 +542,9 @@ def test_warc_docs_fixture_matches_ground_truth(spark):
         run_warc_docs,
     )
 
-    # entries return an unsorted frame (presentation sorts dropped —
-    # registry._present_sorted; the driver gate is order-insensitive), so
-    # canonicalize both sides by url before the value-for-value compare
+    # entries return an unsorted frame (the driver gate is
+    # order-insensitive), so canonicalize both sides by url before the
+    # value-for-value compare
     got = (
         run_warc_docs(spark, "unused")
         .filter("op = 'docs'")

@@ -5,7 +5,7 @@ plans, putting a ±5% error bar on the whole suite headline).
 Run:  python tools/jit_probe.py [n_repeats]
 
 Per fresh-session run it reports the entry wall time, the phase split
-(stderr markers already printed by the entry), and the JVM-side codegen
+(``session.phase_times`` after each run), and the JVM-side codegen
 metrics Spark collects (org.apache.spark.metrics.source.CodegenMetrics):
 max/mean generated METHOD bytecode size (HotSpot refuses to JIT any
 method over 8000 bytes — DontCompileHugeMethods — so a near/over-limit
@@ -25,7 +25,7 @@ import sys, time, os
 sys.path.insert(0, os.getcwd())
 from pyspark.sql import SparkSession
 import __spark_entry__ as entrymod
-from pcap_converter_spark.session import apply_runtime_confs
+from pcap_converter_spark.session import apply_runtime_confs, phase_times
 
 cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 spark = (
@@ -69,6 +69,14 @@ def cg_stats():
     )
 
 entry_name = os.environ.get("JITPROBE_ENTRY", "ex_text_all")
+
+def print_phases():
+    phases = phase_times(spark)
+    if phases:
+        print(f"bench: {entry_name} phases "
+              + " ".join(f"{k}={v:.2f}s" for k, v in phases.items()),
+              flush=True)
+
 fn = entrymod.queries()[entry_name]
 j0, t0 = jit_ms(), time.perf_counter()
 df = fn(spark, sf_dir)
@@ -77,6 +85,7 @@ wall = time.perf_counter() - t0
 s = cg_stats()
 print(f"JITPROBE wall={wall:.2f} rows={len(rows)} jit_ms={jit_ms()-j0} "
       + " ".join(f"{k}={v}" for k, v in s.items()), flush=True)
+print_phases()
 # second call in the SAME session: warm JIT + caches = plan-cost floor.
 # cg-stat DELTAS answer whether re-execution re-GENERATES classes (a
 # codegen-cache miss would re-Janino and re-JIT the same source) or the
@@ -89,6 +98,7 @@ for rep in range(2, 2 + int(os.environ.get("JITPROBE_WARM_REPS", "1"))):
     print(f"JITPROBE warm{rep}={time.perf_counter()-t0:.2f} "
           f"jit_ms={jit_ms()-j0} new_methods={s2['n_methods']-prev_n} "
           f"janino_total_ms={s2['janino_total_ms']}", flush=True)
+    print_phases()
     prev_n = s2["n_methods"]
 spark.stop()
 """
