@@ -8,23 +8,24 @@ markers, so it is not arbitrarily splittable. The design is a two-phase scan:
    chunk descriptors every ``target_chunk_bytes``, each carrying everything a
    worker needs to decode its byte range independently: file offset, length,
    endianness, timestamp resolution, and (pcapng) the interface table in
-   effect at the chunk start. For a many-file corpus the index pass itself is
-   parallelized per file (``chunk_frame``: one index task per file). This
-   phase reads headers sequentially but decodes nothing — it is I/O-bound
-   and cheap relative to decode.
+   effect at the chunk start. This phase reads headers sequentially but
+   decodes nothing — it is I/O-bound and cheap relative to decode.
 
 2. **Decode pass** — a DataFrame of chunk descriptors goes through
    ``mapInPandas``; each task opens its byte range, slices records, and calls
    the batch decoder (decode/parser.py). One chunk = one task = one-ish Arrow
    batch, so Python overhead is per-chunk, not per-packet.
 
-Scale notes (100 TB): chunk descriptors are tiny (a few hundred bytes), so a
-100 TB corpus at 128 MB chunks is ~800k descriptor rows — trivially a
-DataFrame. Decode parallelism = chunk count, independent of file count.
-Single colossal files could bound index latency; the escape hatch is the
-speculative resync scan (``split_pcap_speculative``: split at arbitrary
-offsets, each task finds a plausible record header by timestamp/caplen
-sanity) — auto-engaged above ``SPECULATIVE_MIN_BYTES``, controllable via
+Planning is the shared chunked-file planner (``sources/datasource.py``):
+this module supplies the ``PCAP`` descriptor — exact index, speculative
+split, chunk decode — and the planner does the rest: the driver indexes a
+few files, a many-file corpus is indexed one task per file on the
+executors, and descriptors are cached per file identity. Decode
+parallelism = chunk count, independent of file count. Single colossal
+files could bound index latency; the escape hatch is the speculative
+resync scan (``split_pcap_speculative``: split at arbitrary offsets, each
+task finds a plausible record header by timestamp/caplen sanity) —
+auto-engaged above ``SPECULATIVE_MIN_BYTES``, controllable via
 ``read_pcap(..., speculative=...)``.
 
 Reference behavior mirrored (and two documented fixes):
@@ -49,11 +50,17 @@ from struct import Struct, unpack_from
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pcap_converter_spark.schema import PACKETS_SCHEMA
+from pcap_converter_spark.sources.datasource import (
+    DEFAULT_CHUNK_BYTES,
+    ChunkedFileDataSource,
+    ChunkedFormat,
+    read_chunked,
+)
 
 # Magic numbers for legacy pcap.
 _MAGIC_US_BE = 0xA1B2C3D4
@@ -64,8 +71,6 @@ _IDB = 0x00000001
 _SPB = 0x00000003
 _EPB = 0x00000006
 _BYTE_ORDER_MAGIC = 0x1A2B3C4D
-
-DEFAULT_CHUNK_BYTES = 64 * 1024 * 1024
 
 CHUNK_SCHEMA = T.StructType(
     [
@@ -156,7 +161,6 @@ def _index_legacy(f, path: str, target: int, file_size: int) -> Iterator[Chunk]:
 _SANE_SEC_LO = 315_532_800
 _SANE_SEC_HI = 4_102_444_800
 _RESYNC_CHAIN = 5  # consecutive plausible records required to accept a sync
-SPECULATIVE_MIN_BYTES = 256 * 1024 * 1024
 
 
 def split_pcap_speculative(
@@ -503,103 +507,29 @@ def read_pcap_chunk(chunk: dict | Chunk) -> pd.DataFrame:
     )
 
 
-# chunk-descriptor cache keyed by file identity (path, size, mtime_ns) +
-# split parameters: the exact index is a full sequential header walk of the
-# file on the driver, and re-deriving it for an unchanged file on every
-# read_pcap call is pure waste — interactive sessions and benchmarks read
-# the same capture repeatedly, and at corpus scale a production deployment
-# persists split indexes for exactly this reason (the same move as Spark's
-# own file-listing/footer caches). Descriptors are ~100 B per chunk; the
-# cap below bounds worst-case growth over a long session.
-_INDEX_CACHE: dict[tuple, list[Chunk]] = {}
-_INDEX_CACHE_MAX_FILES = 256
+def _split_legacy(path: str, target_chunk_bytes: int) -> list[Chunk] | None:
+    """Speculative split for legacy pcap; None for pcapng, which needs the
+    sequential interface-table walk of the exact indexer."""
+    with open(path, "rb") as f:
+        magic = f.read(4)
+    le = int.from_bytes(magic, "little")
+    be = int.from_bytes(magic, "big")
+    if le in (_MAGIC_US_BE, _MAGIC_NS_BE) or be in (_MAGIC_US_BE, _MAGIC_NS_BE):
+        return split_pcap_speculative(path, target_chunk_bytes)
+    return None
 
 
-def _index_or_split(path: str, target_chunk_bytes: int,
-                    speculative: bool | str = "auto") -> list[Chunk]:
-    """Exact index for normal files; speculative O(1) splitting for colossal
-    legacy pcaps (the exact walk of a 50 GB file would serialize the whole
-    read behind one task — speculative ranges resync on the executors).
-    ``speculative``: "auto" = size-triggered (≥ SPECULATIVE_MIN_BYTES),
-    True = force for any legacy pcap, False = always exact indexing.
-    Results are cached per (file identity, split params); any size or
-    mtime change invalidates."""
-    st = os.stat(path)
-    key = (
-        os.path.abspath(path), st.st_size, st.st_mtime_ns,
-        target_chunk_bytes, speculative,
-    )
-    cached = _INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    use_spec = speculative is True or (
-        speculative == "auto" and st.st_size >= SPECULATIVE_MIN_BYTES
-    )
-    chunks: list[Chunk]
-    if use_spec:
-        with open(path, "rb") as f:
-            magic = f.read(4)
-        le = int.from_bytes(magic, "little")
-        be = int.from_bytes(magic, "big")
-        if le in (_MAGIC_US_BE, _MAGIC_NS_BE) or be in (_MAGIC_US_BE, _MAGIC_NS_BE):
-            chunks = split_pcap_speculative(path, target_chunk_bytes)
-        else:
-            chunks = index_pcap(path, target_chunk_bytes)
-    else:
-        chunks = index_pcap(path, target_chunk_bytes)
-    if len(_INDEX_CACHE) >= _INDEX_CACHE_MAX_FILES:
-        _INDEX_CACHE.clear()
-    _INDEX_CACHE[key] = chunks
-    return chunks
+PCAP = ChunkedFormat(
+    "pcap", DECODE_OUTPUT_SCHEMA, CHUNK_SCHEMA, index_pcap, _split_legacy,
+    read_pcap_chunk,
+)
 
 
-# few-files threshold: at or below this the driver walks headers itself
-# (interactive/bench shape — exact one-chunk-per-partition fan-out);
-# above it indexing AND the descriptor frame stay on the executors
-_DRIVER_INDEX_MAX_FILES = 4
+class PcapDataSource(ChunkedFileDataSource):
+    """``spark.read.format("pcap")`` / ``spark.readStream.format("pcap")``
+    (register with ``sources.datasource.register``)."""
 
-
-def chunk_frame(
-    spark: SparkSession,
-    paths: list[str],
-    target_chunk_bytes: int,
-    speculative: bool | str = "auto",
-):
-    """Chunk-descriptor DataFrame for a corpus, WITHOUT materializing the
-    descriptor list on the driver (VERDICT r10 #6: at 100 TB the old
-    index-then-collect path held ~1.6M descriptor dicts — hundreds of MB
-    — on the driver before re-parallelizing them).
-
-    Few files (≤ _DRIVER_INDEX_MAX_FILES): driver indexing, one chunk per
-    partition — the exact historical fan-out, and the (path, size,
-    mtime)-keyed descriptor cache keeps repeat reads free. Corpora: one
-    index task per file emits its own descriptors, which flow straight
-    into the decode stage through a shuffle of ~100-byte rows — driver
-    memory stays O(|paths|), never O(|chunks|). The repartition spreads
-    multi-chunk files across the cluster (a per-file partition would
-    serialize each file's decode); descriptor rows are tiny, so the
-    shuffle is noise next to one chunk's decode."""
-    if len(paths) <= _DRIVER_INDEX_MAX_FILES:
-        chunk_rows = [
-            c.__dict__
-            for p in paths
-            for c in _index_or_split(p, target_chunk_bytes, speculative)
-        ]
-        if not chunk_rows:
-            return None
-        return spark.createDataFrame(chunk_rows, CHUNK_SCHEMA).repartition(
-            len(chunk_rows)
-        )
-    tgt, spec = target_chunk_bytes, speculative
-    fields = [f.name for f in CHUNK_SCHEMA.fields]
-    rdd = spark.sparkContext.parallelize(paths, len(paths)).flatMap(
-        lambda p: [
-            tuple(c.__dict__[f] for f in fields)
-            for c in _index_or_split(p, tgt, spec)
-        ]
-    )
-    n_parts = max(spark.sparkContext.defaultParallelism * 4, len(paths))
-    return spark.createDataFrame(rdd, CHUNK_SCHEMA).repartition(n_parts)
+    format = PCAP
 
 
 def read_pcap(
@@ -621,30 +551,16 @@ def read_pcap(
     ``observation.get`` yields ``{"packets": N, "errors": M}``.
 
     ``speculative`` controls colossal-file splitting ("auto"/True/False —
-    see ``_index_or_split``). With ``with_errors_column=True`` the per-row
-    ``errors`` column is kept in the output schema.
+    see ``sources.datasource.index_or_split``). With
+    ``with_errors_column=True`` the per-row ``errors`` column is kept in
+    the output schema.
 
     Returns (DataFrame, Observation).
     """
     from pyspark.sql import Observation
 
-    if isinstance(paths, str):
-        paths = [paths]
     obs = Observation()
-    # descriptor planning stays executor-side for corpora (chunk_frame —
-    # VERDICT r10 #6); few-files keeps the exact one-chunk-per-partition
-    # driver path with its descriptor cache
-    chunks_df = chunk_frame(spark, paths, target_chunk_bytes, speculative)
-    if chunks_df is None:
-        decoded = spark.createDataFrame([], DECODE_OUTPUT_SCHEMA)
-    else:
-        def decode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for rec in pdf.to_dict("records"):
-                    yield read_pcap_chunk(rec)
-
-        decoded = chunks_df.mapInPandas(decode_partition, schema=DECODE_OUTPUT_SCHEMA)
-    decoded = decoded.observe(
+    decoded = read_chunked(spark, PCAP, paths, target_chunk_bytes, speculative).observe(
         obs,
         F.count(F.lit(1)).alias("packets"),
         F.coalesce(F.sum("errors"), F.lit(0)).alias("errors"),

@@ -52,7 +52,7 @@ def test_cli_convert_writes_parquet_and_reports_counts(
 
 def test_operators_and_queries_do_not_print():
     offenders = []
-    for sub in ("operators", "queries"):
+    for sub in ("operators", "queries", "sources", "streaming"):
         root = os.path.join(_PKG, sub)
         for name in sorted(os.listdir(root)):
             if not name.endswith(".py"):

@@ -78,43 +78,6 @@ def test_datasource_partition_per_chunk(registered, tmp_path):
     assert df.count() == 2000
 
 
-def test_datasource_coarse_partitions(registered, tmp_path):
-    """VERDICT r11 #6 (pcap twin of the WARC test): above
-    max_planned_chunks estimated chunks the planner emits one partition
-    per FILE — tasks sub-index their own file — with rows identical to
-    the fine-grained plan."""
-    spark = registered
-    paths = []
-    for i in range(5):
-        fp = str(tmp_path / f"c{i}.pcap")
-        g.write_pcap(
-            fp, [(1_000_000 + j, _udp_pkt(j)) for j in range(400)]
-        )
-        paths.append(fp)
-    tiny = 8 << 10
-    from pcap_converter_spark.sources.pcap import index_pcap
-
-    n_chunks = sum(
-        len(index_pcap(p, target_chunk_bytes=tiny)) for p in paths
-    )
-    glob_p = str(tmp_path / "c*.pcap")
-    fine = (
-        spark.read.format("pcap")
-        .option("target_chunk_bytes", str(tiny))
-        .load(glob_p)
-    )
-    assert fine.rdd.getNumPartitions() == n_chunks > len(paths)
-    coarse = (
-        spark.read.format("pcap")
-        .option("target_chunk_bytes", str(tiny))
-        .option("max_planned_chunks", "4")
-        .option("min_coarse_files", "5")
-        .load(glob_p)
-    )
-    assert coarse.rdd.getNumPartitions() == len(paths)
-    assert _rows(coarse) == _rows(fine)
-
-
 def test_stream_reader_incremental_files(registered, tmp_path):
     """readStream.format('pcap') over a capture directory: first run
     consumes the files present; a later run on the SAME checkpoint picks
@@ -167,9 +130,9 @@ def test_datasource_missing_path_raises(registered):
 # offset/planning contract is driver-side reader state) -------------------
 
 def _stream_reader(path, **opts):
-    from pcap_converter_spark.sources.datasource import PcapStreamReader
+    from pcap_converter_spark.sources.pcap import PcapDataSource
 
-    return PcapStreamReader({"path": str(path), **opts}, None)
+    return PcapDataSource({"path": str(path), **opts}).streamReader(None)
 
 
 def test_stream_settle_gate_defers_fresh_files(tmp_path):
@@ -598,3 +561,25 @@ def test_stream_quarantine_corrupt_file(tmp_path):
     with pytest.raises(Exception):
         r2.latestOffset()
     assert bad2.exists()  # never moved
+
+
+def test_stream_quarantine_logs_one_warning(tmp_path, caplog):
+    """The quarantine event is a logging WARNING naming the source and
+    destination paths, not a print: library paths write nothing to
+    stdout/stderr themselves."""
+    import logging
+    import os
+
+    cap = tmp_path / "captures"
+    cap.mkdir()
+    qdir = tmp_path / "quarantine"
+    bad = cap / "bad.pcap"
+    bad.write_bytes(b"\xd4\xc3")
+    os.utime(bad, (1_000_000_000, 1_000_000_000))  # quiescent
+    r = _stream_reader(cap, quarantine_dir=str(qdir))
+    with caplog.at_level(logging.WARNING):
+        assert r.latestOffset() == {}
+    warnings = [x for x in caplog.records if x.levelno == logging.WARNING]
+    assert len(warnings) == 1
+    msg = warnings[0].getMessage()
+    assert str(bad) in msg and str(qdir / "bad.pcap") in msg

@@ -107,20 +107,36 @@ def test_chunk_boundaries_cover_all_records(tmp_path):
         assert total == n, f"target={target}: {total} != {n}"
 
 
-def test_index_cache_serves_and_invalidates(tmp_path):
-    """The chunk-descriptor cache serves repeat reads of an unchanged file
-    and invalidates when the file changes (size/mtime identity)."""
-    from pcap_converter_spark.sources.pcap import _index_or_split
+@pytest.mark.parametrize("fmt", ["pcap", "warc"])
+def test_index_cache_serves_and_invalidates(tmp_path, fmt):
+    """The shared chunk-descriptor cache serves repeat reads of an
+    unchanged file, misses on different split parameters, and invalidates
+    when the file changes (size/mtime identity) — for both formats."""
+    from fixtures import warcgen as wg
+    from pcap_converter_spark.sources.datasource import index_or_split
+    from pcap_converter_spark.sources.pcap import PCAP
+    from pcap_converter_spark.sources.warc import WARC
 
-    path = str(tmp_path / "cached.pcap")
-    g.write_pcap(path, [(1_000_000 + i, _udp_pkt(i)) for i in range(10)])
-    first = _index_or_split(path, 1 << 20, "auto")
-    assert _index_or_split(path, 1 << 20, "auto") is first  # cache hit
+    path = str(tmp_path / f"cached.{fmt}")
+
+    def write(n: int) -> None:
+        if fmt == "pcap":
+            g.write_pcap(path, [(1_000_000 + i, _udp_pkt(i)) for i in range(n)])
+        else:
+            wg.write_warc(path, [
+                wg.record("warcinfo", f"record {i}\r\n".encode())
+                for i in range(n)
+            ])
+
+    source = PCAP if fmt == "pcap" else WARC
+    write(10)
+    first = index_or_split(source, path, 1 << 20, "auto")
+    assert index_or_split(source, path, 1 << 20, "auto") is first  # cache hit
     # different split params miss the cache
-    assert _index_or_split(path, 1 << 10, "auto") is not first
+    assert index_or_split(source, path, 1 << 10, "auto") is not first
     # rewriting the file (new size) invalidates
-    g.write_pcap(path, [(1_000_000 + i, _udp_pkt(i)) for i in range(20)])
-    fresh = _index_or_split(path, 1 << 20, "auto")
+    write(20)
+    fresh = index_or_split(source, path, 1 << 20, "auto")
     assert fresh is not first
     assert sum(c.n_records for c in fresh) == 20
 

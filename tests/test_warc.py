@@ -152,82 +152,67 @@ def test_warc_datasource_face_matches_read_warc(spark, tmp_path):
     assert _rows(via_format) == _rows(read_warc(spark, p))
 
 
-def test_warc_datasource_coarse_partitions(spark, tmp_path):
-    """VERDICT r11 #6: above max_planned_chunks estimated chunks the batch
-    face plans ONE partition per file (driver memory O(|paths|), each task
-    sub-indexing its own file at read time) with rows identical to the
-    fine-grained plan; coarse_partitions=true|false forces either mode."""
-    from pcap_converter_spark.sources.warc import register_datasource
+@pytest.mark.parametrize("fmt", ["pcap", "warc"])
+def test_datasource_coarse_plan(tmp_path, monkeypatch, fmt):
+    """VERDICT r11 #6: above _MAX_PLANNED_CHUNKS estimated chunks, with at
+    least _MIN_COARSE_FILES files, the batch DataSource face plans ONE
+    partition per file (driver memory O(|paths|), each task indexing its
+    own file at read time) with rows identical to the fine plan; a single
+    file over the cap keeps fine chunks. The reader is built in-process:
+    Spark plans a DataSource in a Python worker, out of monkeypatch's
+    reach."""
+    import pyarrow as pa
 
-    register_datasource(spark)
+    from fixtures import pcapgen as g
+    from pcap_converter_spark.sources import datasource
+    from pcap_converter_spark.sources.pcap import PcapDataSource
+    from pcap_converter_spark.sources.warc import WarcDataSource
+
+    source = PcapDataSource if fmt == "pcap" else WarcDataSource
+    pkt = g.ethernet(g.mac(1), g.mac(2), 0x0800,
+                     g.ipv4("10.0.0.1", "10.0.0.2", 17, g.udp(1, 9, b"abcd")))
     paths = []
     for i in range(6):
-        fp = str(tmp_path / f"seg{i}.warc.gz")
-        wg.write_warc(fp, _corpus(12), gzipped=True)
+        fp = str(tmp_path / f"seg{i}.{fmt}")
+        if fmt == "pcap":
+            g.write_pcap(fp, [(1_000_000 + j, pkt) for j in range(100)])
+        else:
+            wg.write_warc(fp, _corpus(12), gzipped=True)
         paths.append(fp)
-    glob_p = str(tmp_path / "seg*.warc.gz")
-    fine = (
-        spark.read.format("warc")
-        .option("target_chunk_bytes", "2048")
-        .load(glob_p)
-    )
-    n_chunks = sum(
-        len(index_warc(p, target_chunk_bytes=2048)) for p in paths
-    )
-    assert fine.rdd.getNumPartitions() == n_chunks > len(paths)
-    # tiny cap -> auto-coarsens to one partition PER FILE, not per chunk:
-    # the bounded-driver assertion (the descriptor list the API forces
-    # through the driver is |files| long)
-    coarse = (
-        spark.read.format("warc")
-        .option("target_chunk_bytes", "2048")
-        .option("max_planned_chunks", "4")
-        .option("min_coarse_files", "6")
-        .load(glob_p)
-    )
-    assert coarse.rdd.getNumPartitions() == len(paths)
-    assert _rows(coarse) == _rows(fine)
+    glob_p = str(tmp_path / f"seg*.{fmt}")
+
+    def plan(path):
+        r = source({"path": path, "target_chunk_bytes": "2048"}).reader(
+            source.format.schema
+        )
+        return r, r.partitions()
+
+    def rows(r, parts):
+        return sorted(
+            repr(tuple(d.values()))
+            for p in parts
+            for d in pa.Table.from_batches(list(r.read(p))).to_pylist()
+        )
+
+    def n_chunks(p):
+        return len(source.format.index(p, 2048))
+
+    fine_r, fine = plan(glob_p)
+    assert len(fine) == sum(map(n_chunks, paths)) > len(paths)
+    monkeypatch.setattr(datasource, "_MAX_PLANNED_CHUNKS", 4)
+    monkeypatch.setattr(datasource, "_MIN_COARSE_FILES", 6)
+    coarse_r, coarse = plan(glob_p)
+    assert len(coarse) == len(paths)
+    assert rows(coarse_r, coarse) == rows(fine_r, fine)
     # a corpus BELOW the file floor keeps fine chunks even over the cap:
-    # coarse parallelism is the file count, and a near-single colossal
-    # file must not collapse to a near-single-task scan
-    single = (
-        spark.read.format("warc")
-        .option("target_chunk_bytes", "2048")
-        .option("max_planned_chunks", "4")
-        .load(paths[0])
-    )
-    assert single.rdd.getNumPartitions() == len(
-        index_warc(paths[0], target_chunk_bytes=2048)
-    ) > 1
-    # explicit override beats the estimate in both directions
-    forced_fine = (
-        spark.read.format("warc")
-        .option("target_chunk_bytes", "2048")
-        .option("max_planned_chunks", "4")
-        .option("min_coarse_files", "6")
-        .option("coarse_partitions", "false")
-        .load(glob_p)
-    )
-    assert forced_fine.rdd.getNumPartitions() == n_chunks
-    forced_coarse = (
-        spark.read.format("warc")
-        .option("coarse_partitions", "true")
-        .load(glob_p)
-    )
-    assert forced_coarse.rdd.getNumPartitions() == len(paths)
+    # coarse parallelism is the file count
+    _, single = plan(paths[0])
+    assert len(single) == n_chunks(paths[0]) > 1
 
 
 def test_warc_index_cache_and_multifile_fanout(spark, tmp_path):
-    """The descriptor cache serves repeat reads of an unchanged archive and
-    invalidates on rewrite; >4 files route the index pass through the
-    Spark fan-out and still produce every record exactly once."""
-    p = str(tmp_path / "cache.warc")
-    wg.write_warc(p, _corpus(5))
-    first = index_warc(p)
-    assert index_warc(p) is first  # cache hit
-    wg.write_warc(p, _corpus(8))  # rewrite invalidates
-    assert index_warc(p) is not first
-
+    """>4 files route the index pass through the Spark fan-out and still
+    produce every record exactly once."""
     paths = []
     for i in range(6):  # > 4 files → Spark-job index fan-out
         fp = str(tmp_path / f"part-{i}.warc.gz")
@@ -568,11 +553,12 @@ def test_warc_docs_fixture_matches_ground_truth(spark):
 def _warc_stream_reader(path, **opts):
     from pcap_converter_spark.sources.warc import (
         WARC_OUTPUT_SCHEMA,
-        _warc_datasource_cls,
+        WarcDataSource,
     )
 
-    cls = _warc_datasource_cls()
-    return cls({"path": str(path), **opts}).streamReader(WARC_OUTPUT_SCHEMA)
+    return WarcDataSource({"path": str(path), **opts}).streamReader(
+        WARC_OUTPUT_SCHEMA
+    )
 
 
 def test_warc_stream_settle_gate_tracks_midpoll_growth(tmp_path):
