@@ -1207,31 +1207,14 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("-j", type=int, default=None, metavar="N",
                     help="local-mode parallelism (default: all cores)")
     ap.add_argument("-v", "--verbose", action="store_true")
-    ap.add_argument("--html-extract", default="text",
-                    choices=["text", "main"],
-                    help="warc format only: 'text' = full HTML->text; "
-                         "'main' = block-level main-content extraction "
-                         "(nav/footer/sidebar/link-farm pruning)")
     ap.add_argument("--single-file", action="store_true",
                     help="write one parquet part-file instead of N")
     args = ap.parse_args(argv)
-
-    paths: list[str] = []
-    for pat in args.file:
-        hits = sorted(glob.glob(pat))
-        if not hits:
-            print(f"error: no files match {pat!r}", file=sys.stderr)
-            return 2
-        paths.extend(hits)
+    paths = _expand(args.file)
 
     from pcap_converter_spark.operators.convert import convert
-    from pcap_converter_spark.session import get_spark
 
-    master = f"local[{args.j}]" if args.j else None
-    spark = get_spark("pcap-converter", master=master)
-    if not args.verbose:
-        spark.sparkContext.setLogLevel("ERROR")
-
+    spark = _spark_for(args)
     t0 = time.perf_counter()
     stats = convert(
         spark, paths, args.out,

@@ -2,11 +2,12 @@
 
 Mirrors /root/reference/src/main.rs:268-301 (R2-R6 in SURVEY.md §2.3):
 
-- R2 ``fragmentation_pct``: the reference runs a filtered COUNT with a scalar
+- R2 ``fragment_pct``: the reference runs a filtered COUNT with a scalar
   subquery (main.rs:274). Here the subquery fuses into ONE conditional
-  aggregate — a single scan, no second job, no shuffle beyond the final
-  1-row reduce.
-- R3 branch: <1% fragmented → skip the rewrite entirely (main.rs:277-284).
+  aggregate expression. ``fragmentation_pct`` evaluates it as its own job;
+  ``convert`` observes it on the decode pass, so it costs no job at all.
+- R3 branch: under ``DEFRAG_THRESHOLD_PCT`` fragmented → skip the rewrite
+  entirely (main.rs:277-284).
 - R4 ``first_fragments``: one row per fragmented UDP datagram carrying its
   first fragment's app-layer fields. The reference uses DuckDB ``first()``
   whose result is scan-order-dependent; we pin deterministic semantics with
@@ -34,6 +35,10 @@ from pcap_converter_spark.schema import (
     PACKET_COLUMNS,
 )
 
+# R3: at or above this share of fragment rows the rewrite runs (main.rs:277).
+DEFRAG_THRESHOLD_PCT = 1.0
+
+
 def fragment_predicate() -> "F.Column":
     """Matches main.rs:274: first fragments (offset=0 AND mf) plus
     continuations (offset>0). Depends on ip_frag_offset/ip_mf being non-null
@@ -43,14 +48,21 @@ def fragment_predicate() -> "F.Column":
     ) | (F.col("ip_frag_offset") > 0)
 
 
+def fragment_pct() -> "F.Column":
+    """R2 as one aggregate expression, aliased ``fragment_pct``: the share
+    of fragment rows in percent, rounded HALF_UP to a whole number
+    (Spark's ``round``). NULL on an empty input."""
+    return F.round(
+        100.0
+        * F.count(F.when(fragment_predicate(), F.lit(1)))
+        / F.nullif(F.count(F.lit(1)), F.lit(0))
+    ).alias("fragment_pct")
+
+
 def fragmentation_pct(packets: DataFrame) -> float:
     """R2: % of rows that are fragments, as one conditional aggregate."""
-    row = packets.agg(
-        F.round(
-            100.0 * F.count(F.when(fragment_predicate(), F.lit(1))) / F.count(F.lit(1))
-        ).alias("pct")
-    ).collect()[0]
-    return float(row["pct"] if row["pct"] is not None else 0.0)
+    pct = packets.agg(fragment_pct()).collect()[0][0]
+    return float(pct if pct is not None else 0.0)
 
 
 def first_fragments(packets: DataFrame) -> DataFrame:
@@ -72,21 +84,16 @@ def first_fragments(packets: DataFrame) -> DataFrame:
     )
 
 
-def defrag(packets: DataFrame, broadcast: bool = True) -> DataFrame:
+def defrag(packets: DataFrame) -> DataFrame:
     """R5: propagate first-fragment fields to continuation fragments.
 
     Left join on the 4-key datagram identity + coalesce×6, projecting the
     31 normative columns. ``ff`` (one row per fragmented datagram) is
-    broadcast by default — the packets side is never shuffled, which is
-    what makes this viable at 100 TB. For pathological captures where the
-    fragmented-datagram count itself is huge (ff too big to broadcast),
-    pass ``broadcast=False``: the join shuffles both sides on the 4 keys
-    and AQE still converts back to broadcast at runtime if ff turns out
-    small.
+    broadcast — the packets side is never shuffled, which is what makes
+    this viable at 100 TB.
     """
-    ff = first_fragments(packets)
     p = packets.alias("p")
-    f = (F.broadcast(ff) if broadcast else ff).alias("ff")
+    f = F.broadcast(first_fragments(packets)).alias("ff")
     projection = [
         F.coalesce(F.col(f"p.{c}"), F.col(f"ff.{c}")).alias(c)
         if c in DEFRAG_FILL_COLUMNS
@@ -94,17 +101,3 @@ def defrag(packets: DataFrame, broadcast: bool = True) -> DataFrame:
         for c in PACKET_COLUMNS
     ]
     return p.join(f, on=DEFRAG_JOIN_KEYS, how="left").select(*projection)
-
-
-def defrag_if_needed(
-    packets: DataFrame, threshold_pct: float = 1.0
-) -> tuple[DataFrame, float]:
-    """R2+R3: the reference's conditional plan branch (main.rs:274-284).
-
-    Returns (result_df, measured_pct); below the threshold the input passes
-    through untouched (the cheap aggregate guards the expensive rewrite).
-    """
-    pct = fragmentation_pct(packets)
-    if pct < threshold_pct:
-        return packets, pct
-    return defrag(packets), pct

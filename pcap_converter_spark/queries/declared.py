@@ -26,6 +26,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pcap_converter_spark.schema import DEFRAG_FILL_COLUMNS, PACKET_COLUMNS
 from pcap_converter_spark.session import phase
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -83,26 +84,10 @@ class Q:
         return sql
 
 
-# --- the 31 packets columns, for explicit projections (no SELECT * EXCLUDE) --
-_PACKET_COLS = [
-    "frame_time", "frame_len", "eth_type", "ip_src", "ip_dst", "ip_proto",
-    "ip_ttl", "ip_frag_offset", "ip_id", "ip_mf", "icmp_type", "udp_length",
-    "udp_srcport", "udp_dstport", "tcp_flags", "tcp_srcport", "tcp_dstport",
-    "col_info", "col_source", "col_destination", "col_protocol",
-    "dns_qry_name", "dns_qry_type", "http_request_uri", "http_host",
-    "http_request_method", "http_user_agent", "http_file_data",
-    "ntp_priv_reqcode", "dhip_device", "pcap_file",
-]
-
-_DEFRAG_FILL = [
-    "udp_srcport", "udp_dstport", "ntp_priv_reqcode",
-    "dns_qry_type", "dns_qry_name", "col_protocol",
-]
-
 # PQ2 body (R4, main.rs:292 with deterministic min_by instead of first()).
 _PQ2_SQL = (
     "SELECT ip_src, ip_dst, ip_id, ip_proto, "
-    + ", ".join(f"min_by({c}, frame_time) AS {c}" for c in _DEFRAG_FILL)
+    + ", ".join(f"min_by({c}, frame_time) AS {c}" for c in DEFRAG_FILL_COLUMNS)
     + " FROM packets WHERE ip_proto = 17 AND ip_mf = true AND ip_frag_offset = 0"
     " GROUP BY ip_src, ip_dst, ip_id, ip_proto"
     " ORDER BY ip_src, ip_dst, ip_id"
@@ -111,13 +96,13 @@ _PQ2_SQL = (
 # PQ3 (R5, main.rs:296): left join packets→first-fragments, coalesce the six
 # propagated columns, project all 31 columns explicitly.
 _PQ3_PROJ = ", ".join(
-    f"coalesce(p.{c}, ff.{c}) AS {c}" if c in _DEFRAG_FILL else f"p.{c}"
-    for c in _PACKET_COLS
+    f"coalesce(p.{c}, ff.{c}) AS {c}" if c in DEFRAG_FILL_COLUMNS else f"p.{c}"
+    for c in PACKET_COLUMNS
 )
 _PQ3_SQL = (
     "WITH ff AS ("
     "  SELECT ip_src, ip_dst, ip_id, ip_proto, "
-    + ", ".join(f"min_by({c}, frame_time) AS {c}" for c in _DEFRAG_FILL)
+    + ", ".join(f"min_by({c}, frame_time) AS {c}" for c in DEFRAG_FILL_COLUMNS)
     + "  FROM packets WHERE ip_proto = 17 AND ip_mf = true AND ip_frag_offset = 0"
     "  GROUP BY ip_src, ip_dst, ip_id, ip_proto"
     ") "

@@ -67,36 +67,13 @@ DEFRAG_JOIN_KEYS = ["ip_src", "ip_dst", "ip_proto", "ip_id"]
 
 # pandas dtypes used by the decode layer when building Arrow batches: nullable
 # extension dtypes so NULLs survive the trip into Spark's schema.
+_PANDAS_DTYPE = {
+    T.IntegerType: "Int32",
+    T.LongType: "Int64",
+    T.StringType: "object",
+    T.BooleanType: "boolean",
+    T.TimestampNTZType: "datetime64[us]",
+}
 PACKET_PANDAS_DTYPES = {
-    "frame_time": "datetime64[us]",
-    "frame_len": "Int64",
-    "eth_type": "Int32",
-    "ip_src": "object",
-    "ip_dst": "object",
-    "ip_proto": "Int32",
-    "ip_ttl": "Int32",
-    "ip_frag_offset": "Int32",
-    "ip_id": "Int32",
-    "ip_mf": "boolean",
-    "icmp_type": "Int32",
-    "udp_length": "Int32",
-    "udp_srcport": "Int32",
-    "udp_dstport": "Int32",
-    "tcp_flags": "object",
-    "tcp_srcport": "Int32",
-    "tcp_dstport": "Int32",
-    "col_info": "object",
-    "col_source": "object",
-    "col_destination": "object",
-    "col_protocol": "object",
-    "dns_qry_name": "object",
-    "dns_qry_type": "Int32",
-    "http_request_uri": "object",
-    "http_host": "object",
-    "http_request_method": "object",
-    "http_user_agent": "object",
-    "http_file_data": "object",
-    "ntp_priv_reqcode": "Int32",
-    "dhip_device": "object",
-    "pcap_file": "object",
+    name: _PANDAS_DTYPE[type(dtype)] for name, dtype, _ in PACKET_FIELDS
 }

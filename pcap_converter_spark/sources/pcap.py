@@ -398,7 +398,6 @@ def _walk_ng_packed(buf, endian: str, interfaces: list[tuple[int, int]]):
     pos, n = 0, len(buf)
     u32 = Struct(endian + "II").unpack_from
     epb_hdr = Struct(endian + "IIIII").unpack_from
-    u16 = Struct(endian + "H").unpack_from
     u32_1 = Struct(endian + "I").unpack_from
     ts_l: list[int] = []
     fl_l: list[int] = []
@@ -412,18 +411,7 @@ def _walk_ng_packed(buf, endian: str, interfaces: list[tuple[int, int]]):
         if btype == _SHB:
             ifaces = []
         elif btype == _IDB:
-            body = buf[pos + 8 : pos + blen - 4]
-            lt = u16(body, 0)[0]
-            tsresol = 6
-            opos = 8
-            while opos + 4 <= len(body):
-                code, olen = unpack_from(endian + "HH", body, opos)
-                if code == 0:
-                    break
-                if code == 9 and olen >= 1:
-                    tsresol = body[opos + 4]
-                opos += 4 + ((olen + 3) & ~3)
-            ifaces.append((lt, tsresol))
+            ifaces.append(_parse_idb(buf[pos + 8 : pos + blen - 4], endian))
         elif btype == _EPB:
             if_id, ts_high, ts_low, caplen, _origlen = epb_hdr(buf, pos + 8)
             lt, tsresol = ifaces[if_id] if if_id < len(ifaces) else (1, 6)

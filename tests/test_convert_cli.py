@@ -7,6 +7,8 @@ from __future__ import annotations
 import ast
 import os
 
+import pytest
+
 from pcap_converter_spark.cli import main
 from pcap_converter_spark.schema import PACKETS_SCHEMA
 
@@ -48,6 +50,22 @@ def test_cli_convert_writes_parquet_and_reports_counts(
     assert [f.dataType for f in on_disk] == [
         f.dataType for f in PACKETS_SCHEMA
     ]
+
+
+def test_cli_convert_missing_input_errors_like_subcommands(tmp_path):
+    missing = str(tmp_path / "nope-*.pcap")
+    with pytest.raises(SystemExit) as exc:
+        main(["-f", missing, "-o", str(tmp_path / "out")])
+    assert str(exc.value) == f"error: no files match {missing!r}"
+    assert not (tmp_path / "out").exists()
+
+
+def test_cli_convert_rejects_html_extract(tmp_path, capsys):
+    with pytest.raises(SystemExit) as exc:
+        main(["-f", FIXTURE_PCAP, "-o", str(tmp_path / "out"),
+              "--html-extract", "main"])
+    assert exc.value.code == 2  # argparse: unrecognized argument
+    assert "--html-extract" in capsys.readouterr().err
 
 
 def test_operators_and_queries_do_not_print():

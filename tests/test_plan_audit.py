@@ -53,13 +53,9 @@ def test_projection_pruning_reaches_parquet_scan(spark):
 def test_defrag_decision_agg_prunes_to_predicate_columns(spark):
     """R2 reads only ip_frag_offset/ip_mf, not the 31-column row."""
     packets = spark.read.parquet(FIXTURE_PARQUET)
-    from pcap_converter_spark.operators.defrag import fragment_predicate
+    from pcap_converter_spark.operators.defrag import fragment_pct
 
-    agg = packets.agg(
-        F.count(F.when(fragment_predicate(), F.lit(1))).alias("frags"),
-        F.count(F.lit(1)).alias("total"),
-    )
-    audit.assert_pruned_columns(agg, 2)
+    audit.assert_pruned_columns(packets.agg(fragment_pct()), 2)
 
 
 def test_small_dim_join_broadcasts(spark):

@@ -68,6 +68,28 @@ def test_pcapng_roundtrip_and_multichunk_interfaces(tmp_path):
     assert int(pdf["errors"].sum()) == 0
 
 
+def test_pcapng_ns_resolution_every_chunk(tmp_path):
+    """if_tsresol 9 (ns) scales to µs frame_time in every chunk: the first
+    chunk parses the IDB itself, later ones start from the index's
+    interface snapshot."""
+    path = str(tmp_path / "ns.pcapng")
+    us = [1_000_000 + 7 * i for i in range(200)]
+    g.write_pcapng(
+        path,
+        interfaces=[(1, 9)],  # ethernet, ns resolution
+        packets=[(0, t * 1000, _udp_pkt(i)) for i, t in enumerate(us)],
+    )
+    chunks = index_pcap(path, target_chunk_bytes=4096)
+    assert len(chunks) > 1, "test needs multiple chunks"
+    start = 0
+    for c in chunks:
+        got = read_pcap_chunk(c)["frame_time"].tolist()
+        want = us[start : start + len(got)]
+        assert got == [pd.Timestamp(t, unit="us") for t in want], c
+        start += len(got)
+    assert start == len(us)
+
+
 def test_pcapng_simple_packet_blocks(tmp_path):
     """SPB: frame_time epoch 0, caplen from block length, linktype from the
     first interface (main.rs:201-213)."""
