@@ -689,35 +689,19 @@ def main() -> int:
     runners = entrymod.queries()
     run_warmup(spark, sf_dir, cpus, runners)
 
-    def _jvm_gc_ms() -> int | None:
-        """Cumulative driver-JVM GC time (all collectors). Sampled around
-        each entry so a timing regression can be attributed: a jump whose
-        gc_ms delta ≈ wall delta is inherited heap debt / GC pause, not
-        plan cost (VERDICT r8 #3 — ex_curate doubled in r8 with its code
-        untouched, and nothing recorded could separate the two)."""
-        try:
-            beans = spark._jvm.java.lang.management.ManagementFactory\
-                .getGarbageCollectorMXBeans()
-            return sum(
-                beans.get(i).getCollectionTime()
-                for i in range(beans.size())
-            )
-        except Exception:
-            return None
+    from perfbench.trace import jvm_counters
 
-    def _jvm_jit_ms() -> int | None:
-        """Cumulative driver-JVM JIT compilation time. Sampled around each
-        entry like gc_ms, for the same adjudication reason (r13): the wide
-        text entries are COMPILE-bound at fixture scale (ex_text_all's
-        final job computes 0.5 s of data warm but spends ~40 s of compiler
-        CPU cold), so their wall time amplifies host contention — a slow
-        recording whose jit delta ballooned alongside is JIT starvation
-        under foreign load, not a plan regression."""
+    def _jvm_ms(key: str) -> int | None:
+        """Cumulative driver-JVM ``gc_ms`` or ``jit_ms`` (perfbench's
+        reader), None when the read fails. Sampled around each entry so a
+        timing regression can be attributed: a jump whose gc_ms delta ≈
+        wall delta is inherited heap debt / GC pause, not plan cost
+        (VERDICT r8 #3); the wide text entries are COMPILE-bound at
+        fixture scale, so a slow recording whose jit_ms delta ballooned
+        alongside is JIT starvation under foreign load, not a plan
+        regression (r13)."""
         try:
-            return (
-                spark._jvm.java.lang.management.ManagementFactory
-                .getCompilationMXBean().getTotalCompilationTime()
-            )
+            return jvm_counters(spark)[key]
         except Exception:
             return None
 
@@ -780,14 +764,14 @@ def main() -> int:
             budget_s = jit_settle_budget
         if budget_s <= 0:
             return 0.0
-        last = _jvm_jit_ms()
+        last = _jvm_ms("jit_ms")
         if last is None:
             return 0.0
         t0 = time.perf_counter()
         t_end = t0 + budget_s
         while time.perf_counter() < t_end:
             time.sleep(0.1)
-            cur = _jvm_jit_ms()
+            cur = _jvm_ms("jit_ms")
             if cur is None:
                 break
             if cur - last < 5:
@@ -820,7 +804,7 @@ def main() -> int:
         # entry for attribution, so a codegen-volume regression stays
         # visible even though it no longer pollutes the headline.
         t0 = time.perf_counter()
-        jc0 = _jvm_jit_ms()
+        jc0 = _jvm_ms("jit_ms")
         try:
             _guarded(
                 f"{name}:cold",
@@ -832,7 +816,7 @@ def main() -> int:
             pass  # the timed attempt below reports the failure
         _print_phases(name)
         settled = _jit_settle()
-        jc1 = _jvm_jit_ms()
+        jc1 = _jvm_ms("jit_ms")
         # Adaptive EXTRA untimed pre-runs for compile-heavy entries
         # (r16): tiered compilation means one pre-run is not steady
         # state — the cold run takes the entry's ~1400 generated methods
@@ -871,7 +855,7 @@ def main() -> int:
                 _print_phases(name)
             wall = round(time.perf_counter() - t0, 3)
             settled = _jit_settle() + settled
-            jc2 = _jvm_jit_ms()
+            jc2 = _jvm_ms("jit_ms")
             prev = accrued
             accrued = (
                 jc2 - jc1 if jc1 is not None and jc2 is not None else 0
@@ -888,8 +872,8 @@ def main() -> int:
                 f"bench: {name} jit-settle {round(settled, 2)}s (untimed)",
                 file=sys.stderr,
             )
-        g0 = _jvm_gc_ms()
-        c0 = _jvm_jit_ms()
+        g0 = _jvm_ms("gc_ms")
+        c0 = _jvm_ms("jit_ms")
         t0 = time.perf_counter()
         try:
             # the whole entry — construction (which can run eager jobs,
@@ -903,10 +887,10 @@ def main() -> int:
                 .mode("overwrite").save(),
             )
             timings[name] = round(time.perf_counter() - t0, 3)
-            g1 = _jvm_gc_ms()
+            g1 = _jvm_ms("gc_ms")
             if g0 is not None and g1 is not None:
                 gc_ms[name] = g1 - g0
-            c1 = _jvm_jit_ms()
+            c1 = _jvm_ms("jit_ms")
             if c0 is not None and c1 is not None:
                 jit_ms[name] = c1 - c0
             ccmb = _jvm_code_cache_mb()

@@ -425,10 +425,9 @@ def _cmd_index(argv: list[str]) -> int:
 
 
 def _cmd_compact(argv: list[str]) -> int:
-    """compact: rewrite the corpus index's accumulated small files.
-    Default is the manifest-based safe path (new generation + atomic
-    manifest commit — works on any Hadoop filesystem, no rename window);
-    --in-place is the legacy local-only directory swap."""
+    """compact: rewrite the corpus index's accumulated small files into
+    a new generation committed by an atomic manifest (any Hadoop
+    filesystem, no rename window)."""
     ap = argparse.ArgumentParser(prog="pcap-converter-spark compact")
     ap.add_argument("--index", help="corpus index directory")
     ap.add_argument("--ann", metavar="DIR", default=None,
@@ -441,23 +440,14 @@ def _cmd_compact(argv: list[str]) -> int:
     ap.add_argument("--files-per-cluster", type=int, default=None,
                     help="--ann only: files per cluster directory after "
                          "compaction (default 1)")
-    ap.add_argument("--in-place", action="store_true",
-                    help="legacy local-filesystem directory swap")
     ap.add_argument("--vacuum", action="store_true",
                     help="drop superseded generations once readers drained")
     ap.add_argument("-j", type=int, default=None, metavar="N",
                     help="local worker threads (default: all cores)")
     ap.add_argument("-v", "--verbose", action="store_true")
     args = ap.parse_args(argv)
-    if args.in_place and args.vacuum:
-        ap.error(
-            "--vacuum applies to manifest generations; the --in-place "
-            "swap has none (drop one of the flags)"
-        )
     if bool(args.index) == bool(args.ann):
         ap.error("exactly one of --index / --ann is required")
-    if args.ann and args.in_place:
-        ap.error("--in-place applies to the corpus index layout only")
     # reject the layout-mismatched file-count flag instead of silently
     # ignoring it and compacting with the other layout's default
     # (r13 review)
@@ -489,16 +479,11 @@ def _cmd_compact(argv: list[str]) -> int:
 
     from pcap_converter_spark.operators import incremental as inc
 
-    if args.in_place:
-        inc.compact_corpus_index(
-            spark, args.index, files_per_table=args.files_per_table
-        )
-    else:
-        inc.compact_corpus_index_safe(
-            spark, args.index, files_per_table=args.files_per_table
-        )
-        if args.vacuum:
-            inc.vacuum_corpus_index(spark, args.index)
+    inc.compact_corpus_index_safe(
+        spark, args.index, files_per_table=args.files_per_table
+    )
+    if args.vacuum:
+        inc.vacuum_corpus_index(spark, args.index)
     root = inc.resolve_index_root(spark, args.index)
     n = spark.read.parquet(f"{root}/exact").count()
     print(f"Compacted {args.index} (live root {root}): {n} digest rows",

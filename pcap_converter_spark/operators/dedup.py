@@ -23,8 +23,6 @@ keyed by band hashes which are uniform by construction (no skew).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -566,20 +564,20 @@ def _shingle_table(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFra
     return df.select(id_col, text_col).mapInPandas(gen, schema=schema)
 
 
+# input size estimate above which the hot-shingle pre-filter engages
+HOT_KEY_GUARD_BYTES = 1 << 30
+
+
 def _hot_key_guard_engaged(df: DataFrame, override: bool | None) -> bool:
     """Size gate for the hot-shingle pre-filter (r17 skew audit, guide
     §2.5): engage automatically when the INPUT's optimizer size estimate
-    crosses a threshold (env ``PCS_HOT_KEY_GUARD_BYTES``, default 1 GiB
-    — the extra corpus pass starts paying for itself when a single hot
-    key's doc list could no longer be assumed to fit one task
-    comfortably). Reading the plan estimate costs no job. ``override``
-    pins the decision either way (tests; callers that know their data)."""
+    crosses ``HOT_KEY_GUARD_BYTES`` (1 GiB — the extra corpus pass
+    starts paying for itself when a single hot key's doc list could no
+    longer be assumed to fit one task comfortably). Reading the plan
+    estimate costs no job. ``override`` pins the decision either way
+    (tests; callers that know their data)."""
     if override is not None:
         return bool(override)
-    try:
-        thresh = int(os.environ.get("PCS_HOT_KEY_GUARD_BYTES", 1 << 30))
-    except ValueError:
-        thresh = 1 << 30
     try:
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -591,7 +589,7 @@ def _hot_key_guard_engaged(df: DataFrame, override: bool | None) -> bool:
         # keep the single-pass shape — callers that know their input is
         # corpus-scale pin hot_key_guard=True explicitly
         return False
-    return size > thresh
+    return size > HOT_KEY_GUARD_BYTES
 
 
 def ngram_jaccard_pairs(

@@ -625,60 +625,6 @@ def extend_corpus_index(
         )
 
 
-def compact_corpus_index(
-    spark: SparkSession,
-    path: str,
-    files_per_table: int = 32,
-) -> None:
-    """Rewrite each index table into ``files_per_table`` files.
-
-    Every ``extend_corpus_index`` append adds a task's worth of small
-    files; after months of daily snapshots the exact table is thousands of
-    kilobyte files and the probe's scan pays per-file open cost (the
-    classic small-files problem). Compaction is the standard maintenance
-    pass: read → repartition → write to a staging dir → swap. The swap is
-    two local renames, NOT atomic: there is a brief window where the
-    table directory is absent, and the renames require a LOCAL filesystem
-    — this function REFUSES any other scheme (hdfs://, s3a://: use
-    ``compact_corpus_index_safe``, which compacts into a new generation
-    and repoints readers through a manifest with no rename window at
-    all). A reader racing the swap fails loudly (PATH_NOT_FOUND) rather
-    than seeing a half-written table, since the staging dir is fully
-    written before the first rename. Row content is untouched (tested);
-    run it whenever file count ≫ files_per_table, during a probe pause."""
-    import shutil
-    from urllib.parse import urlparse
-
-    scheme = urlparse(path).scheme
-    if scheme not in ("", "file"):
-        raise ValueError(
-            f"compact_corpus_index swaps directories with driver-local "
-            f"renames and supports only local paths; got scheme "
-            f"{scheme!r} — use compact_corpus_index_safe (manifest-based, "
-            f"no rename window, any Hadoop filesystem)"
-        )
-    meta = read_index_meta(spark, path)
-    root = resolve_index_root(spark, path)
-    # both URI spellings a local path can arrive as — 'file:///x' and
-    # Hadoop's single-slash 'file:/x' — must strip to a POSIX path
-    # before shutil sees them
-    local_root = urlparse(root).path if scheme == "file" else root
-    tiers = meta["tiers"].split(",")
-    tables = (["exact"] if "exact" in tiers else []) + (
-        ["sigs", "bands"] if "near" in tiers else []
-    )
-    for sub in tables:
-        src = f"{local_root}/{sub}"
-        stage = f"{local_root}/.{sub}.compact"
-        spark.read.parquet(src).repartition(files_per_table).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        old = f"{local_root}/.{sub}.old"
-        shutil.move(src, old)
-        shutil.move(stage, src)
-        shutil.rmtree(old)
-
-
 def compact_corpus_index_safe(
     spark: SparkSession,
     path: str,

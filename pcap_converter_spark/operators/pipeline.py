@@ -5,28 +5,32 @@ lazily-composed DataFrame transformation.
 
 1. quality gate   — Gopher-style keep/drop (operators/quality.py)
 2. exact dedup    — keep the lowest doc_id of each sha256 group
-3. near dedup     — MinHash-LSH pairs → connected components → keep each
+3. near dedup     — shingle-Jaccard pairs → connected components → keep each
                     component's lowest id (operators/dedup.py)
 4. decontaminate  — drop docs sharing any k-gram with the benchmark set
 5. pack           — (shard, bin, offset) positions over the survivors
 
-Each stage BOUNDARY is persisted (and appended to ``handles`` for caller
-cleanup): the funnel's flags join references every stage's output twice —
-once to filter the next stage's input, once in the final flag assembly —
-and each near-dup/decon stage references its predecessor several more
-times internally. Without materialized boundaries Spark re-derives the
-full upstream lineage per reference; measured at 100k docs, the unpersisted
-composition ran ~30× slower than the sum of its stages (457 s vs ~15 s) —
-persisting the boundary frames (ids + flags + token counts; only the
-quality boundary caches text — the decon stage re-joins text from it
-rather than persisting the column a second time) is what makes composition
-cost additive. The result carries
-per-stage drop flags so a curation report is one aggregation —
-``df.groupBy()`` over the booleans — instead of five jobs. Stage order
-follows the standard pipeline economics: the quality gate is a pure
-projection (run it first, it shrinks everything downstream), exact dedup
-shuffles 32-byte digests, near-dup buckets only the quality+exact
-survivors, and decontamination broadcasts the benchmark gram set.
+The funnel is ONE frame carried through the stages. It is rooted at the
+persisted quality boundary (one row per input doc: id, text, the quality
+flag, token count). Each later stage judges the docs whose flags so far
+are all True, persists its (id, keep_*) verdict (appended to ``handles``
+for caller cleanup) and left-joins that verdict onto the funnel once, so
+a doc dropped upstream reads NULL in every later flag by construction.
+Packing joins the same way, and ``kept`` is the conjunction of the flags.
+Nothing re-reads the caller's input after the quality boundary — for a
+WARC source a second read would be a second decode and HTML extraction.
+Persisting the boundaries is what keeps composition cost additive: the
+near-dup and decon stages reference their input several times, and
+without materialized verdicts Spark re-derives the whole upstream
+lineage per reference (measured at 100k docs, the unpersisted
+composition ran ~30× slower than the sum of its stages, 457 s vs ~15 s).
+The result carries per-stage drop flags so a curation report is one
+aggregation — ``df.groupBy()`` over the booleans — instead of five jobs.
+Stage order follows the standard pipeline economics: the quality gate is
+a pure projection (run it first, it shrinks everything downstream),
+exact dedup shuffles 32-byte digests, near-dup buckets only the
+quality+exact survivors, and decontamination broadcasts the benchmark
+gram set.
 
 At 100 TB each stage keeps its documented scale shape — this wrapper adds
 composition and the drop-flag bookkeeping, no new shuffles.
@@ -34,7 +38,10 @@ composition and the drop-flag bookkeeping, no new shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from functools import reduce
+from operator import and_
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 from pcap_converter_spark.functions import text as TX
 from pcap_converter_spark.operators import dedup
@@ -242,13 +249,9 @@ def curate(
     benchmark: DataFrame | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    jaccard_threshold: float = 0.7,
-    max_shingle_df: int = 8,
-    decon_k: int = 5,
     languages: tuple[str, ...] | None = None,
     lang_min_evidence: int = 1,
     lang_default: str = "und",
-    pack_budget: int = 256,
     handles: list | None = None,
     corpus_index: str | None = None,
     index_threshold: float = 0.7,
@@ -262,10 +265,7 @@ def curate(
     prelude_checkpoint: bool = True,
     near_dedup: bool = True,
     embeddings: DataFrame | None = None,
-    emb_id_col: str = "vec_id",
-    vec_col: str = "embedding",
     semantic_threshold: float = 0.9,
-    semantic_target_cluster_rows: int = 1024,
 ) -> DataFrame:
     """Returns one row per input document:
     (doc_id, keep_quality, keep_exact, keep_neardup, keep_decon, kept,
@@ -348,7 +348,7 @@ def curate(
       corpus-level line dedup: map-only, so it runs before anything that
       shuffles and shrinks what they shuffle. A page the gates empty
       exits at the quality stage (0 tokens), same as a span-wiped copy.
-    - ``embeddings=`` (an (emb_id_col, vec_col) frame keyed by the same
+    - ``embeddings=`` (a (vec_id, embedding) frame keyed by the same
       ids as ``docs``) inserts SEMANTIC dedup between near-dup CC and
       decontamination: auto-sized k-means + within-cluster prune
       (``semdedup.semantic_dedup``), adding a ``keep_semantic`` flag
@@ -489,33 +489,40 @@ def curate(
             F.col("_lang"), F.lit(lang_default)
         ).isin(list(languages))
         # funnel convention: a lang-dropped doc has NULL downstream flags
-        quality = _stage(stats.select(
-            did,
-            t,
-            keep_lang.alias("keep_lang"),
-            F.when(keep_lang, gop).alias("keep_quality"),
-            F.col("_nt").alias("_tokens"),
-        ))
+        q_flags = [keep_lang.alias("keep_lang"),
+                   F.when(keep_lang, gop).alias("keep_quality")]
     else:
-        quality = _stage(stats.select(
-            did,
-            t,
-            gop.alias("keep_quality"),
-            F.col("_nt").alias("_tokens"),
-        ))
-    q_docs = quality.filter("keep_quality")
+        q_flags = [gop.alias("keep_quality")]
+    # the funnel frame: one row per input doc, rooted at the persisted
+    # quality boundary; every later stage left-joins its verdict here once
+    funnel = _stage(stats.select(
+        did, t, *q_flags, F.col("_nt").alias("_tokens")
+    ))
+    cols = [c for c in funnel.columns if c.startswith("keep_")]
+
+    def _all() -> Column:
+        return reduce(and_, map(F.col, cols))
+
+    def _passed() -> DataFrame:
+        """The docs that reached the next stage: every flag so far True."""
+        return funnel.filter(_all())
+
+    def _join(verdict: DataFrame) -> None:
+        """Persist a stage's (id, keep_*) verdict and join it onto the
+        funnel; docs that never reached the stage read NULL."""
+        nonlocal funnel
+        verdict = _stage(verdict)
+        funnel = funnel.join(verdict, id_col, "left")
+        cols.append(verdict.columns[1])
 
     # stage 1b (optional): cross-snapshot dedup — probe the at-rest corpus
     # index (operators/incremental.py) so docs already ingested by earlier
     # snapshots drop BEFORE any in-snapshot shuffle work; runs after the
     # quality gate (pure projection, shrinks the probe) and before exact
     # dedup (no point digest-grouping rows the corpus already holds)
-    novel = None
     if corpus_index is not None:
-        from pcap_converter_spark.operators import incremental as INC
-
         verdict_n = INC.flag_against_index(
-            q_docs.select(did, t),
+            _passed().select(did, t),
             corpus_index,
             text_col=text_col,
             id_col=id_col,
@@ -523,7 +530,7 @@ def curate(
             handles=own_handles,
             normalize=digest_normalize,
         )
-        novel = _stage(verdict_n.select(
+        _join(verdict_n.select(
             did,
             (
                 ~(
@@ -532,7 +539,6 @@ def curate(
                 )
             ).alias("keep_novel"),
         ))
-        q_docs = q_docs.join(novel.filter("keep_novel").select(id_col), id_col)
 
     # stage 2: exact dedup — keep the lowest id of each digest group
     # (exact_keep_flags: groupBy+combiner+join-back, the skew-immune
@@ -549,141 +555,81 @@ def curate(
                 "(supported: ccnet)"
             )
         _dt = TX.ccnet_normalize_t(t)
-    digests = q_docs.select(
+    digests = _passed().select(
         did, F.sha2(_dt.cast("binary"), 256).alias("_digest")
     )
-    exact = _stage(
-        exact_keep_flags(digests, id_col=id_col, n_salts=exact_salts)
-    )
-    e_docs = q_docs.join(exact, id_col).filter("keep_exact")
+    _join(exact_keep_flags(digests, id_col=id_col, n_salts=exact_salts))
 
-    # stage 3: near dedup — LSH pairs on the survivors, CC keep-lowest-id.
+    # stage 3: near dedup — shingle-Jaccard pairs on the survivors, CC
+    # keep-lowest-id.
     # ``near_dedup=False`` skips the stage entirely (the CCNet/C4-class
     # exact-only funnel — many production pipelines stop at digests);
     # like the other optional stages its flag column is then ABSENT and
     # curation_report adapts.
     if near_dedup:
+        reached = _passed()
         pairs = dedup.ngram_jaccard_pairs(
-            e_docs,
+            reached,
             text_col=text_col,
             id_col=id_col,
-            threshold=jaccard_threshold,
-            max_shingle_df=max_shingle_df,
+            max_shingle_df=8,
             handles=own_handles,
         )
-        groups = dedup.duplicate_groups(pairs, e_docs, id_col=id_col,
+        groups = dedup.duplicate_groups(pairs, reached, id_col=id_col,
                                         handles=own_handles)
-        near = _stage(groups.select(
-            F.col("doc").alias(id_col), (F.col("doc") == F.col("root")).alias("keep_neardup")
+        _join(groups.select(
+            F.col("doc").alias(id_col),
+            (F.col("doc") == F.col("root")).alias("keep_neardup"),
         ))
-    else:
-        near = None
-    # the persisted stage-3 boundary carries ids + token counts ONLY: the
-    # decon pass below re-joins text from the (already persisted) quality
-    # boundary instead of caching the text column a second time (ADVICE r3)
-    n_docs = _stage(
-        (
-            e_docs.join(near, id_col).filter("keep_neardup")
-            if near is not None
-            else e_docs
-        ).select(did, F.col("_tokens"))
-    )
 
     # stage 3b (optional): semantic dedup over the near-dup survivors —
     # only surviving ids join their embeddings (the corpus text never
     # touches this stage), auto-sized k keeps the within-cluster
     # quadratic linear-total
-    semantic = None
     if embeddings is not None:
         from pcap_converter_spark.operators import semdedup as SD
 
+        reached = _passed().select(did)
         # persisted: semantic_dedup drives several eager actions over its
         # input (count, dim probe, one collect per Lloyd iteration, the
         # prune) — unpersisted, each would re-run the join + assignment
         surv_vecs = _stage(
             embeddings.select(
-                F.col(emb_id_col).alias(id_col), F.col(vec_col)
-            ).join(n_docs.select(id_col), id_col)
+                F.col("vec_id").alias(id_col), F.col("embedding")
+            ).join(reached, id_col)
         )
         verdict = SD.semantic_dedup(
-            surv_vecs,
-            threshold=semantic_threshold,
-            target_cluster_rows=semantic_target_cluster_rows,
-            id_col=id_col,
-            vec_col=vec_col,
+            surv_vecs, threshold=semantic_threshold, id_col=id_col,
         ).select(id_col, (~F.col("is_dup")).alias("_sem_keep"))
-        semantic = _stage(
-            n_docs.select(id_col).join(verdict, id_col, "left").select(
-                did,
-                F.coalesce(F.col("_sem_keep"), F.lit(True)).alias(
-                    "keep_semantic"
-                ),
-            )
-        )
-        n_docs = _stage(
-            n_docs.join(semantic.filter("keep_semantic"), id_col)
-            .select(did, F.col("_tokens"))
-        )
+        _join(reached.join(verdict, id_col, "left").select(
+            did,
+            F.coalesce(F.col("_sem_keep"), F.lit(True)).alias("keep_semantic"),
+        ))
 
     # stage 4: decontamination — drop docs overlapping the benchmark
     if benchmark is not None:
-        n_texts = n_docs.join(quality.select(id_col, text_col), id_col)
+        reached = _passed()
         leaked = (
             dedup.decontaminate(
-                n_texts, benchmark, text_col=text_col, id_col=id_col, k=decon_k
+                reached, benchmark, text_col=text_col, id_col=id_col
             )
             .select(F.explode("doc_ids").alias(id_col))
             .distinct()
             .withColumn("_leaked", F.lit(True))
         )
-        decon = _stage(n_docs.join(leaked, id_col, "left").select(
+        _join(reached.select(did).join(leaked, id_col, "left").select(
             did, F.coalesce(~F.col("_leaked"), F.lit(True)).alias("keep_decon")
         ))
     else:
-        decon = _stage(n_docs.select(did, F.lit(True).alias("keep_decon")))
-    survivors = n_docs.join(decon.filter("keep_decon"), id_col).select(
-        did, F.col("_tokens")
-    )
+        funnel = funnel.withColumn("keep_decon", F.when(_all(), True))
+        cols.append("keep_decon")
 
     # stage 5: packing positions over the survivors
-    packed = pack_documents(survivors, "_tokens", id_col=id_col,
-                            budget=pack_budget)
-
-    q_flag_cols = (
-        ["keep_lang", "keep_quality"]
-        if languages is not None
-        else ["keep_quality"]
-    )
-    flags = docs.select(did).join(
-        quality.select(id_col, *q_flag_cols), id_col, "left"
-    )
-    kept_expr = F.col("keep_quality")
-    if languages is not None:
-        kept_expr = F.col("keep_lang") & kept_expr
-    cols = list(q_flag_cols)
-    if novel is not None:
-        flags = flags.join(novel, id_col, "left")
-        kept_expr = kept_expr & F.col("keep_novel")
-        cols.append("keep_novel")
-    flags = flags.join(exact, id_col, "left")
-    kept_expr = kept_expr & F.col("keep_exact")
-    cols.append("keep_exact")
-    if near is not None:
-        flags = flags.join(near, id_col, "left")
-        kept_expr = kept_expr & F.col("keep_neardup")
-        cols.append("keep_neardup")
-    if semantic is not None:
-        flags = flags.join(semantic, id_col, "left")
-        kept_expr = kept_expr & F.col("keep_semantic")
-        cols.append("keep_semantic")
-    flags = flags.join(decon, id_col, "left").join(packed, id_col, "left")
-    return flags.select(
+    packed = pack_documents(_passed(), "_tokens", id_col=id_col)
+    return funnel.join(packed, id_col, "left").select(
         did,
         *cols,
-        "keep_decon",
-        F.coalesce(kept_expr & F.col("keep_decon"), F.lit(False)).alias(
-            "kept"
-        ),
+        F.coalesce(_all(), F.lit(False)).alias("kept"),
         "pack_shard",
         "pack_bin",
         "pack_offset",

@@ -34,10 +34,10 @@ from pyspark.util import inheritable_thread_target
 #   640 MB holds the whole suite (peak observed occupancy 166 MB).
 #
 # Any long-lived production driver/executor JVM hosting many distinct
-# plans needs the same capacity sizing; both are env-overridable.
-CODEGEN_CACHE_MAX_ENTRIES = os.environ.get(
-    "PCS_CODEGEN_CACHE_ENTRIES", "16384"
-)
+# plans needs the same capacity sizing. A user
+# ``spark.sql.codegen.cache.maxEntries`` conf wins over the constant
+# (``get_spark``); the java opts are env-overridable.
+CODEGEN_CACHE_MAX_ENTRIES = "16384"
 DEFAULT_DRIVER_JAVA_OPTS = "-XX:ReservedCodeCacheSize=640m"
 
 

@@ -652,7 +652,7 @@ def test_line_dedup_handleless_broadcast_releases_cache(spark):
                for r in out.collect())
 
 
-def test_jaccard_hot_key_guard_identical_and_prefilters(spark):
+def test_jaccard_hot_key_guard_identical_and_prefilters(spark, monkeypatch):
     """r17 skew audit (guide 2.5): with the hot-key guard engaged, a
     boilerplate shingle shared corpus-wide is dropped BEFORE the
     postings collect_list (count agg + broadcast anti-join on the plan),
@@ -708,15 +708,8 @@ def test_jaccard_hot_key_guard_identical_and_prefilters(spark):
     assert "LeftAnti" not in (
         small._jdf.queryExecution().executedPlan().toString()
     )
-    import os as _os
-
-    _os.environ["PCS_HOT_KEY_GUARD_BYTES"] = "1"
-    try:
-        forced = dedup.ngram_jaccard_pairs(
-            docs, threshold=0.5, max_shingle_df=4
-        )
-        assert "LeftAnti" in (
-            forced._jdf.queryExecution().executedPlan().toString()
-        )
-    finally:
-        del _os.environ["PCS_HOT_KEY_GUARD_BYTES"]
+    monkeypatch.setattr(dedup, "HOT_KEY_GUARD_BYTES", 1)
+    forced = dedup.ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_df=4)
+    assert "LeftAnti" in (
+        forced._jdf.queryExecution().executedPlan().toString()
+    )

@@ -274,8 +274,9 @@ def test_meta_version_gate(spark, tmp_path):
 
 
 def test_compaction_preserves_content_and_shrinks_files(spark, tmp_path):
-    """Many appends → many files; compaction rewrites to the target file
-    count with identical rows, and the probe answers identically."""
+    """Many appends → many files; compaction rewrites the live tables to
+    the target file count with identical rows, and the probe answers
+    identically."""
     import glob
 
     p = str(tmp_path / "cmp")
@@ -293,10 +294,11 @@ def test_compaction_preserves_content_and_shrinks_files(spark, tmp_path):
         map(tuple, inc.flag_against_index(_corpus_b(spark), p).collect())
     )
     n_files = len(glob.glob(f"{p}/exact/*.parquet"))
-    inc.compact_corpus_index(spark, p, files_per_table=2)
-    assert len(glob.glob(f"{p}/exact/*.parquet")) <= 2 < n_files
+    inc.compact_corpus_index_safe(spark, p, files_per_table=2)
+    root = inc.resolve_index_root(spark, p)
+    assert len(glob.glob(f"{root}/exact/*.parquet")) <= 2 < n_files
     for sub in ("exact", "sigs", "bands"):
-        assert _table_rows(spark, f"{p}/{sub}", ["doc_id"]) == before[sub], sub
+        assert _table_rows(spark, f"{root}/{sub}", ["doc_id"]) == before[sub], sub
     flags_after = sorted(
         map(tuple, inc.flag_against_index(_corpus_b(spark), p).collect())
     )
@@ -322,15 +324,6 @@ def test_probe_tiers_near_only_skips_exact(spark, index_path):
         assert near[d]["dup_exact"] is None, d
         assert near[d]["dup_near"] == full[d]["dup_near"], d
         assert near[d]["near_est"] == full[d]["near_est"], d
-
-
-def test_compaction_refuses_remote_schemes(spark):
-    """The in-place swap is driver-local shutil; any non-local scheme must
-    fail loudly at the top, pointing at the manifest variant (ADVICE r5)."""
-    with pytest.raises(ValueError, match="compact_corpus_index_safe"):
-        inc.compact_corpus_index(spark, "s3a://bucket/index")
-    with pytest.raises(ValueError, match="compact_corpus_index_safe"):
-        inc.compact_corpus_index(spark, "hdfs://nn/index")
 
 
 def test_safe_compaction_manifest_generations(spark, tmp_path):

@@ -588,3 +588,25 @@ def test_curate_exact_salts_is_result_identical(spark):
         map(tuple, curate(df, exact_salts=4, handles=[]).collect())
     )
     assert plain == salted
+
+
+def test_curate_reads_its_input_once(spark):
+    """The funnel is rooted at the persisted quality boundary, so the
+    caller's source runs once per curate() — a second read of ``docs``
+    (for a WARC source: a second decode and HTML extraction) shows up as
+    a doubled decode count."""
+    decoded = spark.sparkContext.accumulator(0)
+
+    def decode(batches):
+        for pdf in batches:
+            decoded.add(len(pdf))
+            yield pdf
+
+    src = spark.createDataFrame(DOCS, ["doc_id", "text"])
+    docs = src.mapInPandas(decode, schema=src.schema)
+    handles: list = []
+    flags = curate(docs, handles=handles).localCheckpoint(eager=True)
+    for h in handles:
+        h.unpersist()
+    assert flags.count() == len(DOCS)
+    assert decoded.value == len(DOCS)

@@ -163,6 +163,45 @@ def test_index_cache_serves_and_invalidates(tmp_path, fmt):
     assert sum(c.n_records for c in fresh) == 20
 
 
+@pytest.mark.parametrize("k", [2, 4])
+@pytest.mark.parametrize("fmt", ["pcap", "warc"])
+def test_driver_plan_places_one_chunk_per_partition(spark, tmp_path, fmt, k):
+    """A driver-indexed read decodes chunk i in partition i: the rows per
+    ``spark_partition_id()`` are the per-chunk record counts, in order.
+    (Round-robin ``repartition(k)`` starts at a random partition, so it
+    left partitions empty and put two chunks in others.)"""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from fixtures import warcgen as wg
+    from pcap_converter_spark.sources.pcap import PCAP, read_pcap
+    from pcap_converter_spark.sources.warc import WARC, read_warc
+
+    path = str(tmp_path / f"k{k}.{fmt}")
+    if fmt == "pcap":
+        g.write_pcap(path, [(1_000_000 + i, _udp_pkt(i)) for i in range(400)])
+    else:
+        wg.write_warc(path, [
+            wg.record("warcinfo", f"record {i:04d}\r\n".encode())
+            for i in range(400)
+        ])
+    target = -(-os.path.getsize(path) // k)
+    chunks = (PCAP if fmt == "pcap" else WARC).index(path, target)
+    assert len(chunks) == k
+    df = (
+        read_pcap(spark, path, target_chunk_bytes=target)[0]
+        if fmt == "pcap"
+        else read_warc(spark, path, target_chunk_bytes=target)
+    )
+    per_part = (
+        df.groupBy(F.spark_partition_id().alias("pid")).count()
+        .orderBy("pid").collect()
+    )
+    assert [r["pid"] for r in per_part] == list(range(k))
+    assert [r["count"] for r in per_part] == [c.n_records for c in chunks]
+
+
 def test_corpus_chunk_frame_never_collects_descriptors(spark, tmp_path,
                                                         monkeypatch):
     """Multi-file corpora (> the few-files threshold) must plan their
