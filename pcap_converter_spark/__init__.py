@@ -4,9 +4,9 @@ Spark-first.
 
 Layers
 ------
-- ``sources``   : pcap/pcapng chunk indexer + distributed reader (the one
-                  operator Spark lacks natively); speculative range splits
-                  for colossal single files.
+- ``sources``   : pcap/pcapng and WARC exact chunk indexers + distributed
+                  readers (the one operator Spark lacks natively), every
+                  file indexed by a sequential header walk.
 - ``decode``    : the extraction layer (E1-E17 in SURVEY.md §2.2) —
                   ``vectorized`` NumPy columnar slicing under
                   ``mapInPandas``, with ``parser`` as the scalar spec.

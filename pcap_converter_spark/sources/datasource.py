@@ -4,14 +4,13 @@ DataSource faces shared by pcap (``sources/pcap.py``) and WARC
 ``mapInPandas`` decode.
 
 A format supplies one ``ChunkedFormat`` descriptor: its name, row schema,
-chunk-descriptor schema, an exact ``index(path, target)`` header walk, an
-O(1) speculative ``split(path, target)`` (``None`` when the file cannot be
-split that way, e.g. pcapng) and ``decode(chunk) -> pandas``. Everything
-else lives here, once:
+chunk-descriptor schema, an exact ``index(path, target)`` header walk and
+``decode(chunk) -> pandas``. Every file, whatever its size, is indexed by
+that exact walk: the formats carry no sync markers, so record boundaries
+are never guessed. Everything else lives here, once:
 
-- ``index_or_split``: speculative routing ("auto" splits files of at least
-  ``SPECULATIVE_MIN_BYTES``) behind a descriptor cache keyed by file
-  identity and split parameters;
+- ``index_file``: ``fmt.index`` behind a descriptor cache keyed by file
+  identity and ``target_chunk_bytes``;
 - ``chunk_frame``: the descriptor DataFrame — the driver indexes up to
   ``_DRIVER_INDEX_MAX_FILES`` files and plans one partition per chunk;
   larger corpora index on the executors (one task per file) and
@@ -26,7 +25,6 @@ DataSource options (all strings, per the DataSource options contract):
 
 - ``path`` (or the ``.load(path)`` argument); globs allowed
 - ``target_chunk_bytes``: split granularity (default 64 MiB)
-- ``speculative``: "auto" (default) | "true" | "false"
 - stream faces only: ``settle_seconds``, ``max_chunks_per_trigger``,
   ``max_chunks_state``, ``quarantine_dir`` (see ``FileChunkStreamReader``)
 
@@ -69,7 +67,6 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import LongType, StructField, StructType
 
 DEFAULT_CHUNK_BYTES = 64 << 20
-SPECULATIVE_MIN_BYTES = 256 << 20
 
 # few-files threshold: at or below this the driver walks headers itself
 # (interactive/bench shape — exact one-chunk-per-partition fan-out);
@@ -89,46 +86,32 @@ class ChunkedFormat:
     schema: StructType  # decoded rows
     chunk_schema: StructType  # fields of the chunk-descriptor dataclass
     index: Callable[[str, int], list]  # exact header walk -> descriptors
-    split: Callable[[str, int], list | None]  # speculative; None = can't
     decode: Callable[[dict], pd.DataFrame]  # descriptor dict -> rows
 
 
 # chunk-descriptor cache keyed by file identity (path, size, mtime_ns) +
-# split parameters: the exact index is a full sequential header walk of the
-# file on the driver, and re-deriving it for an unchanged file on every
-# read is pure waste — interactive sessions and benchmarks read the same
-# file repeatedly (the same move as Spark's own file-listing/footer
-# caches). Descriptors are ~100 B per chunk; the cap bounds worst-case
-# growth over a long session.
+# target_chunk_bytes: the exact index is a full sequential header walk of
+# the file, and re-deriving it for an unchanged file on every read is pure
+# waste — interactive sessions and benchmarks read the same file
+# repeatedly (the same move as Spark's own file-listing/footer caches).
+# Descriptors are ~100 B per chunk; the cap bounds worst-case growth over
+# a long session.
 _INDEX_CACHE: dict[tuple, list] = {}
 _INDEX_CACHE_MAX_FILES = 256
 
 
-def index_or_split(fmt: ChunkedFormat, path: str, target_chunk_bytes: int,
-                   speculative: bool | str = "auto") -> list:
-    """Exact index for normal files; speculative O(1) splitting for
-    colossal ones (the exact walk of a 50 GB file would serialize the
-    whole read behind one task — speculative ranges resync on the
-    executors). ``speculative``: "auto" = size-triggered (≥
-    SPECULATIVE_MIN_BYTES), True = force, False = always exact. A format
-    whose ``split`` returns None (pcapng) falls back to the exact index.
-    Results are cached per (format, file identity, split params); any size
-    or mtime change invalidates."""
+def index_file(fmt: ChunkedFormat, path: str, target_chunk_bytes: int) -> list:
+    """``fmt.index(path, target_chunk_bytes)``, cached per (format, file
+    identity, target); any size or mtime change invalidates."""
     st = os.stat(path)
     key = (
         fmt.name, os.path.abspath(path), st.st_size, st.st_mtime_ns,
-        target_chunk_bytes, speculative,
+        target_chunk_bytes,
     )
     cached = _INDEX_CACHE.get(key)
     if cached is not None:
         return cached
-    chunks = None
-    if speculative is True or (
-        speculative == "auto" and st.st_size >= SPECULATIVE_MIN_BYTES
-    ):
-        chunks = fmt.split(path, target_chunk_bytes)
-    if chunks is None:
-        chunks = fmt.index(path, target_chunk_bytes)
+    chunks = fmt.index(path, target_chunk_bytes)
     if len(_INDEX_CACHE) >= _INDEX_CACHE_MAX_FILES:
         _INDEX_CACHE.clear()
     _INDEX_CACHE[key] = chunks
@@ -147,16 +130,12 @@ def _expand_paths(fmt: ChunkedFormat, paths) -> list[str]:
     return found
 
 
-def _split_params(options: dict) -> tuple[int, bool | str]:
-    """(target_chunk_bytes, speculative) from string-typed reader options:
-    'true'/'false' map to the booleans, anything else is "auto"."""
-    target = int(options.get("target_chunk_bytes", DEFAULT_CHUNK_BYTES))
-    raw = str(options.get("speculative", "auto")).lower()
-    return target, {"true": True, "false": False}.get(raw, "auto")
+def _target_bytes(options: dict) -> int:
+    """``target_chunk_bytes`` from string-typed reader options."""
+    return int(options.get("target_chunk_bytes", DEFAULT_CHUNK_BYTES))
 
 
-def chunk_frame(spark, fmt: ChunkedFormat, paths, target_chunk_bytes: int,
-                speculative: bool | str = "auto"):
+def chunk_frame(spark, fmt: ChunkedFormat, paths, target_chunk_bytes: int):
     """Chunk-descriptor DataFrame for ``paths`` (a glob, a path or a
     list), or None when there are no chunks — WITHOUT materializing a
     corpus's descriptor list on the driver (VERDICT r10 #6: at 100 TB
@@ -175,7 +154,7 @@ def chunk_frame(spark, fmt: ChunkedFormat, paths, target_chunk_bytes: int,
         rows = [
             c.__dict__
             for p in paths
-            for c in index_or_split(fmt, p, target_chunk_bytes, speculative)
+            for c in index_file(fmt, p, target_chunk_bytes)
         ]
         if not rows:
             return None
@@ -194,11 +173,10 @@ def chunk_frame(spark, fmt: ChunkedFormat, paths, target_chunk_bytes: int,
             .drop("_ord")
         )
     fields = fmt.chunk_schema.fieldNames()
-    tgt, spec = target_chunk_bytes, speculative
     rdd = spark.sparkContext.parallelize(paths, len(paths)).flatMap(
         lambda p: [
             tuple(c.__dict__[f] for f in fields)
-            for c in index_or_split(fmt, p, tgt, spec)
+            for c in index_file(fmt, p, target_chunk_bytes)
         ]
     )
     n_parts = max(spark.sparkContext.defaultParallelism * 4, len(paths))
@@ -206,13 +184,13 @@ def chunk_frame(spark, fmt: ChunkedFormat, paths, target_chunk_bytes: int,
 
 
 def read_chunked(spark, fmt: ChunkedFormat, paths, target_chunk_bytes: int,
-                 speculative: bool | str = "auto", decode=None, schema=None):
+                 decode=None, schema=None):
     """``chunk_frame`` decoded one task per chunk through ``mapInPandas``
     with ``fmt.decode`` into ``fmt.schema``, or a caller's fused
     ``decode``/``schema`` pair (``warc_documents``)."""
     decode = decode or fmt.decode
     schema = schema or fmt.schema
-    frame = chunk_frame(spark, fmt, paths, target_chunk_bytes, speculative)
+    frame = chunk_frame(spark, fmt, paths, target_chunk_bytes)
     if frame is None:
         return spark.createDataFrame([], schema)
 
@@ -276,19 +254,17 @@ class ChunkedFileReader(DataSourceReader):
                 f"{self._fmt.name} source requires a path: .load('/file')"
             )
         paths = _expand_paths(self._fmt, path)
-        target, spec = _split_params(self._options)
+        target = _target_bytes(self._options)
         est = sum(os.path.getsize(p) // target + 1 for p in paths)
         if est > _MAX_PLANNED_CHUNKS and len(paths) >= _MIN_COARSE_FILES:
             return [
-                InputPartition(
-                    {"coarse_path": p, "target": target, "speculative": spec}
-                )
+                InputPartition({"coarse_path": p, "target": target})
                 for p in paths
             ]
         return [
             InputPartition(c.__dict__)
             for p in paths
-            for c in index_or_split(self._fmt, p, target, spec)
+            for c in index_file(self._fmt, p, target)
         ]
 
     def read(self, partition: InputPartition) -> Iterator:
@@ -297,9 +273,7 @@ class ChunkedFileReader(DataSourceReader):
             # coarse partition: index the file HERE, executor side
             chunks = [
                 c.__dict__
-                for c in index_or_split(
-                    self._fmt, v["coarse_path"], v["target"], v["speculative"]
-                )
+                for c in index_file(self._fmt, v["coarse_path"], v["target"])
             ]
         else:
             chunks = [v]
@@ -397,8 +371,8 @@ class FileChunkStreamReader(DataSourceStreamReader):
        (one batch per invocation): set ``max_chunks_state`` or the cap
        never engages across invocations.
 
-    The ``ChunkedFormat`` supplies indexing (through ``index_or_split``,
-    honoring ``target_chunk_bytes`` and ``speculative``) and decoding.
+    The ``ChunkedFormat`` supplies indexing (through ``index_file``,
+    honoring ``target_chunk_bytes``) and decoding.
     """
 
     # a file modified this recently may still be mid-write: indexing errors
@@ -409,7 +383,7 @@ class FileChunkStreamReader(DataSourceStreamReader):
         self._fmt = fmt
         self._options = options
         self._schema = schema
-        self._target, self._spec = _split_params(options)
+        self._target = _target_bytes(options)
         self._chunks: dict[str, list[dict]] = {}  # path -> chunk dicts
         self._settle = float(self._options.get("settle_seconds", 0) or 0)
         self._seen: dict[str, tuple[int, float]] = {}  # path -> (size, mtime)
@@ -453,8 +427,7 @@ class FileChunkStreamReader(DataSourceStreamReader):
     def _index_file(self, p: str) -> list[dict]:
         if p not in self._chunks:
             self._chunks[p] = [
-                c.__dict__
-                for c in index_or_split(self._fmt, p, self._target, self._spec)
+                c.__dict__ for c in index_file(self._fmt, p, self._target)
             ]
         return self._chunks[p]
 

@@ -17,16 +17,14 @@ markers, so it is not arbitrarily splittable. The design is a two-phase scan:
    batch, so Python overhead is per-chunk, not per-packet.
 
 Planning is the shared chunked-file planner (``sources/datasource.py``):
-this module supplies the ``PCAP`` descriptor — exact index, speculative
-split, chunk decode — and the planner does the rest: the driver indexes a
-few files, a many-file corpus is indexed one task per file on the
-executors, and descriptors are cached per file identity. Decode
-parallelism = chunk count, independent of file count. Single colossal
-files could bound index latency; the escape hatch is the speculative
-resync scan (``split_pcap_speculative``: split at arbitrary offsets, each
-task finds a plausible record header by timestamp/caplen sanity) —
-auto-engaged above ``SPECULATIVE_MIN_BYTES``, controllable via
-``read_pcap(..., speculative=...)``.
+this module supplies the ``PCAP`` descriptor — exact index and chunk
+decode — and the planner does the rest: the driver indexes a few files, a
+many-file corpus is indexed one task per file on the executors, and
+descriptors are cached per file identity. Decode parallelism = chunk
+count, independent of file count. Every file takes the exact header walk,
+whatever its size: with no sync markers, a record boundary guessed from
+header plausibility can land inside a payload (zeroed timestamps, or
+payloads that themselves carry pcap record headers).
 
 Reference behavior mirrored (and two documented fixes):
 - legacy pcap: frame_time = ts_sec*1e6 + ts_frac (µs files; main.rs:165-166);
@@ -154,98 +152,6 @@ def _index_legacy(f, path: str, target: int, file_size: int) -> Iterator[Chunk]:
         yield Chunk(path, "pcap", chunk_start, pos - chunk_start, endian, linktype, ts_div, "[]", chunk_records)
 
 
-# ------------------------------------------------- speculative split (legacy)
-
-# sanity bounds for resync: timestamps between 1980 and 2100, caplen within
-# the snaplen advertised by the file header (+ a floor for snaplen=0 files)
-_SANE_SEC_LO = 315_532_800
-_SANE_SEC_HI = 4_102_444_800
-_RESYNC_CHAIN = 5  # consecutive plausible records required to accept a sync
-
-
-def split_pcap_speculative(
-    path: str,
-    target_chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-    sec_bounds: tuple[int, int] | None = None,
-) -> list[Chunk]:
-    """O(1) splitting for a single colossal legacy pcap (the 50 GB case).
-
-    Instead of walking every record header up front (exact but sequential),
-    emit raw byte ranges immediately; each decode task then *resyncs* inside
-    its own range — scan forward for an offset where ``_RESYNC_CHAIN``
-    consecutive record headers are plausible (timestamp inside
-    ``sec_bounds``, caplen ≤ snaplen) — and decodes records whose header
-    starts inside the range (reading past the range end for the last
-    record's body, classic input-split semantics). The index pass becomes
-    O(#chunks) driver work; record discovery itself runs fully parallel on
-    the executors.
-
-    ``sec_bounds`` defaults to [1980, 2100] — pass ``(0, hi)`` for captures
-    with zeroed/sanitized timestamps (they exist; ADVICE r2). A range where
-    resync finds no boundary RAISES at decode (never a silent empty chunk);
-    disable speculation entirely with ``read_pcap(..., speculative=False)``.
-
-    n_records is -1 (unknown until decode). Only legacy pcap qualifies —
-    pcapng needs the sequential interface-table walk (exact indexer).
-    """
-    lo, hi = sec_bounds if sec_bounds is not None else (_SANE_SEC_LO, _SANE_SEC_HI)
-    file_size = os.path.getsize(path)
-    with open(path, "rb") as f:
-        endian, ts_div, linktype, snaplen = _read_legacy_header(f)
-    out = []
-    pos = 24
-    while pos < file_size:
-        length = min(target_chunk_bytes, file_size - pos)
-        out.append(
-            Chunk(path, "pcap_spec", pos, length, endian, linktype, ts_div,
-                  json.dumps({"snaplen": snaplen, "sec_lo": lo, "sec_hi": hi}), -1)
-        )
-        pos += length
-    return out
-
-
-def _resync_legacy(buf: memoryview, endian: str, ts_div: int, snaplen: int,
-                   hard_end: int,
-                   sec_bounds: tuple[int, int] | None = None) -> int | None:
-    """Find the first plausible record-header offset in ``buf``.
-
-    A candidate is accepted when ``_RESYNC_CHAIN`` consecutive headers pass
-    the sanity checks (or the chain cleanly reaches ``hard_end``/EOF). With
-    a 5-chain the false-positive probability is negligible: a random byte
-    window passes one (sec, frac, caplen) test with p << 1e-3.
-    """
-    _sane_lo, _sane_hi = (
-        sec_bounds if sec_bounds is not None else (_SANE_SEC_LO, _SANE_SEC_HI)
-    )
-    rec = Struct(endian + "IIII")
-    frac_hi = 1_000_000_000 if ts_div == 1000 else 1_000_000
-    cap_hi = max(snaplen, 65535) or 262_144
-    n = len(buf)
-    for cand in range(0, min(n - 16, 16 + cap_hi)):
-        pos = cand
-        ok = 0
-        while ok < _RESYNC_CHAIN:
-            if pos + 16 > n:
-                break  # next header ran off the window
-            sec, frac, caplen, origlen = rec.unpack_from(buf, pos)
-            if not (_sane_lo <= sec <= _sane_hi and frac < frac_hi
-                    and caplen <= cap_hi and origlen <= 2 * cap_hi):
-                ok = -1
-                break
-            pos += 16 + caplen
-            ok += 1
-            if pos >= hard_end:
-                break  # clean walk to the end of the range counts
-        if ok >= _RESYNC_CHAIN:
-            return cand
-        if ok >= 1 and pos <= n:
-            # short chain is only trustworthy when every record body stayed
-            # inside the window (a bogus caplen that vaults past the end
-            # would otherwise self-certify with a single link)
-            return cand
-    return None
-
-
 def _parse_idb(body: bytes, endian: str) -> tuple[int, int]:
     """IDB body → (linktype, tsresol_code); if_tsresol is option code 9,
     default 6 = microseconds (pcapng spec §4.2)."""
@@ -320,8 +226,7 @@ def index_pcap(path: str, target_chunk_bytes: int = DEFAULT_CHUNK_BYTES) -> list
 # ------------------------------------------------------------------ decoding
 
 
-def _walk_legacy_packed(buf, endian: str, ts_div: int, base: int = 0,
-                        limit: int | None = None):
+def _walk_legacy_packed(buf, endian: str, ts_div: int):
     """Offset-chain walk of a legacy chunk → packed NumPy arrays, no copies.
 
     The record chain is inherently sequential (each offset depends on the
@@ -333,18 +238,16 @@ def _walk_legacy_packed(buf, endian: str, ts_div: int, base: int = 0,
     was the decode-throughput hot spot).
 
     Returns (ts_us, frame_len, data_off, data_len) with offsets into
-    ``buf``; records whose header starts at/after ``base+limit`` are not
-    owned by this chunk (speculative input-split semantics).
+    ``buf``.
     """
     import numpy as np
 
     n = len(buf)
-    head_end = n if limit is None else min(base + limit, n)
     cap_at = Struct(endian + "I").unpack_from
     offs: list[int] = []
     append = offs.append
-    pos = base
-    while pos + 16 <= n and pos < head_end:
+    pos = 0
+    while pos + 16 <= n:
         end = pos + 16 + cap_at(buf, pos + 8)[0]
         if end > n:
             break
@@ -450,36 +353,6 @@ def read_pcap_chunk(chunk: dict | Chunk) -> pd.DataFrame:
         decode_packets_vectorized,
     )
 
-    if c.fmt == "pcap_spec":
-        # speculative range: resync to the first plausible record header,
-        # own records whose *header* starts inside [offset, offset+length),
-        # read past the range end for the last record's body
-        meta = json.loads(c.interfaces)
-        snaplen = meta.get("snaplen", 65535)
-        bounds = (meta.get("sec_lo", _SANE_SEC_LO), meta.get("sec_hi", _SANE_SEC_HI))
-        cap_hi = max(snaplen, 65535) or 262_144
-        with open(c.path, "rb") as f:
-            f.seek(c.offset)
-            raw = f.read(c.length + 16 + cap_hi)
-        sync = 0 if c.offset == 24 else _resync_legacy(
-            memoryview(raw), c.endian, c.ts_div, snaplen, c.length,
-            sec_bounds=bounds,
-        )
-        if sync is None:
-            # Loud failure beats a silent empty result (ADVICE r2): no
-            # plausible record chain means a corrupt range OR sanity bounds
-            # that reject this capture (e.g. zeroed timestamps).
-            raise ValueError(
-                f"speculative resync failed in {c.path}"
-                f"[{c.offset}:{c.offset + c.length}]: no plausible record "
-                f"chain (sec bounds {bounds}); pass sec_bounds=(0, hi) for "
-                "epoch-0 captures or speculative=False for exact indexing"
-            )
-        ts, fl, doff, dlen = _walk_legacy_packed(
-            raw, c.endian, c.ts_div, base=sync, limit=c.length - sync
-        )
-        return decode_packets_packed(raw, doff, dlen, ts, fl, c.linktype, basename)
-
     with open(c.path, "rb") as f:
         f.seek(c.offset)
         raw = f.read(c.length)
@@ -495,21 +368,8 @@ def read_pcap_chunk(chunk: dict | Chunk) -> pd.DataFrame:
     )
 
 
-def _split_legacy(path: str, target_chunk_bytes: int) -> list[Chunk] | None:
-    """Speculative split for legacy pcap; None for pcapng, which needs the
-    sequential interface-table walk of the exact indexer."""
-    with open(path, "rb") as f:
-        magic = f.read(4)
-    le = int.from_bytes(magic, "little")
-    be = int.from_bytes(magic, "big")
-    if le in (_MAGIC_US_BE, _MAGIC_NS_BE) or be in (_MAGIC_US_BE, _MAGIC_NS_BE):
-        return split_pcap_speculative(path, target_chunk_bytes)
-    return None
-
-
 PCAP = ChunkedFormat(
-    "pcap", DECODE_OUTPUT_SCHEMA, CHUNK_SCHEMA, index_pcap, _split_legacy,
-    read_pcap_chunk,
+    "pcap", DECODE_OUTPUT_SCHEMA, CHUNK_SCHEMA, index_pcap, read_pcap_chunk
 )
 
 
@@ -525,7 +385,6 @@ def read_pcap(
     paths: str | list[str],
     target_chunk_bytes: int = DEFAULT_CHUNK_BYTES,
     with_errors_column: bool = False,
-    speculative: bool | str = "auto",
 ):
     """The pcap source: paths → (packets DataFrame, stats Observation).
 
@@ -538,17 +397,15 @@ def read_pcap(
     action). After the first action on the returned DataFrame,
     ``observation.get`` yields ``{"packets": N, "errors": M}``.
 
-    ``speculative`` controls colossal-file splitting ("auto"/True/False —
-    see ``sources.datasource.index_or_split``). With
-    ``with_errors_column=True`` the per-row ``errors`` column is kept in
-    the output schema.
+    With ``with_errors_column=True`` the per-row ``errors`` column is kept
+    in the output schema.
 
     Returns (DataFrame, Observation).
     """
     from pyspark.sql import Observation
 
     obs = Observation()
-    decoded = read_chunked(spark, PCAP, paths, target_chunk_bytes, speculative).observe(
+    decoded = read_chunked(spark, PCAP, paths, target_chunk_bytes).observe(
         obs,
         F.count(F.lit(1)).alias("packets"),
         F.coalesce(F.sum("errors"), F.lit(0)).alias("errors"),

@@ -23,14 +23,13 @@ executors decompress only their own byte range. A monolithic
 (non-member) gzip stream cannot be split — it is rejected with a clear
 error rather than silently serialized onto one task.
 
-At 100 TB: one driver walk per file is the same cost contract as the
-exact pcap index; many-file corpora fan the index pass out as a Spark
-job (one task per file), and a colossal single file takes the
-speculative path — O(1) boundary resync on the record / gzip-member
-magic with chain verification (``split_warc_speculative``), triggered
-automatically at ≥ SPECULATIVE_MIN_BYTES like the pcap source. Both
-sources plan through the shared chunked-file planner
-(``sources/datasource.py``); this module supplies the ``WARC`` descriptor.
+At 100 TB: one sequential walk per file, whatever its size, is the same
+cost contract as the exact pcap index; many-file corpora fan the index
+pass out as a Spark job (one task per file). Boundaries are never guessed
+from the record or gzip magic: a crawled page can embed either, down to a
+whole well-formed archive. Both sources plan through the shared
+chunked-file planner (``sources/datasource.py``); this module supplies the
+``WARC`` descriptor.
 """
 
 from __future__ import annotations
@@ -155,8 +154,7 @@ def _walk_gzip_members(f, file_size: int) -> Iterator[tuple[int, int]]:
     that capped the walk at ~12 MB/s single-thread (a 1 GB CommonCrawl
     segment would take ~85 s to index). Bounded feeding leaves only the
     inflate itself, which is the irreducible cost of finding member
-    boundaries in a format without a length header; colossal single
-    files take the speculative O(1)-resync path instead."""
+    boundaries in a format without a length header."""
     BLK = 1 << 20
     FEED = 64 << 10
     pos = 0
@@ -294,9 +292,8 @@ def _parse_records(buf: bytes, basename: str) -> Iterator[dict]:
             break  # cannot frame further records without a length
         if hdr_end + 4 + clen + 4 > n:
             # truncated tail record (payload or trailer cut by EOF): DROP
-            # it, exactly as _walk_plain_records' index pass does — the
-            # speculative split's last chunk must not emit a clamped
-            # payload the exact index would never produce (ADVICE r4)
+            # it, exactly as _walk_plain_records' index pass does — never
+            # emit a clamped payload the index would not admit
             break
         body = buf[hdr_end + 4 : hdr_end + 4 + clen]
         status = None
@@ -353,8 +350,9 @@ def _parse_records(buf: bytes, basename: str) -> Iterator[dict]:
 
 def _decompress_members(raw: bytes) -> bytes:
     """Decompress concatenated gzip members. A truncated FINAL member
-    (possible only on the speculative path, whose last chunk ends at EOF)
-    is dropped — parity with the exact index walk, which never admits it.
+    (an indexed chunk ends on a member boundary, so only a file cut after
+    indexing has one) is dropped — parity with the index walk, which
+    never admits it.
     Fed in bounded 64 KB slices through a memoryview cursor for the same
     reason as ``_walk_gzip_members``: handing each member the whole
     remaining chunk re-materializes the tail via ``unused_data`` per
@@ -405,16 +403,13 @@ def read_warc(
     spark: SparkSession,
     paths: str | list[str],
     target_chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-    speculative: bool | str = "auto",
 ) -> DataFrame:
     """WARC corpus → DataFrame, one task per chunk (same fan-out contract
     as ``read_pcap``). Returns (warc_type, warc_record_id, warc_date,
     target_uri, content_type, content_length, http_status, payload,
-    warc_file, errors). ``speculative``: "auto" = size-triggered O(1)
-    splitting for colossal files (≥ SPECULATIVE_MIN_BYTES), True = force,
-    False = always exact indexing."""
+    warc_file, errors)."""
     apply_runtime_confs(spark)
-    return read_chunked(spark, WARC, paths, target_chunk_bytes, speculative)
+    return read_chunked(spark, WARC, paths, target_chunk_bytes)
 
 
 def responses_as_documents(
@@ -554,7 +549,6 @@ def warc_documents(
     spark: SparkSession,
     paths: str | list[str],
     target_chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-    speculative: bool | str = "auto",
     extract_text: bool | str = True,
 ) -> DataFrame:
     """The corpus-acquisition FAST PATH:
@@ -578,7 +572,7 @@ def warc_documents(
 
     apply_runtime_confs(spark)
     docs = read_chunked(
-        spark, WARC, paths, target_chunk_bytes, speculative,
+        spark, WARC, paths, target_chunk_bytes,
         partial(_chunk_documents, extract=extract_text), DOCS_OUTPUT_SCHEMA,
     )
     return docs.select(
@@ -634,152 +628,8 @@ def wat_metadata(df: DataFrame, schema=None) -> DataFrame:
     )
 
 
-# ------------------------------------------- speculative split (scale path)
-
-SPECULATIVE_CHAIN = 3  # consecutive verified records/members to accept a sync
-_SCAN_WINDOW = 8 << 20  # how far past a boundary to hunt for a sync point
-
-
-def _sync_plain(f, pos: int, file_size: int) -> int | None:
-    """Find the first TRUE record start at/after ``pos``: a ``WARC/1.``
-    magic that frames a chain of SPECULATIVE_CHAIN records exactly onto
-    further magics (payload bytes can contain the magic TEXT — e.g. a
-    crawled page about WARC — but framing lands mid-garbage for those,
-    so the chain check rejects them; an embedded byte-exact well-formed
-    archive could still fool it, the same documented residual risk as the
-    pcap resync's sanity chain)."""
-    f.seek(pos)
-    window = f.read(_SCAN_WINDOW)
-    at = 0
-    while True:
-        cand = window.find(b"WARC/1.", at)
-        if cand < 0:
-            return None
-        # magic must start the file or follow a record trailer
-        if (pos + cand == 0) or window[max(cand - 4, 0):cand] == b"\r\n\r\n":
-            probe = pos + cand
-            ok = 0
-            while ok < SPECULATIVE_CHAIN and probe <= file_size:
-                if probe == file_size:
-                    ok = SPECULATIVE_CHAIN  # clean EOF ends the chain
-                    break
-                f.seek(probe)
-                blob = f.read(64 << 10)
-                if not blob.startswith(b"WARC/"):
-                    break
-                hdr_end = blob.find(b"\r\n\r\n")
-                if hdr_end < 0:
-                    break
-                try:
-                    clen = _content_length(blob[:hdr_end])
-                except ValueError:
-                    break
-                nxt = probe + hdr_end + 4 + clen + 4
-                if nxt > file_size:
-                    # truncated tail: accept only after ≥1 fully-framed
-                    # record — a bare magic whose FIRST framing already
-                    # overruns EOF verifies nothing, and accepting it would
-                    # let an embedded '\r\n\r\nWARC/1.' trap near file end
-                    # bypass the chain check entirely (ADVICE r4)
-                    if ok >= 1:
-                        ok = SPECULATIVE_CHAIN
-                    break
-                probe = nxt
-                ok += 1
-            if ok >= SPECULATIVE_CHAIN:
-                return pos + cand
-        at = cand + 1
-
-
-def _sync_gzip(f, pos: int, file_size: int) -> int | None:
-    """Find the first TRUE gzip-member start at/after ``pos``: the member
-    must decompress cleanly to a ``WARC/`` head AND be followed at its
-    exact end by another member (or EOF) — payload bytes matching the
-    3-byte gzip magic fail one of the two."""
-    f.seek(pos)
-    window = f.read(_SCAN_WINDOW)
-    at = 0
-    while True:
-        cand = window.find(b"\x1f\x8b\x08", at)
-        if cand < 0:
-            return None
-        probe = pos + cand
-        ok = 0
-        while ok < SPECULATIVE_CHAIN:
-            f.seek(probe)
-            d = zlib.decompressobj(wbits=16 + zlib.MAX_WBITS)
-            head = b""
-            consumed = 0
-            good = False
-            while True:
-                block = f.read(1 << 20)
-                if not block:
-                    good = d.eof and head.startswith(b"WARC/")
-                    break
-                try:
-                    out = d.decompress(block)
-                except zlib.error:
-                    break
-                if len(head) < 5:
-                    head += out[: 5 - len(head)]
-                if d.eof:
-                    consumed += len(block) - len(d.unused_data)
-                    good = head.startswith(b"WARC/")
-                    break
-                consumed += len(block)
-            if not good:
-                break
-            probe += consumed
-            ok += 1
-            if probe >= file_size:
-                ok = SPECULATIVE_CHAIN
-                break
-        if ok >= SPECULATIVE_CHAIN:
-            return pos + cand
-        at = cand + 1
-
-
-def split_warc_speculative(
-    path: str, target_chunk_bytes: int = DEFAULT_CHUNK_BYTES
-) -> list[WarcChunk]:
-    """O(1)-per-boundary splitting for a colossal WARC (the 500 GB
-    ``.warc.gz`` case, where the exact index walk would serialize the
-    whole read behind the driver): place candidate boundaries every
-    ``target_chunk_bytes``, resync each to the next true record / gzip
-    member start (chain-verified — see the sync helpers), and emit
-    boundary-aligned chunks that executors decode independently. Record
-    counts are unknown up front (n_records = -1); every record is parsed
-    exactly once because consecutive chunks share their sync points.
-    A boundary whose scan window contains no verifiable sync folds into
-    the previous chunk (pathological only for records larger than the
-    scan window)."""
-    file_size = os.path.getsize(path)
-    with open(path, "rb") as f:
-        gzipped = f.read(2) == _GZ_MAGIC
-        sync = _sync_gzip if gzipped else _sync_plain
-        first = sync(f, 0, file_size)
-        if first is None:
-            raise ValueError(f"{path}: no verifiable WARC sync at file start")
-        bounds = [first]
-        pos = first + target_chunk_bytes
-        while pos < file_size:
-            s = sync(f, pos, file_size)
-            if s is None or s >= file_size:
-                break
-            if s > bounds[-1]:
-                bounds.append(s)
-            pos = s + target_chunk_bytes
-        bounds.append(file_size)
-    return [
-        WarcChunk(path, a, b - a, gzipped, -1)
-        for a, b in zip(bounds, bounds[1:])
-        if b > a
-    ]
-
-
 WARC = ChunkedFormat(
-    "warc", WARC_OUTPUT_SCHEMA, WARC_CHUNK_SCHEMA, index_warc,
-    split_warc_speculative, read_warc_chunk,
+    "warc", WARC_OUTPUT_SCHEMA, WARC_CHUNK_SCHEMA, index_warc, read_warc_chunk
 )
 
 

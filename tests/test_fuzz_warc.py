@@ -1,9 +1,8 @@
 """Property/fuzz tests (hypothesis) for the WARC source: the index walk
 and chunk parser must be total (complete or raise ValueError — never any
 other exception, never a hang), every framing must agree between the
-exact index, the chunked read, and the speculative resync, arbitrary
-truncation must degrade to a clean prefix, and the HTTP dechunker must
-never raise on random bytes."""
+index and the chunked read, arbitrary truncation must degrade to a clean
+prefix, and the HTTP dechunker must never raise on random bytes."""
 
 from __future__ import annotations
 
@@ -20,7 +19,6 @@ from pcap_converter_spark.sources.warc import (
     _dechunk,
     index_warc,
     read_warc_chunk,
-    split_warc_speculative,
 )
 
 # payloads that deliberately contain the traps: record magic preceded by a
@@ -66,19 +64,16 @@ def _parse_all(path: str, chunks: list[WarcChunk]):
     gzipped=st.booleans(),
     target=st.sampled_from([1, 512, 4096, 1 << 20]),
 )
-def test_index_chunk_speculative_parity(tmp_path_factory, recs, gzipped, target):
+def test_index_chunk_parity(tmp_path_factory, recs, gzipped, target):
     """However the archive is laid out and however small the chunk target,
-    the exact index, the chunked parse, and the speculative resync must
-    each see every record exactly once."""
+    the index and the chunked parse must each see every record exactly
+    once."""
     tmpdir = str(tmp_path_factory.mktemp("fz"))
     p = _write(tmpdir, recs, gzipped)
     chunks = index_warc(p, target_chunk_bytes=target)
     assert sum(c.n_records for c in chunks) == len(recs)
     parsed = _parse_all(p, chunks)
     assert len(parsed) == len(recs)
-    spec = split_warc_speculative(p, target_chunk_bytes=max(target, 64))
-    sparsed = _parse_all(p, spec)
-    assert sorted(sparsed["warc_record_id"]) == sorted(parsed["warc_record_id"])
 
 
 @settings(max_examples=60, deadline=None)

@@ -132,10 +132,10 @@ def test_chunk_boundaries_cover_all_records(tmp_path):
 @pytest.mark.parametrize("fmt", ["pcap", "warc"])
 def test_index_cache_serves_and_invalidates(tmp_path, fmt):
     """The shared chunk-descriptor cache serves repeat reads of an
-    unchanged file, misses on different split parameters, and invalidates
+    unchanged file, misses on a different chunk target, and invalidates
     when the file changes (size/mtime identity) — for both formats."""
     from fixtures import warcgen as wg
-    from pcap_converter_spark.sources.datasource import index_or_split
+    from pcap_converter_spark.sources.datasource import index_file
     from pcap_converter_spark.sources.pcap import PCAP
     from pcap_converter_spark.sources.warc import WARC
 
@@ -152,13 +152,13 @@ def test_index_cache_serves_and_invalidates(tmp_path, fmt):
 
     source = PCAP if fmt == "pcap" else WARC
     write(10)
-    first = index_or_split(source, path, 1 << 20, "auto")
-    assert index_or_split(source, path, 1 << 20, "auto") is first  # cache hit
-    # different split params miss the cache
-    assert index_or_split(source, path, 1 << 10, "auto") is not first
+    first = index_file(source, path, 1 << 20)
+    assert index_file(source, path, 1 << 20) is first  # cache hit
+    # a different chunk target misses the cache
+    assert index_file(source, path, 1 << 10) is not first
     # rewriting the file (new size) invalidates
     write(20)
-    fresh = index_or_split(source, path, 1 << 20, "auto")
+    fresh = index_file(source, path, 1 << 20)
     assert fresh is not first
     assert sum(c.n_records for c in fresh) == 20
 
@@ -237,3 +237,103 @@ def test_corpus_chunk_frame_never_collects_descriptors(spark, tmp_path,
     assert {r["pcap_file"]: r["count"] for r in got} == {
         f"c{i}.pcap": 10 + i for i in range(6)
     }
+
+
+# larger than 256 MiB, the size from which record boundaries were once
+# guessed instead of walked. Each case below is a valid file whose bytes
+# mislead a boundary guess; every record must come back exactly once
+_COLOSSAL_BYTES = 270 << 20
+
+
+def _repeat_to_size(path: str, head: bytes, block: bytes) -> int:
+    """``head`` then ``block`` repeated past ``_COLOSSAL_BYTES``; returns
+    the number of repeats."""
+    reps = -(-(_COLOSSAL_BYTES - len(head)) // len(block))
+    with open(path, "wb") as f:
+        f.write(head)
+        for _ in range(reps):
+            f.write(block)
+    return reps
+
+
+def _colossal_pcap(path: str, zero_ts: bool) -> int:
+    """A legacy capture of 1,000-packet blocks; returns the packet count.
+    ``zero_ts``: every timestamp is the epoch (sanitized captures).
+    Otherwise each UDP payload carries a chain of well-formed pcap record
+    headers ending in 0xff bytes."""
+    import struct
+
+    if zero_ts:
+        payloads = [bytes([i % 251]) * 1200 for i in range(1000)]
+    else:
+        fake = struct.pack("<IIII", 1_700_000_000, 0, 16, 16) + b"\x00" * 16
+        payloads = [fake * 37 + b"\xff" * 16] * 1000
+    packets = [
+        (0 if zero_ts else 1_700_000_000_000_000 + i,
+         g.ethernet(M1, M2, 0x0800, g.ipv4(
+             f"10.0.{i // 250}.{1 + i % 250}", "10.0.9.9", 17,
+             g.udp(1000 + i, 9, payloads[i]))))
+        for i in range(1000)
+    ]
+    g.write_pcap(path, packets)
+    with open(path, "rb") as f:
+        raw = f.read()
+    return 1000 * _repeat_to_size(path, raw[:24], raw[24:])
+
+
+def _colossal_warc(path: str) -> tuple[int, set[str]]:
+    """A plain WARC of 500-record blocks whose pages each end in a
+    well-formed 6-record WARC; returns (record count, page record ids)."""
+    from fixtures import warcgen as wg
+
+    filler = b"<p>" + b"lorem ipsum " * 1700 + b"</p>\r\n\r\n"
+    recs, ids = [], set()
+    for i in range(500):
+        inner = b"".join(
+            wg.record("resource", b"embedded %d" % j, uri=f"https://in/{j}",
+                      rec_id=f"<urn:uuid:inner-{i}-{j}>")
+            for j in range(6)
+        )
+        rid = f"<urn:uuid:page-{i}>"
+        recs.append(wg.response_record(f"https://p.org/{i}", filler + inner, rid))
+        ids.add(rid)
+    return 500 * _repeat_to_size(path, b"", b"".join(recs)), ids
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize(
+    "case", ["pcap-zero-ts", "pcap-embedded-records", "warc-embedded-archive"]
+)
+def test_colossal_file_reads_every_record(spark, tmp_path, case):
+    """Every file is indexed by its exact header walk, whatever its size:
+    a capture with zeroed timestamps, a capture whose payloads carry pcap
+    record headers and a WARC whose pages embed a WARC all read back
+    every record, and only those."""
+    import os
+    import shutil
+    from collections import Counter
+
+    from pcap_converter_spark.operators.convert import convert
+    from pcap_converter_spark.sources.warc import read_warc
+
+    big = tmp_path / ("big.warc" if case.startswith("warc") else "big.pcap")
+    path, out = str(big), str(tmp_path / "out")
+    try:
+        if case.startswith("pcap"):
+            n = _colossal_pcap(path, zero_ts=case == "pcap-zero-ts")
+            assert os.path.getsize(path) > 256 << 20
+            stats = convert(spark, path, out, nodefrag=True)
+            assert (stats["packets"], stats["errors"]) == (n, 0)
+        else:
+            n, ids = _colossal_warc(path)
+            assert os.path.getsize(path) > 256 << 20
+            got = Counter(
+                r[0] for r in
+                read_warc(spark, path).select("warc_record_id").collect()
+            )
+            assert sum(got.values()) == n
+            assert got == {rid: n // len(ids) for rid in ids}
+    finally:
+        # pytest keeps the last few tmp_path trees: do not leave 270 MiB
+        big.unlink(missing_ok=True)
+        shutil.rmtree(out, ignore_errors=True)

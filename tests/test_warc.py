@@ -296,67 +296,6 @@ def test_warc_to_training_artifact_end_to_end(spark, tmp_path):
                                  "pack_bin", "pack_offset"}
 
 
-@pytest.mark.parametrize("gzipped", [False, True])
-def test_warc_speculative_split_parity(spark, tmp_path, gzipped):
-    """Speculative boundary resync must produce exactly the exact-index
-    row set (every record once), for plain and per-record-gzip layouts."""
-    from pcap_converter_spark.sources.warc import (
-        read_warc_chunk,
-        split_warc_speculative,
-    )
-
-    p = str(tmp_path / ("s.warc.gz" if gzipped else "s.warc"))
-    wg.write_warc(p, _corpus(60), gzipped=gzipped)
-    chunks = split_warc_speculative(p, target_chunk_bytes=4096)
-    assert len(chunks) > 4  # boundaries actually split
-    import pandas as pd
-
-    pdf = pd.concat([read_warc_chunk(c) for c in chunks], ignore_index=True)
-    exact = read_warc(spark, p).toPandas()
-    key = ["warc_record_id", "content_length"]
-    assert sorted(map(tuple, pdf[key].values.tolist())) == sorted(
-        map(tuple, exact[key].values.tolist())
-    )
-
-
-def test_warc_speculative_rejects_embedded_magic(tmp_path):
-    """A payload containing the record-magic TEXT (a page about WARC) must
-    not fool the resync: framing from the fake magic lands mid-garbage,
-    so the chain check skips it and every record still reads exactly once."""
-    from pcap_converter_spark.sources.warc import (
-        read_warc_chunk,
-        split_warc_speculative,
-    )
-
-    trap = (
-        b"about the format: \r\n\r\nWARC/1.0\r\nContent-Length: 99999\r\n"
-        b"WARC-Type: response\r\n\r\n and more prose " + b"x" * 3000
-    )
-    recs = [
-        wg.response_record(f"https://t.org/{i}", trap, f"<urn:uuid:t{i}>")
-        for i in range(8)
-    ]
-    p = str(tmp_path / "trap.warc")
-    wg.write_warc(p, recs)
-    chunks = split_warc_speculative(p, target_chunk_bytes=2048)
-    import pandas as pd
-
-    pdf = pd.concat([read_warc_chunk(c) for c in chunks], ignore_index=True)
-    assert len(pdf) == 8
-    assert sorted(pdf["warc_record_id"]) == sorted(f"<urn:uuid:t{i}>" for i in range(8))
-
-
-def test_read_warc_forced_speculative_matches_exact(spark, tmp_path):
-    """read_warc(speculative=True) routes through the boundary resync and
-    must return the exact-index row set."""
-    p = str(tmp_path / "sp.warc.gz")
-    wg.write_warc(p, _corpus(35), gzipped=True)
-    exact = read_warc(spark, p, target_chunk_bytes=4096, speculative=False)
-    spec = read_warc(spark, p, target_chunk_bytes=4096, speculative=True)
-    assert spec.rdd.getNumPartitions() > 1
-    assert _rows(spec) == _rows(exact)
-
-
 def test_warc_stream_incremental_files(spark, tmp_path):
     """readStream.format('warc') over a crawl landing dir: first
     availableNow run consumes the files present; a later run on the SAME
@@ -413,59 +352,6 @@ def test_warc_midfile_corruption_raises_not_truncates(tmp_path):
         index_warc(p)
 
 
-def test_warc_speculative_truncated_tail_parity(spark, tmp_path):
-    """A genuinely truncated tail record must be DROPPED by the
-    speculative path exactly as the exact index drops it — never emitted
-    with a clamped payload (ADVICE r4)."""
-    from pcap_converter_spark.sources.warc import (
-        read_warc_chunk,
-        split_warc_speculative,
-    )
-
-    p = str(tmp_path / "tt.warc")
-    recs = _corpus(20)  # 41 records
-    wg.write_warc(p, recs)
-    with open(p, "r+b") as f:
-        f.truncate(f.seek(0, 2) - 37)  # cut into the last record
-    chunks = split_warc_speculative(p, target_chunk_bytes=2048)
-    import pandas as pd
-
-    pdf = pd.concat([read_warc_chunk(c) for c in chunks], ignore_index=True)
-    exact_n = read_warc(spark, p).count()
-    assert exact_n == len(recs) - 1  # exact index drops the cut tail record
-    assert len(pdf) == exact_n
-
-
-def test_warc_speculative_rejects_tail_trap(tmp_path):
-    """An embedded '\\r\\n\\r\\nWARC/1.' trap near file end whose framing
-    overshoots EOF must NOT be accepted as a sync point: a truncated-tail
-    sync now requires at least one fully-framed verified record
-    (ADVICE r4 medium)."""
-    from pcap_converter_spark.sources.warc import (
-        read_warc_chunk,
-        split_warc_speculative,
-    )
-
-    trap = (
-        b"prose \r\n\r\nWARC/1.0\r\nWARC-Type: response\r\n"
-        b"Content-Length: 99999\r\n\r\n tail " + b"y" * 2000
-    )
-    recs = _corpus(10) + [
-        wg.response_record("https://t.org/last", trap, "<urn:uuid:last>")
-    ]
-    p = str(tmp_path / "trap2.warc")
-    wg.write_warc(p, recs)
-    chunks = split_warc_speculative(p, target_chunk_bytes=1024)
-    import pandas as pd
-
-    pdf = pd.concat([read_warc_chunk(c) for c in chunks], ignore_index=True)
-    # every record exactly once — no truncated/garbage extras from the trap
-    assert len(pdf) == len(recs)
-    assert pdf["content_length"].sum() == sum(
-        int(r.split(b"Content-Length: ")[1].split(b"\r\n")[0]) for r in recs
-    )
-
-
 def test_warc_gzip_index_reads_file_once(tmp_path):
     """The gzip member walk must stream the file ONCE (unused_data carried
     forward), not re-read a fresh 1 MB window per member (ADVICE r4)."""
@@ -492,29 +378,6 @@ def test_warc_gzip_index_reads_file_once(tmp_path):
     assert sum(m[1] for m in members) == size
     # one pass: total bytes read ≈ file size (one trailing short read max)
     assert Counting.read_total <= size + (1 << 20)
-
-
-def test_warc_batch_face_honors_speculative_option(spark, tmp_path):
-    """spark.read.format('warc').option('speculative', 'true') must route
-    through the boundary resync, same rows as exact (ADVICE r4)."""
-    from pcap_converter_spark.sources.warc import register_datasource
-
-    register_datasource(spark)
-    p = str(tmp_path / "bf.warc.gz")
-    wg.write_warc(p, _corpus(25), gzipped=True)
-    exact = (
-        spark.read.format("warc")
-        .option("target_chunk_bytes", 4096)
-        .option("speculative", "false")
-        .load(p)
-    )
-    spec = (
-        spark.read.format("warc")
-        .option("target_chunk_bytes", 4096)
-        .option("speculative", "true")
-        .load(p)
-    )
-    assert _rows(spec) == _rows(exact)
 
 
 def test_warc_docs_fixture_matches_ground_truth(spark):
@@ -790,36 +653,6 @@ def test_fixture_generator_is_deterministic(tmp_path, monkeypatch):
         with open(tmp_path / name, "rb") as a, \
              open(os.path.join(repo_data, name), "rb") as b:
             assert a.read() == b.read(), name
-
-
-def test_wet_speculative_split_parity(spark, tmp_path):
-    """The O(1) speculative resync holds on conversion-record (WET)
-    archives too: forced speculative read == exact read, per-record gzip
-    and plain."""
-    from pcap_converter_spark.sources.warc import (
-        conversions_as_documents,
-        read_warc,
-    )
-
-    recs = [wg.record("warcinfo", b"software: wet\r\n")]
-    for i in range(60):
-        text = (f"wet doc {i} " + "tok " * (30 + i % 11)).strip()
-        recs.append(wg.record(
-            "conversion", text.encode(), uri=f"https://w.org/{i}",
-            rec_id=f"<urn:uuid:{i}>", content_type="text/plain",
-        ))
-    for gz in (False, True):
-        p = str(tmp_path / (f"s{int(gz)}.wet" + (".gz" if gz else "")))
-        wg.write_warc(p, recs, gzipped=gz)
-        exact = conversions_as_documents(
-            read_warc(spark, p, speculative=False)
-        )
-        spec = conversions_as_documents(
-            read_warc(spark, p, speculative=True, target_chunk_bytes=2048)
-        )
-        assert sorted(map(tuple, exact.collect())) == sorted(
-            map(tuple, spec.collect())
-        ), gz
 
 
 def test_warc_status_line_without_reason_phrase(spark, tmp_path):
