@@ -3,18 +3,35 @@
 Settings are chosen for determinism (UTC, µs timestamps) and for scale
 (AQE on, Arrow on, sane shuffle partitioning). On a real cluster the same
 builder is used with a different master; nothing here is local-mode-only.
+
+A driver JVM that ``get_spark`` launches itself (local master, no JVM
+running yet) starts from a per-user class-data-sharing archive of Spark's
+classes under ``$XDG_CACHE_HOME/pcap-converter-spark/cds/`` (else
+``~/.cache/...``): about half of a cold session's start is that JVM
+loading and linking classes. The first such process writes the archive
+at its JVM's exit, once per JDK and Spark install. DEPLOY.md, "Driver JVM
+start-up", has the rules and the opt-out.
 """
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import functools
+import glob
+import hashlib
+import logging
 import os
+import re
+import shutil
+import subprocess
 import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 from pyspark.util import inheritable_thread_target
+
+log = logging.getLogger(__name__)
 
 # JVM capacity sizing for a driver hosting many distinct plans (r17,
 # VERDICT r16 #2 — parity with what bench.py shipped in r16). Both are
@@ -46,6 +63,235 @@ def driver_java_opts() -> str:
     the builder launches the JVM (local mode / pyspark gateway); cluster
     deployments pass the same value via spark-submit."""
     return os.environ.get("PCS_DRIVER_JAVA_OPTS", DEFAULT_DRIVER_JAVA_OPTS)
+
+
+# Driver JVM start-up from an AppCDS archive (a JDK dynamic class-data-
+# sharing archive). A JVM started with -XX:SharedArchiveFile maps Spark's
+# classes pre-parsed instead of loading and linking them (measured on
+# 4 vCPUs, JDK 17, Spark 4.1: session build 6.3-7.6 s -> 3.1-4.4 s, first
+# job 2.5-3.3 s -> 1.3-1.9 s). The archive is written by the JVM itself at
+# exit under -XX:ArchiveClassesAtExit (~10 s longer exit, once per key).
+#
+# - The JVM maps an archive only with the JDK build, classpath, jar sizes
+#   and mtimes and compressed-oops mode it was written with. Otherwise it
+#   prints a warning and runs without sharing, so the key covers all four.
+# - JDK 17 refuses to START under -XX:ArchiveClassesAtExit when a
+#   non-empty directory is on the classpath, and Spark's launch classpath
+#   begins with $SPARK_CONF_DIR/. The launch therefore points
+#   SPARK_CONF_DIR at an empty directory, which is allowed only when the
+#   real conf dir holds nothing Spark reads (``*.template`` files only)
+#   and nothing else adds a directory to the classpath.
+_CDS_FLAGS = ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit", "DumpLoadedClassList")
+# environment that adds options to the driver JVM's command line
+_JVM_OPTS_ENV = ("SPARK_SUBMIT_OPTS", "JDK_JAVA_OPTIONS", "JAVA_TOOL_OPTIONS", "_JAVA_OPTIONS")
+# environment that adds directories to the driver classpath
+_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+# PYSPARK_SUBMIT_ARGS words that set the driver JVM's options, classpath or heap
+_SUBMIT_DRIVER_ARGS = (
+    "--driver-java-options", "--driver-class-path", "--driver-memory", "--properties-file",
+    "spark.driver.extraJavaOptions", "spark.driver.extraClassPath", "spark.driver.memory",
+)
+_CDS_EXIT_WAIT_S = 120  # bound on the writing JVM's exit, dump included
+
+
+def _cds_dir() -> str:
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(base, "pcap-converter-spark", "cds")
+
+
+def _heap_bytes(mem: str) -> int:
+    """A Spark memory string (``8g``, ``512m``; MiB when bare) in bytes."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)(b?)", mem.strip().lower())
+    if m is None:
+        return 0
+    if not m[2]:
+        return int(m[1]) if m[3] else int(m[1]) << 20
+    return int(m[1]) << (10 * "_kmgtp".index(m[2]))
+
+
+def _cds_key(spark_home: str, conf_dir: str, jvm_opts: str, heap: str) -> str:
+    """Hash of what the JVM checks before it maps an archive: the java
+    the launcher runs (``JAVA_HOME``, else ``PATH``) and its JDK build
+    (the ``release`` file), the Spark jars' names, sizes and mtimes, the
+    conf dir heading the classpath, and the compressed-oops mode (a heap
+    of 32 GiB or more turns it off, and so does an explicit flag).
+    Raises OSError when there is no java or no release file."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if java is None or not os.path.exists(java):
+        raise OSError("no java executable")
+    java = os.path.realpath(java)
+    h = hashlib.sha256(java.encode() + b"\0")
+    with open(os.path.join(os.path.dirname(os.path.dirname(java)), "release"), "rb") as f:
+        h.update(f.read())
+    jars = os.path.join(spark_home, "jars")
+    for name in sorted(n for n in os.listdir(jars) if n.endswith(".jar")):
+        st = os.stat(os.path.join(jars, name))
+        h.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    coops = [_heap_bytes(heap) < 32 << 30] + sorted(
+        t for t in jvm_opts.split() if "UseCompressed" in t)
+    h.update(f"{os.path.realpath(spark_home)}\0{conf_dir}\0{coops}".encode())
+    return h.hexdigest()[:24]
+
+
+@functools.cache
+def _cds_note(why: str) -> None:
+    """One INFO line per reason and process."""
+    log.info("driver JVM starts without a class-data archive: %s", why)
+
+
+def _cds_refusal(spark_home: str, jvm_opts: str) -> str | None:
+    """Why a driver JVM launched now must keep its configured flags, or
+    None when it may take archive flags and the empty conf dir."""
+    from pyspark import SparkContext
+
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    if SparkContext._gateway is not None or os.environ.get("PYSPARK_GATEWAY_PORT"):
+        return "the driver JVM is already running"
+    if any(f in jvm_opts for f in _CDS_FLAGS):
+        return "the driver java options set class sharing themselves"
+    if any(a in submit for a in _SUBMIT_DRIVER_ARGS):
+        return "PYSPARK_SUBMIT_ARGS sets the driver JVM's options, classpath or memory"
+    env = [v for v in _CLASSPATH_ENV if os.environ.get(v)]
+    if env:
+        return f"{env[0]} adds to the driver classpath"
+    if os.path.isdir(conf) and any(not n.endswith(".template") for n in os.listdir(conf)):
+        return f"the Spark conf dir {conf} holds more than *.template files"
+    return None
+
+
+def _cds_launch(java_opts: str, heap: str) -> tuple[str, str] | None:
+    """(java flag, empty conf dir) for a driver JVM ``get_spark`` is about
+    to launch, or None (logged once per reason) to launch it unchanged.
+    With an archive for the key: ``-XX:SharedArchiveFile``. Without one:
+    the first process to take ``<key>.lock`` writes it at its JVM's exit
+    (``-XX:ArchiveClassesAtExit`` plus an atexit hook that publishes it);
+    any other process goes without and does not wait."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    spark_home = _find_spark_home()
+    jvm_opts = " ".join([java_opts] + [os.environ.get(v, "") for v in _JVM_OPTS_ENV])
+    why = _cds_refusal(spark_home, jvm_opts)
+    if why is None:
+        cache = _cds_dir()
+        empty = os.path.join(cache, "empty-conf")
+        try:
+            os.makedirs(empty, exist_ok=True)
+            if os.listdir(empty):
+                why = f"{empty} is not empty"
+            else:
+                stem = os.path.join(cache, _cds_key(spark_home, empty, jvm_opts, heap))
+        except OSError as e:
+            why = f"no archive key or cache: {e}"
+    if why is not None:
+        _cds_note(why)
+        return None
+    if os.path.exists(stem + ".jsa"):
+        return f"-XX:SharedArchiveFile={stem}.jsa", empty
+    if not _cds_lock(stem):
+        _cds_note("another process is writing the archive")
+        return None
+    atexit.register(_cds_publish, stem, os.getpid())
+    # the dump logs ~600 "[warning][cds] Skipping ..." lines to stdout
+    return f"-XX:ArchiveClassesAtExit={stem}.{os.getpid()}.part -Xlog:cds=off", empty
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _lock_holder(lock: str) -> int | None:
+    try:
+        with open(lock) as f:
+            return int(f.read())
+    except (OSError, ValueError):
+        return None  # vanished, or its holder is still writing its pid
+
+
+def _cds_lock(stem: str) -> bool:
+    """Take ``<stem>.lock`` (O_CREAT|O_EXCL, holding our pid). A lock
+    whose holder is dead is taken over and its part file deleted."""
+    lock = stem + ".lock"
+    for _ in range(2):
+        try:
+            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+        except FileExistsError:
+            holder = _lock_holder(lock)
+            if holder is None or _pid_alive(holder):
+                return False
+            for stale in (f"{stem}.{holder}.part", lock):
+                with contextlib.suppress(OSError):
+                    os.remove(stale)
+            continue
+        except OSError:
+            return False
+        with os.fdopen(fd, "w") as f:
+            f.write(str(os.getpid()))
+        return True
+    return False
+
+
+def _cds_publish(stem: str, pid: int) -> None:
+    """atexit hook of the process writing the archive: close the
+    gateway's stdin (the JVM exits on EOF and dumps) and wait, bounded,
+    for the JVM. On exit code 0 the part file becomes ``<stem>.jsa`` and
+    every other key's archive is deleted, so one generation is kept; in
+    every other case the part file is deleted. Releases the lock."""
+    if os.getpid() != pid:
+        return  # a forked child inherited the hook
+    from pyspark import SparkContext
+
+    part = f"{stem}.{pid}.part"
+    proc = getattr(SparkContext._gateway, "proc", None)
+    try:
+        code = None
+        if proc is not None:
+            with contextlib.suppress(OSError, ValueError):
+                proc.stdin.close()
+            try:
+                code = proc.wait(timeout=_CDS_EXIT_WAIT_S)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+        if code == 0 and os.path.exists(part):
+            os.replace(part, stem + ".jsa")
+            log.info("wrote class-data archive %s.jsa", stem)
+            for old in glob.glob(os.path.join(os.path.dirname(stem), "*.jsa")):
+                if old != stem + ".jsa":
+                    os.remove(old)
+    except OSError as e:
+        log.info("class-data archive not written: %s", e)
+    finally:
+        with contextlib.suppress(OSError):
+            os.remove(part)
+        if _lock_holder(stem + ".lock") == pid:
+            with contextlib.suppress(OSError):
+                os.remove(stem + ".lock")
+
+
+@contextlib.contextmanager
+def _spark_conf_dir(path: str | None):
+    """``SPARK_CONF_DIR=path`` for the block (nothing when None); the
+    caller's environment comes back after."""
+    if path is None:
+        yield
+        return
+    prev = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = path
+    try:
+        yield
+    finally:
+        if prev is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = prev
 
 
 # Runtime-settable confs every entry point applies, including to sessions we
@@ -175,6 +421,13 @@ def get_spark(
     jobs keep their cluster master); only as a last resort do we fall back to
     ``local[*]`` for bare ``python`` runs. Shuffle partitions default to 32 —
     on a cluster size this ~2-3× total cores or rely on AQE coalescing.
+
+    With a local master and no JVM running yet, the driver JVM starts from
+    the per-user class-data-sharing archive (see the module docstring),
+    unless the user set the driver's java options or classpath, or
+    ``driver_java_opts()`` already sets class sharing (``-Xshare:off``
+    opts out). For that launch only, ``SPARK_CONF_DIR`` points at an
+    empty cache directory; the caller's environment is restored after.
     """
     from pyspark import SparkConf
 
@@ -226,23 +479,25 @@ def get_spark(
             builder = builder.config(k, v)
     if master is None and not user.contains("spark.master"):
         master = "local[*]"
+    cds = None
     if master is not None:
         builder = builder.master(master)
         if master.startswith("local"):
             # driver memory + JVM options only matter (and are only
             # settable) pre-launch in local mode; cluster deployments set
             # them via spark-submit. Both yield to a user-supplied conf.
+            mem = os.environ.get("PCS_DRIVER_MEM", "8g")
             if not user.contains("spark.driver.memory"):
-                builder = builder.config(
-                    "spark.driver.memory",
-                    os.environ.get("PCS_DRIVER_MEM", "8g"),
-                )
+                builder = builder.config("spark.driver.memory", mem)
             if not user.contains("spark.driver.extraJavaOptions"):
-                builder = builder.config(
-                    "spark.driver.extraJavaOptions", driver_java_opts()
-                )
+                opts = driver_java_opts()
+                cds = _cds_launch(opts, mem)
+                if cds is not None:
+                    opts = f"{opts} {cds[0]}"
+                builder = builder.config("spark.driver.extraJavaOptions", opts)
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with _spark_conf_dir(cds[1] if cds else None):
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return apply_runtime_confs(spark)

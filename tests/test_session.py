@@ -1,13 +1,20 @@
 """Session factory conf contract (VERDICT r13 stretch #7 + r14 JIT work):
 tuning defaults yield to user-supplied conf, the correctness contract
-stays pinned, and the generated-class cache ships sized for wide plans."""
+stays pinned, and the generated-class cache ships sized for wide plans.
+The driver JVM's class-data-sharing decision is tested without a JVM."""
 
 from __future__ import annotations
 
+import ast
 import json
+import logging
 import os
 import subprocess
 import sys
+import types
+from unittest import mock
+
+import pytest
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -126,3 +133,222 @@ def test_driver_java_opts_env_override(monkeypatch):
 
     monkeypatch.setenv("PCS_DRIVER_JAVA_OPTS", "-XX:ReservedCodeCacheSize=1g")
     assert S.driver_java_opts() == "-XX:ReservedCodeCacheSize=1g"
+
+
+# ---------------------------------------------------------------------------
+# Driver JVM start-up from a class-data-sharing archive: the launch
+# decision, without a JVM. get_spark's getOrCreate is replaced by a probe
+# that records the builder options and SPARK_CONF_DIR at launch time.
+# ---------------------------------------------------------------------------
+_ARCHIVE_FLAGS = ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit", "DumpLoadedClassList")
+
+
+@pytest.fixture
+def launch(tmp_path, monkeypatch):
+    """A fake JDK and Spark install, an empty cache, no JVM running, and
+    a ``launch()`` that runs get_spark up to getOrCreate."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    from pcap_converter_spark import session as S
+
+    jdk = tmp_path / "jdk"
+    (jdk / "bin").mkdir(parents=True)
+    (jdk / "bin" / "java").write_text("")
+    (jdk / "release").write_text('JAVA_RUNTIME_VERSION="17.0.20+8"\n')
+    home = tmp_path / "spark"
+    (home / "jars").mkdir(parents=True)
+    (home / "jars" / "spark-core.jar").write_bytes(b"x" * 10)
+    (home / "conf").mkdir()
+    (home / "conf" / "spark-defaults.conf.template").write_text("")
+    monkeypatch.setenv("JAVA_HOME", str(jdk))
+    monkeypatch.setenv("SPARK_HOME", str(home))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    for v in ("SPARK_CONF_DIR", "PYSPARK_SUBMIT_ARGS", "PYSPARK_GATEWAY_PORT",
+              "PCS_DRIVER_JAVA_OPTS", "PCS_DRIVER_MEM", "PCS_MASTER",
+              *S._CLASSPATH_ENV, *S._JVM_OPTS_ENV):
+        monkeypatch.delenv(v, raising=False)
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setattr(SparkContext, "_jvm", None)
+    hooks = []
+    monkeypatch.setattr(S, "atexit", types.SimpleNamespace(register=lambda *a: hooks.append(a)))
+    seen = {}
+
+    def get_or_create(builder):
+        seen["opts"] = builder._options.get("spark.driver.extraJavaOptions", "")
+        seen["conf_dir"] = os.environ.get("SPARK_CONF_DIR")
+        return mock.MagicMock()
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+
+    def run():
+        S.get_spark("cds-probe")
+        return seen["opts"], seen["conf_dir"]
+
+    cache = tmp_path / "cache" / "pcap-converter-spark" / "cds"
+    run.S, run.home, run.jdk, run.hooks = S, home, jdk, hooks
+    run.cache, run.empty = cache, cache / "empty-conf"
+    run.stem = lambda: str(cache / S._cds_key(str(home), str(cache / "empty-conf"),
+                                               S.driver_java_opts(), "8g"))
+    return run
+
+
+def test_cds_key_tracks_jdk_jars_and_heap_mode(launch):
+    S, home = launch.S, str(launch.home)
+    key = lambda heap="8g": S._cds_key(home, "/e", "", heap)  # noqa: E731
+    k0 = key()
+    assert key() == k0  # stable
+    jar = launch.home / "jars" / "spark-core.jar"
+    st = os.stat(jar)
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 1000))
+    k1 = key()
+    assert k1 != k0  # touched jar
+    (launch.home / "jars" / "extra.jar").write_bytes(b"y")
+    k2 = key()
+    assert k2 not in (k0, k1)  # added jar
+    (launch.home / "jars" / "notes.txt").write_text("not on the classpath")
+    assert key() == k2
+    (launch.jdk / "release").write_text('JAVA_RUNTIME_VERSION="17.0.21+1"\n')
+    k3 = key()
+    assert k3 != k2  # JDK build
+    assert key("16g") == k3
+    assert key("32g") != k3  # no compressed oops: another base archive
+    assert S._cds_key(home, "/e", "-XX:-UseCompressedOops", "8g") != k3
+
+
+def test_cds_first_launch_takes_lock_and_writes_at_exit(launch):
+    opts, conf_dir = launch()
+    stem = launch.stem()
+    assert opts.startswith("-XX:ReservedCodeCacheSize=640m ")
+    assert f"-XX:ArchiveClassesAtExit={stem}.{os.getpid()}.part" in opts
+    assert conf_dir == str(launch.empty)
+    assert os.listdir(launch.empty) == []
+    assert "SPARK_CONF_DIR" not in os.environ  # the caller's environment is back
+    assert open(stem + ".lock").read() == str(os.getpid())
+    assert launch.hooks == [(launch.S._cds_publish, stem, os.getpid())]
+
+
+def test_cds_existing_archive_is_used(launch, monkeypatch):
+    monkeypatch.setenv("SPARK_CONF_DIR", str(launch.home / "conf"))
+    launch.cache.mkdir(parents=True)
+    stem = launch.stem()
+    open(stem + ".jsa", "wb").close()
+    opts, conf_dir = launch()
+    assert opts == f"-XX:ReservedCodeCacheSize=640m -XX:SharedArchiveFile={stem}.jsa"
+    assert conf_dir == str(launch.empty)
+    assert os.environ["SPARK_CONF_DIR"] == str(launch.home / "conf")  # restored
+    assert launch.hooks == []
+
+
+def test_cds_lock_held_by_a_live_process_adds_nothing(launch):
+    launch.cache.mkdir(parents=True)
+    stem = launch.stem()
+    with open(stem + ".lock", "w") as f:
+        f.write(str(os.getppid()))
+    opts, conf_dir = launch()
+    assert opts == "-XX:ReservedCodeCacheSize=640m"
+    assert conf_dir is None
+    assert launch.hooks == []
+
+
+def test_cds_lock_of_a_dead_process_is_taken_over(launch):
+    dead = subprocess.Popen([sys.executable, "-c", "pass"])
+    dead.wait()
+    launch.cache.mkdir(parents=True)
+    stem = launch.stem()
+    with open(stem + ".lock", "w") as f:
+        f.write(str(dead.pid))
+    open(f"{stem}.{dead.pid}.part", "wb").close()
+    opts, _ = launch()
+    assert "ArchiveClassesAtExit" in opts
+    assert open(stem + ".lock").read() == str(os.getpid())
+    assert not os.path.exists(f"{stem}.{dead.pid}.part")
+
+
+@pytest.mark.parametrize("case", [
+    "conf_file", "hadoop_conf_dir", "xshare_off", "submit_java_opts",
+    "submit_class_path", "gateway",
+])
+def test_cds_refused_launch_keeps_flags_and_env(launch, monkeypatch, caplog, case):
+    from pyspark import SparkContext
+
+    if case == "conf_file":
+        (launch.home / "conf" / "spark-defaults.conf").write_text("spark.x 1\n")
+    elif case == "hadoop_conf_dir":
+        monkeypatch.setenv("HADOOP_CONF_DIR", str(launch.home))
+    elif case == "xshare_off":
+        monkeypatch.setenv("PCS_DRIVER_JAVA_OPTS", "-XX:ReservedCodeCacheSize=640m -Xshare:off")
+    elif case == "submit_java_opts":
+        monkeypatch.setenv("PYSPARK_SUBMIT_ARGS",
+                           "--conf spark.driver.extraJavaOptions=-Dx=1 pyspark-shell")
+    elif case == "submit_class_path":
+        monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "--driver-class-path extra-classes pyspark-shell")
+    elif case == "gateway":
+        monkeypatch.setattr(SparkContext, "_gateway", object())
+    launch.S._cds_note.cache_clear()
+    with caplog.at_level(logging.INFO, logger="pcap_converter_spark.session"):
+        opts, conf_dir = launch()
+    assert opts == launch.S.driver_java_opts()  # exactly the configured flags
+    assert conf_dir is None
+    assert "SPARK_CONF_DIR" not in os.environ
+    assert launch.hooks == []
+    notes = [r for r in caplog.records if "class-data archive" in r.getMessage()]
+    assert len(notes) == 1
+    launch()  # a second launch in the process logs nothing more
+    assert len([r for r in caplog.records if "class-data archive" in r.getMessage()]) == 1
+
+
+def test_cds_publish_promotes_only_a_clean_exit(launch, monkeypatch):
+    from pyspark import SparkContext
+
+    S = launch.S
+    launch.cache.mkdir(parents=True)
+    stem = launch.stem()
+    pid = os.getpid()
+    old = launch.cache / "0123456789abcdef01234567.jsa"
+
+    def publish(code):
+        old.write_bytes(b"old")
+        with open(stem + ".lock", "w") as f:
+            f.write(str(pid))
+        with open(f"{stem}.{pid}.part", "wb") as f:
+            f.write(b"archive")
+        proc = mock.MagicMock()
+        proc.wait.return_value = code
+        monkeypatch.setattr(SparkContext, "_gateway", types.SimpleNamespace(proc=proc))
+        S._cds_publish(stem, pid)
+        assert proc.stdin.close.called
+        assert not os.path.exists(f"{stem}.{pid}.part")
+        assert not os.path.exists(stem + ".lock")
+
+    publish(-9)  # killed during its dump
+    assert not os.path.exists(stem + ".jsa")
+    assert old.exists()
+    publish(0)
+    assert open(stem + ".jsa", "rb").read() == b"archive"
+    assert not old.exists()  # one generation kept
+
+
+def test_driver_java_opts_never_carry_an_archive_flag(launch, monkeypatch):
+    """bench.py, tools/bench_one.py, tools/jit_probe.py and
+    tools/capture_plans.py pass driver_java_opts() to their own builders
+    without the empty conf dir; an archive flag there would stop their
+    JVMs at start."""
+    S = launch.S
+    assert not any(f in S.driver_java_opts() for f in _ARCHIVE_FLAGS)
+    opts, _ = launch()
+    assert "ArchiveClassesAtExit" in opts
+    assert S.driver_java_opts() == "-XX:ReservedCodeCacheSize=640m"
+    assert "PCS_DRIVER_JAVA_OPTS" not in os.environ
+    open(launch.stem() + ".jsa", "wb").close()
+    opts, _ = launch()
+    assert "SharedArchiveFile" in opts
+    assert S.driver_java_opts() == "-XX:ReservedCodeCacheSize=640m"
+
+
+def test_session_module_does_not_print():
+    path = os.path.join(_REPO, "pcap_converter_spark", "session.py")
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    assert not [n.lineno for n in ast.walk(tree)
+                if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "print"]
