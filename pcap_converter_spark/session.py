@@ -8,9 +8,11 @@ A driver JVM that ``get_spark`` launches itself (local master, no JVM
 running yet) starts from a per-user class-data-sharing archive of Spark's
 classes under ``$XDG_CACHE_HOME/pcap-converter-spark/cds/`` (else
 ``~/.cache/...``): about half of a cold session's start is that JVM
-loading and linking classes. The first such process writes the archive
-at its JVM's exit, once per JDK and Spark install. DEPLOY.md, "Driver JVM
-start-up", has the rules and the opt-out.
+loading and linking classes. The first such process only marks the
+cache; the second writes the archive at its JVM's exit, once per JDK and
+Spark install, so a host whose cache is fresh for every run never pays
+for writing. DEPLOY.md, "Driver JVM start-up", has the rules and the
+opt-out.
 """
 
 from __future__ import annotations
@@ -22,14 +24,13 @@ import glob
 import hashlib
 import logging
 import os
-import re
 import shutil
 import subprocess
 import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
-from pyspark.util import inheritable_thread_target
+from pyspark.util import _parse_memory, inheritable_thread_target
 
 log = logging.getLogger(__name__)
 
@@ -70,7 +71,8 @@ def driver_java_opts() -> str:
 # classes pre-parsed instead of loading and linking them (measured on
 # 4 vCPUs, JDK 17, Spark 4.1: session build 6.3-7.6 s -> 3.1-4.4 s, first
 # job 2.5-3.3 s -> 1.3-1.9 s). The archive is written by the JVM itself at
-# exit under -XX:ArchiveClassesAtExit (~10 s longer exit, once per key).
+# exit under -XX:ArchiveClassesAtExit (a slower start and exit, once per
+# key, by the second launch: see _cds_launch).
 #
 # - The JVM maps an archive only with the JDK build, classpath, jar sizes
 #   and mtimes and compressed-oops mode it was written with. Otherwise it
@@ -99,39 +101,40 @@ def _cds_dir() -> str:
     return os.path.join(base, "pcap-converter-spark", "cds")
 
 
-def _heap_bytes(mem: str) -> int:
-    """A Spark memory string (``8g``, ``512m``; MiB when bare) in bytes."""
-    m = re.fullmatch(r"(\d+)([kmgtp]?)(b?)", mem.strip().lower())
-    if m is None:
-        return 0
-    if not m[2]:
-        return int(m[1]) if m[3] else int(m[1]) << 20
-    return int(m[1]) << (10 * "_kmgtp".index(m[2]))
+def _big_heap(mem: str) -> bool:
+    """Whether a Spark memory string (MiB when bare) is 32 GiB or more,
+    which turns compressed oops off. Unparsable: the JVM default (on)."""
+    try:
+        return _parse_memory(mem + "m" if mem.isdigit() else mem) >= 32 << 10
+    except (ValueError, IndexError):
+        return False
 
 
 def _cds_key(spark_home: str, conf_dir: str, jvm_opts: str, heap: str) -> str:
-    """Hash of what the JVM checks before it maps an archive: the java
-    the launcher runs (``JAVA_HOME``, else ``PATH``) and its JDK build
-    (the ``release`` file), the Spark jars' names, sizes and mtimes, the
-    conf dir heading the classpath, and the compressed-oops mode (a heap
-    of 32 GiB or more turns it off, and so does an explicit flag).
-    Raises OSError when there is no java or no release file."""
+    """``<install>-<build>``: hashes of what the JVM checks before it maps
+    an archive. The install part covers what two live callers on one host
+    may differ in: the java the launcher runs (``JAVA_HOME``, else
+    ``PATH``), the Spark home, the conf dir heading the classpath and the
+    compressed-oops mode (a heap of 32 GiB or more turns it off, and so
+    does an explicit flag). The build part covers what an in-place
+    upgrade changes: the JDK build (the ``release`` file) and the Spark
+    jars' names, sizes and mtimes. Raises OSError when there is no java
+    or no release file."""
     java_home = os.environ.get("JAVA_HOME")
     java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
     if java is None or not os.path.exists(java):
         raise OSError("no java executable")
     java = os.path.realpath(java)
-    h = hashlib.sha256(java.encode() + b"\0")
+    coops = [not _big_heap(heap)] + sorted(t for t in jvm_opts.split() if "UseCompressed" in t)
+    install = hashlib.sha256(
+        f"{java}\0{os.path.realpath(spark_home)}\0{conf_dir}\0{coops}".encode())
     with open(os.path.join(os.path.dirname(os.path.dirname(java)), "release"), "rb") as f:
-        h.update(f.read())
+        build = hashlib.sha256(f.read())
     jars = os.path.join(spark_home, "jars")
     for name in sorted(n for n in os.listdir(jars) if n.endswith(".jar")):
         st = os.stat(os.path.join(jars, name))
-        h.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
-    coops = [_heap_bytes(heap) < 32 << 30] + sorted(
-        t for t in jvm_opts.split() if "UseCompressed" in t)
-    h.update(f"{os.path.realpath(spark_home)}\0{conf_dir}\0{coops}".encode())
-    return h.hexdigest()[:24]
+        build.update(f"{name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return f"{install.hexdigest()[:12]}-{build.hexdigest()[:12]}"
 
 
 @functools.cache
@@ -164,10 +167,11 @@ def _cds_refusal(spark_home: str, jvm_opts: str) -> str | None:
 def _cds_launch(java_opts: str, heap: str) -> tuple[str, str] | None:
     """(java flag, empty conf dir) for a driver JVM ``get_spark`` is about
     to launch, or None (logged once per reason) to launch it unchanged.
-    With an archive for the key: ``-XX:SharedArchiveFile``. Without one:
-    the first process to take ``<key>.lock`` writes it at its JVM's exit
-    (``-XX:ArchiveClassesAtExit`` plus an atexit hook that publishes it);
-    any other process goes without and does not wait."""
+    With an archive for the key: ``-XX:SharedArchiveFile``. Without one,
+    the first launch only leaves ``<key>.seen``; a later launch that
+    finds it and holds ``<key>.lock`` writes the archive at its JVM's
+    exit (``-XX:ArchiveClassesAtExit`` plus an atexit hook that publishes
+    it); any other process goes without and does not wait."""
     from pyspark.find_spark_home import _find_spark_home
 
     spark_home = _find_spark_home()
@@ -189,61 +193,61 @@ def _cds_launch(java_opts: str, heap: str) -> tuple[str, str] | None:
         return None
     if os.path.exists(stem + ".jsa"):
         return f"-XX:SharedArchiveFile={stem}.jsa", empty
-    if not _cds_lock(stem):
-        _cds_note("another process is writing the archive")
+    if not os.path.exists(stem + ".seen"):
+        # Writing costs its run ~5 s of set-up and ~20 s in all (4 vCPUs,
+        # plans/perf/pr9), repaid only by later runs that find the
+        # archive. A host whose cache starts empty for every run (a
+        # container, a CI job) would pay that each time, so only a
+        # launch that finds an earlier launch's mark writes.
+        with contextlib.suppress(OSError):
+            open(stem + ".seen", "a").close()
+        _cds_note("the first launch for this JDK and Spark marks the cache; the next one writes")
         return None
-    atexit.register(_cds_publish, stem, os.getpid())
+    lock = _cds_lock(stem)
+    if lock is None:
+        _cds_note("another process is writing the archive, or its lock cannot be made")
+        return None
+    if os.path.exists(stem + ".jsa"):  # published while we took the lock
+        with contextlib.suppress(OSError):
+            os.remove(stem + ".lock")
+        os.close(lock)
+        return f"-XX:SharedArchiveFile={stem}.jsa", empty
+    atexit.register(_cds_publish, stem, os.getpid(), lock)
     # the dump logs ~600 "[warning][cds] Skipping ..." lines to stdout
     return f"-XX:ArchiveClassesAtExit={stem}.{os.getpid()}.part -Xlog:cds=off", empty
 
 
-def _pid_alive(pid: int) -> bool:
+def _cds_lock(stem: str) -> int | None:
+    """A descriptor holding an exclusive ``flock`` on ``<stem>.lock``, or
+    None when another process holds it or the lock file cannot be made.
+    The kernel drops the lock when its holder dies, so a killed writer
+    never blocks the key; the part files such a writer left are deleted
+    here."""
     try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        pass
-    return True
+        import fcntl
 
-
-def _lock_holder(lock: str) -> int | None:
+        fd = os.open(stem + ".lock", os.O_CREAT | os.O_WRONLY, 0o644)
+    except (ImportError, OSError):
+        return None
     try:
-        with open(lock) as f:
-            return int(f.read())
-    except (OSError, ValueError):
-        return None  # vanished, or its holder is still writing its pid
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except OSError:
+        os.close(fd)
+        return None
+    for stale in glob.glob(glob.escape(stem) + ".*.part"):
+        with contextlib.suppress(OSError):
+            os.remove(stale)
+    return fd
 
 
-def _cds_lock(stem: str) -> bool:
-    """Take ``<stem>.lock`` (O_CREAT|O_EXCL, holding our pid). A lock
-    whose holder is dead is taken over and its part file deleted."""
-    lock = stem + ".lock"
-    for _ in range(2):
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-        except FileExistsError:
-            holder = _lock_holder(lock)
-            if holder is None or _pid_alive(holder):
-                return False
-            for stale in (f"{stem}.{holder}.part", lock):
-                with contextlib.suppress(OSError):
-                    os.remove(stale)
-            continue
-        except OSError:
-            return False
-        with os.fdopen(fd, "w") as f:
-            f.write(str(os.getpid()))
-        return True
-    return False
-
-
-def _cds_publish(stem: str, pid: int) -> None:
+def _cds_publish(stem: str, pid: int, lock: int) -> None:
     """atexit hook of the process writing the archive: close the
     gateway's stdin (the JVM exits on EOF and dumps) and wait, bounded,
     for the JVM. On exit code 0 the part file becomes ``<stem>.jsa`` and
-    every other key's archive is deleted, so one generation is kept; in
-    every other case the part file is deleted. Releases the lock."""
+    the older archives and marks of the same install (same key prefix)
+    are deleted, so one generation per install is kept; in every other
+    case the part file is deleted. Then the lock file is removed and
+    released."""
     if os.getpid() != pid:
         return  # a forked child inherited the hook
     from pyspark import SparkContext
@@ -263,17 +267,17 @@ def _cds_publish(stem: str, pid: int) -> None:
         if code == 0 and os.path.exists(part):
             os.replace(part, stem + ".jsa")
             log.info("wrote class-data archive %s.jsa", stem)
-            for old in glob.glob(os.path.join(os.path.dirname(stem), "*.jsa")):
+            install = glob.escape(stem.rsplit("-", 1)[0])
+            for old in glob.glob(install + "-*.jsa") + glob.glob(install + "-*.seen"):
                 if old != stem + ".jsa":
                     os.remove(old)
     except OSError as e:
         log.info("class-data archive not written: %s", e)
     finally:
-        with contextlib.suppress(OSError):
-            os.remove(part)
-        if _lock_holder(stem + ".lock") == pid:
+        for path in (part, stem + ".lock"):
             with contextlib.suppress(OSError):
-                os.remove(stem + ".lock")
+                os.remove(path)
+        os.close(lock)
 
 
 @contextlib.contextmanager
@@ -423,8 +427,8 @@ def get_spark(
     on a cluster size this ~2-3× total cores or rely on AQE coalescing.
 
     With a local master and no JVM running yet, the driver JVM starts from
-    the per-user class-data-sharing archive (see the module docstring),
-    unless the user set the driver's java options or classpath, or
+    the per-user class-data-sharing archive once the second such launch
+    has written it (see the module docstring), unless the user set the driver's java options or classpath, or
     ``driver_java_opts()`` already sets class sharing (``-Xshare:off``
     opts out). For that launch only, ``SPARK_CONF_DIR`` points at an
     empty cache directory; the caller's environment is restored after.

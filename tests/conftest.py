@@ -10,8 +10,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# A driver JVM that get_spark launches writes a 140-200 MB class-data
-# archive under $XDG_CACHE_HOME on first use (session.py). One temp dir
+# The second driver JVM that get_spark launches writes a 140-200 MB
+# class-data archive under $XDG_CACHE_HOME (session.py). One temp dir
 # per pytest run keeps that out of the home directory and lets every
 # subprocess session of the run share one archive. Registered before any
 # session exists, the removal runs after the archive writer's exit hook.
@@ -78,7 +78,7 @@ _SLOW_FILES = {
     "test_fuzz_textclean.py",      # fuzz sweeps (~52 s)
     "test_fuzz_shaping.py",        # (~26 s)
     "test_fuzz_spans.py",          # (~16 s)
-    "test_session_cds.py",         # class-data archive JVM launches (~90 s)
+    "test_session_cds.py",         # class-data archive JVM launches (~110 s)
 }
 # individually heavy tests in otherwise-fast files (>= ~10 s each)
 _SLOW_TESTS = {

@@ -6,6 +6,8 @@ The driver JVM's class-data-sharing decision is tested without a JVM."""
 from __future__ import annotations
 
 import ast
+import errno
+import fcntl
 import json
 import logging
 import os
@@ -190,6 +192,13 @@ def launch(tmp_path, monkeypatch):
     run.cache, run.empty = cache, cache / "empty-conf"
     run.stem = lambda: str(cache / S._cds_key(str(home), str(cache / "empty-conf"),
                                                S.driver_java_opts(), "8g"))
+
+    def mark():
+        """The mark an earlier launch leaves: the next launch writes."""
+        cache.mkdir(parents=True, exist_ok=True)
+        open(run.stem() + ".seen", "a").close()
+
+    run.mark = mark
     return run
 
 
@@ -211,21 +220,34 @@ def test_cds_key_tracks_jdk_jars_and_heap_mode(launch):
     (launch.jdk / "release").write_text('JAVA_RUNTIME_VERSION="17.0.21+1"\n')
     k3 = key()
     assert k3 != k2  # JDK build
-    assert key("16g") == k3
-    assert key("32g") != k3  # no compressed oops: another base archive
-    assert S._cds_key(home, "/e", "-XX:-UseCompressedOops", "8g") != k3
+    install = k0.split("-")[0]
+    assert all(k.split("-")[0] == install for k in (k1, k2, k3))  # upgrades in place
+    assert key("16g") == key("16384") == key("junk") == k3
+    # no compressed oops: another base archive, and another install that
+    # may run beside this one
+    for other in (key("32g"), key("40000"),
+                  S._cds_key(home, "/e", "-XX:-UseCompressedOops", "8g")):
+        assert other.split("-")[0] != install
 
 
-def test_cds_first_launch_takes_lock_and_writes_at_exit(launch):
+def test_cds_first_launch_marks_and_the_next_writes_at_exit(launch):
     opts, conf_dir = launch()
     stem = launch.stem()
+    assert opts == "-XX:ReservedCodeCacheSize=640m"  # a host that may never run again
+    assert conf_dir is None
+    assert launch.hooks == []
+    assert os.path.exists(stem + ".seen") and not os.path.exists(stem + ".lock")
+
+    opts, conf_dir = launch()
     assert opts.startswith("-XX:ReservedCodeCacheSize=640m ")
     assert f"-XX:ArchiveClassesAtExit={stem}.{os.getpid()}.part" in opts
     assert conf_dir == str(launch.empty)
     assert os.listdir(launch.empty) == []
     assert "SPARK_CONF_DIR" not in os.environ  # the caller's environment is back
-    assert open(stem + ".lock").read() == str(os.getpid())
-    assert launch.hooks == [(launch.S._cds_publish, stem, os.getpid())]
+    assert _lock_is_held(stem)
+    ((hook, *args),) = launch.hooks
+    assert (hook, *args[:2]) == (launch.S._cds_publish, stem, os.getpid())
+    os.close(args[2])
 
 
 def test_cds_existing_archive_is_used(launch, monkeypatch):
@@ -240,29 +262,64 @@ def test_cds_existing_archive_is_used(launch, monkeypatch):
     assert launch.hooks == []
 
 
-def test_cds_lock_held_by_a_live_process_adds_nothing(launch):
-    launch.cache.mkdir(parents=True)
+def _lock_is_held(stem: str) -> bool:
+    fd = os.open(stem + ".lock", os.O_RDONLY)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    except BlockingIOError:
+        return True
+    finally:
+        os.close(fd)
+    return False
+
+
+def test_cds_lock_held_by_another_writer_adds_nothing(launch):
+    launch.mark()
     stem = launch.stem()
     with open(stem + ".lock", "w") as f:
-        f.write(str(os.getppid()))
-    opts, conf_dir = launch()
+        fcntl.flock(f, fcntl.LOCK_EX)
+        opts, conf_dir = launch()
     assert opts == "-XX:ReservedCodeCacheSize=640m"
     assert conf_dir is None
     assert launch.hooks == []
 
 
-def test_cds_lock_of_a_dead_process_is_taken_over(launch):
-    dead = subprocess.Popen([sys.executable, "-c", "pass"])
-    dead.wait()
-    launch.cache.mkdir(parents=True)
+def test_cds_lock_left_by_a_killed_writer_is_taken(launch):
+    """A writer killed before its exit hook leaves its lock file (no
+    longer locked: the kernel drops a dead holder's flock) and maybe a
+    part file; the next process takes the lock and deletes the part."""
+    launch.mark()
     stem = launch.stem()
-    with open(stem + ".lock", "w") as f:
-        f.write(str(dead.pid))
-    open(f"{stem}.{dead.pid}.part", "wb").close()
+    open(stem + ".lock", "w").close()
+    open(f"{stem}.4194000.part", "wb").close()
     opts, _ = launch()
     assert "ArchiveClassesAtExit" in opts
-    assert open(stem + ".lock").read() == str(os.getpid())
-    assert not os.path.exists(f"{stem}.{dead.pid}.part")
+    assert _lock_is_held(stem)
+    assert not os.path.exists(f"{stem}.4194000.part")
+    os.close(launch.hooks[0][3])
+
+
+def test_cds_lock_that_cannot_be_made_adds_nothing_and_sticks_nowhere(launch, monkeypatch):
+    """A full or read-only cache fails the lock file's creation: that
+    launch goes without an archive and without the conf-dir swap, and
+    nothing is left that keeps the next launch from writing one."""
+    S, real_open = launch.S, os.open
+    launch.mark()
+
+    def full(path, *a, **kw):
+        if str(path).endswith(".lock"):
+            raise OSError(errno.ENOSPC, "No space left on device", path)
+        return real_open(path, *a, **kw)
+
+    monkeypatch.setattr(S.os, "open", full)
+    opts, conf_dir = launch()
+    assert opts == "-XX:ReservedCodeCacheSize=640m"
+    assert conf_dir is None
+    assert launch.hooks == []
+    monkeypatch.setattr(S.os, "open", real_open)
+    opts, _ = launch()
+    assert "ArchiveClassesAtExit" in opts
+    os.close(launch.hooks[0][3])
 
 
 @pytest.mark.parametrize("case", [
@@ -305,28 +362,39 @@ def test_cds_publish_promotes_only_a_clean_exit(launch, monkeypatch):
     launch.cache.mkdir(parents=True)
     stem = launch.stem()
     pid = os.getpid()
-    old = launch.cache / "0123456789abcdef01234567.jsa"
+    install = os.path.basename(stem).split("-")[0]
+    # an older generation of this install, and another install's archive
+    # (another JDK, Spark home or heap mode) that is still in use
+    old = launch.cache / f"{install}-0123456789ab.jsa"
+    old_mark = launch.cache / f"{install}-0123456789ab.seen"
+    other = launch.cache / "ba9876543210-0123456789ab.jsa"
+    other.write_bytes(b"other")
 
     def publish(code):
         old.write_bytes(b"old")
-        with open(stem + ".lock", "w") as f:
-            f.write(str(pid))
+        launch.mark()
+        old_mark.write_bytes(b"")
+        lock = S._cds_lock(stem)
         with open(f"{stem}.{pid}.part", "wb") as f:
             f.write(b"archive")
         proc = mock.MagicMock()
         proc.wait.return_value = code
         monkeypatch.setattr(SparkContext, "_gateway", types.SimpleNamespace(proc=proc))
-        S._cds_publish(stem, pid)
+        S._cds_publish(stem, pid, lock)
         assert proc.stdin.close.called
         assert not os.path.exists(f"{stem}.{pid}.part")
         assert not os.path.exists(stem + ".lock")
+        with pytest.raises(OSError):
+            os.fstat(lock)  # released
 
     publish(-9)  # killed during its dump
     assert not os.path.exists(stem + ".jsa")
     assert old.exists()
     publish(0)
     assert open(stem + ".jsa", "rb").read() == b"archive"
-    assert not old.exists()  # one generation kept
+    assert not old.exists() and not old_mark.exists()  # one generation per install kept
+    assert not os.path.exists(stem + ".seen")
+    assert other.read_bytes() == b"other"
 
 
 def test_driver_java_opts_never_carry_an_archive_flag(launch, monkeypatch):
@@ -336,8 +404,10 @@ def test_driver_java_opts_never_carry_an_archive_flag(launch, monkeypatch):
     JVMs at start."""
     S = launch.S
     assert not any(f in S.driver_java_opts() for f in _ARCHIVE_FLAGS)
+    launch.mark()
     opts, _ = launch()
     assert "ArchiveClassesAtExit" in opts
+    os.close(launch.hooks[0][3])
     assert S.driver_java_opts() == "-XX:ReservedCodeCacheSize=640m"
     assert "PCS_DRIVER_JAVA_OPTS" not in os.environ
     open(launch.stem() + ".jsa", "wb").close()

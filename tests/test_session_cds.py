@@ -1,8 +1,8 @@
-"""End to end: a driver JVM that get_spark launches writes the class-data
-archive once, later JVMs map Spark's classes from it, concurrent first
-launches make one archive, and a JVM killed during its dump publishes
-nothing. Each test runs sessions in subprocesses on its own empty
-XDG_CACHE_HOME."""
+"""End to end: the first driver JVM that get_spark launches only marks the
+cache, the second writes the class-data archive, later JVMs map Spark's
+classes from it, concurrent writers make one archive, and a JVM killed
+during its dump publishes nothing. Each test runs sessions in
+subprocesses on its own empty XDG_CACHE_HOME."""
 
 from __future__ import annotations
 
@@ -57,15 +57,26 @@ def _finish(p: subprocess.Popen) -> tuple[dict, str]:
 
 def _cache(tmp_path) -> dict[str, list[str]]:
     d = tmp_path / "xdg" / "pcap-converter-spark" / "cds"
-    return {ext: sorted(glob.glob(str(d / f"*.{ext}"))) for ext in ("jsa", "part", "lock")}
+    return {ext: sorted(glob.glob(str(d / f"*.{ext}")))
+            for ext in ("jsa", "part", "lock", "seen")}
 
 
-def test_archive_written_once_then_mapped(tmp_path):
+def _mark(tmp_path) -> None:
+    """One launch on the empty cache: it adds no flag and leaves the mark."""
+    got, _ = _finish(_start(tmp_path))
+    assert got["javaopts"] == "-XX:ReservedCodeCacheSize=640m"
+    files = _cache(tmp_path)
+    assert len(files["seen"]) == 1 and not files["jsa"] and not files["lock"], files
+
+
+def test_archive_written_by_the_second_launch_then_mapped(tmp_path):
+    _mark(tmp_path)
     got, out = _finish(_start(tmp_path))
     assert "-XX:ArchiveClassesAtExit=" in got["javaopts"]
     assert "[warning][cds]" not in out  # the dump's skip list stays quiet
     files = _cache(tmp_path)
     assert len(files["jsa"]) == 1 and not files["part"] and not files["lock"], files
+    assert not files["seen"]
 
     log = tmp_path / "class-load.log"
     got, out = _finish(_start(tmp_path, PCS_DRIVER_JAVA_OPTS=(
@@ -78,7 +89,8 @@ def test_archive_written_once_then_mapped(tmp_path):
     assert _cache(tmp_path) == files
 
 
-def test_concurrent_first_launches_make_one_archive(tmp_path):
+def test_concurrent_writers_make_one_archive(tmp_path):
+    _mark(tmp_path)
     procs = [_start(tmp_path), _start(tmp_path)]
     opts = [_finish(p)[0]["javaopts"] for p in procs]
     # one took the lock and wrote; the other went without and did not wait
@@ -88,6 +100,8 @@ def test_concurrent_first_launches_make_one_archive(tmp_path):
 
 
 def test_jvm_killed_during_dump_publishes_nothing(tmp_path):
+    _mark(tmp_path)
+    seen = _cache(tmp_path)["seen"]
     got, _ = _finish(_start(tmp_path, KILL_JVM_DURING_DUMP="1"))
     assert "-XX:ArchiveClassesAtExit=" in got["javaopts"]
-    assert _cache(tmp_path) == {"jsa": [], "part": [], "lock": []}
+    assert _cache(tmp_path) == {"jsa": [], "part": [], "lock": [], "seen": seen}
