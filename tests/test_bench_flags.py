@@ -1,156 +1,62 @@
-"""bench.py --require-idle (VERDICT r12 stretch #7): a contended host
-must be REFUSED (exit 3, no JSON artifact line), a quiet one passed
-through — pinned by monkeypatching the /proc sampler, since the real
-host's load is whatever it is."""
+"""bench.py's input check, host verdict and stall guard: any argument is
+refused before a session starts, the record's host block is clean exactly
+while no timed window lost more than perfbench's STEAL_MAX to the
+hypervisor, and a hung entry costs one flagged entry, not the run."""
 
 from __future__ import annotations
 
-import pytest
+import os
+import subprocess
+import sys
 
 import bench
+from perfbench.run import STEAL_MAX
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _sample(load, steal_j, total_j):
-    return {
-        "loadavg1": load,
-        "jiffies": {"total": total_j, "idle": 0, "iowait": 0,
-                    "steal": steal_j},
+def test_bench_refuses_any_argument_before_a_session(tmp_path):
+    """A flag bench.py no longer has (or never had) exits 2 with a usage
+    line and no stdout record. JAVA_HOME points nowhere, so a JVM launch
+    attempt would fail with a different exit code and a Java error."""
+    env = dict(os.environ, JAVA_HOME=str(tmp_path / "no-jdk"))
+    for argv in (["--require-idle"], ["--require_idle"], ["extra-positional"]):
+        p = subprocess.run(
+            [sys.executable, "bench.py", *argv], cwd=_REPO, env=env,
+            capture_output=True, text=True, timeout=120,
+        )
+        assert p.returncode == 2, (argv, p.stderr)
+        assert p.stdout == ""
+        assert "usage" in p.stderr
+        assert "JAVA_HOME" not in p.stderr and "Java gateway" not in p.stderr
+
+
+def test_host_block_is_clean_until_a_window_steals_past_steal_max():
+    def spans(*steals):
+        return [{"steal": s} for s in steals]
+
+    assert bench._host_block(spans(0.0, 0.01, STEAL_MAX)) == {
+        "steal_max": round(STEAL_MAX, 4), "clean": True,
     }
+    dirty = bench._host_block(spans(0.0, STEAL_MAX + 0.001, 0.01))
+    assert dirty["clean"] is False
+    assert dirty["steal_max"] == round(STEAL_MAX + 0.001, 4)
+    assert bench._host_block([]) == {"steal_max": 0.0, "clean": True}
 
 
-def test_require_idle_refuses_loaded_host(monkeypatch):
-    seq = iter([_sample(5.8, 0, 1000), _sample(5.8, 0, 2000)])
-    monkeypatch.setattr(bench, "_cpu_sample", lambda: next(seq))
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
-    with pytest.raises(SystemExit) as ei:
-        bench._refuse_if_busy()
-    assert ei.value.code == 3
+def test_window_cpu_survives_a_worker_exiting_mid_window():
+    """A process of the tree that exits inside the window (an idle Python
+    worker stopped by Spark, auto-reaped by the daemon) takes its CPU out
+    of a whole-tree total; the per-process sum only loses its share of
+    the window, and a reused pid counts as a new process."""
+    before = {(1, 100): 50.0, (2, 200): 9.0, (3, 300): 4.0}
+    after = {(1, 100): 51.5, (3, 300): 4.5, (4, 400): 0.25, (2, 900): 0.5}
+    assert bench._window_cpu_s(before, after) == 1.5 + 0.5 + 0.25 + 0.5
+    assert sum(after.values()) - sum(before.values()) < 0  # the old total
 
-
-def test_require_idle_refuses_stolen_cpu(monkeypatch):
-    # 0.5% steal over the window, loadavg fine
-    seq = iter([_sample(0.2, 0, 1000), _sample(0.2, 5, 2000)])
-    monkeypatch.setattr(bench, "_cpu_sample", lambda: next(seq))
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
-    with pytest.raises(SystemExit):
-        bench._refuse_if_busy()
-
-
-def test_require_idle_passes_quiet_host(monkeypatch):
-    seq = iter([_sample(0.3, 0, 1000), _sample(0.3, 0, 2000)])
-    monkeypatch.setattr(bench, "_cpu_sample", lambda: next(seq))
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
-    bench._refuse_if_busy()  # no raise
-
-
-def test_contended_verdict_logic():
-    """The artifact's host.contended flag (r13): steal or a busy start
-    marks the recording, a quiet profile does not."""
-    verdict = bench._contended
-
-    assert verdict({"cpu_steal_pct": 0.59, "loadavg1_start": 0.14})
-    assert verdict({"loadavg1_start": 5.8})
-    # busy% is NOT a signal: it counts the suite's own 32 task threads,
-    # so a highly parallel clean run must never self-trip on it
-    assert not verdict({"cpu_busy_pct": 95, "loadavg1_start": 0.3})
-    assert not verdict(
-        {"cpu_steal_pct": 0.02, "cpu_busy_pct": 25, "loadavg1_start": 0.3}
-    )
-    assert not verdict({})
-
-
-def test_contended_flags_midrun_neighbor_via_end_load():
-    """VERDICT r13 #5: a same-kernel neighbor landing mid-run produces
-    NO steal (steal only counts foreign VMs) and an idle start — the
-    end-of-run loadavg is the only trace. Flag when it exceeds 3/4·cpus
-    (calibrated: the suite's own parallel tail legitimately ends an
-    idle 32-core host at ~15.7, so the earlier cpus/2 would self-trip)."""
-    verdict = bench._contended
-    # idle start, no steal, but the run ENDS with a big neighbor's tasks
-    # on top of ours
-    assert verdict(
-        {"cpu_steal_pct": 0.0, "loadavg1_start": 0.4, "loadavg1_end": 25.0},
-        cpus=32,
-    )
-    # the suite's own measured end-load on a clean 32-core host (~15.7
-    # under the r14 pre-run methodology) must never self-trip
-    assert not verdict(
-        {"cpu_steal_pct": 0.0, "loadavg1_start": 0.4, "loadavg1_end": 15.9},
-        cpus=32,
-    )
-    # threshold scales with the core count
-    assert verdict(
-        {"cpu_steal_pct": 0.0, "loadavg1_start": 0.2, "loadavg1_end": 7.0},
-        cpus=8,
-    )
-
-
-def test_bench_rejects_unknown_flags():
-    """ADVICE r13: a misspelled --require_idle must be a hard error, not
-    a silently ungated recording."""
-    with pytest.raises(SystemExit) as ei:
-        bench._parse_args(["--require_idle"])
-    assert ei.value.code == 2
-    with pytest.raises(SystemExit):
-        bench._parse_args(["--requireidle"])
-    with pytest.raises(SystemExit):
-        bench._parse_args(["extra-positional"])
-    assert bench._parse_args(["--require-idle"]) == {
-        "require_idle": True, "idle_wait_s": None,
-    }
-    assert bench._parse_args([]) == {
-        "require_idle": False, "idle_wait_s": None,
-    }
-    assert bench._parse_args(["--idle-wait-s", "42"]) == {
-        "require_idle": False, "idle_wait_s": 42.0,
-    }
-
-
-def test_idle_wait_retries_until_quiet(monkeypatch):
-    """VERDICT r14 #3: the bounded idle-wait converts a busy launch into
-    a clean recording instead of stamping `contended: true` — poll until
-    the load decays, within the budget."""
-    # three busy probes (2 samples each), then a quiet one
-    samples = [
-        _sample(5.0, 0, 1000), _sample(5.0, 0, 2000),
-        _sample(3.0, 0, 3000), _sample(3.0, 0, 4000),
-        _sample(1.5, 0, 5000), _sample(1.5, 0, 6000),
-        _sample(0.4, 0, 7000), _sample(0.4, 0, 8000),
-    ]
-    seq = iter(samples)
-    monkeypatch.setattr(bench, "_cpu_sample", lambda: next(seq))
-    monkeypatch.setattr(bench.time, "sleep", lambda s: None)
-    state = bench._wait_for_idle(3600.0)
-    assert state["idle"] and state["problems"] == []
-
-
-def test_idle_wait_budget_bounds_the_wait(monkeypatch):
-    """A host that never quiets must exhaust the budget and return
-    idle=False (the caller refuses under --require-idle, or records
-    with normalized times otherwise) — never spin forever."""
-    monkeypatch.setattr(
-        bench, "_cpu_sample", lambda: _sample(9.0, 0, 1000)
-    )
-    clock = {"t": 0.0}
-    monkeypatch.setattr(
-        bench.time, "sleep", lambda s: clock.__setitem__("t", clock["t"] + s)
-    )
-    monkeypatch.setattr(
-        bench.time, "perf_counter", lambda: clock["t"]
-    )
-    state = bench._wait_for_idle(60.0)
-    assert not state["idle"] and state["problems"]
-    assert state["waited_s"] >= 60.0
-    with pytest.raises(SystemExit) as ei:
-        bench._refuse_if_busy(wait_s=60.0)
-    assert ei.value.code == 3
-
-
-def test_normalization_anchor_is_pinned():
-    """The normalized times are only comparable across rounds if the
-    anchor never moves; a change to MATMUL_REF_MS rescales every
-    value_norm ever recorded."""
-    assert bench.MATMUL_REF_MS == 29.0
+    live = bench._tree_cpu_by_process()
+    assert any(pid == os.getpid() for pid, _ in live)
+    assert all(v >= 0 for v in live.values())
 
 
 def test_stall_guard_cancels_hung_entry(spark):
@@ -186,105 +92,3 @@ def test_stall_guard_cancels_hung_entry(spark):
     with _pt.raises(Py4JJavaError):
         bench._stall_guarded(spark, "hung", long_job, budget_s=3.0)
     assert _t.monotonic() - t0 < 120, "cancel did not interrupt the job"
-
-
-def test_machine_speed_probe_returns_plausible_ms():
-    """r14: the direct machine-speed probe (fixed matmul workload) must
-    return a small positive best-of-3 wall time — the artifact's
-    attribution lever for slow-machine recordings that every other
-    side-channel (steal, loadavg, constant /proc MHz) misses."""
-    a = bench._machine_speed_ms()
-    b = bench._machine_speed_ms()
-    assert a is not None and 0.5 < a < 5000
-    assert b is not None and 0.5 < b < 5000
-
-
-def test_normalized_times_reject_self_inflicted_probe_spikes():
-    """r15: the per-entry speed estimate must reject a one-off probe
-    spike (the JVM's own JIT threads churning right after a heavy entry
-    measured 937 ms vs ~29 everywhere else — normalizing by it would
-    collapse that entry 30×) while still tracking SUSTAINED contention,
-    which moves consecutive probes together."""
-    timings = {"a": 2.0, "b": 6.0, "c": 2.0, "fail": -1.0, "noprobe": 1.0}
-    probes = {"a": 29.0, "b": 937.0, "c": 29.0, "fail": 29.0}
-    norm, meta = bench._normalized_times(timings, probes)
-    assert meta["estimator"] == "single"
-    # b's spike is rejected: median(29, 937, 29) = 29 → norm ≈ raw
-    assert norm["b"] == 6.0
-    assert norm["a"] == 2.0 and norm["c"] == 2.0
-    assert "fail" not in norm and "noprobe" not in norm
-
-    # sustained 2× slowdown: every probe doubles → every entry halves
-    # (factor 0.5 sits exactly ON the clamp band edge, so it is honored)
-    slow = {k: 58.0 for k in ("a", "b", "c")}
-    norm2, _ = bench._normalized_times({"a": 2.0, "b": 6.0, "c": 2.0}, slow)
-    assert norm2 == {"a": 1.0, "b": 3.0, "c": 1.0}
-
-    assert bench._normalized_times({"a": 1.0}, {})[0] == {}
-
-
-def test_normalized_times_parallel_probe_and_clamp():
-    """VERDICT r15 #1: the estimator of record is the parallelism-matched
-    probe, and the correction factor is clamped so overcorrection
-    degrades toward raw. Simulates r15's failure: a contended recording
-    whose 32-way suite ran 1.4× its clean time while the single-thread
-    probe inflated 7× — the old estimator normalized 2× LOW; the
-    parallel probe inflates like the suite does, so value_norm lands
-    within ±15% of the clean recording's value."""
-    clean = {"a": 2.0, "b": 6.0, "c": 2.0}
-    total_clean = sum(clean.values())
-
-    # contended: suite ×1.4, single probe ×7, parallel probe ×1.4
-    contended = {k: round(v * 1.4, 3) for k, v in clean.items()}
-    singles = {k: bench.MATMUL_REF_MS * 7.0 for k in clean}
-    parallels = {k: bench.PMATMUL_REF_MS * 1.4 for k in clean}
-    norm, meta = bench._normalized_times(contended, singles, parallels)
-    assert meta["estimator"] == "parallel" and meta["n_clamped"] == 0
-    assert abs(sum(norm.values()) - total_clean) <= 0.15 * total_clean
-
-    # estimator gone wrong (probes say 7× while the suite ran 1.4×):
-    # the clamp floors the factor at 0.5 — degrade toward raw, never
-    # the r15 nonsense of 0.14× — and the artifact records the clamping
-    bad_par = {k: bench.PMATMUL_REF_MS * 7.0 for k in clean}
-    norm2, meta2 = bench._normalized_times(contended, singles, bad_par)
-    assert meta2["n_clamped"] == len(clean)
-    total_raw = sum(contended.values())
-    assert sum(norm2.values()) >= 0.5 * total_raw - 1e-9
-
-    # a fast-host recording is capped at 1.5× the other way
-    fast_par = {k: bench.PMATMUL_REF_MS / 7.0 for k in clean}
-    norm3, meta3 = bench._normalized_times(clean, {}, fast_par)
-    assert meta3["n_clamped"] == len(clean)
-    assert sum(norm3.values()) <= 1.5 * total_clean + 1e-9
-
-    # parallel probes covering < half the timed entries do not price the
-    # run (transient thread failure must not flip the estimator)
-    sparse = {"a": bench.PMATMUL_REF_MS}
-    _, meta4 = bench._normalized_times(clean, singles, sparse)
-    assert meta4["estimator"] == "single"
-
-
-def test_parallel_machine_speed_probe_returns_plausible_ms():
-    """The 32-thread probe must return a positive wall-clock in the
-    plausible band (not per-thread CPU, not a hung join)."""
-    ms = bench._parallel_machine_speed_ms()
-    assert ms is not None and 1.0 < ms < 120_000.0
-
-
-def test_pprobe_hot_flags_burst_entries_only():
-    """The summary record's per-entry probe context (r17): entries whose
-    post-window parallel probe ran >= 1.5x the anchor appear with their
-    slowdown ratio, clean entries do not, and the dict is truncated to
-    the worst `cap` so the stdout line stays inside the driver's tail
-    window."""
-    ref = bench.PMATMUL_REF_MS
-    probes = {"clean_a": ref * 1.0, "clean_b": ref * 1.4,
-              "hot_a": ref * 2.0, "hot_b": ref * 6.0}
-    hot = bench._pprobe_hot(probes)
-    assert set(hot) == {"hot_a", "hot_b"}
-    assert hot["hot_b"] == 6.0 and hot["hot_a"] == 2.0
-    # cap: keeps the WORST entries
-    many = {f"e{i}": ref * (2 + i) for i in range(12)}
-    capped = bench._pprobe_hot(many, cap=3)
-    assert list(capped) == ["e11", "e10", "e9"]
-    assert bench._pprobe_hot({"a": ref}) == {}

@@ -117,7 +117,9 @@ def test_bench_inherits_session_jvm_capacity_constants():
     """bench.py must not redefine the JVM capacity values: it imports
     CODEGEN_CACHE_MAX_ENTRIES / driver_java_opts() from session.py, so
     the benchmark JVM and production sessions stay in lockstep (VERDICT
-    r16 #2 'bench.py inherits rather than redefines')."""
+    r16 #2 'bench.py inherits rather than redefines'). The harness tools
+    build their sessions through bench.build_session, never their own
+    builder chain, so their plans and JIT numbers come from that JVM too."""
     from pcap_converter_spark import session as S
 
     assert S.CODEGEN_CACHE_MAX_ENTRIES == "16384"
@@ -128,6 +130,13 @@ def test_bench_inherits_session_jvm_capacity_constants():
     # the literals must not be re-declared in bench.py's builder chain
     assert '"16384"' not in src
     assert "ReservedCodeCacheSize=640m" not in src
+    for tool in ("bench_one.py", "capture_plans.py", "jit_probe.py"):
+        tsrc = open(os.path.join(_REPO, "tools", tool)).read()
+        assert "bench.build_session(" in tsrc, tool
+        assert "SparkSession.builder" not in tsrc, tool
+        assert "spark.sql.codegen.cache.maxEntries" not in tsrc, tool
+        for literal in ('"16384"', '"4096"', "ReservedCodeCacheSize"):
+            assert literal not in tsrc, (tool, literal)
 
 
 def test_driver_java_opts_env_override(monkeypatch):
@@ -398,10 +407,10 @@ def test_cds_publish_promotes_only_a_clean_exit(launch, monkeypatch):
 
 
 def test_driver_java_opts_never_carry_an_archive_flag(launch, monkeypatch):
-    """bench.py, tools/bench_one.py, tools/jit_probe.py and
-    tools/capture_plans.py pass driver_java_opts() to their own builders
-    without the empty conf dir; an archive flag there would stop their
-    JVMs at start."""
+    """bench.build_session, which bench.py, tools/bench_one.py,
+    tools/jit_probe.py and tools/capture_plans.py start from, passes
+    driver_java_opts() to its builder without the empty conf dir; an
+    archive flag there would stop their JVMs at start."""
     S = launch.S
     assert not any(f in S.driver_java_opts() for f in _ARCHIVE_FLAGS)
     launch.mark()

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Run bench.py's untimed warmup chain then time ONE (or a few) declared
-entries, bench-style (fresh session, noop sink, single timed run each).
-Usage: python tools/bench_one.py ex_stream_dedup [more...] [--sf DIR]"""
+entries, bench-style (bench.py's session, noop sink, single timed run each).
+Usage: python tools/bench_one.py ENTRY [ENTRY...]
+The scale factor dir comes from $SPARK_GRAFT_SF_DIR, as for bench.py."""
 import os
 import sys
 import time
@@ -10,39 +11,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
-    names = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    names = sys.argv[1:]
+    if not names or any(a.startswith("--") for a in names):
+        print("usage: python tools/bench_one.py ENTRY [ENTRY...]",
+              file=sys.stderr)
+        return 2
     os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 
     import bench
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
-    from pcap_converter_spark.session import (
-        CODEGEN_CACHE_MAX_ENTRIES,
-        apply_runtime_confs,
-        driver_java_opts,
-    )
 
-    spark = (
-        SparkSession.builder.appName("bench_one")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        # measurement parity with bench.py (r17): without the codegen
-        # class cache + code cache sizing every rep re-Janinos the plan
-        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_MAX_ENTRIES)
-        .config("spark.driver.extraJavaOptions", driver_java_opts())
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    apply_runtime_confs(spark)
-    spark.sparkContext.setLogLevel("ERROR")
-    bench.run_warmup(spark, sf_dir, cpus, entrymod.queries())
     runners = entrymod.queries()
+    unknown = [n for n in names if n not in runners]
+    if unknown:
+        print(f"bench_one: unknown entries {unknown}", file=sys.stderr)
+        return 2
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = bench.default_cpus()
+    spark = bench.build_session("bench_one", cpus)
+    bench.run_warmup(spark, sf_dir, cpus, runners)
     import gc
     for name in names:
         fn = runners[name]

@@ -28,31 +28,13 @@ def main() -> int:
     only = set(args[2:])
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
-
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
     import bench
-    from pcap_converter_spark.session import (
-        CODEGEN_CACHE_MAX_ENTRIES,
-        apply_runtime_confs,
-    )
 
-    spark = (
-        SparkSession.builder.appName("capture_plans")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_MAX_ENTRIES)
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    apply_runtime_confs(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    cpus = bench.default_cpus()
+    spark = bench.build_session("capture_plans", cpus)
     runners = entrymod.queries()
     bench.run_warmup(spark, sf_dir, cpus, runners)
     from pcap_converter_spark.operators import registry

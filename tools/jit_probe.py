@@ -23,22 +23,13 @@ import time
 ONE = """
 import sys, time, os
 sys.path.insert(0, os.getcwd())
-from pyspark.sql import SparkSession
 import __spark_entry__ as entrymod
-from pcap_converter_spark.session import apply_runtime_confs, phase_times
+import bench
+from pcap_converter_spark.session import CODEGEN_CACHE_MAX_ENTRIES, phase_times
 
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-spark = (
-    SparkSession.builder.appName("jitprobe")
-    .master(f"local[{cpus}]")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.driver.memory", "8g")
-    .config("spark.sql.codegen.cache.maxEntries",
-            os.environ.get("JITPROBE_CGCACHE", "4096"))
-    .config("spark.ui.enabled", "false")
-    .config("spark.ui.showConsoleProgress", "false")
-    .getOrCreate()
+spark = bench.build_session(
+    "jitprobe", bench.default_cpus(),
+    os.environ.get("JITPROBE_CGCACHE", CODEGEN_CACHE_MAX_ENTRIES),
 )
 # r17: arbitrary experiment confs, e.g.
 # JITPROBE_CONFS='spark.sql.codegen.methodSplitThreshold=4000;spark.sql.codegen.wholeStage=false'
@@ -46,8 +37,6 @@ for kv in os.environ.get("JITPROBE_CONFS", "").split(";"):
     if "=" in kv:
         k, v = kv.split("=", 1)
         spark.conf.set(k.strip(), v.strip())
-apply_runtime_confs(spark)
-spark.sparkContext.setLogLevel("ERROR")
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 jvm = spark._jvm
