@@ -36,10 +36,8 @@ def _extensions():
     Returns (runners, oracles); oracle omitted for non-SQL-expressible ops
     (driver records a rows-only check for those).
     """
-    try:
-        from pcap_converter_spark.operators.registry import extension_queries
-    except ImportError:
-        return {}, {}
+    from pcap_converter_spark.operators.registry import extension_queries
+
     return extension_queries()
 
 

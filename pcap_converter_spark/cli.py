@@ -504,8 +504,8 @@ def _cmd_ingest(argv: list[str]) -> int:
     repair, C4 line rules, digest normalization); an index whose
     recorded prep includes the corpus-level stages (line/substring
     dedup) cannot be streamed against — run batch `curate`. With no prep
-    flags the recorded map-only prep is ADOPTed, the `_reconcile_prep`
-    move."""
+    flags the recorded map-only prep is ADOPTed through
+    `_reconcile_prep`."""
     import json as _json
 
     ap = argparse.ArgumentParser(prog="pcap-converter-spark ingest")
@@ -596,57 +596,26 @@ def _cmd_ingest(argv: list[str]) -> int:
             "the first batch"
         )
 
-    flags_given = bool(
-        args.fix_encoding or args.c4_clean or args.normalize_digests
-    )
-    prep_sig = None
+    # ingest has no corpus-level or extraction flags; _reconcile_prep
+    # may adopt them from the index's recorded signature
+    args.line_dedup = args.substring_dedup = None
+    args.html_extract = "text"
     if exists:
-        recorded = inc.read_index_meta(spark, args.index).get("prep")
-        if recorded is not None and not flags_given:
-            vals = inc.parse_prep_signature(recorded)
-            if vals["line_dedup_min_docs"] or vals["substring_dedup"]:
-                raise SystemExit(
-                    f"error: index at {args.index} records corpus-level "
-                    f"prep ({recorded}) — line/substring dedup cannot be "
-                    "applied per micro-batch without changing their "
-                    "semantics; ingest this corpus through batch "
-                    "`curate` instead"
-                )
-            args.fix_encoding = vals["fix_encoding"]
-            args.c4_clean = vals["c4_rules"]
-            args.normalize_digests = vals["normalize"]
-            # adopt the RECORDED signature verbatim (it may carry fields
-            # the stream cannot re-derive, e.g. hx=main from a WARC-built
-            # index whose extraction already happened upstream of these
-            # files) — rebuilding it here would fail extend's equality
-            # check on exactly those fields
-            prep_sig = recorded
-            print(
-                f"note: adopting the index's text-prep flags ({recorded})",
-                file=sys.stderr,
+        # adopts the recorded signature verbatim (it may carry fields the
+        # stream cannot re-derive, e.g. hx=main from a WARC-built index),
+        # and rejects explicit flags that contradict it PRE-FLIGHT, before
+        # the sink delivers anything
+        prep_sig = _reconcile_prep(spark, args, args.index)
+        if args.line_dedup or args.substring_dedup:
+            raise SystemExit(
+                f"error: index at {args.index} records corpus-level "
+                f"prep ({prep_sig}) — line/substring dedup cannot be "
+                "applied per micro-batch without changing their "
+                "semantics; ingest this corpus through batch "
+                "`curate` instead"
             )
-    if prep_sig is None:
-        prep_sig = inc.prep_signature(
-            args.fix_encoding, None, None,
-            html_extract="text", c4_rules=args.c4_clean,
-            normalize=args.normalize_digests,
-        )
-        # flags WERE given: verify them against the recorded contract
-        # PRE-FLIGHT (r14 review — the inline adopt block reimplemented
-        # _reconcile_prep without its mismatch branch, so a mismatched
-        # invocation either probed the wrong digest space silently with
-        # --no-update, or crashed mid-stream AFTER the sink delivered)
-        if exists:
-            recorded = inc.read_index_meta(spark, args.index).get("prep")
-            if recorded is not None and recorded != prep_sig:
-                raise SystemExit(
-                    f"error: index at {args.index} was built with text "
-                    f"prep '{recorded}' but this invocation specifies "
-                    f"'{prep_sig}' — the two sides would digest "
-                    "different bytes and dedup would silently miss; "
-                    "pass matching flags (or none, to adopt the "
-                    "index's) or rebuild the index"
-                )
+    else:
+        prep_sig = _prep_sig(args)
 
     if args.format == "jsonl":
         from pcap_converter_spark.sources.jsonl import read_jsonl_docs_stream
@@ -762,18 +731,13 @@ def _cmd_ingest(argv: list[str]) -> int:
                     )
         if bad:
             if args.quarantine:
+                from pcap_converter_spark.sources.datasource import (
+                    quarantine_file,
+                )
+
                 qdir = _os.path.join(args.input, "_quarantine")
-                _os.makedirs(qdir, exist_ok=True)
                 for f, why in sorted(bad.items()):
-                    # unique destination (ADVICE r15): a same-named file
-                    # quarantined by an earlier run keeps its bytes
-                    base = _os.path.basename(f)
-                    dest = _os.path.join(qdir, base)
-                    n_dup = 0
-                    while _os.path.exists(dest):
-                        n_dup += 1
-                        dest = _os.path.join(qdir, f"{base}.{n_dup}")
-                    _os.replace(f, dest)
+                    dest = quarantine_file(f, qdir)
                     print(
                         f"ingest: quarantined {f} -> {dest} ({why})",
                         file=sys.stderr,

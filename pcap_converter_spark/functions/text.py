@@ -13,6 +13,8 @@ content hash for shift-robust near-dup detection).
 
 from __future__ import annotations
 
+import hashlib
+
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints at runtime
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -438,9 +440,9 @@ def fingerprint(text: Column) -> Column:
 def word_hash32(w: Column) -> Column:
     """Portable 32-bit word hash: the low 4 bytes (little-endian) of the md5
     digest — equals ``md5_number_lower(w) & 0xFFFFFFFF`` in DuckDB and
-    ``int.from_bytes(md5(w).digest()[8:12], 'little')`` in Python, so the
-    winnowing fingerprint has an exact oracle in all three engines.
-    (crc32 would be cheaper but DuckDB ships no crc32.)"""
+    ``md5_low32(w)`` in Python, so the winnowing fingerprint has an exact
+    oracle in all three engines. (crc32 would be cheaper but DuckDB ships
+    no crc32.)"""
     m = F.md5(w.cast("binary"))
     # digest bytes 8..11 little-endian == hex chars (23,24)(21,22)(19,20)(17,18)
     return F.conv(
@@ -451,6 +453,20 @@ def word_hash32(w: Column) -> Column:
         16,
         10,
     ).cast("long")
+
+
+def md5_low64(s: str) -> int:
+    """md5 digest bytes 8..16 little-endian, unsigned — the Python twin of
+    DuckDB's ``md5_number_lower(s)``. Callers that need a BIGINT key mask
+    it to 63 bits themselves."""
+    return int.from_bytes(hashlib.md5(s.encode()).digest()[8:16], "little")
+
+
+def md5_low32(s: str) -> int:
+    """The low 32 bits of ``md5_low64`` (digest bytes 8..12) — the Python
+    twin of ``word_hash32`` and of DuckDB's
+    ``md5_number_lower(s) & 0xFFFFFFFF``."""
+    return int.from_bytes(hashlib.md5(s.encode()).digest()[8:12], "little")
 
 
 def rolling_fingerprint(text: Column, window: int = 8) -> Column:
@@ -624,8 +640,6 @@ def rolling_fingerprint_udf(window: int = 8):
     at corpus scale. Tests assert both implementations agree with a pure-
     Python reference.
     """
-    import hashlib
-
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<long>")
@@ -636,10 +650,7 @@ def rolling_fingerprint_udf(window: int = 8):
             if not wsl:
                 out.append([])
                 continue
-            hs = [
-                int.from_bytes(hashlib.md5(w.encode()).digest()[8:12], "little")
-                for w in wsl
-            ]
+            hs = [md5_low32(w) for w in wsl]
             win = min(window, len(hs))
             out.append(
                 sorted({min(hs[i : i + win]) for i in range(len(hs) - win + 1)})

@@ -23,12 +23,14 @@ keyed by band hashes which are uniform by construction (no skew).
 
 from __future__ import annotations
 
+import zlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pcap_converter_spark.functions.text import WS_SPLIT
+from pcap_converter_spark.functions.text import WS_SPLIT, md5_low64
 from pcap_converter_spark.functions.text import ws_tokens as _ws_tokens
 
 
@@ -251,8 +253,6 @@ def remove_duplicate_spans(
     document once. The DuckDB oracle applies the identical hash, so the
     comparison is exact (collisions would affect both engines alike).
     """
-    import hashlib
-
     from pyspark.sql import types as T
 
     w = int(min_words)
@@ -269,7 +269,7 @@ def remove_duplicate_spans(
     )
 
     def gen(pdfs):
-        md5 = hashlib.md5
+        h = md5_low64
         for pdf in pdfs:
             docs_out: list = []
             pos_out: list[int] = []
@@ -279,13 +279,7 @@ def remove_duplicate_spans(
                 for i in range(max(len(ws) - w + 1, 0)):
                     docs_out.append(doc)
                     pos_out.append(i)
-                    gh_out.append(
-                        int.from_bytes(
-                            md5(" ".join(ws[i : i + w]).encode()).digest()[8:16],
-                            "little",
-                        )
-                        & mask
-                    )
+                    gh_out.append(h(" ".join(ws[i : i + w])) & mask)
             yield pd.DataFrame(
                 {
                     "doc": pd.Series(docs_out, dtype=pdf[id_col].dtype),
@@ -515,6 +509,17 @@ def line_dedup(
     )
 
 
+def _shingle_set(text: str | None, k: int) -> set[str]:
+    """Distinct k-word shingles of the lowercased text — the Python twin
+    of ``shingles()``, shared by every Arrow-batched shingle pass here and
+    in incremental.py. A text shorter than k words is its own single
+    shingle."""
+    ws = _ws_tokens((text or "").lower())
+    if len(ws) < k:
+        return {" ".join(ws)}
+    return {" ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)}
+
+
 def _shingle_table(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
     """Exploded (doc, shingle-hash) table via one Arrow-batched pass.
 
@@ -531,8 +536,6 @@ def _shingle_table(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFra
       so both engines see the same keys — any hash collision (≪1e-9 at
       corpus scale) would affect both identically, keeping the comparison
       exact."""
-    import hashlib
-
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -541,21 +544,14 @@ def _shingle_table(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFra
     mask = (1 << 63) - 1
 
     def gen(pdfs):
-        md5 = hashlib.md5
+        h, shingle_set = md5_low64, _shingle_set
         for pdf in pdfs:
             docs_out: list[int] = []
             sh_out: list[int] = []
             for doc, text in zip(pdf[id_col], pdf[text_col]):
-                ws = _ws_tokens((text or "").lower())
-                if len(ws) < k:
-                    uniq = {" ".join(ws)}
-                else:
-                    uniq = {" ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)}
+                uniq = shingle_set(text, k)
                 docs_out.extend([int(doc)] * len(uniq))
-                sh_out.extend(
-                    int.from_bytes(md5(s.encode()).digest()[8:16], "little") & mask
-                    for s in uniq
-                )
+                sh_out.extend(h(s) & mask for s in uniq)
             yield pd.DataFrame(
                 {"doc": pd.Series(docs_out, dtype="int64"),
                  "sh": pd.Series(sh_out, dtype="int64")}
@@ -718,6 +714,32 @@ def _minhash_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
+def _crc32(s: str) -> int:
+    return zlib.crc32(s.encode())
+
+
+def _minhash_kernel(num_hashes: int, bands: int, seed: int, base_hash=_crc32):
+    """The per-document MinHash kernel: shingles → (signature, band
+    hashes). ``base_hash`` maps each shingle to an unsigned int; the
+    num_hashes seeded minima of (a·h + b) mod 2³¹−1 over it run in NumPy,
+    and each band hash is the crc32 of its signature slice. One kernel
+    serves the in-corpus LSH table and the at-rest index, so a doc
+    indexed yesterday and probed today produces identical keys."""
+    params = _minhash_params(num_hashes, seed)
+    A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
+    B = np.array([b for _, b in params], dtype=np.int64)[:, None]
+    r = num_hashes // bands
+
+    def kernel(sh) -> tuple[np.ndarray, list[int]]:
+        base = np.array([base_hash(s) for s in sh], dtype=np.int64)[None, :]
+        sig = ((A * (base & _MERSENNE31) + B) % _MERSENNE31).min(axis=1)
+        return sig, [
+            zlib.crc32(sig[b * r : (b + 1) * r].tobytes()) for b in range(bands)
+        ]
+
+    return kernel
+
+
 def minhash_band_table(
     df: DataFrame,
     text_col: str,
@@ -736,14 +758,9 @@ def minhash_band_table(
     verify step stays JVM-side where array_intersect IS the fast path.
     Deterministic: crc32 + seeded constants, identical across executors.
     """
-    import zlib
-
     from pyspark.sql import types as T
 
-    params = _minhash_params(num_hashes, seed)
-    A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in params], dtype=np.int64)[:, None]
-    r = num_hashes // bands
+    minhash = _minhash_kernel(num_hashes, bands, seed)
 
     out_schema = T.StructType(
         [
@@ -760,17 +777,9 @@ def minhash_band_table(
         for pdf in pdfs:
             rows = []
             for doc, text in zip(pdf[id_col], pdf[text_col]):
-                ws = _ws_tokens((text or "").lower())
-                if len(ws) < k:
-                    sh = [" ".join(ws)]
-                else:
-                    sh = list({" ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)})
-                base = np.array(
-                    [zlib.crc32(s.encode()) for s in sh], dtype=np.int64
-                )[None, :]
-                sig = ((A * (base & _MERSENNE31) + B) % _MERSENNE31).min(axis=1)
-                for b in range(bands):
-                    bh = zlib.crc32(sig[b * r : (b + 1) * r].tobytes())
+                sh = list(_shingle_set(text, k))
+                _, band_hashes = minhash(sh)
+                for b, bh in enumerate(band_hashes):
                     # the shingle array (the dominant payload — near the raw
                     # text size) rides along ONCE, on band 0; emitting it per
                     # band would amplify the persisted/shuffled table ×bands
@@ -848,7 +857,6 @@ def simhash64(text: Column) -> Column:
     counter aggregate is 64 branches/word as an interpreted higher-order
     expression (measured ~3.7 s at sf0.1), but a single vectorized NumPy
     bit-matrix per batch here."""
-    import hashlib
 
     @F.pandas_udf("long")
     def _simhash(texts: pd.Series) -> pd.Series:
@@ -872,9 +880,7 @@ def simhash64(text: Column) -> Column:
         def _h(w: str) -> int:
             v = cache.get(w)
             if v is None:
-                v = int.from_bytes(
-                    hashlib.md5(w.encode()).digest()[8:16], "little"
-                )
+                v = md5_low64(w)
                 if len(cache) < 4_000_000:
                     cache[w] = v
             return v

@@ -35,23 +35,24 @@ Tier semantics:
   because the index deliberately stores no text to verify against. The
   in-corpus operator (``dedup.minhash_lsh_pairs``) verifies exact Jaccard
   and remains the right tool WITHIN one snapshot; this module answers the
-  cross-snapshot question without touching old text. Same shingle/hash
-  constants (``dedup._minhash_params`` universal hashing over crc32), so
-  a doc indexed yesterday and probed today produces identical keys.
+  cross-snapshot question without touching old text. Both run the one
+  shingle set and MinHash kernel (``dedup._shingle_set`` and
+  ``dedup._minhash_kernel``), so a doc indexed yesterday and probed
+  today produces identical keys.
 """
 
 from __future__ import annotations
 
-import zlib
+import json
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from pcap_converter_spark.functions.text import md5_low32
 from pcap_converter_spark.operators.dedup import (
-    _MERSENNE31,
-    _minhash_params,
-    _ws_tokens,
+    _crc32,
+    _minhash_kernel,
+    _shingle_set,
 )
 from pcap_converter_spark.session import session_memo
 
@@ -188,32 +189,22 @@ def _sig_band_table(
     shingle_hash: str = "crc32",
 ) -> DataFrame:
     """(doc_id, sig on band 0 else NULL, band, band_hash) via one
-    Arrow-batched mapInPandas — the same NumPy universal-hash kernel as
+    Arrow-batched mapInPandas — the same ``dedup._minhash_kernel`` as
     ``dedup.minhash_band_table`` but carrying the SIGNATURE instead of the
     shingle set (an index probe verifies by signature agreement, never by
     shingles — the index stores no text-sized payloads).
 
     ``shingle_hash`` picks the base hash the universal family runs over:
     'crc32' (default — the fast path, shared with the in-corpus MinHash)
-    or 'md5l32' (md5 digest bytes 8..12 little-endian, the same
-    construction as ``functions/text.word_hash32``) — the md5 form has an
+    or 'md5l32' (``functions/text.md5_low32``, the Python twin of
+    ``functions/text.word_hash32``) — the md5 form has an
     exact DuckDB twin (``md5_number_lower & 0xFFFFFFFF``), so a
     cross-engine SQL replay can re-derive the whole signature path
     (tests/test_incremental.py)."""
-    if shingle_hash == "crc32":
-        base_hash = lambda s: zlib.crc32(s.encode())  # noqa: E731
-    elif shingle_hash == "md5l32":
-        import hashlib
-
-        base_hash = lambda s: int.from_bytes(  # noqa: E731
-            hashlib.md5(s.encode()).digest()[8:12], "little"
-        )
-    else:
+    base_hash = {"crc32": _crc32, "md5l32": md5_low32}.get(shingle_hash)
+    if base_hash is None:
         raise ValueError(f"unknown shingle_hash {shingle_hash!r}")
-    params = _minhash_params(num_hashes, seed)
-    A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in params], dtype=np.int64)[:, None]
-    r = num_hashes // bands
+    minhash = _minhash_kernel(num_hashes, bands, seed, base_hash)
 
     out_schema = T.StructType(
         [
@@ -230,20 +221,9 @@ def _sig_band_table(
         for pdf in pdfs:
             rows = []
             for doc, text in zip(pdf[id_col], pdf[text_col]):
-                ws = _ws_tokens((text or "").lower())
-                if len(ws) < k:
-                    sh = [" ".join(ws)]
-                else:
-                    sh = list(
-                        {" ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)}
-                    )
-                base = np.array(
-                    [base_hash(s) for s in sh], dtype=np.int64
-                )[None, :]
-                sig = ((A * (base & _MERSENNE31) + B) % _MERSENNE31).min(axis=1)
+                sig, band_hashes = minhash(_shingle_set(text, k))
                 sig_list = [int(x) for x in sig]
-                for b in range(bands):
-                    bh = zlib.crc32(sig[b * r : (b + 1) * r].tobytes())
+                for b, bh in enumerate(band_hashes):
                     # the signature rides along ONCE, on band 0 — emitting
                     # it per band would amplify the written table ×bands
                     rows.append(
@@ -264,6 +244,31 @@ def _hadoop_fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
+
+
+def _read_json(spark: SparkSession, path: str):
+    """Parse the small JSON file at ``path`` (manifests, ANN sidecars)
+    over the Hadoop FS. Callers that tolerate a missing file check
+    existence first."""
+    fs, jvm = _hadoop_fs(spark, path)
+    stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
+    try:
+        body = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return json.loads(body)
+
+
+def _write_json(spark: SparkSession, path: str, obj) -> None:
+    """Write ``obj`` as one small JSON file at ``path`` (create+close,
+    overwriting). Callers that need an atomic commit write a tmp name and
+    rename it themselves."""
+    fs, jvm = _hadoop_fs(spark, path)
+    out = fs.create(jvm.org.apache.hadoop.fs.Path(path), True)
+    try:
+        out.write(json.dumps(obj).encode())
+    finally:
+        out.close()
 
 
 def _live_epoch(
@@ -293,17 +298,7 @@ def _read_manifest(
 ) -> dict:
     """Parse the committed manifest body for ``epoch`` (shared by the
     corpus-index and ANN resolvers)."""
-    import json as _json
-
-    fs, jvm = _hadoop_fs(spark, path)
-    stream = fs.open(
-        jvm.org.apache.hadoop.fs.Path(f"{path}/{manifest_prefix}{epoch:06d}")
-    )
-    try:
-        body = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return _json.loads(body)
+    return _read_json(spark, f"{path}/{manifest_prefix}{epoch:06d}")
 
 
 def _claim_generation_slot(
@@ -350,22 +345,13 @@ def _commit_manifest(
     single-object copy+delete of a tiny file — a reader can briefly see
     both old and new manifests, which is harmless because max-epoch wins
     and both are complete."""
-    import json as _json
-
     fs, jvm = _hadoop_fs(spark, path)
-    data = _json.dumps(body).encode()
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{path}/.{manifest_prefix}{epoch:06d}.tmp"
-    )
+    tmp = f"{path}/.{manifest_prefix}{epoch:06d}.tmp"
     final = jvm.org.apache.hadoop.fs.Path(
         f"{path}/{manifest_prefix}{epoch:06d}"
     )
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(data))
-    finally:
-        out.close()
-    if not fs.rename(tmp, final):
+    _write_json(spark, tmp, body)
+    if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), final):
         raise IOError(
             f"could not commit {manifest_prefix}{epoch:06d} at {path} "
             "(rename failed — concurrent compaction?)"

@@ -248,6 +248,16 @@ def _eager(spark: SparkSession, df: DataFrame, handles: list) -> DataFrame:
     return out
 
 
+def _union_padded(parts: list[DataFrame], cols) -> DataFrame:
+    """By-name union of tagged branches with disjoint columns: a column a
+    branch lacks is NULL of the type the other branches carry it as; one
+    final select fixes the column order."""
+    out = parts[0]
+    for part in parts[1:]:
+        out = out.unionByName(part, allowMissingColumns=True)
+    return out.select(*cols)
+
+
 # ---------------------------------------------------------------------------
 # text analysis
 # ---------------------------------------------------------------------------
@@ -1469,25 +1479,24 @@ def run_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         prep_flags = prep.result()
     prep_tier = prep_flags.select(
         F.lit("incr_prep").alias("tier"),
-        F.lit(None).cast("string").alias("content_hash"),
-        F.lit(None).cast("bigint").alias("dup_count"),
         F.array(F.col("doc_id")).alias("doc_ids"),
         F.col("keep_novel").alias("dup_near"),
-        F.lit(None).cast("double").alias("near_est"),
     )
-    merged = five.unionByName(prep_tier, allowMissingColumns=True)
     # doc_ids serialized to a CSV string (already sorted by the operators):
     # the driver canonicalizer sorts with pandas and cannot hash list cells
     # (r3 red row); the array form stays on the operator API
-    out = merged.select(
-        "tier",
-        "content_hash",
-        "dup_count",
-        F.array_join(F.col("doc_ids").cast("array<string>"), ",").alias(
-            "doc_ids"
+    out = _union_padded(
+        [five, prep_tier],
+        (
+            "tier",
+            "content_hash",
+            "dup_count",
+            F.array_join(F.col("doc_ids").cast("array<string>"), ",").alias(
+                "doc_ids"
+            ),
+            "dup_near",
+            "near_est",
         ),
-        "dup_near",
-        "near_est",
     )
     with phase(spark, "assemble"):
         return _eager(spark, out, handles)
@@ -1563,8 +1572,6 @@ def _dedup_tiers5(
         probe_tiers=("near",),  # the 'incr' tier already proves exact
     ).select(
         F.lit("incr_near").alias("tier"),
-        F.lit(None).cast("string").alias("content_hash"),
-        F.lit(None).cast("bigint").alias("dup_count"),
         F.array(F.col("doc_id")).alias("doc_ids"),
         "dup_near",
         F.round("near_est", 4).alias("near_est"),
@@ -1803,12 +1810,9 @@ def run_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("cc").alias("tier"),
         F.col("doc").alias("doc_a"),
         F.col("root").alias("doc_b"),
-        F.lit(None).cast("double").alias("jaccard"),
     )
-    out = (
-        exact.unionByName(mh)
-        .unionByName(groups)
-        .select("tier", "doc_a", "doc_b", "jaccard")
+    out = _union_padded(
+        [exact, mh, groups], ("tier", "doc_a", "doc_b", "jaccard")
     )
     return _eager(spark, out, handles)
 
@@ -2502,8 +2506,6 @@ def run_mm_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta = run_mm_meta(spark, sf_dir).select(
         F.lit("meta").alias("src"),
         "doc_id",
-        F.lit(None).cast("int").alias("frame_idx"),
-        F.lit(None).cast("int").alias("frame_len"),
         "n_bytes",
         "checksum",
         "entropy",
@@ -2514,12 +2516,12 @@ def run_mm_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "frame_idx",
         "frame_len",
-        F.lit(None).cast("long").alias("n_bytes"),
-        F.lit(None).cast("string").alias("checksum"),
-        F.lit(None).cast("double").alias("entropy"),
-        F.lit(None).cast("int").alias("top_byte"),
     )
-    return meta.unionByName(frames)
+    cols = (
+        "src", "doc_id", "frame_idx", "frame_len", "n_bytes", "checksum",
+        "entropy", "top_byte",
+    )
+    return _union_padded([meta, frames], cols)
 
 
 _MM_ALL_ORACLE = f"""
@@ -2743,41 +2745,20 @@ def run_olap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "STRING",
         )
     )
-    ns = F.lit(None).cast("string")
-    nd = F.lit(None).cast("double")
-    olap_p = (
-        olap.withColumn("pcol", ns)
-        .withColumn("stat", ns)
-        .withColumn("value", nd)
-        .withColumn("value_str", ns)
-    )
     prof = _profile(
         load_table(spark, sf_dir, "part"), include_approx=False,
         sort=False,  # rides the union
     )
     prof_p = prof.select(
         F.lit("profile").alias("src"),
-        ns.alias("o_orderpriority"),
-        ns.alias("o_orderstatus"),
-        F.lit(None).cast("int").alias("gp"),
-        F.lit(None).cast("int").alias("gs"),
-        F.lit(None).cast("bigint").alias("n"),
-        nd.alias("lo"),
-        nd.alias("hi"),
-        nd.alias("med"),
-        F.lit(None).cast("bigint").alias("c_custkey"),
-        F.lit(None).cast("int").alias("quartile"),
-        nd.alias("pr"),
-        nd.alias("cd"),
-        F.lit(None).cast("int").alias("dr"),
-        F.lit(None).cast("bigint").alias("fv"),
-        F.lit(None).cast("bigint").alias("nv3"),
         F.col("column").alias("pcol"),
         "stat",
         "value",
         "value_str",
     )
-    return olap_p.unionByName(prof_p)
+    return _union_padded(
+        [olap, prof_p], olap.columns + ["pcol", "stat", "value", "value_str"]
+    )
 
 
 # the profiler arm's DuckDB twin: the same per-column stats re-derived
@@ -3185,93 +3166,42 @@ def run_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
             _kept_path = _write_kept_path(spark, sf_dir)
         prelude_frame = prelude.result()
 
-    nl = F.lit(None).cast("bigint")
-    nb = F.lit(None).cast("boolean")
-    ns = F.lit(None).cast("string")
-    flags = (
-        flags_frame
-        .withColumn("src", F.lit("flags"))
-        .withColumn("keep_lang", nb)
-        .withColumn("stage", ns)
-        .withColumn("n_entered", nl)
-        .withColumn("n_kept", nl)
-        .withColumn("n_dropped", nl)
-    )
-    pflags = (
-        prelude_frame
-        .withColumn("src", F.lit("pflags"))
-        .withColumn("stage", ns)
-        .withColumn("n_entered", nl)
-        .withColumn("n_kept", nl)
-        .withColumn("n_dropped", nl)
-    )
-    preport = curation_report(prelude_frame, sort=False).select(
-        F.lit("preport").alias("src"),
-        nl.alias("doc_id"),
-        nb.alias("keep_lang"),
-        nb.alias("keep_quality"),
-        nb.alias("keep_exact"),
-        nb.alias("keep_neardup"),
-        nb.alias("keep_decon"),
-        nb.alias("kept"),
-        nl.alias("pack_shard"),
-        nl.alias("pack_bin"),
-        nl.alias("pack_offset"),
-        "stage",
-        F.col("n_entered").cast("bigint").alias("n_entered"),
-        F.col("n_kept").cast("bigint").alias("n_kept"),
-        F.col("n_dropped").cast("bigint").alias("n_dropped"),
-    )
     t = F.lit(True)
-    rest = (
-        spark.read.parquet(_kept_path)
-        .select(
-            "doc_id",
-            nb.alias("keep_lang"),
-            t.alias("keep_quality"),
-            t.alias("keep_exact"),
-            t.alias("keep_neardup"),
-            t.alias("keep_decon"),
-            t.alias("kept"),
-            F.col("pack_shard").cast("bigint").alias("pack_shard"),
-            F.col("pack_bin").cast("bigint").alias("pack_bin"),
-            F.col("pack_offset").cast("bigint").alias("pack_offset"),
+    rest = spark.read.parquet(_kept_path).select(
+        F.lit("rest").alias("src"),
+        "doc_id",
+        t.alias("keep_quality"),
+        t.alias("keep_exact"),
+        t.alias("keep_neardup"),
+        t.alias("keep_decon"),
+        t.alias("kept"),
+        F.col("pack_shard").cast("bigint").alias("pack_shard"),
+        F.col("pack_bin").cast("bigint").alias("pack_bin"),
+        F.col("pack_offset").cast("bigint").alias("pack_offset"),
+    )
+
+    def _report(frame: DataFrame, src: str) -> DataFrame:
+        return curation_report(frame, sort=False).select(
+            F.lit(src).alias("src"),
+            "stage",
+            F.col("n_entered").cast("bigint").alias("n_entered"),
+            F.col("n_kept").cast("bigint").alias("n_kept"),
+            F.col("n_dropped").cast("bigint").alias("n_dropped"),
         )
-        .withColumn("src", F.lit("rest"))
-        .withColumn("stage", ns)
-        .withColumn("n_entered", nl)
-        .withColumn("n_kept", nl)
-        .withColumn("n_dropped", nl)
-    )
-    report = curation_report(flags_frame, sort=False).select(
-        F.lit("report").alias("src"),
-        nl.alias("doc_id"),
-        nb.alias("keep_lang"),
-        nb.alias("keep_quality"),
-        nb.alias("keep_exact"),
-        nb.alias("keep_neardup"),
-        nb.alias("keep_decon"),
-        nb.alias("kept"),
-        nl.alias("pack_shard"),
-        nl.alias("pack_bin"),
-        nl.alias("pack_offset"),
-        "stage",
-        F.col("n_entered").cast("bigint").alias("n_entered"),
-        F.col("n_kept").cast("bigint").alias("n_kept"),
-        F.col("n_dropped").cast("bigint").alias("n_dropped"),
-    )
+
     cols = (
         "src", "doc_id", "keep_lang", "keep_quality", "keep_exact",
         "keep_neardup", "keep_decon", "kept", "pack_shard", "pack_bin",
         "pack_offset", "stage", "n_entered", "n_kept", "n_dropped",
     )
-    return (
-        flags.unionByName(rest)
-        .unionByName(pflags)
-        .select(*cols)
-        .unionByName(report)
-        .unionByName(preport)
-    )
+    parts = [
+        flags_frame.withColumn("src", F.lit("flags")),
+        rest,
+        prelude_frame.withColumn("src", F.lit("pflags")),
+        _report(flags_frame, "report"),
+        _report(prelude_frame, "preport"),
+    ]
+    return _union_padded(parts, cols)
 
 
 _CURATE_ORACLE = f"""
@@ -3993,7 +3923,6 @@ def run_warc_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("urls").alias("op"),
         messy.alias("url"),
         F.length(canon).alias("n_chars"),
-        F.lit(None).cast("int").alias("n_tokens"),
         F.md5(canon.cast("binary")).alias("fp"),
         canon.alias("text"),
     )
@@ -4038,7 +3967,6 @@ def run_warc_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("urldedup").alias("op"),
         F.col("url"),
         F.col("doc_id").cast("int").alias("n_chars"),
-        F.lit(None).cast("int").alias("n_tokens"),
         F.md5(F.col("canonical_url").cast("binary")).alias("fp"),
         F.when(F.col("keep_url"), F.lit("keep")).otherwise(F.lit("drop"))
         .alias("text"),
@@ -4055,19 +3983,14 @@ def run_warc_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("domcap").alias("op"),
         F.col("url"),
         F.col("doc_id").cast("int").alias("n_chars"),
-        F.lit(None).cast("int").alias("n_tokens"),
         F.md5(F.col("domain").cast("binary")).alias("fp"),
         F.when(F.col("keep_domain_cap"), F.lit("keep"))
         .otherwise(F.lit("drop")).alias("text"),
     )
-    return (
-        docs_branch.unionByName(main_branch)
-        .unionByName(stream_branch)
-        .unionByName(urls_branch)
-        .unionByName(wet_branch)
-        .unionByName(jsonl_branch)
-        .unionByName(urldedup_branch)
-        .unionByName(domcap_branch)
+    return _union_padded(
+        [docs_branch, main_branch, stream_branch, urls_branch, wet_branch,
+         jsonl_branch, urldedup_branch, domcap_branch],
+        ("op", "url", "n_chars", "n_tokens", "fp", "text"),
     )
 
 
@@ -4967,11 +4890,10 @@ def run_lm_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold = mom.withColumn(
         "wr", F.when(live, wstd / F.col("sg")).otherwise(F.lit(0.0))
     )
-    fid, ntn = F.col("fid").cast("bigint"), F.lit(None).cast("bigint")
-    nkeep = F.lit(None).cast("boolean")
+    fid = F.col("fid").cast("bigint")
     src = F.lit("cfold").alias("src")
     wrows = fold.select(
-        src, fid.alias("doc_id"), ntn.alias("n_tokens"),
+        src, fid.alias("doc_id"),
         F.round("wr", 6).alias("log_ppl"),
         (F.round("wr", 6) == wraw_baked).alias("kept"),
     )
@@ -4986,21 +4908,18 @@ def run_lm_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("br")
     ).select(
         src, F.lit(5).cast("bigint").alias("doc_id"),
-        ntn.alias("n_tokens"), F.round("br", 6).alias("log_ppl"),
+        F.round("br", 6).alias("log_ppl"),
         (F.round("br", 6) == F.lit(float(_CLF_B))).alias("kept"),
     )
     mrows = fold.select(
-        src, (fid + 10).alias("doc_id"), ntn.alias("n_tokens"),
-        F.round("mu", 6).alias("log_ppl"), nkeep.alias("kept"),
+        src, (fid + 10).alias("doc_id"), F.round("mu", 6).alias("log_ppl")
     )
     srows = fold.select(
-        src, (fid + 20).alias("doc_id"), ntn.alias("n_tokens"),
-        F.round("sg", 6).alias("log_ppl"), nkeep.alias("kept"),
+        src, (fid + 20).alias("doc_id"), F.round("sg", 6).alias("log_ppl")
     )
-    return (
-        uni.unionByName(bi).unionByName(bucket).unionByName(clf)
-        .unionByName(wrows).unionByName(brow).unionByName(mrows)
-        .unionByName(srows)
+    return _union_padded(
+        [uni, bi, bucket, clf, wrows, brow, mrows, srows],
+        ("src", "doc_id", "n_tokens", "log_ppl", "kept"),
     )
 
 

@@ -373,22 +373,92 @@ def ivf_topk(
     stored partitioned by cluster). Approximate — recall governed by
     nprobe; tests bound it against exact top-k.
     """
+    probes = _nearest_clusters(centroids, query_vec, nprobe)
+    score = cosine(F.col(vec_col), literal_vector(query_vec))
+    assigned = assign_clusters(df, centroids, vec_col)
+    return _scan_top_k(assigned, probes, score, k, id_col)
+
+
+def _nearest_clusters(
+    centroids: np.ndarray, query_vec: list[float], nprobe: int
+) -> list[int]:
+    """The ``nprobe`` clusters whose centroids rank highest against the
+    L2-normalized query — the probe set of every single-query IVF and PQ
+    probe."""
     q = np.asarray(query_vec, dtype=np.float64)
     q = q / np.linalg.norm(q)
-    probes = np.argsort(-(centroids @ q))[:nprobe].tolist()
-    assigned = assign_clusters(df, centroids, vec_col)
+    return [int(p) for p in np.argsort(-(centroids @ q))[:nprobe]]
+
+
+def _scan_top_k(
+    index: DataFrame, probes: list[int], score, k: int, id_col: str
+) -> DataFrame:
+    """Score the rows of the probed clusters only (a plan-literal IN on
+    ``_cluster``, partition-prunable at rest) and take the k best by
+    (cos_sim desc, id)."""
     return (
-        assigned.filter(F.col("_cluster").isin([int(p) for p in probes]))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), literal_vector(query_vec)), 4).alias(
-                "cos_sim"
-            ),
-        )
+        index.filter(F.col("_cluster").isin(probes))
+        .select(F.col(id_col), F.round(score, 4).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col(id_col))
         .limit(k)
     )
 
+
+def _scan_top_k_many(
+    spark, tagged_indexes, probes: list[int], score, k: int, id_col: str,
+    tag_col: str,
+) -> DataFrame:
+    """``_scan_top_k`` over SEVERAL indexes in one plan: the pruned scans
+    union under a tag and one window takes per-tag top-k."""
+    cos_sim = F.round(score, 4).alias("cos_sim")
+    both = None
+    for tag, idx in tagged_indexes:
+        part = _open_index(spark, idx).filter(
+            F.col("_cluster").isin(probes)
+        ).select(F.lit(tag).alias(tag_col), F.col(id_col), cos_sim)
+        both = part if both is None else both.unionByName(part)
+    return _top_k_per(both, tag_col, id_col, k, "_rk").drop("_rk")
+
+
+def _top_k_per(
+    scored: DataFrame, part_col: str, id_col: str, k: int, rank_col: str
+) -> DataFrame:
+    """Per-``part_col`` top-k: ``rank_col`` = row_number under (cos_sim
+    desc, id), the order ``_scan_top_k`` takes its k under, so both give
+    identical rows."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(part_col).orderBy(
+        F.col("cos_sim").desc(), F.col(id_col)
+    )
+    ranked = scored.withColumn(rank_col, F.row_number().over(w))
+    return ranked.filter(F.col(rank_col) <= k)
+
+
+def _explode_probes(
+    queries: DataFrame, centroids: np.ndarray, nprobe: int, q_id_col: str,
+    q_vec_col: str, broadcast_probe: bool,
+) -> DataFrame:
+    """(q_id_col, _qv, _cluster): each query ranks the literal centroids
+    (a pure projection; the struct sort (−dot, cluster) keeps the
+    single-query tie-break) and explodes into its ``nprobe`` probe
+    clusters — broadcast unless ``broadcast_probe=False``."""
+    qv = F.col("_qv")
+    entries = [
+        F.struct(
+            (-dot(qv, literal_vector([float(x) for x in c]))).alias("nd"),
+            F.lit(i).alias("cl"),
+        )
+        for i, c in enumerate(centroids)
+    ]
+    probe_arr = F.transform(
+        F.slice(F.array_sort(F.array(*entries)), 1, nprobe),
+        lambda s: s["cl"].cast("int"),
+    )
+    probed = queries.select(
+        F.col(q_id_col), F.col(q_vec_col).alias("_qv")
+    ).select(q_id_col, "_qv", F.explode(probe_arr).alias("_cluster"))
+    return F.broadcast(probed) if broadcast_probe else probed
 
 
 def _raise_if_append_raced(spark, path: str, written_root: str) -> None:
@@ -524,8 +594,9 @@ def ivf_write(
         order="hash" if eff_id else "id",
     )
     if len(sample):
-        _write_ann_stats(
-            df.sparkSession, out, centroid_fit_stats(sample, centroids)
+        _write_ann_json(
+            df.sparkSession, out, ANN_STATS_FILE,
+            centroid_fit_stats(sample, centroids),
         )
 
 
@@ -617,20 +688,9 @@ def ivf_topk_at_rest(
     ``_centroids`` sidecar (r14) — a new session, a crash, or a
     different team probes the index with nothing but its path."""
     index, centroids = _open_with_geometry(spark, index_path, centroids)
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / np.linalg.norm(q)
-    probes = [int(p) for p in np.argsort(-(centroids @ q))[:nprobe]]
-    return (
-        index.filter(F.col("_cluster").isin(probes))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), literal_vector(query_vec)), 4).alias(
-                "cos_sim"
-            ),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    probes = _nearest_clusters(centroids, query_vec, nprobe)
+    score = cosine(F.col(vec_col), literal_vector(query_vec))
+    return _scan_top_k(index, probes, score, k, id_col)
 
 
 def ivf_topk_at_rest_many(
@@ -652,32 +712,10 @@ def ivf_topk_at_rest_many(
     id) order equals orderBy().limit(k)). The scoring expression is also
     built once, not per index — plan-construction Py4J chatter halves.
     ``tagged_indexes``: [(tag, path-or-DataFrame), ...]."""
-    from pyspark.sql import Window
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / np.linalg.norm(q)
-    probes = [int(p) for p in np.argsort(-(centroids @ q))[:nprobe]]
-    score = F.round(cosine(F.col(vec_col), literal_vector(query_vec)), 4)
-    parts = []
-    for tag, idx in tagged_indexes:
-        index = _open_index(spark, idx)
-        parts.append(
-            index.filter(F.col("_cluster").isin(probes)).select(
-                F.lit(tag).alias(tag_col),
-                F.col(id_col),
-                score.alias("cos_sim"),
-            )
-        )
-    both = parts[0]
-    for p in parts[1:]:
-        both = both.unionByName(p)
-    w = Window.partitionBy(tag_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        both.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
+    probes = _nearest_clusters(centroids, query_vec, nprobe)
+    score = cosine(F.col(vec_col), literal_vector(query_vec))
+    return _scan_top_k_many(
+        spark, tagged_indexes, probes, score, k, id_col, tag_col
     )
 
 
@@ -716,41 +754,16 @@ def ivf_topk_batch(
     of the corpus — the output-bound stage; AQE handles query skew).
 
     Returns (q_id_col, vec_id, cos_sim, rank), rank 1..k per query."""
-    from pyspark.sql import Window
-
-    entries = []
-    qv = F.col("_qv")
-    for i, c in enumerate(centroids):
-        entries.append(
-            F.struct(
-                (-dot(qv, literal_vector([float(x) for x in c]))).alias("nd"),
-                F.lit(i).alias("cl"),
-            )
-        )
-    probe_arr = F.transform(
-        F.slice(F.array_sort(F.array(*entries)), 1, nprobe),
-        lambda s: s["cl"].cast("int"),
+    probed = _explode_probes(
+        queries, centroids, nprobe, q_id_col, q_vec_col, broadcast_probe
     )
-    probed = queries.select(
-        F.col(q_id_col), F.col(q_vec_col).alias("_qv")
-    ).select(
-        q_id_col, "_qv", F.explode(probe_arr).alias("_cluster")
-    )
-    if broadcast_probe:
-        probed = F.broadcast(probed)
     side = assign_clusters(corpus, centroids, vec_col) if assign_corpus else corpus
     scored = side.join(probed, "_cluster").select(
         F.col(q_id_col),
         F.col(id_col),
         F.round(cosine(F.col(vec_col), F.col("_qv")), 4).alias("cos_sim"),
     )
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k_per(scored, q_id_col, id_col, k, "rank")
 
 
 def pq_topk_batch(
@@ -775,25 +788,11 @@ def pq_topk_batch(
     row_number window. ``broadcast_probe=False`` degrades to a shuffle
     join for oversized query batches (see ``ivf_topk_batch``). Returns
     (q_id_col, vec_id, cos_sim, rank)."""
-    from pyspark.sql import Window
-
     m, ks, dsub = codebooks.shape
     qv = F.col("_qv")
-    entries = []
-    for i, c in enumerate(centroids):
-        entries.append(
-            F.struct(
-                (-dot(qv, literal_vector([float(x) for x in c]))).alias("nd"),
-                F.lit(i).alias("cl"),
-            )
-        )
-    probe_arr = F.transform(
-        F.slice(F.array_sort(F.array(*entries)), 1, nprobe),
-        lambda s: s["cl"].cast("int"),
+    probed = _explode_probes(
+        queries, centroids, nprobe, q_id_col, q_vec_col, broadcast_probe
     )
-    probed = queries.select(
-        F.col(q_id_col), F.col(q_vec_col).alias("_qv")
-    ).select(q_id_col, "_qv", F.explode(probe_arr).alias("_cluster"))
     terms = []
     for j in range(m):
         # one parsed array-of-arrays literal per codebook (m Py4J round
@@ -808,20 +807,12 @@ def pq_topk_batch(
     score = F.when(
         F.col("vnorm") > 0, adc / (F.col("vnorm") * norm(qv))
     )
-    if broadcast_probe:
-        probed = F.broadcast(probed)
     scored = index.join(probed, "_cluster").select(
         F.col(q_id_col),
         F.col(id_col),
         F.round(score, 4).alias("cos_sim"),
     )
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k_per(scored, q_id_col, id_col, k, "rank")
 
 
 def fixed_codebooks(
@@ -857,8 +848,7 @@ def pq_train(
     to the driver, NumPy Lloyd per subvector (argmin tie-break = lowest
     index, the same rule the encode expression uses). Returns
     (m, ks, dim/m) codebooks."""
-    rows = df.orderBy(id_col).limit(sample_size).select(vec_col).collect()
-    X = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
+    X = _sample_vectors(df, vec_col, sample_size, id_col=id_col, order="id")
     return _pq_kmeans(X, m, ks, n_iters, seed)
 
 
@@ -988,15 +978,16 @@ def pq_write(
     _write_ann_centroids(df.sparkSession, out, centroids)
     _write_ann_codebooks(df.sparkSession, out, codebooks)
     if source is not None:
-        _write_ann_source(
-            df.sparkSession, out,
+        _write_ann_json(
+            df.sparkSession, out, ANN_SOURCE_FILE,
             {"path": source, "format": "parquet", "id_col": id_col,
              "vec_col": vec_col, "prep": source_prep},
         )
     sample = _sample_vectors(df, vec_col, 4096, id_col=id_col, order="hash")
     if len(sample):
-        _write_ann_stats(
-            df.sparkSession, out, centroid_fit_stats(sample, centroids)
+        _write_ann_json(
+            df.sparkSession, out, ANN_STATS_FILE,
+            centroid_fit_stats(sample, centroids),
         )
 
 
@@ -1029,12 +1020,7 @@ def pq_topk_at_rest(
         spark, index_path, centroids, codebooks
     )
     probes, score = _pq_probe_score(centroids, codebooks, query_vec, nprobe)
-    return (
-        index.filter(F.col("_cluster").isin(probes))
-        .select(F.col(id_col), F.round(score, 4).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _scan_top_k(index, probes, score, k, id_col)
 
 
 def _pq_probe_score(
@@ -1045,9 +1031,7 @@ def _pq_probe_score(
 ):
     """The (probed clusters, ADC score column) pair shared by the single-
     and many-index PQ probes."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = q / np.linalg.norm(q)
-    probes = [int(p) for p in np.argsort(-(centroids @ qn))[:nprobe]]
+    probes = _nearest_clusters(centroids, query_vec, nprobe)
     m, ks, dsub = codebooks.shape
     terms = []
     for j in range(m):
@@ -1081,29 +1065,9 @@ def pq_topk_at_rest_many(
     tag, one window takes per-tag top-k — identical rows to per-index
     ``pq_topk_at_rest`` — and the expensive literal-codebook scoring
     expression is constructed once instead of per index."""
-    from pyspark.sql import Window
-
     probes, score = _pq_probe_score(centroids, codebooks, query_vec, nprobe)
-    parts = []
-    for tag, idx in tagged_indexes:
-        index = _open_index(spark, idx)
-        parts.append(
-            index.filter(F.col("_cluster").isin(probes)).select(
-                F.lit(tag).alias(tag_col),
-                F.col(id_col),
-                F.round(score, 4).alias("cos_sim"),
-            )
-        )
-    both = parts[0]
-    for p in parts[1:]:
-        both = both.unionByName(p)
-    w = Window.partitionBy(tag_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        both.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
+    return _scan_top_k_many(
+        spark, tagged_indexes, probes, score, k, id_col, tag_col
     )
 
 
@@ -1287,10 +1251,10 @@ def compact_ann_index_safe(
         _write_ann_codebooks(spark, f"{stage_root}/data", cbs)
     stats = read_ann_stats(spark, path)
     if stats is not None:
-        _write_ann_stats(spark, f"{stage_root}/data", stats)
-    src = _read_source_at(spark, root)
+        _write_ann_json(spark, f"{stage_root}/data", ANN_STATS_FILE, stats)
+    src = _read_ann_json(spark, root, ANN_SOURCE_FILE)
     if src is not None:
-        _write_ann_source(spark, f"{stage_root}/data", src)
+        _write_ann_json(spark, f"{stage_root}/data", ANN_SOURCE_FILE, src)
     epoch = _claim_generation_slot(
         spark, path, stage_root, live, gen_prefix=_ANN_GEN
     )
@@ -1412,84 +1376,45 @@ def _sample_vectors(
     return np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
 
 
-def _write_ann_stats(spark, root: str, stats: dict) -> None:
-    """One small JSON object inside the data root. Written create+close
-    (no rename dance — the sidecar is diagnostics, not a commit point),
-    hidden from Spark's file listing by the underscore name."""
-    import json as _json
+def _write_ann_json(spark, root: str, name: str, obj: dict) -> None:
+    """One small JSON sidecar inside the data root: the fit stats
+    (``ANN_STATS_FILE``) or the source-corpus provenance
+    (``ANN_SOURCE_FILE``, VERDICT r14 #3: ``{path, format, id_col,
+    vec_col, prep}`` — what a codes-at-rest layout needs to rebuild
+    itself). Written create+close (no rename dance — a sidecar is not a
+    commit point), hidden from Spark's file listing by the underscore
+    name."""
+    from pcap_converter_spark.operators.incremental import _write_json
 
-    from pcap_converter_spark.operators.incremental import _hadoop_fs
+    _write_json(spark, f"{root}/{name}", obj)
+
+
+def _read_ann_json(spark, root: str, name: str) -> dict | None:
+    """The JSON sidecar ``name`` inside the data root ``root``, or None
+    when it was never written."""
+    from pcap_converter_spark.operators.incremental import (
+        _hadoop_fs,
+        _read_json,
+    )
 
     fs, jvm = _hadoop_fs(spark, root)
-    out = fs.create(
-        jvm.org.apache.hadoop.fs.Path(f"{root}/{ANN_STATS_FILE}"), True
-    )
-    try:
-        out.write(_json.dumps(stats).encode())
-    finally:
-        out.close()
+    if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{root}/{name}")):
+        return None
+    return _read_json(spark, f"{root}/{name}")
 
 
 def read_ann_stats(spark, path: str) -> dict | None:
     """The training-time fit stats recorded with the LIVE generation, or
     None for an index written before stats existed."""
-    import json as _json
-
-    from pcap_converter_spark.operators.incremental import _hadoop_fs
-
-    root = resolve_ann_root(spark, path)
-    fs, jvm = _hadoop_fs(spark, root)
-    p = jvm.org.apache.hadoop.fs.Path(f"{root}/{ANN_STATS_FILE}")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        body = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return _json.loads(body)
-
-
-def _write_ann_source(spark, root: str, info: dict) -> None:
-    """Source-corpus provenance sidecar (VERDICT r14 #3): ``{path,
-    format, id_col, vec_col, prep}`` — what a codes-at-rest layout needs
-    to rebuild itself. Same create+close JSON shape as the stats
-    sidecar."""
-    import json as _json
-
-    from pcap_converter_spark.operators.incremental import _hadoop_fs
-
-    fs, jvm = _hadoop_fs(spark, root)
-    out = fs.create(
-        jvm.org.apache.hadoop.fs.Path(f"{root}/{ANN_SOURCE_FILE}"), True
-    )
-    try:
-        out.write(_json.dumps(info).encode())
-    finally:
-        out.close()
-
-
-def _read_source_at(spark, root: str) -> dict | None:
-    import json as _json
-
-    from pcap_converter_spark.operators.incremental import _hadoop_fs
-
-    fs, jvm = _hadoop_fs(spark, root)
-    p = jvm.org.apache.hadoop.fs.Path(f"{root}/{ANN_SOURCE_FILE}")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        body = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return _json.loads(body)
+    return _read_ann_json(spark, resolve_ann_root(spark, path), ANN_STATS_FILE)
 
 
 def read_ann_source(spark, path: str) -> dict | None:
     """The source-corpus provenance recorded with the LIVE generation
     (``pq_write(source=...)``), or None when never recorded."""
-    return _read_source_at(spark, resolve_ann_root(spark, path))
+    return _read_ann_json(
+        spark, resolve_ann_root(spark, path), ANN_SOURCE_FILE
+    )
 
 
 def _write_ann_centroids(spark, root: str, centroids: np.ndarray) -> None:
@@ -1663,7 +1588,7 @@ def ann_drift_report(
         # provenance and its train-time stats baseline). The contract is
         # that the source points at the live corpus location, so the
         # sample sees today's distribution like the IVF path does.
-        src = _read_source_at(spark, root)
+        src = _read_ann_json(spark, root, ANN_SOURCE_FILE)
         if src is None:
             raise ValueError(
                 f"PQ layout at {path} stores codes, not vectors, and "
@@ -1826,8 +1751,9 @@ def retrain_ann_index(
     stage_root = f"{path}/.genstage.{_uuid.uuid4().hex}.tmp"
     write_partitioned(assigned, f"{stage_root}/data", ["_cluster"])
     _write_ann_centroids(spark, f"{stage_root}/data", centroids)
-    _write_ann_stats(
-        spark, f"{stage_root}/data", centroid_fit_stats(sample, centroids)
+    _write_ann_json(
+        spark, f"{stage_root}/data", ANN_STATS_FILE,
+        centroid_fit_stats(sample, centroids),
     )
     epoch = _claim_generation_slot(
         spark, path, stage_root, live_epoch, gen_prefix=_ANN_GEN
@@ -1883,7 +1809,7 @@ def _retrain_pq_from_source(
         _commit_manifest,
     )
 
-    src = _read_source_at(spark, root)
+    src = _read_ann_json(spark, root, ANN_SOURCE_FILE)
     if src is None:
         raise ValueError(
             f"PQ layout at {path} has codes at rest, not vectors, and "
@@ -1958,9 +1884,10 @@ def _retrain_pq_from_source(
     write_partitioned(slim, f"{stage_root}/data", ["_cluster"])
     _write_ann_centroids(spark, f"{stage_root}/data", centroids)
     _write_ann_codebooks(spark, f"{stage_root}/data", codebooks)
-    _write_ann_source(spark, f"{stage_root}/data", src)
-    _write_ann_stats(
-        spark, f"{stage_root}/data", centroid_fit_stats(sample, centroids)
+    _write_ann_json(spark, f"{stage_root}/data", ANN_SOURCE_FILE, src)
+    _write_ann_json(
+        spark, f"{stage_root}/data", ANN_STATS_FILE,
+        centroid_fit_stats(sample, centroids),
     )
     epoch = _claim_generation_slot(
         spark, path, stage_root, live_epoch, gen_prefix=_ANN_GEN

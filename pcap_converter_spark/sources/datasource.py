@@ -281,6 +281,22 @@ class ChunkedFileReader(DataSourceReader):
             yield from _arrow_batches(self._fmt.decode(c), self._schema)
 
 
+def quarantine_file(path: str, qdir: str) -> str:
+    """Move ``path`` into ``qdir`` (created on demand) and return where
+    it landed. The destination is unique — ``name``, ``name.1``,
+    ``name.2``, ... — so a same-named file quarantined by an earlier run
+    keeps its bytes (ADVICE r15)."""
+    os.makedirs(qdir, exist_ok=True)
+    base = os.path.basename(path)
+    dest = os.path.join(qdir, base)
+    n = 0
+    while os.path.exists(dest):
+        n += 1
+        dest = os.path.join(qdir, f"{base}.{n}")
+    os.replace(path, dest)
+    return dest
+
+
 class FileChunkStreamReader(DataSourceStreamReader):
     """Shared Structured-Streaming machinery for chunk-indexed file
     formats (pcap, WARC): a landing directory micro-batched by file
@@ -500,9 +516,8 @@ class FileChunkStreamReader(DataSourceStreamReader):
     def _try_quarantine(self, p: str, exc: Exception) -> bool:
         """Move a quiescent-but-unindexable file into ``quarantine_dir``
         (option-gated; False = option unset or the move itself failed,
-        caller re-raises). Unique destination — a same-named file
-        quarantined by an earlier run must not be overwritten (the CLI
-        pre-flight learned the same lesson, ADVICE r15) — and the event
+        caller re-raises). Unique destination (``quarantine_file``,
+        shared with the CLI pre-flight) — and the event
         is logged as a WARNING (Python's last-resort handler writes it
         to stderr when no logging is configured) so an unattended cron's
         log says WHICH file was set aside and why."""
@@ -511,14 +526,7 @@ class FileChunkStreamReader(DataSourceStreamReader):
         if not self._qdir:
             return False
         try:
-            os.makedirs(self._qdir, exist_ok=True)
-            base = os.path.basename(p)
-            dest = os.path.join(self._qdir, base)
-            n = 0
-            while os.path.exists(dest):
-                n += 1
-                dest = os.path.join(self._qdir, f"{base}.{n}")
-            os.replace(p, dest)
+            dest = quarantine_file(p, self._qdir)
         except OSError:
             return False  # cross-device / permissions: fail loudly instead
         self._n_quarantined += 1

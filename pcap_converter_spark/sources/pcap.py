@@ -348,10 +348,7 @@ def read_pcap_chunk(chunk: dict | Chunk) -> pd.DataFrame:
     c = chunk if isinstance(chunk, Chunk) else Chunk(**chunk)
     basename = os.path.basename(c.path)
     # vectorized decoder: bulk NumPy header slicing, scalar-parity tested
-    from pcap_converter_spark.decode.vectorized import (
-        decode_packets_packed,
-        decode_packets_vectorized,
-    )
+    from pcap_converter_spark.decode.vectorized import decode_packets_packed
 
     with open(c.path, "rb") as f:
         f.seek(c.offset)
@@ -361,8 +358,6 @@ def read_pcap_chunk(chunk: dict | Chunk) -> pd.DataFrame:
         return decode_packets_packed(raw, doff, dlen, ts, fl, c.linktype, basename)
     interfaces = [tuple(x) for x in json.loads(c.interfaces)]
     ts, fl, doff, dlen, lts = _walk_ng_packed(raw, c.endian, interfaces)
-    if len(doff) == 0:
-        return decode_packets_vectorized([], 1, basename)
     return decode_packets_packed(
         raw, doff, dlen, ts, fl, 1, basename, per_record_linktype=lts
     )

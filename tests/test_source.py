@@ -106,6 +106,22 @@ def test_pcapng_simple_packet_blocks(tmp_path):
     assert (pdf["frame_time"] == pd.Timestamp(0, unit="us")).all()
 
 
+def test_pcapng_without_packet_blocks_reads_zero_rows(spark, tmp_path):
+    """A pcapng holding only its section and interface blocks decodes to
+    zero rows under the usual schema, and the observation counts 0
+    packets and 0 errors."""
+    from pcap_converter_spark.sources.pcap import read_pcap
+
+    empty = str(tmp_path / "empty.pcapng")
+    g.write_pcapng(empty, [(1, 6)], [])
+    full = str(tmp_path / "full.pcapng")
+    g.write_pcapng(full, [(1, 6)], [(0, 2_000_000_000, _udp_pkt())])
+    df, obs = read_pcap(spark, empty)
+    assert df.collect() == []
+    assert df.schema == read_pcap(spark, full)[0].schema
+    assert obs.get == {"packets": 0, "errors": 0}
+
+
 def test_epb_time_us_pow10_and_pow2():
     # tsresol 6 (µs): identity
     assert _epb_time_us(0, 1_000_000, 6) == 1_000_000

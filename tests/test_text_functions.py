@@ -108,6 +108,22 @@ def py_word_hash32(w: str) -> int:
     return int.from_bytes(hashlib.md5(w.encode()).digest()[8:12], "little")
 
 
+@pytest.mark.parametrize(
+    "s", ["", "the quick fox", "naïve café", "日本語のテキスト", "emoji 🙂 ok"]
+)
+def test_md5_low_hashes_match_duckdb_md5_number_lower(s):
+    """The Python md5-low hashes equal DuckDB's ``md5_number_lower`` (and
+    its low 32 bits): the contract the dedup and index oracles replay."""
+    import duckdb
+
+    lo64, lo32 = duckdb.execute(
+        "SELECT md5_number_lower($1), md5_number_lower($1) & 4294967295",
+        [s],
+    ).fetchone()
+    assert TX.md5_low64(s) == lo64
+    assert TX.md5_low32(s) == lo32
+
+
 def py_rolling_fp(t: str, window: int = 8) -> list[int]:
     """Winnowing reference: sorted distinct minima of the sliding window,
     window clamped to the document length, empty doc → empty set."""
