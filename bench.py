@@ -244,52 +244,6 @@ def default_cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
-def build_session(app_name: str, cpus: str, codegen_cache_entries: str | None = None):
-    """The harness session bench.py and the tools under ``tools/`` share:
-    ``local[cpus]``, Arrow on, no UI or console progress bars, and the
-    driver JVM's capacity settings from ``session.py`` (generated-class
-    cache, code cache), so every recorded plan, JIT or timing number
-    comes from the same JVM as production's. ``codegen_cache_entries``
-    overrides the class-cache size for experiments only."""
-    from pyspark.sql import SparkSession
-
-    from pcap_converter_spark.session import (
-        CODEGEN_CACHE_MAX_ENTRIES,
-        apply_runtime_confs,
-        driver_java_opts,
-    )
-
-    spark = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("PCS_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        # static conf, builder-time only: the default 100-entry generated-
-        # class cache is smaller than one wide plan, so each timed run of
-        # a warmed-up entry re-Janinos + re-JITs ~1400 identical methods;
-        # 16384 holds the whole suite's classes (tools/jit_probe.py)
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            codegen_cache_entries or CODEGEN_CACHE_MAX_ENTRIES,
-        )
-        # no console progress bars: their \r-rewritten stage lines emit
-        # tens of KB per query, and the driver's output capture is
-        # size-capped — BENCH_r09.json lost the summary JSON line and 30
-        # of 54 per-entry timings to exactly this spam (VERDICT r9 #2).
-        .config("spark.ui.showConsoleProgress", "false")
-        # JVM code cache sized for a 53-query engine: at the default
-        # 240 MB the sweeper flushes hot methods mid-suite, which then
-        # recompile forever
-        .config("spark.driver.extraJavaOptions", driver_java_opts())
-        .getOrCreate()
-    )
-    apply_runtime_confs(spark)
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
-
-
 def _tree_cpu_by_process() -> dict[tuple[int, int], float]:
     """CPU seconds (user + system, own + reaped children) of each process
     in this process tree, keyed by (pid, start time) so a reused pid is a
@@ -343,10 +297,12 @@ def main() -> int:
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
 
     import __spark_entry__ as entrymod
-    from pcap_converter_spark.session import phase_times
+    from pcap_converter_spark.session import get_spark, phase_times
     from perfbench.trace import Tracer, jvm_counters
 
-    spark = build_session("bench", cpus)
+    spark = get_spark("bench", master=f"local[{cpus}]",
+                      shuffle_partitions=int(cpus))
+    spark.sparkContext.setLogLevel("ERROR")
     runners = entrymod.queries()
     run_warmup(spark, sf_dir, cpus, runners)
 

@@ -44,6 +44,7 @@ Tier semantics:
 from __future__ import annotations
 
 import json
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -358,6 +359,47 @@ def _commit_manifest(
         )
 
 
+def _commit_generation(
+    spark: SparkSession, path: str, fill, version: int, tables: list[str],
+    gen_prefix: str = "gen-", manifest_prefix: str = "manifest-",
+    root_table: str | None = None,
+) -> None:
+    """Stage → claim → commit a new generation of the index at ``path``:
+    the one sequence behind ``compact_corpus_index_safe`` and the ANN
+    layouts' compaction and retrains (similarity.py, hidden prefixes).
+    ``fill(root)`` writes the generation's tables under the root the
+    manifest names: the generation dir, or ``{gen}/{root_table}`` when
+    readers open that one table as the root."""
+    live = _live_epoch(spark, path, manifest_prefix=manifest_prefix)
+    # Stage into a UNIQUE tmp dir, then rename it to an unclaimed gen-N
+    # before the manifest commit (ADVICE r6): staging straight into
+    # gen-(live+1) would let a concurrent compaction's mode('overwrite')
+    # writes partially clobber tables this writer's manifest ends up
+    # pointing at. With a per-writer tmp dir each writer only ever
+    # touches its own staging area until the all-or-nothing dir rename.
+    # The dot-prefix keeps readers' gen-*/manifest-* globs blind to
+    # in-flight staging.
+    stage_root = f"{path}/.genstage.{uuid.uuid4().hex}.tmp"
+    fill(f"{stage_root}/{root_table}" if root_table else stage_root)
+    # claim a slot (orphans skipped — _claim_generation_slot), then the
+    # single-object manifest commit (_commit_manifest); the crash-safety
+    # rationale lives on those helpers
+    epoch = _claim_generation_slot(
+        spark, path, stage_root, live, gen_prefix=gen_prefix
+    )
+    root = f"{gen_prefix}{epoch:06d}"
+    _commit_manifest(
+        spark, path, epoch,
+        {
+            "version": version,
+            "epoch": epoch,
+            "root": f"{root}/{root_table}" if root_table else root,
+            "tables": tables,
+        },
+        manifest_prefix=manifest_prefix,
+    )
+
+
 def _vacuum_generations(
     spark: SparkSession, path: str, epoch: int,
     manifest_prefix: str = "manifest-", gen_prefix: str = "gen-",
@@ -375,6 +417,20 @@ def _vacuum_generations(
                 continue
             if e < epoch:
                 fs.delete(s.getPath(), True)
+
+
+def _drop_generations(
+    spark: SparkSession, path: str,
+    manifest_prefix: str = "manifest-", gen_prefix: str = "gen-",
+) -> None:
+    """A fresh write is an OVERWRITE of the whole index: drop every
+    manifest and generation from a previous life of ``path``, or the new
+    flat tables would be shadowed by a stale generation dir (shared with
+    the ANN layouts' writes, which pass their hidden prefixes)."""
+    fs, jvm = _hadoop_fs(spark, path)
+    for pat in (f"{path}/{manifest_prefix}*", f"{path}/{gen_prefix}*"):
+        for st in fs.globStatus(jvm.org.apache.hadoop.fs.Path(pat)) or []:
+            fs.delete(st.getPath(), True)
 
 
 def _root_epoch(path: str, root: str, gen_prefix: str = "gen-") -> int:
@@ -504,14 +560,7 @@ def write_corpus_index(
         raise ValueError("bands must divide num_hashes")
     docs = _apply_normalize(docs, text_col, normalize)
     spark = docs.sparkSession
-    # a fresh write is an OVERWRITE of the whole index: drop any manifest
-    # generations from a previous life of this path, or the new flat
-    # tables would be shadowed by a stale gen-* dir
-    fs, jvm = _hadoop_fs(spark, path)
-    for pat in (f"{path}/manifest-*", f"{path}/gen-*"):
-        statuses = fs.globStatus(jvm.org.apache.hadoop.fs.Path(pat))
-        for s in statuses or []:
-            fs.delete(s.getPath(), True)
+    _drop_generations(spark, path)
     spark.createDataFrame(
         [(INDEX_VERSION, shingle_k, num_hashes, bands, seed, shingle_hash,
           ",".join(tiers), prep)],
@@ -635,46 +684,25 @@ def compact_corpus_index_safe(
     and commits its own manifest — the higher epoch wins at read time,
     both generations are complete, and neither writer ever touches the
     other's files (ADVICE r6)."""
-    import uuid as _uuid
-
     meta = read_index_meta(spark, path)
     root = resolve_index_root(spark, path)
-    live = _live_epoch(spark, path)
     tiers = meta["tiers"].split(",")
     tables = (["exact"] if "exact" in tiers else []) + (
         ["sigs", "bands"] if "near" in tiers else []
     )
-    # Stage into a UNIQUE tmp dir, then rename it to an unclaimed gen-N
-    # before the manifest commit (ADVICE r6): staging straight into
-    # gen-(live+1) would let a concurrent compaction's mode('overwrite')
-    # writes partially clobber tables this writer's manifest ends up
-    # pointing at. With a per-writer tmp dir each writer only ever
-    # touches its own staging area until the all-or-nothing dir rename.
-    # The dot-prefix keeps readers' gen-*/manifest-* globs blind to
-    # in-flight staging.
-    stage_root = f"{path}/.genstage.{_uuid.uuid4().hex}.tmp"
-    # meta copied verbatim (parameters are immutable for the index's life)
-    spark.read.parquet(f"{root}/meta").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{stage_root}/meta")
-    for sub in tables:
-        spark.read.parquet(f"{root}/{sub}").repartition(
-            files_per_table
-        ).write.mode("overwrite").parquet(f"{stage_root}/{sub}")
-    # claim a slot (orphans skipped — _claim_generation_slot), then the
-    # single-object manifest commit (_commit_manifest); the crash-safety
-    # rationale lives on those shared helpers, which the ANN layouts
-    # (similarity.py) reuse with hidden name prefixes
-    epoch = _claim_generation_slot(spark, path, stage_root, live)
-    _commit_manifest(
-        spark, path, epoch,
-        {
-            "version": INDEX_VERSION,
-            "epoch": epoch,
-            "root": f"gen-{epoch:06d}",
-            "tables": tables + ["meta"],
-        },
-    )
+
+    def fill(stage_root: str) -> None:
+        # meta copied verbatim (parameters are immutable for the index's
+        # life)
+        spark.read.parquet(f"{root}/meta").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{stage_root}/meta")
+        for sub in tables:
+            spark.read.parquet(f"{root}/{sub}").repartition(
+                files_per_table
+            ).write.mode("overwrite").parquet(f"{stage_root}/{sub}")
+
+    _commit_generation(spark, path, fill, INDEX_VERSION, tables + ["meta"])
 
 
 def vacuum_corpus_index(spark: SparkSession, path: str) -> None:

@@ -1355,12 +1355,12 @@ def video_neardup_pairs(
     nodes = (
         vf.filter(F.col("decode_error").isNull())
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.posexplode("frame_ahash").alias("fidx", "sig"),
         )
         .select(
             F.struct(
-                F.col(id_col).alias("clip"), F.col("fidx").alias("f")
+                F.col("doc_id").alias("clip"), F.col("fidx").alias("f")
             ).alias("node"),
             "sig",
         )

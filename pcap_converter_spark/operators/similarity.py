@@ -19,6 +19,8 @@ the plan as literals — deterministic across runs and executors.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints at runtime
 from pyspark.sql import DataFrame
@@ -30,6 +32,18 @@ from pcap_converter_spark.functions.vectors import (
     literal_matrix,
     literal_vector,
     norm,
+)
+from pcap_converter_spark.io.sinks import write_partitioned
+from pcap_converter_spark.operators.incremental import (
+    _commit_generation,
+    _drop_generations,
+    _hadoop_fs,
+    _live_epoch,
+    _read_json,
+    _read_manifest,
+    _root_epoch,
+    _vacuum_generations,
+    _write_json,
 )
 
 
@@ -273,6 +287,8 @@ def _kmeans(
     (r14 review) so retrain_ann_index can sample ONCE and feed both the
     training and the recorded fit stats, instead of running two identical
     TakeOrdered scans of the index."""
+    if not len(m):
+        raise ValueError("no vectors to train on: the sample is empty")
     m = np.array(m, dtype=np.float64)
     m /= np.linalg.norm(m, axis=1, keepdims=True)
     rng = np.random.default_rng(seed)
@@ -461,11 +477,15 @@ def _explode_probes(
     return F.broadcast(probed) if broadcast_probe else probed
 
 
-def _raise_if_append_raced(spark, path: str, written_root: str) -> None:
-    """Detect the append-vs-compaction race the layout's docstrings
-    forbid (ADVICE r13): if the generation we actually WROTE INTO is no
-    longer the live one, the rows landed in a superseded layout — vacuum
-    would drop them SILENTLY. Raising turns that into a visible,
+def _append_clusters(
+    spark, path: str, rows: DataFrame, salt_cols: list[str],
+    files_per_cluster: int = 1,
+) -> None:
+    """Append ``rows`` into the LIVE generation of the layout at
+    ``path``, then detect the append-vs-compaction race the layout's
+    docstrings forbid (ADVICE r13): if the generation we actually WROTE
+    INTO is no longer the live one, the rows landed in a superseded
+    layout — vacuum would drop them SILENTLY. Raising turns that into a visible,
     retryable failure — but the remedy needs a check first (ADVICE r14):
     if the concurrent commit listed the old generation's files AFTER
     this append's part-files landed, the new generation already carries
@@ -476,12 +496,9 @@ def _raise_if_append_raced(spark, path: str, written_root: str) -> None:
     between an epoch sample and the root resolution makes the append
     land correctly in the NEW generation, and a before/after check would
     falsely raise and its re-run remedy would then DUPLICATE the rows)."""
-    from pcap_converter_spark.operators.incremental import (
-        _live_epoch,
-        _root_epoch,
-    )
-
-    wrote = _root_epoch(path, written_root, _ANN_GEN)
+    root = resolve_ann_root(spark, path)
+    _write_clusters(rows, root, salt_cols, files_per_cluster, mode="append")
+    wrote = _root_epoch(path, root, _ANN_GEN)
     live = _live_epoch(spark, path, manifest_prefix=_ANN_MANIFEST)
     if wrote != live:
         raise RuntimeError(
@@ -498,18 +515,41 @@ def _raise_if_append_raced(spark, path: str, written_root: str) -> None:
         )
 
 
-def _drop_stale_generations(spark, path: str) -> None:
-    """A fresh write is an OVERWRITE of the whole index: drop any
-    manifest/generation from a previous life of this path, or the new
-    flat partitions would be shadowed by a stale _gen-* dir (the
-    write_corpus_index rule applied to the ANN layouts; hidden names —
-    see the module's at-rest-generations banner)."""
-    from pcap_converter_spark.operators.incremental import _hadoop_fs
+def _write_clusters(
+    df: DataFrame, root: str, salt_cols: list[str],
+    files_per_cluster: int = 1, mode: str = "overwrite",
+) -> None:
+    """The one partitioned write of every ANN layout. Co-locating each
+    cluster before the partitioned write stops every upstream task
+    opening a writer per cluster it touches (m tasks × C clusters small
+    files). The default hashes on ``_cluster`` alone — one task and one
+    file per cluster, the layout a pruned probe wants — which caps write
+    parallelism at C and makes a hot cluster a straggler. At corpus
+    scale set ``files_per_cluster`` > 1: rows are additionally salted on
+    ``xxhash64(salt_cols)`` (deterministic, no extra column), spreading
+    each cluster over that many tasks/files while the probe's directory
+    pruning is untouched (VERDICT r4 #7). Each layout salts on what
+    identifies a row: the vector (IVF), the code (PQ), every data column
+    (compaction)."""
+    if files_per_cluster <= 1:
+        df = df.repartition(F.col("_cluster"))
+    else:
+        salt = F.pmod(F.xxhash64(*salt_cols), F.lit(int(files_per_cluster)))
+        df = df.repartition(F.col("_cluster"), salt)
+    write_partitioned(df, root, ["_cluster"], mode=mode)
 
-    fs, jvm = _hadoop_fs(spark, path)
-    for pat in (f"{path}/{_ANN_MANIFEST}*", f"{path}/{_ANN_GEN}*"):
-        for st in fs.globStatus(jvm.org.apache.hadoop.fs.Path(pat)) or []:
-            fs.delete(st.getPath(), True)
+
+def _pq_rows(
+    df: DataFrame, centroids: np.ndarray, codebooks: np.ndarray,
+    id_col: str, vec_col: str,
+) -> DataFrame:
+    """The IVF-PQ layout's rows: ``(id, vnorm, pq_code, _cluster)`` —
+    the coarse cluster, the product code, and the vector norm the ADC
+    score normalizes by; the vector itself does not ride along."""
+    coded = pq_assign(assign_clusters(df, centroids, vec_col), codebooks, vec_col)
+    return coded.select(
+        id_col, norm(F.col(vec_col)).alias("vnorm"), "pq_code", "_cluster"
+    )
 
 
 def ivf_write(
@@ -526,15 +566,8 @@ def ivf_write(
     a partition-PRUNED scan (nprobe directories opened, the rest never
     read; tests/test_plan_audit.py asserts PartitionFilters on the scan).
 
-    Co-locating each cluster before the partitioned write stops every
-    upstream task opening a writer per cluster it touches (m tasks × C
-    clusters small files). The default hashes on ``_cluster`` alone —
-    one task and one file per cluster, the layout a pruned probe wants —
-    which caps write parallelism at C and makes a hot cluster a straggler.
-    At corpus scale set ``files_per_cluster`` > 1: rows are additionally
-    salted on a hash of the vector itself (deterministic, no extra
-    column), spreading each cluster over that many tasks/files while the
-    probe's directory pruning is untouched (VERDICT r4 #7).
+    The rows are co-located per cluster before the write
+    (``_write_clusters``); ``files_per_cluster`` > 1 salts on the vector.
 
     The write also records two underscore-hidden sidecars inside the
     data root (invisible to Spark's file listing, so probes are
@@ -543,10 +576,6 @@ def ivf_write(
     geometry without the driver-held array) and the training-sample fit
     stats (``_ann_stats.json`` — the baseline ``ann_drift_report``
     compares against to say when to ``retrain_ann_index``)."""
-    from pyspark.sql import functions as _F
-
-    from pcap_converter_spark.io.sinks import write_partitioned
-
     # id_col contract (r14 review): an EXPLICIT id_col that is absent is
     # a caller error, not a silent fallback to the one-data-mode
     # unordered sample that round fixed; the default (None) auto-uses
@@ -571,17 +600,11 @@ def ivf_write(
             "drift report compares against",
             stacklevel=2,
         )
-    _drop_stale_generations(df.sparkSession, out)
-    assigned = assign_clusters(df, centroids, vec_col)
-    if files_per_cluster <= 1:
-        assigned = assigned.repartition(_F.col("_cluster"))
-    else:
-        salt = _F.pmod(
-            _F.xxhash64(_F.col(vec_col)), _F.lit(int(files_per_cluster))
-        )
-        assigned = assigned.repartition(_F.col("_cluster"), salt)
-    write_partitioned(assigned, out, ["_cluster"])
-    _write_ann_centroids(df.sparkSession, out, centroids)
+    _drop_generations(df.sparkSession, out, _ANN_MANIFEST, _ANN_GEN)
+    _write_clusters(
+        assign_clusters(df, centroids, vec_col), out, [vec_col],
+        files_per_cluster,
+    )
     # baseline stats from the SAME hash-ordered sampling the drift
     # report uses (r14 review: an unordered limit() collects whatever
     # partitions answer first — typically ONE data mode — and comparing
@@ -593,11 +616,10 @@ def ivf_write(
         df, vec_col, 4096, id_col=eff_id,
         order="hash" if eff_id else "id",
     )
-    if len(sample):
-        _write_ann_json(
-            df.sparkSession, out, ANN_STATS_FILE,
-            centroid_fit_stats(sample, centroids),
-        )
+    _write_sidecars(
+        df.sparkSession, out, centroids=centroids,
+        stats=centroid_fit_stats(sample, centroids) if len(sample) else None,
+    )
 
 
 def ivf_append(
@@ -623,23 +645,10 @@ def ivf_append(
     writes into the superseded generation and would be silently dropped
     at the next vacuum — now it raises, and the remedy is simply to
     re-run the append (the new live generation never saw these rows)."""
-    from pyspark.sql import functions as _F
-
-    from pcap_converter_spark.io.sinks import write_partitioned
-
-    path = out
-    spark = df.sparkSession
-    out = resolve_ann_root(spark, out)  # append into the LIVE generation
-    assigned = assign_clusters(df, centroids, vec_col)
-    if files_per_cluster <= 1:
-        assigned = assigned.repartition(_F.col("_cluster"))
-    else:
-        salt = _F.pmod(
-            _F.xxhash64(_F.col(vec_col)), _F.lit(int(files_per_cluster))
-        )
-        assigned = assigned.repartition(_F.col("_cluster"), salt)
-    write_partitioned(assigned, out, ["_cluster"], mode="append")
-    _raise_if_append_raced(spark, path, out)
+    _append_clusters(
+        df.sparkSession, out, assign_clusters(df, centroids, vec_col),
+        [vec_col], files_per_cluster,
+    )
 
 
 def pq_append(
@@ -654,19 +663,11 @@ def pq_append(
     the EXISTING codebooks and append their (id, vnorm, code) rows —
     byte-compatible with every earlier row, so the ADC probe needs no
     version logic. Post-write epoch re-check as in ``ivf_append``."""
-    path = out
-    spark = df.sparkSession
-    out = resolve_ann_root(spark, out)  # append into the LIVE generation
-    assigned = assign_clusters(df, centroids, vec_col)
-    coded = pq_assign(assigned, codebooks, vec_col)
-    slim = coded.select(
-        id_col,
-        norm(F.col(vec_col)).alias("vnorm"),
-        "pq_code",
-        "_cluster",
-    ).repartition(F.col("_cluster"))
-    slim.write.mode("append").partitionBy("_cluster").parquet(out)
-    _raise_if_append_raced(spark, path, out)
+    # one file per cluster: pq_append takes no files_per_cluster
+    _append_clusters(
+        df.sparkSession, out,
+        _pq_rows(df, centroids, codebooks, id_col, vec_col), ["pq_code"],
+    )
 
 
 def ivf_topk_at_rest(
@@ -858,6 +859,8 @@ def _pq_kmeans(
     """The per-subvector L2 Lloyd core of ``pq_train``, factored out so
     ``retrain_ann_index`` can retrain codebooks from a sample it already
     holds (r15) instead of re-collecting through a DataFrame."""
+    if not len(X):
+        raise ValueError("no vectors to train on: the sample is empty")
     dim = X.shape[1]
     if dim % m:
         raise ValueError("m must divide dim")
@@ -951,44 +954,27 @@ def pq_write(
     the vectors are IN HAND here even though they are not stored, so the
     drift report keeps working for PQ layouts by sampling the recorded
     source instead of the (vector-less) index."""
-    from pcap_converter_spark.io.sinks import write_partitioned
-
     if id_col not in df.columns:
         raise ValueError(
             f"pq_write: id_col={id_col!r} not in {df.columns}"
         )
-    _drop_stale_generations(df.sparkSession, out)
-    assigned = assign_clusters(df, centroids, vec_col)
-    coded = pq_assign(assigned, codebooks, vec_col)
-    slim = coded.select(
-        id_col,
-        norm(F.col(vec_col)).alias("vnorm"),
-        "pq_code",
-        "_cluster",
+    _drop_generations(df.sparkSession, out, _ANN_MANIFEST, _ANN_GEN)
+    _write_clusters(
+        _pq_rows(df, centroids, codebooks, id_col, vec_col), out,
+        ["pq_code"], files_per_cluster,
     )
-    if files_per_cluster <= 1:
-        slim = slim.repartition(F.col("_cluster"))
-    else:
-        salt = F.pmod(F.xxhash64(F.col("pq_code")), F.lit(int(files_per_cluster)))
-        slim = slim.repartition(F.col("_cluster"), salt)
-    write_partitioned(slim, out, ["_cluster"])
+    sample = _sample_vectors(df, vec_col, 4096, id_col=id_col, order="hash")
     # self-description (r14): the PQ layout is DOUBLY dependent on
     # driver-held geometry (coarse centroids AND codebooks — codes are
     # meaningless without them), so both ride as hidden sidecars
-    _write_ann_centroids(df.sparkSession, out, centroids)
-    _write_ann_codebooks(df.sparkSession, out, codebooks)
-    if source is not None:
-        _write_ann_json(
-            df.sparkSession, out, ANN_SOURCE_FILE,
-            {"path": source, "format": "parquet", "id_col": id_col,
-             "vec_col": vec_col, "prep": source_prep},
-        )
-    sample = _sample_vectors(df, vec_col, 4096, id_col=id_col, order="hash")
-    if len(sample):
-        _write_ann_json(
-            df.sparkSession, out, ANN_STATS_FILE,
-            centroid_fit_stats(sample, centroids),
-        )
+    _write_sidecars(
+        df.sparkSession, out, centroids=centroids, codebooks=codebooks,
+        stats=centroid_fit_stats(sample, centroids) if len(sample) else None,
+        source=None if source is None else {
+            "path": source, "format": "parquet", "id_col": id_col,
+            "vec_col": vec_col, "prep": source_prep,
+        },
+    )
 
 
 def pq_topk_at_rest(
@@ -1148,8 +1134,10 @@ def lsh_bucket_topk(
 # append — a year of daily appends leaves every cluster directory a pile
 # of tiny files, while the probes' partition pruning still has to open
 # all of them. The fix is incremental.py's object-store-safe manifest
-# protocol (shared helpers: _claim_generation_slot/_commit_manifest/
-# _vacuum_generations — ONE copy of the crash-safety logic), with one
+# protocol: every compaction and retrain, of the corpus index and of the
+# ANN layouts, commits through ONE function, _commit_generation (stage →
+# _claim_generation_slot → _commit_manifest), and vacuums through
+# _vacuum_generations — ONE copy of the crash-safety logic — with one
 # ANN-specific twist: generation dirs and manifests use HIDDEN names
 # (``_gen-<epoch>``/``_manifest-<epoch>``). The corpus index's readers
 # only ever open NAMED subdirectories ({root}/exact), so a crashed
@@ -1166,6 +1154,13 @@ def lsh_bucket_topk(
 ANN_MANIFEST_VERSION = 1
 _ANN_GEN = "_gen-"
 _ANN_MANIFEST = "_manifest-"
+# a new ANN layout generation under the hidden names: ``fill(data_root)``
+# writes the layout and its sidecars into the staged generation's
+# ``data`` dir, which the manifest names as the root
+_commit_ann_generation = functools.partial(
+    _commit_generation, version=ANN_MANIFEST_VERSION, tables=["data"],
+    gen_prefix=_ANN_GEN, manifest_prefix=_ANN_MANIFEST, root_table="data",
+)
 
 
 def resolve_ann_root(spark, path: str) -> str:
@@ -1174,11 +1169,6 @@ def resolve_ann_root(spark, path: str) -> str:
     after a ``compact_ann_index_safe`` — the corpus index's manifest
     protocol (same epoch-max rule, same single-object commit) under the
     hidden names the module banner explains."""
-    from pcap_converter_spark.operators.incremental import (
-        _live_epoch,
-        _read_manifest,
-    )
-
     epoch = _live_epoch(spark, path, manifest_prefix=_ANN_MANIFEST)
     if epoch == 0:
         return path
@@ -1219,55 +1209,38 @@ def compact_ann_index_safe(
     ``_gen-*`` orphan: flat readers never list it (pytest-pinned with a
     POPULATED orphan), later compactions skip its slot, and vacuum after
     the next successful commit reclaims it."""
-    import uuid as _uuid
-
-    from pcap_converter_spark.io.sinks import write_partitioned
-    from pcap_converter_spark.operators.incremental import (
-        _claim_generation_slot,
-        _commit_manifest,
-        _live_epoch,
-    )
-
     root = resolve_ann_root(spark, path)
-    live = _live_epoch(spark, path, manifest_prefix=_ANN_MANIFEST)
-    stage_root = f"{path}/.genstage.{_uuid.uuid4().hex}.tmp"
-    df = spark.read.parquet(root)
-    if files_per_cluster <= 1:
-        df = df.repartition(F.col("_cluster"))
-    else:
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns if c != "_cluster"]),
-            F.lit(int(files_per_cluster)),
+
+    def fill(data: str) -> None:
+        df = spark.read.parquet(root)
+        _write_clusters(
+            df, data, [c for c in df.columns if c != "_cluster"],
+            files_per_cluster,
         )
-        df = df.repartition(F.col("_cluster"), salt)
-    write_partitioned(df, f"{stage_root}/data", ["_cluster"])
-    # carry the self-description sidecars (centroids + fit stats) into
-    # the new generation — compaction changes file layout, not geometry
-    cents = read_ann_centroids(spark, path)
-    if cents is not None:
-        _write_ann_centroids(spark, f"{stage_root}/data", cents)
-    cbs = read_ann_codebooks(spark, path)
-    if cbs is not None:
-        _write_ann_codebooks(spark, f"{stage_root}/data", cbs)
-    stats = read_ann_stats(spark, path)
-    if stats is not None:
-        _write_ann_json(spark, f"{stage_root}/data", ANN_STATS_FILE, stats)
-    src = _read_ann_json(spark, root, ANN_SOURCE_FILE)
-    if src is not None:
-        _write_ann_json(spark, f"{stage_root}/data", ANN_SOURCE_FILE, src)
-    epoch = _claim_generation_slot(
-        spark, path, stage_root, live, gen_prefix=_ANN_GEN
-    )
-    _commit_manifest(
-        spark, path, epoch,
-        {
-            "version": ANN_MANIFEST_VERSION,
-            "epoch": epoch,
-            "root": f"{_ANN_GEN}{epoch:06d}/data",
-            "tables": ["data"],
-        },
-        manifest_prefix=_ANN_MANIFEST,
-    )
+        # carry the self-description sidecars (centroids, codebooks, fit
+        # stats, source) into the new generation — compaction changes
+        # file layout, not geometry
+        _write_sidecars(
+            spark, data,
+            centroids=_read_centroids_at(spark, root),
+            codebooks=_read_codebooks_at(spark, root),
+            stats=_read_ann_json(spark, root, ANN_STATS_FILE),
+            source=_read_ann_json(spark, root, ANN_SOURCE_FILE),
+        )
+
+    _commit_ann_generation(spark, path, fill)
+
+
+def _live_cluster_count(spark, root: str) -> int:
+    """A retrain's default cluster count: the live centroid sidecar's,
+    else the assignment's own ``max(_cluster) + 1``."""
+    prior = _read_centroids_at(spark, root)
+    if prior is not None:
+        return len(prior)
+    return int(
+        spark.read.parquet(root).agg(F.max("_cluster").alias("m"))
+        .collect()[0]["m"]
+    ) + 1
 
 
 def vacuum_ann_index(spark, path: str) -> None:
@@ -1276,12 +1249,6 @@ def vacuum_ann_index(spark, path: str) -> None:
     has superseded them. Generations ABOVE the live epoch are in-flight
     (or crashed) compactions and stay — the corpus index's vacuum
     contract verbatim, through the shared helper."""
-    from pcap_converter_spark.operators.incremental import (
-        _hadoop_fs,
-        _live_epoch,
-        _vacuum_generations,
-    )
-
     epoch = _live_epoch(spark, path, manifest_prefix=_ANN_MANIFEST)
     if epoch == 0:
         return
@@ -1376,27 +1343,56 @@ def _sample_vectors(
     return np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
 
 
-def _write_ann_json(spark, root: str, name: str, obj: dict) -> None:
-    """One small JSON sidecar inside the data root: the fit stats
-    (``ANN_STATS_FILE``) or the source-corpus provenance
-    (``ANN_SOURCE_FILE``, VERDICT r14 #3: ``{path, format, id_col,
-    vec_col, prep}`` — what a codes-at-rest layout needs to rebuild
-    itself). Written create+close (no rename dance — a sidecar is not a
-    commit point), hidden from Spark's file listing by the underscore
-    name."""
-    from pcap_converter_spark.operators.incremental import _write_json
+def _write_sidecars(
+    spark, root: str, centroids: np.ndarray | None = None,
+    codebooks: np.ndarray | None = None, stats: dict | None = None,
+    source: dict | None = None,
+) -> None:
+    """Write the given self-description sidecars into the data root
+    ``root``; None skips one. All are underscore-hidden from Spark's file
+    listing, so probes are unchanged.
 
-    _write_json(spark, f"{root}/{name}", obj)
+    - ``centroids``: the centroid matrix WITH the data it indexes (one
+      tiny parquet, ``ANN_CENTROIDS_DIR``, one row per centroid), so the
+      index is self-describing: a reader that lost the driver-held array
+      — a new session, a crash, a different team — recovers the exact
+      probe geometry from disk.
+    - ``codebooks``: the PQ codebooks (m × ks × dsub) with the codes they
+      decode — one row per (subspace, code) pair, ``ANN_CODEBOOKS_DIR``.
+    - ``stats``: the fit stats (``ANN_STATS_FILE``).
+    - ``source``: the source-corpus provenance (``ANN_SOURCE_FILE``,
+      VERDICT r14 #3: ``{path, format, id_col, vec_col, prep}`` — what a
+      codes-at-rest layout needs to rebuild itself).
+
+    The JSON sidecars are written create+close (no rename dance — a
+    sidecar is not a commit point)."""
+    if centroids is not None:
+        rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
+        spark.createDataFrame(
+            rows, "cluster int, centroid array<double>"
+        ).coalesce(1).write.mode("overwrite").parquet(
+            f"{root}/{ANN_CENTROIDS_DIR}"
+        )
+    if codebooks is not None:
+        m, ks, _ = codebooks.shape
+        rows = [
+            (j, k, [float(x) for x in codebooks[j][k]])
+            for j in range(m)
+            for k in range(ks)
+        ]
+        spark.createDataFrame(
+            rows, "sub int, code int, centroid array<double>"
+        ).coalesce(1).write.mode("overwrite").parquet(
+            f"{root}/{ANN_CODEBOOKS_DIR}"
+        )
+    for name, obj in ((ANN_STATS_FILE, stats), (ANN_SOURCE_FILE, source)):
+        if obj is not None:
+            _write_json(spark, f"{root}/{name}", obj)
 
 
 def _read_ann_json(spark, root: str, name: str) -> dict | None:
     """The JSON sidecar ``name`` inside the data root ``root``, or None
     when it was never written."""
-    from pcap_converter_spark.operators.incremental import (
-        _hadoop_fs,
-        _read_json,
-    )
-
     fs, jvm = _hadoop_fs(spark, root)
     if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{root}/{name}")):
         return None
@@ -1414,19 +1410,6 @@ def read_ann_source(spark, path: str) -> dict | None:
     (``pq_write(source=...)``), or None when never recorded."""
     return _read_ann_json(
         spark, resolve_ann_root(spark, path), ANN_SOURCE_FILE
-    )
-
-
-def _write_ann_centroids(spark, root: str, centroids: np.ndarray) -> None:
-    """Persist the centroid matrix WITH the data it indexes (one tiny
-    parquet, one row per centroid) so the index is self-describing:
-    a reader that lost the driver-held array — a new session, a crash,
-    a different team — recovers the exact probe geometry from disk."""
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    spark.createDataFrame(
-        rows, "cluster int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{root}/{ANN_CENTROIDS_DIR}"
     )
 
 
@@ -1473,31 +1456,12 @@ def _open_with_geometry(spark, index_path, centroids, codebooks=...):
     return (df, centroids, codebooks) if want_cb else (df, centroids)
 
 
-def _write_ann_codebooks(spark, root: str, codebooks: np.ndarray) -> None:
-    """Persist the PQ codebooks (m × ks × dsub) with the codes they
-    decode — one row per (subspace, code) pair, underscore-hidden like
-    the centroid sidecar."""
-    m, ks, _ = codebooks.shape
-    rows = [
-        (j, k, [float(x) for x in codebooks[j][k]])
-        for j in range(m)
-        for k in range(ks)
-    ]
-    spark.createDataFrame(
-        rows, "sub int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{root}/{ANN_CODEBOOKS_DIR}"
-    )
-
-
 def _read_codebooks_at(spark, root: str) -> np.ndarray | None:
     """Codebook sidecar read from an ALREADY-RESOLVED root (probes that
     recover their geometry resolve the live generation once and read the
     sidecars AND the data from that same root — resolving per artifact
     could mix generations across a concurrent retrain commit, r14
     review)."""
-    from pcap_converter_spark.operators.incremental import _hadoop_fs
-
     fs, jvm = _hadoop_fs(spark, root)
     if not fs.exists(
         jvm.org.apache.hadoop.fs.Path(f"{root}/{ANN_CODEBOOKS_DIR}")
@@ -1533,8 +1497,6 @@ def read_ann_centroids(spark, path: str) -> np.ndarray | None:
 def _read_centroids_at(spark, root: str) -> np.ndarray | None:
     """Centroid sidecar read from an ALREADY-RESOLVED root (see
     _read_codebooks_at for why probes resolve once)."""
-    from pcap_converter_spark.operators.incremental import _hadoop_fs
-
     fs, jvm = _hadoop_fs(spark, root)
     if not fs.exists(
         jvm.org.apache.hadoop.fs.Path(f"{root}/{ANN_CENTROIDS_DIR}")
@@ -1695,17 +1657,7 @@ def retrain_ann_index(
     ``n_clusters`` defaults to the live centroid count (sidecar or the
     assignment's own distinct ``_cluster`` span when no sidecar exists).
     """
-    import uuid as _uuid
-
-    from pcap_converter_spark.io.sinks import write_partitioned
-    from pcap_converter_spark.operators.incremental import (
-        _claim_generation_slot,
-        _commit_manifest,
-        _live_epoch,
-    )
-
     root = resolve_ann_root(spark, path)
-    live_epoch = _live_epoch(spark, path, manifest_prefix=_ANN_MANIFEST)
     live = spark.read.parquet(root)
     if vec_col not in live.columns:
         if "pq_code" in live.columns:
@@ -1713,7 +1665,7 @@ def retrain_ann_index(
             # with recorded source provenance (pq_write(source=...)) the
             # rebuild is driveable end-to-end (VERDICT r14 #3)
             return _retrain_pq_from_source(
-                spark, path, root, live_epoch,
+                spark, path, root,
                 n_clusters=n_clusters, sample_size=sample_size,
                 n_iters=n_iters, files_per_cluster=files_per_cluster,
                 seed=seed, sample_order=sample_order,
@@ -1724,13 +1676,7 @@ def retrain_ann_index(
             "pq_write stores pq_code rows)"
         )
     if n_clusters is None:
-        prior = read_ann_centroids(spark, path)
-        if prior is not None:
-            n_clusters = len(prior)
-        else:
-            n_clusters = int(
-                live.agg(F.max("_cluster").alias("m")).collect()[0]["m"]
-            ) + 1
+        n_clusters = _live_cluster_count(spark, root)
     data_cols = [c for c in live.columns if c != "_cluster"]
     body = live.select(*data_cols)
     # ONE bounded sample feeds both the training and the recorded fit
@@ -1740,34 +1686,18 @@ def retrain_ann_index(
         body, vec_col, sample_size, id_col=id_col, order=sample_order
     )
     centroids = _kmeans(sample, n_clusters, n_iters, seed)
-    assigned = assign_clusters(body, centroids, vec_col)
-    if files_per_cluster <= 1:
-        assigned = assigned.repartition(F.col("_cluster"))
-    else:
-        salt = F.pmod(
-            F.xxhash64(F.col(vec_col)), F.lit(int(files_per_cluster))
+
+    def fill(data: str) -> None:
+        _write_clusters(
+            assign_clusters(body, centroids, vec_col), data, [vec_col],
+            files_per_cluster,
         )
-        assigned = assigned.repartition(F.col("_cluster"), salt)
-    stage_root = f"{path}/.genstage.{_uuid.uuid4().hex}.tmp"
-    write_partitioned(assigned, f"{stage_root}/data", ["_cluster"])
-    _write_ann_centroids(spark, f"{stage_root}/data", centroids)
-    _write_ann_json(
-        spark, f"{stage_root}/data", ANN_STATS_FILE,
-        centroid_fit_stats(sample, centroids),
-    )
-    epoch = _claim_generation_slot(
-        spark, path, stage_root, live_epoch, gen_prefix=_ANN_GEN
-    )
-    _commit_manifest(
-        spark, path, epoch,
-        {
-            "version": ANN_MANIFEST_VERSION,
-            "epoch": epoch,
-            "root": f"{_ANN_GEN}{epoch:06d}/data",
-            "tables": ["data"],
-        },
-        manifest_prefix=_ANN_MANIFEST,
-    )
+        _write_sidecars(
+            spark, data, centroids=centroids,
+            stats=centroid_fit_stats(sample, centroids),
+        )
+
+    _commit_ann_generation(spark, path, fill)
     return centroids
 
 
@@ -1775,7 +1705,6 @@ def _retrain_pq_from_source(
     spark,
     path: str,
     root: str,
-    live_epoch: int,
     n_clusters: int | None,
     sample_size: int,
     n_iters: int,
@@ -1801,14 +1730,6 @@ def _retrain_pq_from_source(
     the centroid count, (m, ks) always from the recorded codebooks (a
     PQ rebuild keeps its compression geometry unless the caller rebuilds
     manually with new (m, ks) via pq_train + pq_write)."""
-    import uuid as _uuid
-
-    from pcap_converter_spark.io.sinks import write_partitioned
-    from pcap_converter_spark.operators.incremental import (
-        _claim_generation_slot,
-        _commit_manifest,
-    )
-
     src = _read_ann_json(spark, root, ANN_SOURCE_FILE)
     if src is None:
         raise ValueError(
@@ -1844,15 +1765,7 @@ def _retrain_pq_from_source(
         )
     m, ks, _ = cbs_old.shape
     if n_clusters is None:
-        prior = _read_centroids_at(spark, root)
-        n_clusters = (
-            len(prior)
-            if prior is not None
-            else int(
-                spark.read.parquet(root)
-                .agg(F.max("_cluster").alias("m")).collect()[0]["m"]
-            ) + 1
-        )
+        n_clusters = _live_cluster_count(spark, root)
     # ONE bounded sample feeds the coarse retrain, the codebook retrain,
     # and the recorded fit stats (the IVF retrain's r14 single-sample rule)
     sample = _sample_vectors(
@@ -1865,41 +1778,16 @@ def _retrain_pq_from_source(
         )
     centroids = _kmeans(sample, n_clusters, n_iters, seed)
     codebooks = _pq_kmeans(sample, m, ks, n_iters, seed)
-    assigned = assign_clusters(source_df, centroids, s_vec)
-    coded = pq_assign(assigned, codebooks, s_vec)
-    slim = coded.select(
-        s_id,
-        norm(F.col(s_vec)).alias("vnorm"),
-        "pq_code",
-        "_cluster",
-    )
-    if files_per_cluster <= 1:
-        slim = slim.repartition(F.col("_cluster"))
-    else:
-        salt = F.pmod(
-            F.xxhash64(F.col("pq_code")), F.lit(int(files_per_cluster))
+
+    def fill(data: str) -> None:
+        _write_clusters(
+            _pq_rows(source_df, centroids, codebooks, s_id, s_vec), data,
+            ["pq_code"], files_per_cluster,
         )
-        slim = slim.repartition(F.col("_cluster"), salt)
-    stage_root = f"{path}/.genstage.{_uuid.uuid4().hex}.tmp"
-    write_partitioned(slim, f"{stage_root}/data", ["_cluster"])
-    _write_ann_centroids(spark, f"{stage_root}/data", centroids)
-    _write_ann_codebooks(spark, f"{stage_root}/data", codebooks)
-    _write_ann_json(spark, f"{stage_root}/data", ANN_SOURCE_FILE, src)
-    _write_ann_json(
-        spark, f"{stage_root}/data", ANN_STATS_FILE,
-        centroid_fit_stats(sample, centroids),
-    )
-    epoch = _claim_generation_slot(
-        spark, path, stage_root, live_epoch, gen_prefix=_ANN_GEN
-    )
-    _commit_manifest(
-        spark, path, epoch,
-        {
-            "version": ANN_MANIFEST_VERSION,
-            "epoch": epoch,
-            "root": f"{_ANN_GEN}{epoch:06d}/data",
-            "tables": ["data"],
-        },
-        manifest_prefix=_ANN_MANIFEST,
-    )
+        _write_sidecars(
+            spark, data, centroids=centroids, codebooks=codebooks,
+            stats=centroid_fit_stats(sample, centroids), source=src,
+        )
+
+    _commit_ann_generation(spark, path, fill)
     return centroids

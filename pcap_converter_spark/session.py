@@ -456,6 +456,11 @@ def get_spark(
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         "spark.ui.enabled": "false",
+        # no console progress bars: their \r-rewritten stage lines emit
+        # tens of KB per query, and a caller's output capture may be
+        # size-capped (a bench.py record once lost its summary JSON line
+        # and 30 of 54 per-entry timings to this spam, VERDICT r9 #2)
+        "spark.ui.showConsoleProgress": "false",
         "spark.sql.parquet.compression.codec": "snappy",
         # Generated-class cache (STATIC conf — builder-time only; the
         # default 100 entries is smaller than ONE wide plan here, so

@@ -394,12 +394,13 @@ def test_image_neardup_pairs_pixel_level(spark):
     assert all(2 not in p and 3 not in p for p in got)
 
 
-def test_video_neardup_pairs_frame_level(spark):
+@pytest.mark.parametrize("id_col", ["doc_id", "clip_id"])
+def test_video_neardup_pairs_frame_level(spark, id_col):
     """video_neardup_pairs: a C420 re-encode matches its original on
     EVERY sampled frame; a clip sharing only the first frames matches on
     few (below the threshold with min_matching_frames=3); unrelated
     footage never pairs; within-clip frame similarity (a static clip)
-    produces no self-pair."""
+    produces no self-pair. Any id column name works."""
     rng = np.random.default_rng(23)
     base = rng.integers(0, 256, (24, 32), dtype=np.uint8)
     moving = [np.roll(base, 5 * i, axis=1) for i in range(12)]
@@ -415,11 +416,11 @@ def test_video_neardup_pairs_frame_level(spark):
          (2, bytearray(multimodal.encode_y4m(partial, fps=6))),
          (3, bytearray(multimodal.encode_y4m(other, fps=6))),
          (4, bytearray(multimodal.encode_y4m(static, fps=6)))],
-        "doc_id long, payload binary",
+        f"{id_col} long, payload binary",
     )
     rows = {(r["id_a"], r["id_b"]): r
             for r in multimodal.video_neardup_pairs(
-                df, max_frames=4, min_matching_frames=3
+                df, id_col=id_col, max_frames=4, min_matching_frames=3
             ).collect()}
     assert (0, 1) in rows
     assert rows[(0, 1)]["n_frame_matches"] == 4  # frame-for-frame

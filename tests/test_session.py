@@ -89,8 +89,8 @@ def test_default_session_sizes_codegen_cache_and_code_cache():
     ReservedCodeCacheSize on the driver JVM (the 240 MB default is
     smaller than a many-plan session's compiled-method volume, so the
     sweeper flushes hot methods mid-session and they recompile forever).
-    Both constants live in session.py; bench.py imports them rather than
-    redefining (pinned below)."""
+    Both constants live in session.py, and bench.py and the tools build
+    their sessions here (pinned below). Console progress bars are off."""
     probe = """
 import json, sys
 sys.path.insert(0, %r)
@@ -99,6 +99,7 @@ spark = get_spark("cgcache-probe")
 print("PROBE " + json.dumps({
     "cgcache": spark.conf.get("spark.sql.codegen.cache.maxEntries"),
     "javaopts": spark.conf.get("spark.driver.extraJavaOptions", ""),
+    "progress": spark.conf.get("spark.ui.showConsoleProgress"),
 }))
 spark.stop()
 """ % _REPO
@@ -111,32 +112,17 @@ spark.stop()
     got = json.loads(line[len("PROBE "):])
     assert got["cgcache"] == "16384"
     assert "-XX:ReservedCodeCacheSize=640m" in got["javaopts"]
+    assert got["progress"] == "false"
 
 
-def test_bench_inherits_session_jvm_capacity_constants():
-    """bench.py must not redefine the JVM capacity values: it imports
-    CODEGEN_CACHE_MAX_ENTRIES / driver_java_opts() from session.py, so
-    the benchmark JVM and production sessions stay in lockstep (VERDICT
-    r16 #2 'bench.py inherits rather than redefines'). The harness tools
-    build their sessions through bench.build_session, never their own
-    builder chain, so their plans and JIT numbers come from that JVM too."""
-    from pcap_converter_spark import session as S
-
-    assert S.CODEGEN_CACHE_MAX_ENTRIES == "16384"
-    assert S.driver_java_opts() == "-XX:ReservedCodeCacheSize=640m"
-    src = open(os.path.join(_REPO, "bench.py")).read()
-    assert "CODEGEN_CACHE_MAX_ENTRIES" in src
-    assert "driver_java_opts()" in src
-    # the literals must not be re-declared in bench.py's builder chain
-    assert '"16384"' not in src
-    assert "ReservedCodeCacheSize=640m" not in src
-    for tool in ("bench_one.py", "capture_plans.py", "jit_probe.py"):
-        tsrc = open(os.path.join(_REPO, "tools", tool)).read()
-        assert "bench.build_session(" in tsrc, tool
-        assert "SparkSession.builder" not in tsrc, tool
-        assert "spark.sql.codegen.cache.maxEntries" not in tsrc, tool
-        for literal in ('"16384"', '"4096"', "ReservedCodeCacheSize"):
-            assert literal not in tsrc, (tool, literal)
+def test_bench_and_tools_build_no_session_of_their_own():
+    """bench.py and the tools start their sessions through get_spark, so
+    they time and probe the same JVM as production and perfbench."""
+    srcs = [os.path.join(_REPO, "bench.py")] + [
+        os.path.join(_REPO, "tools", f)
+        for f in os.listdir(os.path.join(_REPO, "tools")) if f.endswith(".py")
+    ]
+    assert not [p for p in srcs if "SparkSession.builder" in open(p).read()]
 
 
 def test_driver_java_opts_env_override(monkeypatch):
@@ -407,10 +393,10 @@ def test_cds_publish_promotes_only_a_clean_exit(launch, monkeypatch):
 
 
 def test_driver_java_opts_never_carry_an_archive_flag(launch, monkeypatch):
-    """bench.build_session, which bench.py, tools/bench_one.py,
-    tools/jit_probe.py and tools/capture_plans.py start from, passes
-    driver_java_opts() to its builder without the empty conf dir; an
-    archive flag there would stop their JVMs at start."""
+    """driver_java_opts() itself never carries an archive flag: get_spark
+    appends the flag only for the launch it decides on, with the empty
+    conf dir, and an archive flag in the shared opts would stop every
+    JVM that got them without that dir."""
     S = launch.S
     assert not any(f in S.driver_java_opts() for f in _ARCHIVE_FLAGS)
     launch.mark()

@@ -176,6 +176,12 @@ def test_pq_train_deterministic_and_shaped(spark, emb_df):
     assert np.array_equal(a, b)
 
 
+@pytest.mark.parametrize("train", [similarity.ivf_train, similarity.pq_train])
+def test_train_on_empty_sample_names_the_cause(spark, emb_df, train):
+    with pytest.raises(ValueError, match="no vectors to train on"):
+        train(emb_df.limit(0))
+
+
 def test_pq_at_rest_layout_and_recall(spark, emb_df, tmp_path):
     """The IVF-PQ index stores codes + norm only (no raw vectors); a
     full-probe ADC top-k with TRAINED codebooks recovers the planted

@@ -20,6 +20,7 @@ def main():
 
     import bench
     import __spark_entry__ as entrymod
+    from pcap_converter_spark.session import get_spark
 
     runners = entrymod.queries()
     unknown = [n for n in names if n not in runners]
@@ -28,7 +29,9 @@ def main():
         return 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = bench.default_cpus()
-    spark = bench.build_session("bench_one", cpus)
+    spark = get_spark("bench_one", master=f"local[{cpus}]",
+                      shuffle_partitions=int(cpus))
+    spark.sparkContext.setLogLevel("ERROR")
     bench.run_warmup(spark, sf_dir, cpus, runners)
     import gc
     for name in names:

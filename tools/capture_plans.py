@@ -32,9 +32,12 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
     import bench
+    from pcap_converter_spark.session import get_spark
 
     cpus = bench.default_cpus()
-    spark = bench.build_session("capture_plans", cpus)
+    spark = get_spark("capture_plans", master=f"local[{cpus}]",
+                      shuffle_partitions=int(cpus))
+    spark.sparkContext.setLogLevel("ERROR")
     runners = entrymod.queries()
     bench.run_warmup(spark, sf_dir, cpus, runners)
     from pcap_converter_spark.operators import registry

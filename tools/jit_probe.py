@@ -25,12 +25,12 @@ import sys, time, os
 sys.path.insert(0, os.getcwd())
 import __spark_entry__ as entrymod
 import bench
-from pcap_converter_spark.session import CODEGEN_CACHE_MAX_ENTRIES, phase_times
+from pcap_converter_spark.session import get_spark, phase_times
 
-spark = bench.build_session(
-    "jitprobe", bench.default_cpus(),
-    os.environ.get("JITPROBE_CGCACHE", CODEGEN_CACHE_MAX_ENTRIES),
-)
+cpus = bench.default_cpus()
+spark = get_spark("jitprobe", master=f"local[{cpus}]",
+                  shuffle_partitions=int(cpus))
+spark.sparkContext.setLogLevel("ERROR")
 # r17: arbitrary experiment confs, e.g.
 # JITPROBE_CONFS='spark.sql.codegen.methodSplitThreshold=4000;spark.sql.codegen.wholeStage=false'
 for kv in os.environ.get("JITPROBE_CONFS", "").split(";"):
