@@ -35,7 +35,7 @@ from pyspark.util import _parse_memory, inheritable_thread_target
 log = logging.getLogger(__name__)
 
 # JVM capacity sizing for a driver hosting many distinct plans (r17,
-# VERDICT r16 #2 — parity with what bench.py shipped in r16). Both are
+# VERDICT r16 #2 — parity with what bench.py shipped in r16). All are
 # STATIC (builder/launch-time) settings:
 #
 # - Generated-class cache: the 53-entry suite's distinct generated
@@ -50,13 +50,23 @@ log = logging.getLogger(__name__)
 #   mid-session and they recompile forever (observed as per-run JIT
 #   accrual that never converges + uniform late-session slowdown).
 #   640 MB holds the whole suite (peak observed occupancy 166 MB).
+# - CICompilerCount=2 (one C1 and one C2 compiler thread; the JDK 17
+#   default on 4 vCPUs is three, 1 C1 + 2 C2): the JIT threads compete with
+#   the task threads for the same cores, and a cold one-shot operation
+#   spent about two thirds of its CPU in them. With one C2 thread the C2
+#   queue per thread is past Tier3DelayOn more often, so C1 compiles at
+#   tier 2 (no full profile) instead of tier 3 and C2 compiles about a
+#   third fewer methods: cold-operation CPU fell 10-22 % (C2 compiler CPU
+#   was the layer that moved) and warm operations stayed within noise,
+#   measured on 4 vCPUs (DEPLOY.md, "Driver JVM start-up"). A larger local
+#   host may want more; PCS_DRIVER_JAVA_OPTS replaces the whole default.
 #
 # Any long-lived production driver/executor JVM hosting many distinct
 # plans needs the same capacity sizing. A user
 # ``spark.sql.codegen.cache.maxEntries`` conf wins over the constant
 # (``get_spark``); the java opts are env-overridable.
 CODEGEN_CACHE_MAX_ENTRIES = "16384"
-DEFAULT_DRIVER_JAVA_OPTS = "-XX:ReservedCodeCacheSize=640m"
+DEFAULT_DRIVER_JAVA_OPTS = "-XX:ReservedCodeCacheSize=640m -XX:CICompilerCount=2"
 
 
 def driver_java_opts() -> str:

@@ -37,6 +37,12 @@ Reference behavior mirrored (and two documented fixes):
 - pcapng SPB: frame_time epoch 0, linktype = first interface (main.rs:201-213).
 - Truncated tails tolerated: the reader stops at the last complete record
   (main.rs:222-230) and counts nothing fatal.
+
+A file that is not a capture (no pcap or pcapng magic at offset 0, or a
+header shorter than pcap's 24 bytes) fails ``index_pcap`` with a
+``ValueError`` naming the path, never an empty result. The stream face
+treats it like any other unindexable file: it is moved to
+``quarantine_dir`` when that option is set, else the stream raises.
 """
 
 from __future__ import annotations
@@ -103,16 +109,21 @@ class Chunk:
 # ------------------------------------------------------------------ indexing
 
 
-def _read_legacy_header(f) -> tuple[str, int, int, int]:
-    """Read the 24-byte global header → (endian, ts_div, linktype, snaplen)."""
-    magic_raw = f.read(4)
-    magic_le = int.from_bytes(magic_raw, "little")
-    endian = "<" if magic_le in (_MAGIC_US_BE, _MAGIC_NS_BE) else ">"
-    magic = int.from_bytes(magic_raw, "little" if endian == "<" else "big")
+def _read_legacy_header(f, path: str) -> tuple[str, int, int, int]:
+    """Read the 24-byte global header → (endian, ts_div, linktype, snaplen).
+    Raises ValueError on a shorter header or a magic that is not pcap's."""
+    hdr = f.read(24)
+    if len(hdr) < 24:
+        raise ValueError(f"{path}: {len(hdr)} bytes, shorter than a pcap global header (24)")
+    for endian, order in (("<", "little"), (">", "big")):
+        magic = int.from_bytes(hdr[:4], order)
+        if magic in (_MAGIC_US_BE, _MAGIC_NS_BE):
+            break
+    else:
+        raise ValueError(f"{path}: neither pcap magic nor pcapng magic at offset 0")
     ts_div = 1000 if magic == _MAGIC_NS_BE else 1
-    hdr = f.read(20)
-    snaplen = unpack_from(endian + "I", hdr, 12)[0]
-    linktype = unpack_from(endian + "I", hdr, 16)[0]
+    snaplen = unpack_from(endian + "I", hdr, 16)[0]
+    linktype = unpack_from(endian + "I", hdr, 20)[0]
     return endian, ts_div, linktype, snaplen
 
 
@@ -120,7 +131,7 @@ _INDEX_BLOCK = 4 << 20  # buffered header walk: sequential 4 MB reads
 
 
 def _index_legacy(f, path: str, target: int, file_size: int) -> Iterator[Chunk]:
-    endian, ts_div, linktype, _snaplen = _read_legacy_header(f)
+    endian, ts_div, linktype, _snaplen = _read_legacy_header(f, path)
     rec_hdr = Struct(endian + "IIII")
 
     pos = 24

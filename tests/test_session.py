@@ -90,7 +90,10 @@ def test_default_session_sizes_codegen_cache_and_code_cache():
     smaller than a many-plan session's compiled-method volume, so the
     sweeper flushes hot methods mid-session and they recompile forever).
     Both constants live in session.py, and bench.py and the tools build
-    their sessions here (pinned below). Console progress bars are off."""
+    their sessions here (pinned below). The launched JVM itself runs with
+    -XX:CICompilerCount=2 (one C1 and one C2 compiler thread), read back
+    from its runtime input arguments, so the flag survives the
+    class-data-archive launch path. Console progress bars are off."""
     probe = """
 import json, sys
 sys.path.insert(0, %r)
@@ -100,6 +103,8 @@ print("PROBE " + json.dumps({
     "cgcache": spark.conf.get("spark.sql.codegen.cache.maxEntries"),
     "javaopts": spark.conf.get("spark.driver.extraJavaOptions", ""),
     "progress": spark.conf.get("spark.ui.showConsoleProgress"),
+    "jvmargs": list(spark.sparkContext._jvm.java.lang.management.ManagementFactory
+                    .getRuntimeMXBean().getInputArguments()),
 }))
 spark.stop()
 """ % _REPO
@@ -112,6 +117,7 @@ spark.stop()
     got = json.loads(line[len("PROBE "):])
     assert got["cgcache"] == "16384"
     assert "-XX:ReservedCodeCacheSize=640m" in got["javaopts"]
+    assert "-XX:CICompilerCount=2" in got["jvmargs"]
     assert got["progress"] == "false"
 
 
@@ -228,13 +234,13 @@ def test_cds_key_tracks_jdk_jars_and_heap_mode(launch):
 def test_cds_first_launch_marks_and_the_next_writes_at_exit(launch):
     opts, conf_dir = launch()
     stem = launch.stem()
-    assert opts == "-XX:ReservedCodeCacheSize=640m"  # a host that may never run again
+    assert opts == launch.S.DEFAULT_DRIVER_JAVA_OPTS  # a host that may never run again
     assert conf_dir is None
     assert launch.hooks == []
     assert os.path.exists(stem + ".seen") and not os.path.exists(stem + ".lock")
 
     opts, conf_dir = launch()
-    assert opts.startswith("-XX:ReservedCodeCacheSize=640m ")
+    assert opts.startswith(launch.S.DEFAULT_DRIVER_JAVA_OPTS + " ")
     assert f"-XX:ArchiveClassesAtExit={stem}.{os.getpid()}.part" in opts
     assert conf_dir == str(launch.empty)
     assert os.listdir(launch.empty) == []
@@ -251,7 +257,7 @@ def test_cds_existing_archive_is_used(launch, monkeypatch):
     stem = launch.stem()
     open(stem + ".jsa", "wb").close()
     opts, conf_dir = launch()
-    assert opts == f"-XX:ReservedCodeCacheSize=640m -XX:SharedArchiveFile={stem}.jsa"
+    assert opts == f"{launch.S.DEFAULT_DRIVER_JAVA_OPTS} -XX:SharedArchiveFile={stem}.jsa"
     assert conf_dir == str(launch.empty)
     assert os.environ["SPARK_CONF_DIR"] == str(launch.home / "conf")  # restored
     assert launch.hooks == []
@@ -274,7 +280,7 @@ def test_cds_lock_held_by_another_writer_adds_nothing(launch):
     with open(stem + ".lock", "w") as f:
         fcntl.flock(f, fcntl.LOCK_EX)
         opts, conf_dir = launch()
-    assert opts == "-XX:ReservedCodeCacheSize=640m"
+    assert opts == launch.S.DEFAULT_DRIVER_JAVA_OPTS
     assert conf_dir is None
     assert launch.hooks == []
 
@@ -308,7 +314,7 @@ def test_cds_lock_that_cannot_be_made_adds_nothing_and_sticks_nowhere(launch, mo
 
     monkeypatch.setattr(S.os, "open", full)
     opts, conf_dir = launch()
-    assert opts == "-XX:ReservedCodeCacheSize=640m"
+    assert opts == launch.S.DEFAULT_DRIVER_JAVA_OPTS
     assert conf_dir is None
     assert launch.hooks == []
     monkeypatch.setattr(S.os, "open", real_open)
@@ -403,12 +409,12 @@ def test_driver_java_opts_never_carry_an_archive_flag(launch, monkeypatch):
     opts, _ = launch()
     assert "ArchiveClassesAtExit" in opts
     os.close(launch.hooks[0][3])
-    assert S.driver_java_opts() == "-XX:ReservedCodeCacheSize=640m"
+    assert S.driver_java_opts() == S.DEFAULT_DRIVER_JAVA_OPTS
     assert "PCS_DRIVER_JAVA_OPTS" not in os.environ
     open(launch.stem() + ".jsa", "wb").close()
     opts, _ = launch()
     assert "SharedArchiveFile" in opts
-    assert S.driver_java_opts() == "-XX:ReservedCodeCacheSize=640m"
+    assert S.driver_java_opts() == S.DEFAULT_DRIVER_JAVA_OPTS
 
 
 def test_session_module_does_not_print():

@@ -12,6 +12,8 @@ import os
 import subprocess
 import sys
 
+from pcap_converter_spark.session import DEFAULT_DRIVER_JAVA_OPTS
+
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _SESSION = """
@@ -64,7 +66,7 @@ def _cache(tmp_path) -> dict[str, list[str]]:
 def _mark(tmp_path) -> None:
     """One launch on the empty cache: it adds no flag and leaves the mark."""
     got, _ = _finish(_start(tmp_path))
-    assert got["javaopts"] == "-XX:ReservedCodeCacheSize=640m"
+    assert got["javaopts"] == DEFAULT_DRIVER_JAVA_OPTS
     files = _cache(tmp_path)
     assert len(files["seen"]) == 1 and not files["jsa"] and not files["lock"], files
 

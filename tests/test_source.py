@@ -49,6 +49,27 @@ def test_legacy_truncated_tail_tolerated(tmp_path):
     assert len(pdf) == 1  # resilient loop: truncated tail dropped, no raise
 
 
+def test_not_a_capture_raises(tmp_path):
+    """A file without pcap or pcapng magic, or shorter than pcap's 24-byte
+    global header, fails the index naming its path instead of indexing to
+    no chunks (and so converting to an empty Parquet)."""
+    cases = {
+        "text.pcap": b"GET / HTTP/1.1\r\nHost: example.org\r\n\r\n" * 50,
+        "empty.pcap": b"",
+        "short.pcap": b"\xd4\xc3\xb2\xa1\x02\x00",
+    }
+    for name, data in cases.items():
+        path = tmp_path / name
+        path.write_bytes(data)
+        with pytest.raises(ValueError, match=name):
+            index_pcap(str(path))
+    # a header-only capture of either byte order is valid and holds no chunks
+    for magic in (b"\xd4\xc3\xb2\xa1", b"\xa1\xb2\xc3\xd4"):
+        path = tmp_path / "header_only.pcap"
+        path.write_bytes(magic + bytes(20))
+        assert index_pcap(str(path)) == []
+
+
 def test_pcapng_roundtrip_and_multichunk_interfaces(tmp_path):
     """Regression for the IDB misalignment: with a tiny chunk target, chunks
     past the first must still carry the correct interface linktype/tsresol
