@@ -38,11 +38,12 @@ Reference behavior mirrored (and two documented fixes):
 - Truncated tails tolerated: the reader stops at the last complete record
   (main.rs:222-230) and counts nothing fatal.
 
-A file that is not a capture (no pcap or pcapng magic at offset 0, or a
-header shorter than pcap's 24 bytes) fails ``index_pcap`` with a
-``ValueError`` naming the path, never an empty result. The stream face
-treats it like any other unindexable file: it is moved to
-``quarantine_dir`` when that option is set, else the stream raises.
+A file that is not a capture (no pcap or pcapng magic at offset 0, a
+header shorter than pcap's 24 bytes, or pcapng's magic without a whole
+Section Header Block after it) fails ``index_pcap`` with a ``ValueError``
+naming the path, never an empty result. The stream face treats it like
+any other unindexable file: it is moved to ``quarantine_dir`` when that
+option is set, else the stream raises.
 """
 
 from __future__ import annotations
@@ -179,6 +180,18 @@ def _parse_idb(body: bytes, endian: str) -> tuple[int, int]:
     return lt, tsresol
 
 
+def _check_shb(head: bytes, path: str, file_size: int) -> None:
+    """Raise ValueError unless ``head`` (the first 12 bytes) opens a whole
+    Section Header Block: a byte-order magic in either order and a block
+    length of at least 28 bytes, 4-aligned, inside the file."""
+    for order in ("little", "big"):
+        if len(head) == 12 and int.from_bytes(head[8:12], order) == _BYTE_ORDER_MAGIC:
+            blen = int.from_bytes(head[4:8], order)
+            if 28 <= blen <= file_size and not blen & 3:
+                return
+    raise ValueError(f"{path}: pcapng magic at offset 0 but no whole Section Header Block after it")
+
+
 def _index_ng(f, path: str, target: int, file_size: int) -> Iterator[Chunk]:
     # Interface table entries: (linktype, tsresol_code). SHB resets it
     # (main.rs:177-179); IDB appends (main.rs:180-183). Each emitted chunk
@@ -226,11 +239,11 @@ def index_pcap(path: str, target_chunk_bytes: int = DEFAULT_CHUNK_BYTES) -> list
     """Exact index pass: walk headers, emit chunk descriptors."""
     size = os.path.getsize(path)
     with open(path, "rb", buffering=4 * 1024 * 1024) as f:
-        magic = f.read(4)
+        head = f.read(12)
         f.seek(0)
-        if int.from_bytes(magic, "little") == _SHB:
+        if int.from_bytes(head[:4], "little") == _SHB:
+            _check_shb(head, path, size)
             return list(_index_ng(f, path, target_chunk_bytes, size))
-        f.seek(0)
         return list(_index_legacy(f, path, target_chunk_bytes, size))
 
 

@@ -3,6 +3,8 @@ E15), and the multi-chunk pcapng interface-snapshot regression."""
 
 from __future__ import annotations
 
+import struct
+
 import pandas as pd
 import pytest
 
@@ -50,13 +52,17 @@ def test_legacy_truncated_tail_tolerated(tmp_path):
 
 
 def test_not_a_capture_raises(tmp_path):
-    """A file without pcap or pcapng magic, or shorter than pcap's 24-byte
-    global header, fails the index naming its path instead of indexing to
-    no chunks (and so converting to an empty Parquet)."""
+    """A file without pcap or pcapng magic, shorter than pcap's 24-byte
+    global header, or with pcapng's magic but no whole Section Header Block
+    after it, fails the index naming its path instead of indexing to no
+    chunks (and so converting to an empty Parquet)."""
     cases = {
         "text.pcap": b"GET / HTTP/1.1\r\nHost: example.org\r\n\r\n" * 50,
         "empty.pcap": b"",
         "short.pcap": b"\xd4\xc3\xb2\xa1\x02\x00",
+        "magic_only.pcapng": b"\n\r\r\n",
+        "magic_then_text.pcapng": b"\n\r\r\n" + b"x" * 100,
+        "cut_shb.pcapng": struct.pack("<IIIHHq", 0x0A0D0D0A, 28, 0x1A2B3C4D, 1, 0, -1),
     }
     for name, data in cases.items():
         path = tmp_path / name
@@ -67,6 +73,10 @@ def test_not_a_capture_raises(tmp_path):
     for magic in (b"\xd4\xc3\xb2\xa1", b"\xa1\xb2\xc3\xd4"):
         path = tmp_path / "header_only.pcap"
         path.write_bytes(magic + bytes(20))
+        assert index_pcap(str(path)) == []
+    for order in "<>":
+        path = tmp_path / "header_only.pcapng"
+        path.write_bytes(struct.pack(order + "IIIHHqI", 0x0A0D0D0A, 28, 0x1A2B3C4D, 1, 0, -1, 28))
         assert index_pcap(str(path)) == []
 
 
