@@ -60,9 +60,10 @@ def decode_packets_vectorized(
     pcap_file: str,
     per_record_linktype: list[int] | None = None,
 ) -> pd.DataFrame:
-    """Record-tuple entry point (tests, pcapng assembly). The hot path for
-    legacy pcap is ``decode_packets_packed``, which skips the per-record
-    bytes copies + join below by addressing the raw chunk buffer."""
+    """Record-tuple entry point for tests. Both pcap sources decode
+    through ``decode_packets_packed`` instead (pcapng after
+    ``sources/pcap._walk_ng_packed``), which skips the per-record bytes
+    copies + join below by addressing the raw chunk buffer."""
     n = len(records)
     if n == 0:
         return P.decode_packets_to_pandas(records, linktype_default, pcap_file)

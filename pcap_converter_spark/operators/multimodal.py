@@ -15,6 +15,12 @@ RIFF/WAVE PCM + IEEE-float — so ``image_features``/``image_ahash``/
 ``audio_features`` run bytes → pixels/samples → typed features with no
 codec installed. ``byte_histogram_features`` remains the codec-free
 extractor for arbitrary payloads (256-bin byte histogram + entropy).
+
+Every extractor that decodes (image, audio and both video faces) runs
+through one loop, ``_per_source``: it maps each source to its feature
+row and turns a source that fails to decode into a ``decode_error`` row,
+or drops it when the output schema has no such column, so one bad file
+never stops a corpus job.
 """
 
 from __future__ import annotations
@@ -63,6 +69,37 @@ def attach_payload(
             F.md5(payload).alias("checksum"),
         ),
     )
+
+
+def _per_source(
+    df: DataFrame, id_col: str, src_col: str, schema: T.StructType, row
+) -> DataFrame:
+    """The one decode loop of every extractor that decodes a payload (or
+    a path): ``row(src)`` gives one source's feature columns — those
+    between the leading id and a trailing ``decode_error`` — Arrow-batched
+    through ``mapInPandas``. A source that raises never stops the job
+    (the resilient-read pattern: sources/pcap.py's S3 contract applied to
+    media); the schema alone decides what it leaves: with a
+    ``decode_error`` column, the id, NULL features and ``"Type:
+    message"`` (≤ 200 chars); without one, no row."""
+    names = schema.fieldNames()
+    keep_errors = names[-1] == "decode_error"
+    ok = (None,) if keep_errors else ()
+    null = (None,) * (len(names) - 2)
+
+    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for doc_id, src in zip(pdf[id_col], pdf[src_col]):
+                try:
+                    out.append((int(doc_id), *row(src), *ok))
+                except Exception as exc:
+                    if keep_errors:
+                        err = f"{type(exc).__name__}: {exc}"[:200]
+                        out.append((int(doc_id), *null, err))
+            yield pd.DataFrame(out, columns=names)
+
+    return df.select(id_col, src_col).mapInPandas(extract, schema=schema)
 
 
 def decode_bmp(payload: bytes) -> np.ndarray:
@@ -512,7 +549,7 @@ def decode_y4m(
     records — skipped frames cost an offset addition, not a read, which
     is what makes sampling a 2-hour clip cheap. Returns
     ``{width, height, fps, n_frames, colorspace}``."""
-    if not payload.startswith(b"YUV4MPEG2"):
+    if payload[:9] != b"YUV4MPEG2":
         raise ValueError("not a y4m payload (no YUV4MPEG2 magic)")
     nl = payload.find(b"\n")
     if nl < 0:
@@ -603,64 +640,26 @@ def decode_y4m_file(
     path: str, max_frames: int | None = None
 ) -> tuple[list[np.ndarray], dict]:
     """``decode_y4m`` against a FILE, reading only what the sample
-    needs: the frame walk is seek-per-record (a 6–80 byte header read
-    plus an offset jump over the fixed-size data), and only the sampled
-    frames' luma planes are ever read — a 2-hour clip costs
-    O(n_frames) tiny reads + O(sampled) frame reads, never the clip's
+    needs: ``decode_y4m``'s frame walk runs over a read-only ``mmap`` of
+    the file, so only the pages it touches are read (each record's
+    header, then an offset jump over the fixed-size data) and only the
+    sampled frames' luma planes are copied out — a 2-hour clip costs
+    O(n_frames) header pages + O(sampled) frame reads, never the clip's
     full bytes in memory. This is the 100-TB layout: media as FILES
     referenced by a path column (``spark.read.format("binaryFile")``'s
     content column — and any binary payload column — holds whole blobs
     in rows, which stops scaling at GB-sized clips);
     ``video_features_at_paths`` is the Spark face."""
-    import io
-
-    def read_to_nl(f, pos: int, what: str, cap: int = 4096) -> bytes:
-        """Read a newline-terminated header at ``pos``, growing the read
-        until the newline appears (r15 review: a fixed 80/256-byte read
-        rejected valid clips with long parameter lists that the
-        bytes-face decoder accepts; the cap only bounds pathology)."""
-        f.seek(pos)
-        buf = b""
-        while len(buf) < cap:
-            chunk = f.read(min(256, cap - len(buf)))
-            if not chunk:
-                break
-            buf += chunk
-            if b"\n" in chunk:
-                return buf
-        if b"\n" in buf:
-            return buf
-        raise ValueError(f"corrupt y4m: unterminated {what} header")
+    import mmap
 
     with open(path, "rb") as f:
         if f.read(9) != b"YUV4MPEG2":
             raise ValueError("not a y4m file (no YUV4MPEG2 magic)")
-        head = read_to_nl(f, 0, "stream")
-        nl = head.find(b"\n")
-        w, h, fps, cs, fsize = _parse_y4m_header(head[9:nl])
-        f.seek(0, io.SEEK_END)
-        end = f.tell()
-        offsets = []
-        pos = nl + 1
-        while pos < end:
-            rec = read_to_nl(f, pos, "FRAME")
-            if rec[:5] != b"FRAME":
-                raise ValueError(f"corrupt y4m: no FRAME marker at {pos}")
-            fnl = rec.find(b"\n")
-            data = pos + fnl + 1
-            if data + fsize > end:
-                raise ValueError("truncated y4m frame")
-            offsets.append(data)
-            pos = data + fsize
-        frames = []
-        for i in _sample_indices(len(offsets), max_frames):
-            f.seek(offsets[i])
-            buf = f.read(w * h)
-            frames.append(np.frombuffer(buf, np.uint8).reshape(h, w))
-    info = {
-        "width": w, "height": h, "fps": fps,
-        "n_frames": len(offsets), "colorspace": cs,
-    }
+        with mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
+            views, info = decode_y4m(mm, max_frames)
+            # the views pin the map: copy the planes out before it closes
+            frames = [v.copy() for v in views]
+            del views
     return frames, info
 
 
@@ -698,11 +697,19 @@ VIDEO_FEATURE_SCHEMA = T.StructType(
 )
 
 
+def _bits_to_i64(bits: np.ndarray) -> int:
+    """64 booleans → signed 64-bit int (little-endian bit order), the
+    signature word every banded hamming tier shares."""
+    v = int.from_bytes(
+        np.packbits(bits.astype(np.uint8), bitorder="little").tobytes(),
+        "little",
+    )
+    return v - (1 << 64) if v >= (1 << 63) else v
+
+
 def _ahash_of_gray(g: np.ndarray) -> int:
     grid = _pool_grid(g.astype(np.float64), 8)
-    bits = (grid > grid.mean()).astype(np.uint8).ravel()
-    v = int.from_bytes(np.packbits(bits, bitorder="little").tobytes(), "little")
-    return v - (1 << 64) if v >= (1 << 63) else v
+    return _bits_to_i64((grid > grid.mean()).ravel())
 
 
 _DCT32 = None
@@ -754,13 +761,9 @@ def video_features(
     ``dedup.signature_hamming_pairs`` over exploded (id, frame_idx, sig)
     rows finds clips sharing fuzzy frames. Same error contract as the
     image/audio extractors: a bad payload is a ``decode_error`` row."""
-
-    def decode(payload):
-        return decode_y4m(bytes(payload or b""), max_frames=max_frames)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _video_extract(id_col, payload_col, decode),
-        schema=VIDEO_FEATURE_SCHEMA,
+    return _per_source(
+        df, id_col, payload_col, VIDEO_FEATURE_SCHEMA,
+        lambda p: _video_row(*decode_y4m(bytes(p or b""), max_frames)),
     )
 
 
@@ -773,58 +776,33 @@ def video_features_at_paths(
     """``video_features`` over a PATH column instead of a binary payload
     column — the layout that survives GB-sized clips at corpus scale:
     executors open each file and read ONLY the frame headers plus the
-    sampled frames (``decode_y4m_file``'s seek walk), so per-row memory
+    sampled frames (``decode_y4m_file``'s mapped walk), so per-row memory
     is O(sampled frames), never the clip. Same schema and
     ``decode_error`` contract; unreachable paths surface as errors like
     undecodable bytes."""
-
-    def decode(path):
-        return decode_y4m_file(str(path), max_frames=max_frames)
-
-    return df.select(id_col, path_col).mapInPandas(
-        _video_extract(id_col, path_col, decode),
-        schema=VIDEO_FEATURE_SCHEMA,
+    return _per_source(
+        df, id_col, path_col, VIDEO_FEATURE_SCHEMA,
+        lambda p: _video_row(*decode_y4m_file(str(p), max_frames)),
     )
 
 
-def _video_extract(id_col: str, src_col: str, decode):
-    """Shared Arrow-batched extractor: ``decode(src) -> (frames, info)``
-    is the only difference between the payload and path faces."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, src in zip(pdf[id_col], pdf[src_col]):
-                try:
-                    frames, info = decode(src)
-                    thumbs = [
-                        _pool_grid(f.astype(np.float64), 8) for f in frames
-                    ]
-                    tdiff = (
-                        float(np.mean([
-                            np.abs(a - b).mean()
-                            for a, b in zip(thumbs, thumbs[1:])
-                        ]))
-                        if len(thumbs) > 1 else 0.0
-                    )
-                    out.append((
-                        int(doc_id), info["width"], info["height"],
-                        info["n_frames"], float(info["fps"]),
-                        float(info["n_frames"] / info["fps"])
-                        if info["fps"] else None,
-                        [_ahash_of_gray(f) for f in frames],
-                        [float(np.float32(f.mean())) for f in frames],
-                        tdiff,
-                        None,
-                    ))
-                except Exception as exc:
-                    out.append((
-                        int(doc_id), None, None, None, None, None, None,
-                        None, None, f"{type(exc).__name__}: {exc}"[:200],
-                    ))
-            yield pd.DataFrame(out, columns=[f.name for f in VIDEO_FEATURE_SCHEMA])
-
-    return extract
+def _video_row(frames: list[np.ndarray], info: dict) -> tuple:
+    """One clip's ``VIDEO_FEATURE_SCHEMA`` features from its sampled
+    frames: the payload and path faces differ only in how they decode."""
+    thumbs = [_pool_grid(f.astype(np.float64), 8) for f in frames]
+    tdiff = (
+        float(np.mean([
+            np.abs(a - b).mean() for a, b in zip(thumbs, thumbs[1:])
+        ]))
+        if len(thumbs) > 1 else 0.0
+    )
+    return (
+        info["width"], info["height"], info["n_frames"], float(info["fps"]),
+        float(info["n_frames"] / info["fps"]) if info["fps"] else None,
+        [_ahash_of_gray(f) for f in frames],
+        [float(np.float32(f.mean())) for f in frames],
+        tdiff,
+    )
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType(
@@ -855,53 +833,21 @@ def audio_features(
     before analysis). Arrow-batched ``mapInPandas``; undecodable
     payloads surface in ``decode_error`` like ``image_features``."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    a, rate = decode_wav(bytes(payload or b""))
-                    mono = a.mean(axis=1)
-                    ns = len(mono)
-                    rms = float(np.sqrt((mono ** 2).mean())) if ns else 0.0
-                    zcr = (
-                        float((np.diff(np.signbit(mono)) != 0).mean())
-                        if ns > 1 else 0.0
-                    )
-                    spec = np.abs(np.fft.rfft(mono)) ** 2 if ns else np.zeros(1)
-                    bands = [
-                        float(b.sum())
-                        for b in np.array_split(spec, n_bands)
-                    ]
-                    tot = sum(bands) or 1.0
-                    out.append((
-                        int(doc_id), rate, int(a.shape[1]), int(ns),
-                        float(ns / rate), rms, zcr,
-                        np.asarray(
-                            [b / tot for b in bands], dtype=np.float32
-                        ).tolist(),
-                        None,
-                    ))
-                except Exception as exc:
-                    out.append((
-                        int(doc_id), None, None, None, None, None, None,
-                        None, f"{type(exc).__name__}: {exc}"[:200],
-                    ))
-            yield pd.DataFrame(out, columns=[f.name for f in AUDIO_FEATURE_SCHEMA])
+    def row(payload) -> tuple:
+        a, rate = decode_wav(bytes(payload or b""))
+        mono = a.mean(axis=1)
+        ns = len(mono)
+        rms = float(np.sqrt((mono ** 2).mean())) if ns else 0.0
+        zcr = float((np.diff(np.signbit(mono)) != 0).mean()) if ns > 1 else 0.0
+        spec = np.abs(np.fft.rfft(mono)) ** 2 if ns else np.zeros(1)
+        bands = [float(b.sum()) for b in np.array_split(spec, n_bands)]
+        tot = sum(bands) or 1.0
+        return (
+            rate, int(a.shape[1]), int(ns), float(ns / rate), rms, zcr,
+            np.asarray([b / tot for b in bands], dtype=np.float32).tolist(),
+        )
 
-    return df.select(id_col, payload_col).mapInPandas(
-        extract, schema=AUDIO_FEATURE_SCHEMA
-    )
-
-
-def _bits_to_i64(bits: np.ndarray) -> int:
-    """64 booleans → signed 64-bit int (little-endian bit order), the
-    signature word every banded hamming tier shares."""
-    v = int.from_bytes(
-        np.packbits(bits.astype(np.uint8), bitorder="little").tobytes(),
-        "little",
-    )
-    return v - (1 << 64) if v >= (1 << 63) else v
+    return _per_source(df, id_col, payload_col, AUDIO_FEATURE_SCHEMA, row)
 
 
 def _spectral_sig_of(w: np.ndarray) -> int:
@@ -944,31 +890,15 @@ def audio_spectral_sigs(
     ``dedup.signature_hamming_pairs`` directly). Arrow-batched
     ``mapInPandas``; undecodable payloads surface in ``decode_error``."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    a, _rate = decode_wav(bytes(payload or b""))
-                    mono = a.mean(axis=1)
-                    sigs = [
-                        _spectral_sig_of(w)
-                        for w in np.array_split(mono, max_windows)
-                        if w.size
-                    ]
-                    out.append((int(doc_id), sigs, None))
-                except Exception as exc:
-                    out.append((
-                        int(doc_id), None,
-                        f"{type(exc).__name__}: {exc}"[:200],
-                    ))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in AUDIO_SIG_SCHEMA]
-            )
+    def row(payload) -> tuple:
+        mono = decode_wav(bytes(payload or b""))[0].mean(axis=1)
+        return ([
+            _spectral_sig_of(w)
+            for w in np.array_split(mono, max_windows)
+            if w.size
+        ],)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        extract, schema=AUDIO_SIG_SCHEMA
-    )
+    return _per_source(df, id_col, payload_col, AUDIO_SIG_SCHEMA, row)
 
 
 def audio_neardup_pairs(
@@ -991,15 +921,30 @@ def audio_neardup_pairs(
     |windows|``); unrelated clips pair zero. Scale shape: ≤
     ``max_windows`` nodes per clip through the same pigeonhole banding
     as every 64-bit near-dup tier — no all-pairs anywhere."""
+    return _clip_pairs(
+        audio_spectral_sigs(df, id_col, payload_col, max_windows),
+        "window_sigs", max_hamming, handles, min_matching_windows,
+        "n_window_matches",
+    )
+
+
+def _clip_pairs(
+    feats: DataFrame, sigs_col: str, max_hamming: int, handles,
+    min_matching: int, n_col: str,
+) -> DataFrame:
+    """The video/audio near-dup tiers' shared tail: every decoded clip's
+    signature array is posexploded into (clip, position) nodes, paired
+    by the shared banded hamming join, and each clip pair is scored by
+    its count of DISTINCT matched positions per side, the LESSER side
+    (ADVICE r15 — raw cross-pair counting let one shared static frame
+    yield up to max_frames² matches). A true re-encode still scores
+    |sampled| position-for-position; a shared black leader scores
+    exactly the few positions it occupies in the shorter repetition."""
     from pcap_converter_spark.operators.dedup import signature_hamming_pairs
 
-    sigs = audio_spectral_sigs(df, id_col, payload_col, max_windows)
     nodes = (
-        sigs.filter(F.col("decode_error").isNull())
-        .select(
-            F.col("doc_id"),
-            F.posexplode("window_sigs").alias("fidx", "sig"),
-        )
+        feats.filter(F.col("decode_error").isNull())
+        .select(F.col("doc_id"), F.posexplode(sigs_col).alias("fidx", "sig"))
         .select(
             F.struct(
                 F.col("doc_id").alias("clip"), F.col("fidx").alias("f")
@@ -1011,19 +956,6 @@ def audio_neardup_pairs(
         nodes, sig_col="sig", id_col="node",
         max_hamming=max_hamming, handles=handles,
     )
-    return _clip_pair_scores(pairs, min_matching_windows, "n_window_matches")
-
-
-def _clip_pair_scores(
-    pairs: DataFrame, min_matching: int, n_col: str
-) -> DataFrame:
-    """Shared (clip, position)-node pair aggregation for the video/audio
-    near-dup tiers: count DISTINCT matched positions per side and score
-    the pair by the LESSER side (ADVICE r15 — raw cross-pair counting
-    let one shared static frame yield up to max_frames² matches). A true
-    re-encode still scores |sampled| position-for-position; a shared
-    black leader scores exactly the few positions it occupies in the
-    shorter repetition."""
     a_lt_b = F.col("doc_a.clip") < F.col("doc_b.clip")
     return (
         pairs.filter(F.col("doc_a.clip") != F.col("doc_b.clip"))
@@ -1106,33 +1038,18 @@ def image_features(
     resilient-read pattern: one bad file must not kill a corpus job —
     sources/pcap.py's S3 contract applied to media)."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    px = decode_image(bytes(payload or b""))
-                    g = _luma(px)
-                    out.append((
-                        int(doc_id), int(px.shape[0]), int(px.shape[1]),
-                        int(px.shape[2]),
-                        px.reshape(-1, px.shape[2]).mean(axis=0)
-                        .astype(np.float32).tolist(),
-                        float(g.mean()), float(g.std()),
-                        (_pool_grid(g, thumb) / 255.0)
-                        .astype(np.float32).ravel().tolist(),
-                        None,
-                    ))
-                except Exception as exc:
-                    out.append((
-                        int(doc_id), None, None, None, None, None, None,
-                        None, f"{type(exc).__name__}: {exc}"[:200],
-                    ))
-            yield pd.DataFrame(out, columns=[f.name for f in IMAGE_FEATURE_SCHEMA])
+    def row(payload) -> tuple:
+        px = decode_image(bytes(payload or b""))
+        g = _luma(px)
+        return (
+            int(px.shape[0]), int(px.shape[1]), int(px.shape[2]),
+            px.reshape(-1, px.shape[2]).mean(axis=0)
+            .astype(np.float32).tolist(),
+            float(g.mean()), float(g.std()),
+            (_pool_grid(g, thumb) / 255.0).astype(np.float32).ravel().tolist(),
+        )
 
-    return df.select(id_col, payload_col).mapInPandas(
-        extract, schema=IMAGE_FEATURE_SCHEMA
-    )
+    return _per_source(df, id_col, payload_col, IMAGE_FEATURE_SCHEMA, row)
 
 
 def image_ahash(
@@ -1151,21 +1068,10 @@ def image_ahash(
     schema = T.StructType(
         [T.StructField(id_col, T.LongType()), T.StructField("sig", T.LongType())]
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sigs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    g = _luma(decode_image(bytes(payload or b"")))
-                except Exception:
-                    continue
-                ids.append(int(doc_id))
-                sigs.append(_ahash_of_gray(g))
-            yield pd.DataFrame({id_col: pd.Series(ids, dtype="int64"),
-                                "sig": pd.Series(sigs, dtype="int64")})
-
-    return df.select(id_col, payload_col).mapInPandas(extract, schema=schema)
+    return _per_source(
+        df, id_col, payload_col, schema,
+        lambda p: (_ahash_of_gray(_luma(decode_image(bytes(p or b"")))),),
+    )
 
 
 def image_phash(
@@ -1181,21 +1087,10 @@ def image_phash(
     schema = T.StructType(
         [T.StructField(id_col, T.LongType()), T.StructField("sig", T.LongType())]
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sigs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    g = _luma(decode_image(bytes(payload or b"")))
-                except Exception:
-                    continue
-                ids.append(int(doc_id))
-                sigs.append(_phash_of_gray(g))
-            yield pd.DataFrame({id_col: pd.Series(ids, dtype="int64"),
-                                "sig": pd.Series(sigs, dtype="int64")})
-
-    return df.select(id_col, payload_col).mapInPandas(extract, schema=schema)
+    return _per_source(
+        df, id_col, payload_col, schema,
+        lambda p: (_phash_of_gray(_luma(decode_image(bytes(p or b"")))),),
+    )
 
 
 def byte_histogram_features(
@@ -1349,27 +1244,11 @@ def video_neardup_pairs(
     match on few. Scale shape: ≤ ``max_frames`` nodes per clip through
     the same pigeonhole banding as every 64-bit near-dup tier — no
     all-pairs anywhere."""
-    from pcap_converter_spark.operators.dedup import signature_hamming_pairs
-
-    vf = video_features(df, id_col, payload_col, max_frames=max_frames)
-    nodes = (
-        vf.filter(F.col("decode_error").isNull())
-        .select(
-            F.col("doc_id"),
-            F.posexplode("frame_ahash").alias("fidx", "sig"),
-        )
-        .select(
-            F.struct(
-                F.col("doc_id").alias("clip"), F.col("fidx").alias("f")
-            ).alias("node"),
-            "sig",
-        )
+    return _clip_pairs(
+        video_features(df, id_col, payload_col, max_frames=max_frames),
+        "frame_ahash", max_hamming, handles, min_matching_frames,
+        "n_frame_matches",
     )
-    pairs = signature_hamming_pairs(
-        nodes, sig_col="sig", id_col="node",
-        max_hamming=max_hamming, handles=handles,
-    )
-    return _clip_pair_scores(pairs, min_matching_frames, "n_frame_matches")
 
 
 def sample_frames(

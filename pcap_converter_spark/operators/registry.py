@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pcap_converter_spark.functions import text as TX
 from pcap_converter_spark.io.loader import _table_path, load_table
 from pcap_converter_spark.operators import dedup, multimodal, similarity
+from pcap_converter_spark.queries.declared import PACKETS_PCAP, _REPO_ROOT
 from pcap_converter_spark.session import (
     overlapped, path_mtime, phase, session_memo,
 )
@@ -3706,9 +3707,6 @@ _GRAPH_PAGERANK_ORACLE = _pr_oracle()
 # WARC corpus acquisition (sources/warc.py — the crawl front door)
 # ---------------------------------------------------------------------------
 
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
 _WARC_FIXTURE = os.path.join(
     _REPO_ROOT, "fixtures", "data", "docs_fixture.warc.gz"
 )
@@ -3726,9 +3724,6 @@ _JSONL_FIXTURE = os.path.join(
 )
 _WARC_MAIN_PARQUET = os.path.join(
     _REPO_ROOT, "fixtures", "data", "warc_main.parquet"
-)
-_PCAP_FIXTURE = os.path.join(
-    _REPO_ROOT, "fixtures", "data", "packets_fixture.pcap"
 )
 
 
@@ -3763,7 +3758,7 @@ def _pcap_stream_table(spark: SparkSession) -> str:
     drained rows against the generator ground truth every run."""
     from pcap_converter_spark.sources.datasource import register
 
-    return _drain_fixture_stream(spark, "pcap", _PCAP_FIXTURE, register)
+    return _drain_fixture_stream(spark, "pcap", PACKETS_PCAP, register)
 
 
 def _warc_stream_table(spark: SparkSession) -> str:

@@ -530,12 +530,16 @@ def _write_clusters(
     each cluster over that many tasks/files while the probe's directory
     pruning is untouched (VERDICT r4 #7). Each layout salts on what
     identifies a row: the vector (IVF), the code (PQ), every data column
-    (compaction)."""
+    (compaction). The salted shuffle names its partition count
+    (``spark.sql.shuffle.partitions``) because AQE coalesces a column
+    repartition that has none, which would merge a small layout's
+    salted partitions back into one file per cluster."""
     if files_per_cluster <= 1:
         df = df.repartition(F.col("_cluster"))
     else:
         salt = F.pmod(F.xxhash64(*salt_cols), F.lit(int(files_per_cluster)))
-        df = df.repartition(F.col("_cluster"), salt)
+        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        df = df.repartition(n, F.col("_cluster"), salt)
     write_partitioned(df, root, ["_cluster"], mode=mode)
 
 

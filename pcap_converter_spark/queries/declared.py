@@ -27,7 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from pcap_converter_spark.schema import DEFRAG_FILL_COLUMNS, PACKET_COLUMNS
-from pcap_converter_spark.session import phase
+from pcap_converter_spark.session import phase, session_memo
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 PACKETS_PARQUET = os.path.join(_REPO_ROOT, "fixtures", "data", "packets.parquet")
@@ -42,21 +42,21 @@ def register_packets_view(spark: SparkSession) -> None:
     engine-decoded rows against spec-side ground truth, gating the whole
     decode stack (S1, E1-E17) end to end, not just the query layer.
 
-    The decoded frame is cached ON the session object itself (PQ1-PQ7 all
-    view the same 2,500 rows — one localCheckpointed decode per session,
-    later entries reuse it). Per-OBJECT, not per-applicationId (r14
-    review): a sibling ``spark.newSession()`` shares the appId but has an
-    ISOLATED temp-view catalog, so an appId-keyed cache would register
-    the view into the wrong session's catalog; the attribute also dies
-    with the session instead of outliving it in a module dict."""
-    df = getattr(spark, "_pcs_packets_df", None)
-    if df is None:
+    The decoded frame is kept in the session's ``session_memo`` under
+    ``"packets"`` (PQ1-PQ7 all view the same 2,500 rows — one
+    localCheckpointed decode per session, later entries reuse it).
+    Per-OBJECT, not per-applicationId (r14 review): a sibling
+    ``spark.newSession()`` shares the appId but has an ISOLATED temp-view
+    catalog, so an appId-keyed cache would register the view into the
+    wrong session's catalog; the memo also dies with the session instead
+    of outliving it in a module dict."""
+
+    def decode() -> DataFrame:
         from pcap_converter_spark.sources.pcap import read_pcap
 
-        df, _obs = read_pcap(spark, PACKETS_PCAP)
-        df = df.localCheckpoint(eager=True)
-        spark._pcs_packets_df = df
-    df.createOrReplaceTempView("packets")
+        return read_pcap(spark, PACKETS_PCAP)[0].localCheckpoint(eager=True)
+
+    session_memo(spark, "packets", decode).createOrReplaceTempView("packets")
 
 
 @dataclass(frozen=True)

@@ -334,8 +334,8 @@ RUNTIME_CONFS = {
 
 def session_memo(spark: SparkSession, key, build, version=None):
     """``build()`` once per (session, key); later calls return the stored
-    value. The memo is a dict kept ON the SparkSession object — the
-    ``register_packets_view`` pattern — so it dies with the session: a
+    value. The memo is a dict kept ON the SparkSession object, so it
+    dies with the session: a
     sibling ``spark.newSession()`` (same applicationId, isolated catalog)
     gets its own entries, and nothing outlives the session in a module
     dict. When ``version`` (e.g. a file mtime) differs from the stored

@@ -183,23 +183,22 @@ def chunk_frame(spark, fmt: ChunkedFormat, paths, target_chunk_bytes: int):
     return spark.createDataFrame(rdd, fmt.chunk_schema).repartition(n_parts)
 
 
-def read_chunked(spark, fmt: ChunkedFormat, paths, target_chunk_bytes: int,
-                 decode=None, schema=None):
+def read_chunked(spark, fmt: ChunkedFormat, paths, target_chunk_bytes: int):
     """``chunk_frame`` decoded one task per chunk through ``mapInPandas``
-    with ``fmt.decode`` into ``fmt.schema``, or a caller's fused
-    ``decode``/``schema`` pair (``warc_documents``)."""
-    decode = decode or fmt.decode
-    schema = schema or fmt.schema
+    with ``fmt.decode`` into ``fmt.schema``. A fused reader passes a
+    ``dataclasses.replace`` of its format with its own decode and schema
+    (``warc_documents``)."""
     frame = chunk_frame(spark, fmt, paths, target_chunk_bytes)
     if frame is None:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], fmt.schema)
+    decode = fmt.decode
 
     def decode_partition(batches):
         for pdf in batches:
             for rec in pdf.to_dict("records"):
                 yield decode(rec)
 
-    return frame.mapInPandas(decode_partition, schema)
+    return frame.mapInPandas(decode_partition, fmt.schema)
 
 
 def _arrow_batches(pdf, schema) -> Iterator:

@@ -12,9 +12,11 @@ markers, so it is not arbitrarily splittable. The design is a two-phase scan:
    decodes nothing — it is I/O-bound and cheap relative to decode.
 
 2. **Decode pass** — a DataFrame of chunk descriptors goes through
-   ``mapInPandas``; each task opens its byte range, slices records, and calls
-   the batch decoder (decode/parser.py). One chunk = one task = one-ish Arrow
-   batch, so Python overhead is per-chunk, not per-packet.
+   ``mapInPandas``; each task opens its byte range, walks its records into
+   offset/length/timestamp arrays, and calls the batch decoder over the raw
+   chunk buffer (``decode/vectorized.decode_packets_packed``). One chunk =
+   one task = one-ish Arrow batch, so Python overhead is per-chunk, not
+   per-packet.
 
 Planning is the shared chunked-file planner (``sources/datasource.py``):
 this module supplies the ``PCAP`` descriptor — exact index and chunk

@@ -382,16 +382,19 @@ def _decompress_members(raw: bytes) -> bytes:
     return b"".join(out)
 
 
-def read_warc_chunk(chunk: dict | WarcChunk) -> pd.DataFrame:
+def _chunk_records(chunk: dict | WarcChunk) -> Iterator[dict]:
+    """One chunk's records: open the file, seek, read the chunk's bytes,
+    decompress its gzip members, parse."""
     c = WarcChunk(**chunk) if isinstance(chunk, dict) else chunk
     with open(c.path, "rb") as f:
         f.seek(c.offset)
         raw = f.read(c.length)
-    if c.gzipped:
-        buf = _decompress_members(raw)
-    else:
-        buf = raw
-    rows = list(_parse_records(buf, os.path.basename(c.path)))
+    buf = _decompress_members(raw) if c.gzipped else raw
+    return _parse_records(buf, os.path.basename(c.path))
+
+
+def read_warc_chunk(chunk: dict | WarcChunk) -> pd.DataFrame:
+    rows = list(_chunk_records(chunk))
     if not rows:
         return pd.DataFrame(
             {f.name: pd.Series(dtype="object") for f in WARC_OUTPUT_SCHEMA}
@@ -514,15 +517,10 @@ def _chunk_documents(chunk: dict | WarcChunk, extract: bool) -> pd.DataFrame:
         html_to_text_py,
     )
 
-    c = WarcChunk(**chunk) if isinstance(chunk, dict) else chunk
-    with open(c.path, "rb") as f:
-        f.seek(c.offset)
-        raw = f.read(c.length)
-    buf = _decompress_members(raw) if c.gzipped else raw
     ids: list[str] = []
     urls: list = []
     texts: list[str] = []
-    for rec in _parse_records(buf, os.path.basename(c.path)):
+    for rec in _chunk_records(chunk):
         if rec["warc_type"] != "response" or rec["http_status"] != 200:
             continue
         m = _CHARSET_RE.search(rec["http_content_type"] or "")
@@ -566,15 +564,17 @@ def warc_documents(
     ``extract_text='main'`` swaps the extractor for the main-content
     pruner (html_main_text_py — nav/footer/sidebar/link-farm blocks
     dropped), same fused shape."""
+    from dataclasses import replace
     from functools import partial
 
     from pyspark.sql import functions as F
 
     apply_runtime_confs(spark)
-    docs = read_chunked(
-        spark, WARC, paths, target_chunk_bytes,
-        partial(_chunk_documents, extract=extract_text), DOCS_OUTPUT_SCHEMA,
+    fused = replace(
+        WARC, schema=DOCS_OUTPUT_SCHEMA,
+        decode=partial(_chunk_documents, extract=extract_text),
     )
+    docs = read_chunked(spark, fused, paths, target_chunk_bytes)
     return docs.select(
         F.abs(F.xxhash64("warc_record_id")).alias("doc_id"), "url", "text"
     )

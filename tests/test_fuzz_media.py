@@ -254,6 +254,16 @@ def test_y4m_file_face_accepts_long_headers(tmp_path):
     assert info_b == info_f and info_b["n_frames"] == 3
     assert all(np.array_equal(a, b) for a, b in zip(via_bytes, via_file))
 
+    # a stream header past 4,096 bytes: the bytes face sets no cap, so
+    # the file face must not either
+    huge = bytearray(mm.encode_y4m(frames, 25))
+    huge[nl:nl] = b" X" + b"q" * 5000
+    via_bytes, info_b = mm.decode_y4m(bytes(huge), max_frames=2)
+    p.write_bytes(bytes(huge))
+    via_file, info_f = mm.decode_y4m_file(str(p), max_frames=2)
+    assert info_b == info_f and info_b["n_frames"] == 3
+    assert all(np.array_equal(a, b) for a, b in zip(via_bytes, via_file))
+
 
 # ---------------------------------------------------------------------------
 # audio spectral signatures (r16)

@@ -107,19 +107,26 @@ def test_live_decode_view_feeds_pq_queries(spark):
     from pcap_converter_spark.queries.declared import (
         register_packets_view,
     )
+    from pcap_converter_spark.session import session_memo
+
+    def stored(session):
+        """The session's memoized decode; a memo miss fails the test."""
+        return session_memo(
+            session, "packets", lambda: pytest.fail("no memoized decode")
+        )
 
     register_packets_view(spark)
     n = spark.sql("SELECT count(*) AS n FROM packets").collect()[0]["n"]
     assert n == 2500
     # second registration reuses the session cache (same checkpointed plan)
-    cached = spark._pcs_packets_df
+    cached = stored(spark)
     register_packets_view(spark)
-    assert spark._pcs_packets_df is cached
+    assert stored(spark) is cached
     # a sibling session (same appId, ISOLATED temp-view catalog) gets its
     # own decode registered into ITS catalog (r14 review: an appId-keyed
     # cache registered the view into the wrong session)
     sib = spark.newSession()
     register_packets_view(sib)
-    assert sib._pcs_packets_df is not cached
+    assert stored(sib) is not cached
     n2 = sib.sql("SELECT count(*) AS n FROM packets").collect()[0]["n"]
     assert n2 == 2500

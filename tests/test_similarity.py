@@ -128,9 +128,8 @@ def test_ivf_write_salted_matches_unsalted(spark, emb_df, tmp_path):
     q = [float(x) for x in np.float32(VECS[3])]
     p1, p4 = str(tmp_path / "ivf1"), str(tmp_path / "ivf4")
     similarity.ivf_write(emb_df, cents, p1)
-    # AQE would re-coalesce this tiny test corpus into a handful of tasks
-    # (at scale the salted partitions are large and stay split); pin it off
-    # so the file-count assertion below observes the salt
+    # AQE off: this case checks the salt alone; the next test checks it
+    # under the session's AQE confs
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         similarity.ivf_write(emb_df, cents, p4, files_per_cluster=4)
@@ -150,6 +149,26 @@ def test_ivf_write_salted_matches_unsalted(spark, emb_df, tmp_path):
             for d in dirs
         )
     assert nfiles(p4, dirs4) > nfiles(p1, dirs1)
+
+
+def test_salted_clusters_stay_split_under_aqe(spark, emb_df, tmp_path):
+    """files_per_cluster > 1 spreads a small layout's clusters over
+    several files with the session's own AQE coalescing on, which
+    merges a salted repartition that has no partition count back into
+    one task and so one file per cluster dir."""
+    import glob
+
+    from pcap_converter_spark.session import RUNTIME_CONFS
+
+    for k in ("spark.sql.adaptive.enabled",
+              "spark.sql.adaptive.coalescePartitions.enabled"):
+        assert spark.conf.get(k) == RUNTIME_CONFS[k] == "true"
+    cents = similarity.fixed_centroids(DIM, 4, seed=7)
+    p = str(tmp_path / "ivf2")
+    similarity.ivf_write(emb_df, cents, p, files_per_cluster=2)
+    files = [len(glob.glob(f"{d}/*.parquet"))
+             for d in glob.glob(f"{p}/_cluster=*")]
+    assert max(files) == 2
 
 
 def test_pq_assign_matches_numpy_argmin(spark, emb_df):
